@@ -22,7 +22,9 @@ object Loader {
 
   /** One load job. `targetTable` is `schema.table` (reference
     * `--target_pg_table`, `/root/reference/main.py:22-26`); a bare name gets
-    * schema `public`.
+    * schema `public`. `batchSize` is the maximum number of rows per sink
+    * transaction: a partition that has rejected rows commits smaller ones
+    * (see [[graft.sink.PostgresUpsertSink]]).
     */
   final case class LoadConfig(
       source: String,

@@ -40,7 +40,10 @@ object Main {
       |--config reads a reference-style config.ini: [my_database_credentials]
       |supplies pg_url/pg_user/pg_password defaults (explicit flags win, env
       |vars are the last resort) and [pg_to_spark_data_type_mapping] remaps
-      |catalog types. See README 'Migrating a reference config.ini'.""".stripMargin
+      |catalog types. See README 'Migrating a reference config.ini'.
+      |
+      |--batch_size is the maximum number of rows per transaction; a
+      |partition that has rejected rows commits smaller transactions.""".stripMargin
 
   /** Pure argument parser, exposed for tests. */
   def parse(args: Seq[String], env: Map[String, String] = sys.env): Either[String, CliArgs] = {

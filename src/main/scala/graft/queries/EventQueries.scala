@@ -366,6 +366,10 @@ object EventQueries extends QueryDomain {
       // emitted candidates over the fixture — identical output to the
       // full GROUP BY + HAVING oracle because every true heavy hitter
       // survives its shard's summary after any arrival order.
+      // Deliberately single-batch: no maxFilesPerTrigger, so the whole
+      // replay lands in one data batch and the Misra–Gries state never
+      // crosses a micro-batch boundary here; the maxFilesPerTrigger = 1
+      // doc-replay gates and the EventStreams specs cover that boundary.
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
       val schema = Staging.replayDocsSchema(ss, staged)

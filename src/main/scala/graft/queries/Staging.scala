@@ -61,14 +61,9 @@ private[queries] object Staging {
     * timeouts close ALL real sessions and append mode finalizes ALL real
     * windows. Emission fires in a batch AFTER the watermark advances; that
     * batch is the engine's watermark-driven NO-DATA batch, which
-    * [[streamSession]] pins on (`noDataMicroBatches.enabled`) — so the
-    * guaranteed-data second sentinel the protocol used through r21 bought
-    * nothing but one extra micro-batch's full state-store commit cycle per
-    * gate per rep (r22: the protocol floor was the sweep's largest cost
-    * block; `processAllAvailable` provably waits for the no-data
-    * finalization batch — the r21 gates ALREADY emitted through it, because
-    * parquet-java's hidden `.crc` artifacts inflated [[filesInDir]] and
-    * packed both sentinels into the data batch, oracle green both rounds).
+    * [[streamSession]] pins on (`noDataMicroBatches.enabled`), and
+    * `processAllAvailable` waits for it — so no second, data-carrying
+    * sentinel is needed to trigger emission.
     * Modification times order the replay events-first. Sentinel rows carry
     * `user_id = -1` / `event_type = 'sentinel'`; callers filter them back
     * out of their sink.
@@ -82,8 +77,8 @@ private[queries] object Staging {
       // the int64-ts sentinel files below always share its schema — staging
       // a raw fixture copy broke every stream gate when the fixture flipped
       // to timestamp[us] (round 10). Spark writes to a side dir and only the
-      // part file moves in: _SUCCESS/.crc artifacts would otherwise corrupt
-      // the filesInDir-based micro-batch packing.
+      // part file moves in, so the replay directory holds exactly the files
+      // the stream reads, ordered by the modification times set below.
       val tmp = p + "_stage"
       graft.Tables.events(spark, sfDir).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
@@ -303,8 +298,8 @@ private[queries] object Staging {
     }
 
   /** Write `df` as ONE parquet file named `name` directly under `destDir`
-    * (Spark writes to a side dir; only the part file moves in — _SUCCESS/
-    * .crc artifacts would corrupt filesInDir-based micro-batch packing).
+    * (Spark writes to a side dir; only the part file moves in, so no
+    * _SUCCESS/.crc artifact lands next to it).
     */
   private[queries] def writeOneParquet(
       df: org.apache.spark.sql.DataFrame, destDir: String, name: String): Unit = {
@@ -425,21 +420,6 @@ private[queries] object Staging {
       s2
     }
   }
-
-  /** Number of VISIBLE regular files under `path` (the staged replay
-    * directory) — the files the file-stream source will actually read.
-    * Hidden artifacts (parquet-java's `.…crc` checksums next to the
-    * sentinel files) are excluded, as the source excludes them: counting
-    * them inflated every r18–r21 `maxFilesPerTrigger = filesInDir − 1`
-    * packing past the real file count, silently collapsing the
-    * sessionize-family replays to a single data batch (benign — emission
-    * rode the no-data batch, oracle green — but the packing arithmetic
-    * must be honest now that the batch count is deliberate).
-    */
-  def filesInDir(path: String): Int =
-    Option(new java.io.File(path).listFiles())
-      .map(_.count(f => f.isFile && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))).getOrElse(0)
 
   /** Schema of the staged replay — the NORMALIZED events file, where `ts`
     * is a nanosecond BIGINT regardless of the fixture's physical type.

@@ -7,12 +7,28 @@ import scala.util.control.NonFatal
 
 /** Per-partition write statistics, one row per Spark partition; summed on the
   * driver (reference O14, `/root/reference/psycopg2_database_helper.py:337-357`).
+  * `transactions` counts commits, `statements` `executeBatch` calls and
+  * `rollbacks` savepoint rollbacks, all over committed transactions: a
+  * transaction re-run after a reconnect counts once.
   */
-final case class PartitionStats(loaded: Long, rejected: Long, errors: Seq[String])
+final case class PartitionStats(
+    loaded: Long,
+    rejected: Long,
+    errors: Seq[String],
+    transactions: Long,
+    statements: Long,
+    rollbacks: Long)
 
-final case class LoadStats(loaded: Long, rejected: Long, errors: Seq[String]) {
+final case class LoadStats(
+    loaded: Long,
+    rejected: Long,
+    errors: Seq[String],
+    transactions: Long,
+    statements: Long,
+    rollbacks: Long) {
   def report: String =
     s"Total rows loaded: $loaded\nTotal rows rejected: $rejected" +
+      s"\nTransactions: $transactions, statements: $statements, rollbacks: $rollbacks" +
       (if (errors.isEmpty) "" else errors.mkString("\n", "\n", ""))
 }
 
@@ -31,17 +47,31 @@ final case class LoadStats(loaded: Long, rejected: Long, errors: Seq[String]) {
   *    `shuffleBarrier = false`.
   *  - one lazily-opened connection per partition
   *    (`/root/reference/psycopg2_database_helper.py:152-154`).
-  *  - rows grouped into `batchSize` transactions, committed per batch so an
-  *    executor failure loses at most one uncommitted batch
+  *  - rows grouped into transactions of at most `batchSize` rows, each
+  *    committed on its own so an executor failure loses at most one
+  *    uncommitted transaction
   *    (`/root/reference/psycopg2_database_helper.py:156-169`).
-  *  - each batch runs under a savepoint; on failure it is rolled back and
-  *    recursively binary-split so bad rows are isolated in O(log batchSize)
-  *    extra round trips while good rows still land
-  *    (`/root/reference/psycopg2_database_helper.py:11-39,70-120`).
-  *  - poison-partition circuit breaker: when an entire batch's rows all
-  *    reject, the partition aborts instead of grinding through a doomed feed
-  *    (`/root/reference/psycopg2_database_helper.py:168-169`), upgraded here
-  *    to a configurable `maxRejects` threshold.
+  *  - transaction size follows the partition's reject rate: while the
+  *    partition has rejected nothing a transaction holds `batchSize` rows;
+  *    after its first reject each transaction holds
+  *    `min(batchSize, 2^⌊log₂(good/rejected)⌋)` rows, from the partition's
+  *    running counts of rows adjudicated so far. This is the first-group size
+  *    of Hwang's generalized binary splitting (F. K. Hwang, J. Amer. Statist.
+  *    Assoc. 67, 1972): a transaction that small holds about one bad row, so
+  *    the split below re-sends about one transaction's worth of rows instead
+  *    of `batchSize` per bad row.
+  *  - each transaction runs under a savepoint; on failure it is rolled back
+  *    and recursively halved so bad rows are isolated in O(log n) extra
+  *    round trips while good rows still land
+  *    (reference `psycopg2_database_helper.py:11-39,70-120`). A new
+  *    savepoint is opened only after a statement succeeds: after a rollback
+  *    the same savepoint still marks the transaction's state. No savepoint
+  *    is ever released; COMMIT ends them all.
+  *  - poison-partition circuit breaker: once `batchSize` consecutive rows
+  *    reject, counted across back-to-back fully rejected transactions, the
+  *    partition aborts instead of grinding through a doomed feed
+  *    (reference `psycopg2_database_helper.py:168-169`); it also trips
+  *    when the partition's rejects cross the configurable `maxRejects`.
   *
   * Scale posture: the driver only ever sees O(#partitions) stats rows — no
   * data is collected. At 1000 executors the binding constraint is the Postgres
@@ -84,7 +114,10 @@ object PostgresUpsertSink {
     LoadStats(
       stats.map(_.loaded).sum,
       stats.map(_.rejected).sum,
-      stats.flatMap(_.errors).toIndexedSeq)
+      stats.flatMap(_.errors).toIndexedSeq,
+      stats.map(_.transactions).sum,
+      stats.map(_.statements).sum,
+      stats.map(_.rollbacks).sum)
   }
 
   /** Body of one executor task. Package-private for direct unit testing.
@@ -113,6 +146,7 @@ object PostgresUpsertSink {
     var conn: SinkConnection = null
     var seen = 0L
     var rejected = 0L
+    var transactions, statements, rollbacks = 0L
     var reconnectsLeft = reconnectAttempts
     // Error MESSAGES are capped per partition (`rejected` still counts every
     // bad row): uncapped, a systematically bad feed at 10⁵ partitions would
@@ -127,18 +161,20 @@ object PostgresUpsertSink {
       suppressed += math.max(0, errs.size - room)
     }
     val batch = mutable.ArrayBuffer.empty[Seq[Any]]
+    var size = batchSize
+    var rejectRun = 0L // rows of back-to-back fully rejected transactions
     var poisoned = false
 
     def flush(): Unit = if (batch.nonEmpty) {
       val inFlight = batch.toIndexedSeq
-      def attempt(): (Long, Seq[String]) = {
+      def attempt(): Adjudication = {
         val res = executeIsolated(conn, sql, inFlight)
         conn.commit()
         res
       }
       // First-attempt reject counts are discarded on retry — the re-run
       // re-adjudicates the whole batch, so nothing double-counts.
-      val (r, errs) =
+      val res =
         try attempt()
         catch {
           case e: SinkConnectionLostException if reconnectsLeft > 0 =>
@@ -147,12 +183,18 @@ object PostgresUpsertSink {
             conn = factory.connect()
             attempt()
         }
-      rejected += r
-      recordErrors(errs)
-      // Circuit breaker: an entire batch rejecting (or crossing the caller's
-      // reject budget) means the feed is systematically bad for this
-      // partition — stop consuming instead of paying the split cost forever.
-      if (r == batch.size.toLong || maxRejects.exists(rejected > _)) poisoned = true
+      rejected += res.rejected
+      transactions += 1
+      statements += res.statements
+      rollbacks += res.rollbacks
+      recordErrors(res.errors)
+      rejectRun = if (res.rejected == inFlight.size) rejectRun + res.rejected else 0L
+      // Circuit breaker: a run of `batchSize` rejected rows (or crossing the
+      // caller's reject budget) means the feed is systematically bad for
+      // this partition — stop consuming instead of paying the split cost
+      // forever.
+      if (rejectRun >= batchSize || maxRejects.exists(rejected > _)) poisoned = true
+      size = transactionSize(seen - rejected, rejected, batchSize)
       batch.clear()
     }
 
@@ -162,14 +204,30 @@ object PostgresUpsertSink {
         if (conn == null) conn = factory.connect() // lazy: empty partitions never connect
         batch += row.toSeq
         seen += 1
-        if (batch.size >= batchSize) flush()
+        if (batch.size >= size) flush()
       }
       if (!poisoned) flush()
       if (suppressed > 0)
         errors += s"($suppressed further error messages suppressed by maxErrors=$maxErrors)"
-      PartitionStats(seen - rejected, rejected, errors.toIndexedSeq)
+      PartitionStats(seen - rejected, rejected, errors.toIndexedSeq,
+        transactions, statements, rollbacks)
     } finally if (conn != null) conn.close()
   }
+
+  /** Rows in the next transaction of a partition that has adjudicated `good`
+    * and `rejected` rows: `batchSize` until the first reject, then
+    * `min(batchSize, 2^⌊log₂(good/rejected)⌋)`, at least 1.
+    */
+  private[graft] def transactionSize(good: Long, rejected: Long, batchSize: Int): Int =
+    if (rejected == 0L) batchSize
+    else math.min(batchSize.toLong,
+      math.max(1L, java.lang.Long.highestOneBit(good / rejected))).toInt
+
+  /** Outcome of one transaction's isolation: rows rejected with their error
+    * messages, `executeBatch` calls made and savepoint rollbacks sent.
+    */
+  private[graft] final case class Adjudication(
+      rejected: Long, errors: Seq[String], statements: Long, rollbacks: Long)
 
   /** Savepoint-scoped execution with recursive binary-split isolation: a
     * failing batch of n > 1 rows is rolled back to its savepoint, split in
@@ -177,31 +235,43 @@ object PostgresUpsertSink {
     * and memory stays O(batch)); a failing singleton is counted as one reject
     * with its error message. Good rows always land; each bad row costs at
     * most O(log₂ n) extra round trips.
+    *
+    * A savepoint is opened only when none marks the transaction's current
+    * state: before the first statement and after each statement that
+    * succeeded. After a rollback the savepoint rolled back to still marks
+    * the state, so the next half reuses it, and every rollback targets the
+    * latest savepoint. Savepoints are never released; the caller's COMMIT
+    * ends them.
     */
   private[graft] def executeIsolated(
       conn: SinkConnection,
       sql: String,
-      batch: Seq[Seq[Any]]): (Long, Seq[String]) = {
-    var rejected = 0L
+      batch: Seq[Seq[Any]]): Adjudication = {
+    var rejected, statements, rollbacks = 0L
     val errors = mutable.ArrayBuffer.empty[String]
     var stack = List(batch)
-    var n = 0
+    var opened = 0
+    var mark: String = null // the savepoint marking the current state, if any
     while (stack.nonEmpty) {
       val b = stack.head
       stack = stack.tail
-      n += 1
-      val sp = s"graft_sp_$n"
-      conn.savepoint(sp)
+      if (mark == null) {
+        opened += 1
+        mark = s"graft_sp_$opened"
+        conn.savepoint(mark)
+      }
+      statements += 1
       try {
         conn.executeBatch(sql, b)
-        conn.release(sp)
+        mark = null
       } catch {
         // A dead connection is not a bad row: no rollback attempt (the
         // transaction died with the socket), no split — the partition-level
         // reconnect in writePartition re-runs the whole in-flight batch.
         case e: SinkConnectionLostException => throw e
         case NonFatal(e) =>
-          conn.rollbackTo(sp)
+          conn.rollbackTo(mark)
+          rollbacks += 1
           if (b.size == 1) {
             rejected += 1
             errors += String.valueOf(e.getMessage)
@@ -211,6 +281,6 @@ object PostgresUpsertSink {
           }
       }
     }
-    (rejected, errors.toIndexedSeq)
+    Adjudication(rejected, errors.toIndexedSeq, statements, rollbacks)
   }
 }

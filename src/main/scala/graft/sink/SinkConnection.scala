@@ -28,6 +28,11 @@ trait SinkConnection extends AutoCloseable {
   def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit
   def savepoint(name: String): Unit
   def rollbackTo(name: String): Unit
+  /** Never called by the sink: `commit()` ends every savepoint the
+    * transaction opened, so a RELEASE would only cost a round trip. It stays
+    * declared because the benchmark's connection decorators
+    * (`perfbench/scala`) implement and forward it.
+    */
   def release(name: String): Unit
   def commit(): Unit
   def close(): Unit
@@ -133,7 +138,10 @@ final class JdbcSinkConnection(conn: Connection) extends SinkConnection {
     savepoints.get(name).foreach(conn.releaseSavepoint)
     savepoints -= name
   }
-  def commit(): Unit = translating { conn.commit() }
+  def commit(): Unit = translating {
+    conn.commit()
+    savepoints = Map.empty
+  }
   def close(): Unit = {
     statements.valuesIterator.foreach { ps =>
       try ps.close() catch { case _: Throwable => () }

@@ -30,6 +30,11 @@ class FakeSinkConnection(id: String, failOn: Seq[Any] => Boolean) extends SinkCo
   private var marks = Map.empty[String, Int]   // savepoint name → pending size
   var batchCalls = 0
   val committed = mutable.ArrayBuffer.empty[Seq[Any]] // for direct (driver-side) use
+  /** Every call in order: `savepoint <name>`, `exec ok <n>`, `exec fail <n>`,
+    * `rollback <name>`, `release <name>`, `commit <n>` (n = rows in the
+    * batch or transaction).
+    */
+  val log = mutable.ArrayBuffer.empty[String]
 
   def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit = {
     batchCalls += 1
@@ -37,17 +42,32 @@ class FakeSinkConnection(id: String, failOn: Seq[Any] => Boolean) extends SinkCo
     // like a real driver mid-batch failure — only rollback-to-savepoint can
     // undo them. Catches implementations that skip the rollback.
     batch.foreach { row =>
-      if (failOn(row)) throw new RuntimeException(s"constraint violation on $row")
+      if (failOn(row)) {
+        log += s"exec fail ${batch.size}"
+        throw new RuntimeException(s"constraint violation on $row")
+      }
       pending :+= row
     }
+    log += s"exec ok ${batch.size}"
   }
-  def savepoint(name: String): Unit = marks += name -> pending.size
-  def rollbackTo(name: String): Unit = marks.get(name).foreach(n => pending = pending.take(n))
-  def release(name: String): Unit = marks -= name
+  def savepoint(name: String): Unit = {
+    log += s"savepoint $name"
+    marks += name -> pending.size
+  }
+  def rollbackTo(name: String): Unit = {
+    log += s"rollback $name"
+    marks.get(name).foreach(n => pending = pending.take(n))
+  }
+  def release(name: String): Unit = {
+    log += s"release $name"
+    marks -= name
+  }
   def commit(): Unit = {
+    log += s"commit ${pending.size}"
     committed ++= pending
     if (id.nonEmpty) FakeSinkState.record(id, pending)
     pending = Vector.empty
+    marks = Map.empty
   }
   def close(): Unit = ()
 }
@@ -204,6 +224,7 @@ class KeyedUpsertFakeConnection(id: String, failOn: Seq[Any] => Boolean)
   def commit(): Unit = {
     spec.foreach(s => KeyedSinkState.applyCommit(id, s, pending))
     pending = Vector.empty
+    marks = Map.empty
   }
   def close(): Unit = ()
 }

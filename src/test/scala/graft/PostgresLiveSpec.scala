@@ -239,6 +239,36 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     s"rm -rf $csvDir".!
   }
 
+  test("Loader.loadPostgres live, 1% poison: exactly the good rows land, every poison row rejects") {
+    live()
+    psql("CREATE TABLE live_bulk (id bigint PRIMARY KEY, name varchar(12), " +
+      "qty int NOT NULL CHECK (qty >= 0))")
+    // 20 poison rows in 2000: a quarter violate NOT NULL (empty CSV field),
+    // a quarter overflow varchar(12), half violate the CHECK — none fails a
+    // Spark-side cast, so every one reaches the server.
+    val poison = (1 to 2000).filter(_ % 100 == 50).toSet
+    def line(i: Int): String =
+      if (!poison(i)) s"$i,n$i,${i % 97}"
+      else (i / 100) % 4 match {
+        case 0 => s"$i,n$i,"
+        case 1 => s"$i,a name far too long,1"
+        case _ => s"$i,n$i,-1"
+      }
+    val csvDir = Files.createTempDirectory("graft-bulk")
+    Files.writeString(csvDir.resolve("part1.csv"),
+      ("id,name,qty" +: (1 to 2000).map(line)).mkString("", "\n", "\n"))
+    val cfg = Loader.LoadConfig(source = "csv", path = csvDir.toString,
+      targetTable = "public.live_bulk",
+      sourceOptions = Map("header" -> "true"), batchSize = 1000, parallelism = 2)
+    val stats = Loader.loadPostgres(SparkSpec.session, cfg, new PsqlCatalog(psql),
+      PsqlConnectionFactory(sockDir))
+    assert(stats.rejected === poison.size && stats.loaded === 2000 - poison.size)
+    assert(stats.rollbacks >= stats.rejected && stats.statements > stats.transactions)
+    assert(psql("SELECT id, name, qty FROM live_bulk ORDER BY id") ===
+      (1 to 2000).filterNot(poison).map(i => s"$i|n$i|${i % 97}"))
+    s"rm -rf $csvDir".!
+  }
+
   /** [[graft.meta.PgCatalog]] over the live server through psql — the same
     * three SQL texts [[JdbcPgCatalog]] issues over JDBC, placeholders
     * rendered to literals. Driver-side only, like every catalog read.

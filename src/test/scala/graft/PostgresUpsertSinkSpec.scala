@@ -55,10 +55,11 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("error messages cap at maxErrors; rejects still fully counted") {
-    // 50 bad rows spread so no batch fully rejects (poison breaker stays
-    // cold): the reject COUNT must stay exact while the message list caps
-    // at maxErrors plus one suppression summary — the stats collect to the
-    // driver stays bounded on a systematically bad feed.
+    // 50 bad rows alternating with good ones, so no two rejects are
+    // consecutive and the poison breaker stays cold: the reject COUNT must
+    // stay exact while the message list caps at maxErrors plus one
+    // suppression summary — the collected stats stay bounded on a
+    // systematically bad feed.
     val bad: Set[Long] = (1L to 100L).filter(_ % 2 == 1).toSet
     val factory = new FakeConnectionFactory("cap", bad)
     val rows = (1L to 100L).map(i => org.apache.spark.sql.Row(i, s"v$i"))
@@ -77,11 +78,11 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
       val n = 1 + rng.nextInt(120)
       val bad: Set[Long] = (1L to n.toLong).filter(_ => rng.nextDouble() < 0.15).toSet
       val conn = new FakeSinkConnection("", r => bad(r.head.asInstanceOf[Long]))
-      val (rejected, errors) = PostgresUpsertSink.executeIsolated(
+      val res = PostgresUpsertSink.executeIsolated(
         conn, "sql", (1L to n.toLong).map(i => Seq[Any](i, s"v$i")))
       conn.commit()
-      assert(rejected == bad.size)
-      assert(errors.size == bad.size)
+      assert(res.rejected == bad.size)
+      assert(res.errors.size == bad.size)
       val landed = conn.committed.map(_.head.asInstanceOf[Long])
       assert(landed.toSet == (1L to n.toLong).toSet -- bad)
       assert(landed.size == landed.toSet.size, "each good row lands exactly once")
@@ -90,11 +91,121 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
 
   test("split cost is bounded: one bad row in batch of 64 costs ≤ 2·log₂(64) extra calls") {
     val conn = new FakeSinkConnection("", r => r.head == 13L)
-    val (rejected, _) = PostgresUpsertSink.executeIsolated(
+    val res = PostgresUpsertSink.executeIsolated(
       conn, "sql", (1L to 64L).map(i => Seq[Any](i)))
-    assert(rejected == 1)
+    assert(res.rejected == 1)
     // 1 initial + at most 2 per split level (log2(64)=6) → ≤ 13
     assert(conn.batchCalls <= 13, s"batchCalls=${conn.batchCalls}")
+  }
+
+  /** Runs `writePartition` on one fake connection, outside Spark. */
+  private def writeOne(keys: Seq[Long], bad: Set[Long], batchSize: Int) = {
+    val conn = new FakeSinkConnection("", r => bad(r.head.asInstanceOf[Long]))
+    val factory = new graft.sink.ConnectionFactory { def connect() = conn }
+    val stats = PostgresUpsertSink.writePartition(
+      keys.iterator.map(k => org.apache.spark.sql.Row(k, s"v$k")), "sql", factory,
+      batchSize = batchSize, maxRejects = None)
+    (stats, conn)
+  }
+
+  /** Rows each transaction sent in its first statement, in order. */
+  private def transactionSizes(calls: Seq[String]): Seq[Int] = {
+    var first = true
+    calls.flatMap { c =>
+      if (c.startsWith("commit")) { first = true; None }
+      else if (c.startsWith("exec") && first) { first = false; Some(c.split(' ').last.toInt) }
+      else None
+    }
+  }
+
+  test("transaction size: batchSize until the first reject, then 2^⌊log₂(good/rejected)⌋") {
+    import PostgresUpsertSink.transactionSize
+    assert(transactionSize(0, 0, 1000) == 1000)
+    assert(transactionSize(99, 1, 1000) == 64)
+    assert(transactionSize(127, 1, 1000) == 64)
+    assert(transactionSize(128, 1, 1000) == 128)
+    assert(transactionSize(3, 1, 1000) == 2)
+    assert(transactionSize(1, 1, 1000) == 1)
+    assert(transactionSize(0, 1, 1000) == 1)
+    assert(transactionSize(5, 10, 1000) == 1)
+    assert(transactionSize(150000, 1, 1000) == 1000)
+  }
+
+  test("property: writePartition lands every good row once across reject rates; no transaction exceeds batchSize") {
+    val rng = new scala.util.Random(7)
+    // batchSize ≥ 64 keeps a breaker-length run of rejects out of reach
+    // even at 60% (0.6^64 ≈ 6e-15 per position).
+    for (rate <- Seq(0.0, 0.001, 0.01, 0.15, 0.6); batchSize <- Seq(64, 1000)) {
+      val keys = (1L to 3000L)
+      val bad = keys.filter(_ => rng.nextDouble() < rate).toSet
+      val (stats, conn) = writeOne(keys, bad, batchSize)
+      val clue = s"rate=$rate batchSize=$batchSize"
+      assert(stats.rejected == bad.size, clue)
+      assert(stats.loaded == keys.size - bad.size, clue)
+      val landed = conn.committed.map(_.head.asInstanceOf[Long])
+      assert(landed.size == landed.toSet.size, s"each good row lands exactly once, $clue")
+      assert(landed.toSet == keys.toSet -- bad, clue)
+      val sizes = transactionSizes(conn.log.toSeq)
+      assert(sizes.sum == keys.size, clue)
+      assert(sizes.forall(_ <= batchSize), clue)
+      assert(stats.transactions == sizes.size, clue)
+      assert(stats.statements == conn.batchCalls, clue)
+      assert(stats.rollbacks == conn.log.count(_.startsWith("rollback")), clue)
+    }
+  }
+
+  test("clean feed: exactly ⌈n/batchSize⌉ full transactions, one savepoint and statement each") {
+    val (stats, conn) = writeOne(1L to 95L, Set.empty, batchSize = 10)
+    assert(stats.loaded == 95 && stats.rejected == 0)
+    assert(stats.transactions == 10 && stats.statements == 10 && stats.rollbacks == 0)
+    assert(transactionSizes(conn.log.toSeq) == Seq.fill(9)(10) :+ 5)
+    assert(conn.log.toSeq == (0 until 10).flatMap { t =>
+      val n = if (t < 9) 10 else 5
+      Seq("savepoint graft_sp_1", s"exec ok $n", s"commit $n")
+    })
+  }
+
+  test("executeIsolated: no RELEASE, rollbacks target the latest savepoint, no redundant savepoint") {
+    val rng = new scala.util.Random(11)
+    for (_ <- 1 to 200) {
+      val n = 1 + rng.nextInt(200)
+      val bad: Set[Long] = (1L to n.toLong).filter(_ => rng.nextDouble() < 0.05).toSet
+      val conn = new FakeSinkConnection("", r => bad(r.head.asInstanceOf[Long]))
+      PostgresUpsertSink.executeIsolated(conn, "sql", (1L to n.toLong).map(i => Seq[Any](i)))
+      assert(!conn.log.exists(_.startsWith("release")), s"RELEASE sent: ${conn.log}")
+      var latest: String = null
+      var marked = false // the latest savepoint still marks the current state
+      val opened = scala.collection.mutable.Set.empty[String]
+      conn.log.foreach {
+        case c if c.startsWith("savepoint ") =>
+          assert(!marked, s"redundant savepoint: ${conn.log}")
+          latest = c.stripPrefix("savepoint ")
+          assert(opened.add(latest), s"savepoint name reused: ${conn.log}")
+          marked = true
+        case c if c.startsWith("exec ") =>
+          assert(marked, s"statement without a savepoint marking the state: ${conn.log}")
+          if (c.startsWith("exec ok")) marked = false
+        case c if c.startsWith("rollback ") =>
+          assert(c.stripPrefix("rollback ") == latest, s"rollback past the latest savepoint: ${conn.log}")
+        case c => fail(s"unexpected call '$c'")
+      }
+      assert(conn.log.head == "savepoint graft_sp_1")
+    }
+  }
+
+  test("breaker: an all-bad feed stops after one batchSize of rejects; alternating never trips") {
+    val allBad = writeOne(1L to 100L, (1L to 100L).toSet, batchSize = 10)._1
+    assert(allBad.rejected == 10 && allBad.loaded == 0)
+    // Turning bad mid-feed: the first transaction with a reject is only
+    // partly rejected, so the run counts from the next transaction
+    // (sizes 8 then 2 at good/rejected = 45/5, then 45/13).
+    val turnsBad = writeOne(1L to 200L, (46L to 200L).toSet, batchSize = 10)._1
+    assert(turnsBad.loaded == 45 && turnsBad.rejected == 15)
+    // Alternating good/bad: transactions shrink to one row, and no run of
+    // fully rejected transactions is longer than one row.
+    val (alt, conn) = writeOne(1L to 400L, (1L to 400L).filter(_ % 2 == 0).toSet, batchSize = 10)
+    assert(alt.loaded == 200 && alt.rejected == 200)
+    assert(transactionSizes(conn.log.toSeq).drop(1).forall(_ == 1))
   }
 
   test("shuffle barrier keeps upstream task count independent of sink parallelism") {
