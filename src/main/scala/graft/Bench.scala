@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
@@ -56,7 +56,8 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   * own passes so the staged-replay protocol's I/O stays confined to the
   * stream windows (r18 VERDICT item 2).
   *
-  * A fixed SENTINEL (a constant tiny plan, identical every round) runs at
+  * The session is [[graft.tools.Harness.session]]. The fixed SENTINEL
+  * ([[graft.tools.Harness.sentinel]], a constant tiny plan) runs at
   * each rep-pass head AND every `SentinelStride` queries inside the pass;
   * the full (pass, offset, seconds) trace lands in BENCH.json, so a noisy
   * sweep region is identified by its own record instead of argued from
@@ -142,20 +143,7 @@ object Bench {
     val startNanos = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - startNanos) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the driver parses the stdout TAIL, and two benign
-    // WindowExec WARN lines (k-row bounded windows, see PlanShapeSpec) were
-    // the only non-metric content still landing after the metric line —
-    // every BENCH since r8 recorded parsed:null for it. The metric JSON must
-    // be the final stdout content (r12 VERDICT item 1).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // Deterministic query order (Map iteration order is arbitrary and puts
     // JVM/codegen warm-up cost on whichever query happens to run first).
     // SPARK_GRAFT_ONLY (comma-separated names) restricts the run — an
@@ -182,22 +170,14 @@ object Bench {
     // masquerade as speed.
     val timesByName = scala.collection.mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
     val failedOnce = scala.collection.mutable.Set.empty[String]
-    // The contention sentinel: a constant plan with one exchange, no table
-    // input — identical across rounds, so its wall-clock measures the box,
-    // not the code. Failures are swallowed like a query's (the sentinel is
+    // Sentinel failures are swallowed like a query's (the sentinel is
     // diagnostics — it must never be the reason a multi-minute sweep dies
     // with no record).
-    def sentinelOnce(): Option[Double] = try {
-      val t0 = System.nanoTime()
-      spark.range(0, 10000000L, 1, 32)
-        .selectExpr("id % 97 AS k", "id")
-        .groupBy("k").sum("id")
-        .write.format("noop").mode("overwrite").save()
-      Some((System.nanoTime() - t0) / 1e9)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] sentinel failed: ${e.getMessage}")
-      None
-    }
+    def sentinelOnce(): Option[Double] =
+      try Some(Harness.sentinel(spark)) catch { case e: Throwable =>
+        System.err.println(s"[bench] sentinel failed: ${e.getMessage}")
+        None
+      }
     sentinelOnce() // warm-up draw, not recorded
     // The sentinel TRACE (r18 VERDICT item 2): one draw at each pass head
     // PLUS one every `SentinelStride` queries inside the pass, each recorded

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.DataType
 import graft.meta.PgCatalog
 import graft.schema.SchemaConform
 import graft.sink.{ConnectionFactory, LoadStats, PostgresUpsertSink}
@@ -58,15 +59,28 @@ object Loader {
     * (`/root/reference/load_postgres_from_spark_df.py:84-91,127-163`) without
     * the sink, exposed for callers that want the cast plan only.
     */
-  def conformToTable(df: DataFrame, catalog: PgCatalog, cfg: LoadConfig): DataFrame = {
+  def conformToTable(df: DataFrame, catalog: PgCatalog, cfg: LoadConfig): DataFrame =
+    // DataFrame column order drives the INSERT column list, as in the
+    // reference's `psycopg2_database_helper.py:316-319`.
+    SchemaConform.conform(df, targetTypes(catalog, cfg))
+
+  /** The target table's columns as Spark types, from one catalog lookup. */
+  private def targetTypes(catalog: PgCatalog, cfg: LoadConfig): Map[String, DataType] = {
     val colTypes = catalog.columnTypes(cfg.schema, cfg.table)
     require(colTypes.nonEmpty,
       s"Target table ${cfg.schema}.${cfg.table} has no columns in the catalog")
-    // DataFrame column order drives the INSERT column list, as in the
-    // reference (`/root/reference/psycopg2_database_helper.py:316-319`).
-    SchemaConform.conform(
-      df, colTypes.map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg, cfg.typeOverrides) }.toMap)
+    colTypes.map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg, cfg.typeOverrides) }.toMap
   }
+
+  /** The sink call with `cfg`'s batching, routing and reject settings. */
+  private def upsert(df: DataFrame, key: Option[Seq[String]],
+      factory: ConnectionFactory, cfg: LoadConfig): LoadStats =
+    PostgresUpsertSink.upsert(df, cfg.targetTable, key, factory,
+      batchSize = cfg.batchSize,
+      parallelism = cfg.parallelism,
+      partitionCols = cfg.partitionCols,
+      colsNotForUpdate = cfg.colsNotForUpdate,
+      maxRejects = cfg.maxRejects)
 
   /** Streaming variant of the load path: the same catalog-driven
     * conform/cast + upsert sink applied to every micro-batch of an unbounded
@@ -89,22 +103,12 @@ object Loader {
       checkpointDir: String,
       onBatch: (Long, LoadStats) => Unit = (id, s) => println(s"[graft] batch $id: ${s.report}"))
       : StreamingQuery = {
-    val colTypes = catalog.columnTypes(cfg.schema, cfg.table)
-    require(colTypes.nonEmpty,
-      s"Target table ${cfg.schema}.${cfg.table} has no columns in the catalog")
-    val target = colTypes.map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg, cfg.typeOverrides) }.toMap
+    val target = targetTypes(catalog, cfg)
     val key = catalog.uniqueKey(cfg.schema, cfg.table)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val stats = PostgresUpsertSink.upsert(
-          SchemaConform.conform(batch.toDF(), target), cfg.targetTable, key, factory,
-          batchSize = cfg.batchSize,
-          parallelism = cfg.parallelism,
-          partitionCols = cfg.partitionCols,
-          colsNotForUpdate = cfg.colsNotForUpdate,
-          maxRejects = cfg.maxRejects)
-        onBatch(batchId, stats)
+        onBatch(batchId, upsert(SchemaConform.conform(batch.toDF(), target), key, factory, cfg))
       }
       .start()
   }
@@ -119,13 +123,6 @@ object Loader {
       factory: ConnectionFactory): LoadStats = {
     val source = SourceRegistry(cfg.source).load(spark, cfg.path, cfg.sourceOptions)
     val conformed = conformToTable(source, catalog, cfg)
-    val key = catalog.uniqueKey(cfg.schema, cfg.table)
-    PostgresUpsertSink.upsert(
-      conformed, cfg.targetTable, key, factory,
-      batchSize = cfg.batchSize,
-      parallelism = cfg.parallelism,
-      partitionCols = cfg.partitionCols,
-      colsNotForUpdate = cfg.colsNotForUpdate,
-      maxRejects = cfg.maxRejects)
+    upsert(conformed, catalog.uniqueKey(cfg.schema, cfg.table), factory, cfg)
   }
 }

@@ -195,10 +195,10 @@ object SetSimJoin {
     * is an exact BigInteger fold over rows already in hand — the Spark
     * census aggregate it replaces was a separate action whose
     * materialize-then-aggregate cycle cost q_ngram_jaccard ~3 s of its
-    * 6 s at sf0.1 (SetSimVariants A/B: asis 6.10 s min vs census-free
-    * 2.91 s, identical 10 778 output rows). Same threshold, same loud
-    * steering message, same exact integer mass — only the engine that
-    * computes it changes. Longs accumulate until near overflow and spill
+    * 6 s at sf0.1 (plans/r22/setsim_variants.txt: asis 6.10 s min vs
+    * census-free 2.91 s, identical 10 778 output rows). Same threshold,
+    * same loud steering message, same exact integer mass — only the engine
+    * that computes it changes. Longs accumulate until near overflow and spill
     * into BigInteger, so the guard stays exact at any df.
     */
   private def guardCandidateMassDriver(dfRows: Array[org.apache.spark.sql.Row],
@@ -769,9 +769,9 @@ object SetSimJoin {
     // window recount's second corpus scan) is REVERTED here on a fresh
     // isolated A/B: the substituted join-back ranked index cost 5.33 s
     // min vs 2.03 s for the plain window form on q_containment at sf0.1
-    // (SetSimVariants, per-variant JVMs, identical 505 output rows), even
-    // with a SHUFFLE_HASH hint on the df side — the checkpointed
-    // LogicalRDD's stats-free join plus the extra scan of the
+    // (plans/r22/setsim_variants.txt, per-variant JVMs, identical 505
+    // output rows), even with a SHUFFLE_HASH hint on the df side — the
+    // checkpointed LogicalRDD's stats-free join plus the extra scan of the
     // materialized table cost more than the one corpus re-scan they
     // avoid. The census keeps its own combiner-reduced aggregate (~0.5 s
     // incl. the corpus pass); net ~2.3 s off the gate.

@@ -148,10 +148,6 @@ object TextOps {
     array_distinct(transform(sequence(lit(1), length(text) - (n - 1)),
       i => text.substr(i, lit(n))))
 
-  /** Hashes of the distinct shingles — the MinHash input set. */
-  def shingleHashes(text: Column, n: Int = 3): Column =
-    transform(wordShingles(text, n), polyHash(_))
-
   /** Rolling-hash document fingerprint over the raw text. */
   def fingerprint(text: Column): Column = polyHash(text)
 

@@ -1,22 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-loop plan dumper: `runMain graft.tools.ExplainPlan <sfDir> <outDir>
   * <query ...>` writes each declared query's `.explain("formatted")` output
-  * to `<outDir>/<query>.txt`. Same session conf as [[graft.Bench]], so the
-  * captured plans are the ones the bench executes (AQE initial plans —
-  * the judge-facing evidence files under plans/r*).
+  * to `<outDir>/<query>.txt`. Runs under [[Harness.session]], the bench's
+  * conf, so the dumped plans (AQE initial plans) are the ones the bench
+  * executes at the same core count.
   *
-  * SELF-VERIFYING PAST CHECKPOINT BOUNDARIES (r21 VERDICT item 6): a
-  * `localCheckpoint` truncates `.explain` at the materialized frame, so the
-  * r21 after-dumps showed 0 scans and the scan-count claims had to be
-  * checked against code instead of plans. [[graft.meta.Ckpt]]'s capture
-  * hook records every lazily-checkpointed child's own `QueryExecution` as
-  * the query is built; this tool arms it and appends each child's formatted
-  * plan to the same dump file (`===== checkpointed child N =====`
-  * separators), so scan/exchange counts are verifiable from `plans/` alone.
+  * Dumps stay complete past checkpoint boundaries: a `localCheckpoint`
+  * truncates `.explain` at the materialized frame, so this tool arms
+  * [[graft.meta.Ckpt]]'s capture hook, which records every lazily
+  * checkpointed child's own `QueryExecution` as the query is built, and
+  * appends each child's formatted plan to the same dump file
+  * (`===== checkpointed child N =====` separators).
   */
 object ExplainPlan {
   def main(args: Array[String]): Unit = {
@@ -24,14 +21,7 @@ object ExplainPlan {
     val outDir = Paths.get(args(1))
     val names = args.drop(2).toSeq
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val drain = graft.meta.Ckpt.armCapture()
     names.foreach { q =>
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

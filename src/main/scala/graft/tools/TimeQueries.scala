@@ -1,21 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop single-query timer: `runMain graft.tools.TimeQueries <sfDir>
   * <reps> <query ...>` prints one `TIME <query> min=<s> rows=<n>` line per
-  * query (min of `reps` runs) plus the BASELINE.md contention sentinel.
-  * Exists because the sbt console's REPL classloader cannot reflect the
-  * streaming gates' case-class encoders — a `main` runs on the real
-  * classpath. Same local[32]/32-partition conf as [[graft.Bench]].
+  * query (min of `reps` runs) plus the contention sentinel. Runs under
+  * [[Harness.session]], the bench's conf. A `main` rather than the sbt
+  * console, whose REPL classloader cannot reflect the streaming gates'
+  * case-class encoders.
   *
-  * PROTOCOL: run via `sbt runMain` (or match build.sbt's
-  * SPARK_DRIVER_MEM=8g when invoking java directly). Heap size is part
-  * of the measurement protocol: the r19 adjudication found an oversized
-  * heap (-Xmx64g) turns the GC-heavy gates pathological under co-tenant
-  * memory pressure — q_itemsets measured 12.5–108 s at 64g in the same
-  * windows where the 8g protocol read a clean 4.1 s (vs the r17 4.0 s
-  * record), because a 64 GB young gen page-faults fresh zeroed pages
+  * Heap size is part of the measurement: run via `sbt runMain` (or match
+  * build.sbt's SPARK_DRIVER_MEM when invoking java directly). An oversized
+  * heap turns the GC-heavy gates pathological under co-tenant memory
+  * pressure, because a huge young generation page-faults fresh zeroed pages
   * through an already-pressured box.
   */
 object TimeQueries {
@@ -23,30 +18,14 @@ object TimeQueries {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def sentinel(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 10000000L, 1, 32)
-        .selectExpr("id % 97 AS k", "id")
-        .groupBy("k").sum("id")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    sentinel() // warm-up
-    println(f"SENTINEL min=${Seq(sentinel(), sentinel()).min}%.3f")
+    val spark = Harness.session()
+    Harness.sentinel(spark) // warm-up
+    println(f"SENTINEL min=${Seq(Harness.sentinel(spark), Harness.sentinel(spark)).min}%.3f")
     names.foreach { q =>
       // A sentinel draw right before each query tags ITS wall-clock window
-      // with the box's noise level (the r18 adjudication found a single
-      // head-of-run sentinel can't vouch for draws minutes later), and the
-      // per-rep times are printed so a bimodal contended min is visible.
-      val sq = sentinel()
+      // with the box's noise level, and the per-rep times are printed so a
+      // bimodal contended min is visible.
+      val sq = Harness.sentinel(spark)
       val runs = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val n = graft.SparkEntry.queries(q)(spark, sfDir).collect().length

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Harness
 
 /** Shared local SparkSession for suites that need one. */
 trait SparkSpec { self: AnyFunSuite =>
@@ -10,12 +11,6 @@ trait SparkSpec { self: AnyFunSuite =>
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The drivers' session at a fixed 4 cores, whatever the machine has. */
+  lazy val session: SparkSession = Harness.session(cores = 4)
 }
