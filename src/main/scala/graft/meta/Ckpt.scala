@@ -1,85 +1,94 @@
 package graft.meta
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import scala.jdk.CollectionConverters._
 
-/** The repo's lazy-`localCheckpoint` convention, as one named helper.
+/** The repo's one checkpoint convention: every frame the engine
+  * materializes goes through `.ckptLazy` or `.ckptEager` here, and no other
+  * module calls `localCheckpoint` or `checkpoint` itself.
   *
-  * WHAT the convention is for: a frame that feeds SEVERAL consumers inside
-  * one query (a count table read by its own join-back, an iterative round's
-  * state, a shared census) is materialized ONCE — `localCheckpoint(eager =
-  * false)` executes it on first use and serves every later consumer from
-  * the stored blocks, where plain lineage would re-run the whole upstream
-  * scan per consumer (guide §3.3: materialising an intermediate truncates
-  * the plan).
+  * WHAT it is for: a frame that feeds SEVERAL consumers (a count table read
+  * by its own join-back, an iterative round's state, a shared census, an
+  * input to several driver actions) is materialized ONCE and every later
+  * consumer reads the stored blocks, where plain lineage would re-run the
+  * whole upstream per consumer (guide §3.3: materialising an intermediate
+  * truncates the plan). `ckptLazy` materializes on first use; `ckptEager`
+  * runs a job now, for frames whose plan must be cut before the next one is
+  * built (iterative folds) or that feed separate actions.
   *
-  * FAULT POSTURE (the r21 verdict's "what's wrong" item 2 — the contract
-  * every call site cites by calling this helper): `localCheckpoint` stores
-  * blocks on the EXECUTORS and severs lineage BY DESIGN, so on a real
-  * cluster a lost executor permanently loses its blocks and fails the job
-  * — there is no recompute path. In `local[n]` (this harness, and any
-  * single-JVM deployment) executor loss is process death, so the trade is
-  * free. A cluster deployment that needs executor-loss tolerance for these
-  * intermediates should switch the mechanism, not the shape: a reliable
-  * `checkpoint()` into a fault-tolerant `spark.sparkContext
-  * .setCheckpointDir(...)` directory, or `persist(StorageLevel
-  * .MEMORY_AND_DISK_2)` (replicated, lineage kept). The checkpointed
-  * frames in this repo are deliberately NARROW (count/key tables, orders
-  * of magnitude below their inputs — the builders' scaled singles measure
-  * sub-2×/decade growth), so either substitution is cheap relative to the
-  * recompute it avoids.
+  * FAULT POSTURE — one rule, taken from the deployment: when the session
+  * has a RELIABLE checkpoint directory (`sparkContext.setCheckpointDir`),
+  * every site writes a reliable `checkpoint()` there and its frame survives
+  * executor loss, as durable as any shuffle output. Without one, every site
+  * takes a LOCAL checkpoint: executor-resident blocks that are neither
+  * replicated nor recomputable, so on a real cluster a lost executor fails
+  * the job. In `local[n]` (the harness, and any single-JVM deployment)
+  * executor loss is process death, so the local trade is free. Either way
+  * the materialization severs lineage BY DESIGN, so filter and column
+  * pushdown across it is cut. Production loads at scale should set a
+  * checkpoint dir. The checkpointed frames are deliberately NARROW
+  * (count/key tables, pruned corpus rows), so the reliable write is cheap
+  * next to the recompute it avoids. A lazy reliable checkpoint computes its
+  * frame once for the first consumer and once more to write the files.
+  *
+  * STORAGE RETENTION: a local checkpoint's executor blocks free with the
+  * frame's lifetime (the ContextCleaner reclaims them once the RDD is
+  * unreferenced). Reliable checkpoint files do NOT: they persist on disk
+  * under `<checkpointDir>/<session-uuid>/rdd-<id>/` until something
+  * reclaims them. Spark deletes them when the RDD is garbage-collected ONLY
+  * if the session was built with
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default false;
+  * a SparkConf setting fixed at context start, not a runtime SQL conf). A
+  * long-running session without that flag accumulates one `rdd-<id>`
+  * subtree per materialized frame. So set the cleaner flag at session
+  * build, or delete stale subtrees once the frames read from them are
+  * dropped, or accept the accumulation knowingly: the durability is the
+  * point, the disk it holds is the price.
   *
   * Why not `persist()`: the SQL cache is session-global and keyed by plan
   * equality, so a second identical call would read the FIRST call's cached
-  * result — a cross-invocation memo the bench contract forbids; checkpoint
-  * blocks belong to this call's RDD and are reclaimed by the
-  * ContextCleaner once unreferenced.
+  * result, a cross-invocation memo the bench contract forbids; checkpoint
+  * blocks belong to this call's RDD.
   *
   * PLAN-EVIDENCE CAPTURE: `.explain` on a checkpointed frame stops at the
-  * `LogicalRDD` boundary — the child's own plan (its scans, its exchanges)
-  * vanishes from the dump, which made the r21 after-plans unverifiable
-  * past the boundary (r21 verdict, "next round" item 6). When capture is
-  * armed (ExplainPlan does; the bench never does), this helper records
-  * each child's `QueryExecution` BEFORE the checkpoint wraps it, so the
-  * plan dump can append every checkpointed child's formatted plan and the
-  * evidence is complete from `plans/` alone.
+  * `LogicalRDD` boundary, so the child's own plan (its scans, its
+  * exchanges) vanishes from the dump. Inside [[capturing]] (ExplainPlan
+  * uses it; the bench never does) each site records its child's
+  * `QueryExecution` before materializing it, so a plan dump can append
+  * every checkpointed child's plan and the evidence is complete from
+  * `plans/` alone.
   */
 object Ckpt {
 
-  /** Armed only by [[graft.tools.ExplainPlan]]; null = zero-overhead path. */
-  private val capture = new java.util.concurrent.atomic.AtomicReference[
-    java.util.concurrent.ConcurrentLinkedQueue[
-      (String, org.apache.spark.sql.execution.QueryExecution)]](null)
+  /** Non-null only inside [[capturing]]; null is the zero-overhead path. */
+  private val capture = new AtomicReference[ConcurrentLinkedQueue[QueryExecution]](null)
 
-  /** Lazy local checkpoint under the convention above. `label` names the
-    * frame in captured plan dumps (defaults to the caller's file:line via
-    * the implicit-free call sites passing nothing — an empty label is
-    * fine; dumps are ordered).
-    */
-  def lazyLocal(df: DataFrame, label: String = ""): DataFrame = {
+  private def materialize(df: DataFrame, eager: Boolean): DataFrame = {
     val q = capture.get
-    if (q != null) q.add((label, df.queryExecution))
-    df.localCheckpoint(eager = false)
+    if (q != null) q.add(df.queryExecution)
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
   }
 
-  /** Postfix form: `df.ckptLazy` ≡ [[lazyLocal]]`(df)` — a drop-in for the
-    * previous bare `.localCheckpoint(eager = false)` call sites, so every
-    * site cites this convention (and its fault-posture contract) by name.
-    */
+  /** `df.ckptLazy` materializes on first use, `df.ckptEager` now. */
   implicit final class Syntax(private val df: DataFrame) extends AnyVal {
-    def ckptLazy: DataFrame = lazyLocal(df)
+    def ckptLazy: DataFrame = materialize(df, eager = false)
+    def ckptEager: DataFrame = materialize(df, eager = true)
   }
 
-  /** Arm capture (ExplainPlan only). Returns the drain function: call it
-    * after building one query to collect that query's checkpointed
-    * children in registration order (and reset the buffer for the next).
+  /** Runs `body` with capture on and returns its result with the
+    * `QueryExecution` of every frame checkpointed meanwhile, in
+    * registration order. Capture is off again when this returns.
     */
-  def armCapture(): () => Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
-    capture.set(new java.util.concurrent.ConcurrentLinkedQueue)
-    () => {
-      val q = capture.getAndSet(new java.util.concurrent.ConcurrentLinkedQueue)
-      val b = Seq.newBuilder[(String, org.apache.spark.sql.execution.QueryExecution)]
-      q.forEach(e => b += e)
-      b.result()
-    }
+  def capturing[A](body: => A): (A, Seq[QueryExecution]) = {
+    val q = new ConcurrentLinkedQueue[QueryExecution]
+    require(capture.compareAndSet(null, q), "Ckpt.capturing does not nest")
+    try {
+      val a = body
+      (a, q.asScala.toList)
+    } finally capture.set(null)
   }
 }

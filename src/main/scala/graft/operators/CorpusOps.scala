@@ -205,10 +205,10 @@ object CorpusOps {
     */
   def topTerms(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
     require(k >= 1)
-    // Lazy localCheckpoint: tf feeds BOTH the document-frequency aggregate
+    // Lazy checkpoint: tf feeds BOTH the document-frequency aggregate
     // and the join back — without the cut each consumer re-ran the corpus
     // scan + explode + (doc, token) string aggregate (two full corpus
-    // passes where one suffices; r21, guide §3.3 plan truncation). tf is
+    // passes where one suffices; guide §3.3 plan truncation). tf is
     // the distinct (doc, token) table — far smaller than the corpus text
     // it replaces in the second pass.
     val tf = docs
@@ -1071,12 +1071,12 @@ object CorpusOps {
     * same only-touch-the-corpus-once trick the trainer uses) and join
     * word-keyed onto the combiner-reduced (group, word) count aggregate;
     * no per-document segmentation ever runs. The corpus is scanned
-    * EXACTLY ONCE (r21): the (group, word) count table materializes once
-    * (lazy localCheckpoint, the [[tokenBudgetMix]] convention) and the
+    * EXACTLY ONCE: the (group, word) count table materializes once
+    * (lazy checkpoint, the [[tokenBudgetMix]] convention) and the
     * distinct-word table the segmenter folds over derives from IT
-    * (`gw.groupBy(word)` — vocabulary-sized input), where before r21 the
-    * segmenter ran [[bpeSegment]]'s own corpus scan and second
-    * string-keyed corpus-wide aggregate.
+    * (`gw.groupBy(word)` — vocabulary-sized input) rather than from
+    * [[bpeSegment]]'s own corpus scan and a second string-keyed
+    * corpus-wide aggregate.
     */
   def tokenizerFertility(docs: DataFrame, groupCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
@@ -1201,7 +1201,7 @@ object CorpusOps {
     val spark = docs.sparkSession
     import spark.implicits._
     val width = (TextOps.Prime + hashBuckets - 1) / hashBuckets
-    // Lazy localCheckpoint: `n` (the full tokenize + polyHash pass over the
+    // Lazy checkpoint: `n` (the full tokenize + polyHash pass over the
     // corpus) feeds BOTH the census aggregate and the classed join below —
     // without it the whole scan+tokenize runs twice (the double-generator
     // trap incrementalComponents guards against the same way). Lazy, so the
@@ -1454,7 +1454,7 @@ object CorpusOps {
     *
     * Shared-subtree memos (r15 ADVICE): the tokenized doc sets feed F1 AND
     * the F1-pruned explode; the candidate-pair stream feeds F2 AND the
-    * triple generator; F2 feeds three consumers. The lazy localCheckpoints
+    * triple generator; F2 feeds three consumers. The lazy checkpoints
     * make each computed exactly once (plan audit: zero parquet re-scans
     * after the memo). Honestly measured at sf0.1: wall time is ~unchanged
     * (~4.4 s warm — the cost is the intrinsic C(k,2)/triple candidate
@@ -1726,10 +1726,10 @@ object CorpusOps {
     * token the old string-keyed TakeOrdered could have selected —
     * identical output (hash injectivity on the vocabulary assumed, 60
     * bits; the oracle verifies it per fixture). Each count table
-    * materializes once (lazy localCheckpoint) — its three consumers
-    * (join, corpus total, threshold) re-ran the full scan lineage before
-    * r21 (8 parquet scans per run; now 2 count scans + 2 recovery
-    * filter scans).
+    * materializes once (lazy checkpoint) — without it its three
+    * consumers (join, corpus total, threshold) each re-run the full scan
+    * lineage (8 parquet scans per run instead of 2 count scans + 2
+    * recovery filter scans).
     *
     * Output: (rnk 1..k, token, c_a, c_b, shift_num — digit string,
     * shift DOUBLE), rows ordered by rank.
@@ -1904,9 +1904,9 @@ object CorpusOps {
     * the corpus vocabulary (60 informative bits ⇒ a collision among even
     * 10⁸ distinct tokens has probability ~2·10⁻³; the oracle gate verifies
     * the fixture vocabulary collision-free at every SF). The (src, hash)
-    * count table materializes ONCE (lazy localCheckpoint — the
+    * count table materializes ONCE (lazy checkpoint — the
     * [[tokenBudgetMix]] convention): it feeds four downstream aggregates,
-    * and before r21 each consumer re-ran the whole scan+explode+aggregate
+    * and without it each consumer re-runs the whole scan+explode+aggregate
     * lineage — 12 parquet scans of the corpus per run where one suffices.
     *
     * Single-source corpora (m = 0) report NULL tvd. NULL texts contribute

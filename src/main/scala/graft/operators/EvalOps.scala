@@ -193,7 +193,7 @@ object EvalOps {
     def checked(c: String): Column =
       when(col(c).isNotNull, col(c).cast("string"))
         .otherwise(raise_error(lit(s"classPrf: $c must be non-null")))
-    // Lazy localCheckpoint — same rationale as cohensKappa's (r21): the
+    // Lazy checkpoint, same rationale as cohensKappa's: the
     // confusion-cell table feeds three aggregates in classPrfFromCounts,
     // and without the cut each re-ran the corpus scan plus the caller's
     // label expressions (predictedLang tokenization for the lang-ID gate).
@@ -311,7 +311,7 @@ object EvalOps {
     require(k >= 1, s"k must be >= 1, got $k")
     val w = ndcgWeights(k)
     val prefix = w.scanLeft(0.0)(_ + _).tail
-    // Lazy localCheckpoint (r21): the caller's `ranked` is typically an
+    // Lazy checkpoint: the caller's `ranked` is typically an
     // EXPENSIVE retrieval plan (a brute-force top-k scored the whole
     // corpus for q_retrieval_eval) but only #queries·k rows — and it
     // feeds BOTH the query-list distinct and the relevance join, while
@@ -362,7 +362,7 @@ object EvalOps {
           element_at(pArr, least(col("n_rel"), lit(k.toLong)).cast("int"))))
       // Per-query frame: one tiny row per query, consumed by the output
       // AND the macro aggregate — cut here so the union's second branch
-      // reads the materialized rows (r21).
+      // reads the materialized rows.
       .ckptLazy
     val macroRow = f.agg(
         (aggregate(
@@ -459,12 +459,12 @@ object EvalOps {
     def checked(c: String): Column =
       when(col(c).isNotNull, col(c).cast("string"))
         .otherwise(raise_error(lit(s"cohensKappa: $c must be non-null")))
-    // Lazy localCheckpoint (the CorpusOps.tokenBudgetMix convention): the
+    // Lazy checkpoint (the CorpusOps.tokenBudgetMix convention): the
     // joint-cell table is label²·groups rows but feeds THREE downstream
     // aggregates in cohensKappaFromCounts (agreements + both marginals) —
     // without the cut, each consumer re-ran the full data scan AND the
     // rater expressions (for the lang-ID gate: the whole predictedLang
-    // tokenization, three times over the corpus — r21, guide §3.3
+    // tokenization, three times over the corpus — guide §3.3
     // "materialise an intermediate to truncate the plan"). Batch-side
     // only: the streaming twin calls cohensKappaFromCounts directly on its
     // (already tiny) state table, which stays checkpoint-free.

@@ -26,8 +26,8 @@ import graft.meta.Ckpt.Syntax
   * High-degree hubs are exactly what large-star is FOR: it hangs a hub's
   * larger neighbors off the component minimum, splitting the hub's star
   * across keys instead of funneling the component through one reducer. The
-  * iteration state is `localCheckpoint`ed each round (the kmeans pattern,
-  * VectorOps.scala:259) so lineage — and with it, plan size and scheduler
+  * iteration state is checkpointed each round (the kmeans pattern,
+  * [[VectorOps.kmeans]]) so lineage — and with it, plan size and scheduler
   * overhead — stays constant across rounds; convergence is decided by a
   * one-action structural check on the checkpointed edges (see the stopping
   * rule in the body), never by driver-side collection.
@@ -161,7 +161,7 @@ object GraphOps {
       nodes.toSeq.map(n => (n, find(n))).toDF("node", "component")
     }
 
-    // LAZY localCheckpoint throughout: the convergence check that
+    // LAZY checkpoint throughout: the convergence check that
     // immediately follows each checkpoint is the action that materializes
     // it, so every round costs ONE job (check + persist fused), not two
     // (eager persist, then check). The truncated-lineage guarantee is
@@ -289,7 +289,7 @@ object GraphOps {
       sourceCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    // sym feeds every relaxation round — lazy localCheckpoint executes it
+    // sym feeds every relaxation round — a lazy checkpoint executes it
     // once (see pageRankInt).
     val sym = symmetrize(edges, srcCol, dstCol).ckptLazy
     var dist = sources
@@ -340,8 +340,8 @@ object GraphOps {
     // executes each occurrence separately (common subtrees are not shared;
     // ReuseExchange only fires on bit-identical exchange subtrees, which
     // column pruning routinely breaks — the RankOps lesson). A lazy
-    // localCheckpoint materializes each ONCE on first use and serves the
-    // remaining k−1 occurrences from executor-local blocks — the same
+    // checkpoint materializes each ONCE on first use and serves the
+    // remaining k−1 occurrences from the stored blocks — the same
     // pattern connectedComponents and kmeans use (measured: q_pagerank
     // 3.80 → 2.84 s at 5 rounds, q_bfs_reach 2.32 → 1.86, q_ppr
     // 3.52 → 2.85, q_label_prop 4.66 → 4.02 — sf0.1 isolated medians).
@@ -399,7 +399,7 @@ object GraphOps {
       iterations: Int,
       scale: Long = 1000000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // sym/deg feed every round — lazy localCheckpoint executes each once
+    // sym/deg feed every round — a lazy checkpoint executes each once
     // (see pageRankInt).
     val sym = symmetrize(edges, srcCol, dstCol).ckptLazy
     val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
@@ -456,7 +456,7 @@ object GraphOps {
       dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // sym feeds every round — lazy localCheckpoint executes it once (see
+    // sym feeds every round — a lazy checkpoint executes it once (see
     // pageRankInt).
     val sym = symmetrize(edges, srcCol, dstCol).ckptLazy
     var labels = sym.select(col("u").as("node")).distinct()
@@ -541,7 +541,7 @@ object GraphOps {
     * foreachBatch, not a stateful operator: component merging is a global
     * fixpoint over keys (an edge can fuse two arbitrary clusters), which
     * per-key `mapGroupsWithState` state cannot express — the labels
-    * DataFrame IS the state. It is EAGERLY `localCheckpoint`ed each fold;
+    * DataFrame IS the state. It is EAGERLY checkpointed each fold;
     * the lazy form would accrete one plan layer per batch and replan the
     * entire history every trigger (the streaming-fold lineage trap — the
     * per-round analog is measured in the iterative graph operators).
@@ -559,7 +559,7 @@ object GraphOps {
     val q = edgeStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         labels = incrementalComponents(labels, "node", "component",
-          batch, srcCol, dstCol).localCheckpoint(eager = true)
+          batch, srcCol, dstCol).ckptEager
         ()
       }
       .start()
@@ -578,7 +578,7 @@ object GraphOps {
     * Shape per round: one node-keyed count aggregate + two node-keyed
     * anti-joins of the edge list against the dropped-node set (AQE
     * broadcasts the dropped side when small) — never an all-pairs or
-    * driver-side structure; the round state localCheckpoints so plan depth
+    * driver-side structure; the round state is checkpointed so plan depth
     * stays one round. Rounds are bounded by the peeling depth of the
     * graph — O(1)-ish on real corpus graphs, O(n) only on adversarial
     * chains (a path peels from the ends inward one layer per round); the

@@ -137,16 +137,13 @@ object SetSimJoin {
 
   /** The (block, token) document-frequency table — one combiner-reduced
     * aggregate over the exploded index (map-side combine → ≤ |vocab| rows).
-    * `ckpt = true` LAZILY local-checkpoints it for callers with SEVERAL
+    * `ckpt = true` LAZILY checkpoints it for callers with SEVERAL
     * consumers (the Packed pack + its oversized-vocabulary fallback's
     * census + join-back: the r19 census paid a full second corpus pass
     * without it — q_ngram_jaccard 5.5 → 9.0 s driver minima, r19 VERDICT
-    * item 4). localCheckpoint, not persist(): the SQL cache is
-    * session-global and keyed by plan equality, so a persisted table would
-    * make a repeated identical call read round-1's counts; checkpoint
-    * blocks belong to this call's RDD and are reclaimed by the
-    * ContextCleaner when the plan they feed is unreferenced.
-    * `ckpt = false` is for a SINGLE-consumer census (the r22 containment
+    * item 4). A checkpoint, not persist(): a persisted table would make a
+    * repeated identical call read round-1's counts (see [[graft.meta.Ckpt]]).
+    * `ckpt = false` is for a SINGLE-consumer census (the containment
     * shape below) — materializing a table nothing re-reads is pure cost.
     */
   private def tokenDfTable(ex: DataFrame, blockCols: Seq[String],
@@ -310,7 +307,7 @@ object SetSimJoin {
     // Census over DISTINCT per-doc tokens (the setCol contract): one
     // combiner-reduced aggregate, never the index itself.
     val ex = docs.select(explode(col(setCol)).as("sj_tok") +: bc: _*)
-    // Lazy localCheckpoint (r22): the hot-key table has TWO consumers —
+    // Lazy checkpoint: the hot-key table has TWO consumers —
     // the steering census action just below and the broadcast
     // array_except (or anti-join) filter inside the returned plan — and
     // each would otherwise re-run the full corpus explode + groupBy
@@ -394,13 +391,13 @@ object SetSimJoin {
         // here.
         val dfTab = dfTabReuse.getOrElse(
           ex.groupBy(bc :+ col("sj_tok"): _*).agg(count(lit(1)).as("sj_df")))
-        // SHUFFLE_HASH on the df side of the non-broadcast join-back (r22):
-        // the reused table arrives as a checkpointed LogicalRDD with no
-        // usable stats, so the planner falls back to sort-merge and SORTS
-        // the full inverted index on (block, token) just to attach a
-        // count. Hashing the vocabulary-sized df side per partition skips
-        // both sorts at the same exchange count (build side ≪ index by
-        // the vocabulary contract).
+        // SHUFFLE_HASH on the df side fires only when the caller disabled
+        // the hot-key split (`hotDfThreshold = Long.MaxValue`, for inputs
+        // known to be tame): the df table is then a fresh vocabulary-sized
+        // aggregate, and hashing it per partition skips sort-merge's two
+        // sorts of the full inverted index at the same exchange count. The
+        // hash build has no spill path, so an unbounded vocabulary belongs
+        // on the default split path.
         if (bcast) ex.join(broadcast(dfTab), blockCols :+ "sj_tok")
         else if (hotDf == Long.MaxValue)
           ex.join(dfTab.hint("SHUFFLE_HASH"), blockCols :+ "sj_tok")

@@ -531,8 +531,8 @@ object StatOps {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val spark = df.sparkSession
     import spark.implicits._
-    // Both frames materialize ONCE (lazy localCheckpoint, the
-    // CorpusOps.tokenBudgetMix convention — r21): `base` feeds the ranges
+    // Both frames materialize ONCE (lazy checkpoint, the
+    // CorpusOps.tokenBudgetMix convention): `base` feeds the ranges
     // aggregate and the bucket join, and `b` feeds SIX consumers (the
     // cross histogram, both Fenwick sweeps, n, and the tie aggregates) —
     // without the cuts every consumer re-ran the caller's full corpus

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.meta.Ckpt.Syntax
 
 /** Embedding-vector operators over ARRAY<FLOAT> columns (Spark has no native
   * vector type): cosine similarity, brute-force top-k, and an IVF-style
@@ -611,12 +612,12 @@ object VectorOps {
       idCol: String, vecCol: String, iters: Int): DataFrame = {
     var c = seedCentroids.select(col(idCol).as("cluster_id"), col(vecCol).as("cvec"))
     (0 until iters).foreach { _ =>
-      // localCheckpoint (eager) truncates lineage between Lloyd iterations:
+      // An eager checkpoint truncates lineage between Lloyd iterations:
       // each step embeds the previous centroids plan twice (broadcast fold +
       // empty-cluster coalesce), so without materialization the logical plan
       // doubles per iteration and analysis/recompute cost goes exponential.
       c = kmeansStep(data, c.select(col("cluster_id").as(idCol), col("cvec").as(vecCol)),
-        idCol, vecCol).select(col("cluster_id"), col("cvec")).localCheckpoint()
+        idCol, vecCol).select(col("cluster_id"), col("cvec")).ckptEager
     }
     c
   }
@@ -917,9 +918,9 @@ object VectorOps {
     val dim = m * sdMin
     // The residuals feed iters+1 driver actions (the trainer's seed
     // collect + one collect per Lloyd round) and then the full re-encode —
-    // the cross-action-reuse case localCheckpoint exists for (the
+    // the cross-action-reuse case an eager checkpoint exists for (the
     // q_ivfpq_trained lesson).
-    val res = ivfResiduals(data, idCol, vecCol, centroids).localCheckpoint()
+    val res = ivfResiduals(data, idCol, vecCol, centroids).ckptEager
     // newCbs is a driver-local relation (the trainer collects every round)
     // — safe to both persist as the new codebook table and feed the
     // re-encode without any read-after-overwrite hazard.

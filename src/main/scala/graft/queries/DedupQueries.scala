@@ -139,7 +139,7 @@ object DedupQueries extends QueryDomain {
       // plus today's edges must equal a from-scratch run over the union,
       // which is exactly how the gate is oracled — the same recursive-CTE
       // SQL as q_dedup_clusters.
-      // Lazy localCheckpoint: the pair set feeds BOTH the history CC and
+      // Lazy checkpoint: the pair set feeds BOTH the history CC and
       // the today filter — without it the banded generator runs twice.
       val pairs = SimHash.nearDupPairs(docs(s, dir), "doc_id", "text",
         bits = 60, bandBits = 15, maxHamming = 3)
@@ -162,7 +162,7 @@ object DedupQueries extends QueryDomain {
       // q_cc_incremental: the SimHash near-dup pair set replays as three
       // micro-batches, each folding through incrementalComponents inside
       // foreachBatch (the labels frame IS the state, eagerly
-      // localCheckpointed so lineage stays O(1) in batch count). The final
+      // checkpointed so lineage stays O(1) in batch count). The final
       // labeling must equal from-scratch components over every pair seen —
       // the same recursive-CTE oracle gates batch, incremental, and stream.
       // Flat part-files, not a nested dataset dir: the file-stream source
@@ -763,11 +763,10 @@ object DedupQueries extends QueryDomain {
       // dedupe them, so without materialization the expensive quality
       // fold re-runs per consumer (measured 7.3 s vs 4.4 s). The
       // post-funnel frame is corpus-row-sized and column-pruned; an
-      // eager local checkpoint is the cheap cut (blocks free with the
-      // frame — the Quarantine local-path contract).
+      // eager checkpoint is the cheap cut.
       val train = deduped.filter($"source" =!= "src0")
         .select($"doc_id", $"lang", $"text", $"n_words")
-        .localCheckpoint()
+        .ckptEager
       val bench = raw.filter($"source" === "src0")
       val contaminated = CorpusOps.sharedWindowOverlap(
           train, "doc_id", "text", bench, "doc_id", "text",

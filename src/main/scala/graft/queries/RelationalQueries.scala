@@ -649,7 +649,7 @@ object RelationalQueries extends QueryDomain {
         "l_quantity" -> "numeric(12,2)",
         "l_extendedprice" -> "numeric(14,2)",
         "l_returnflag" -> "text",
-        "l_shipdate" -> "date").map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg) }
+        "l_shipdate" -> "date").map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg) }.toMap
       // ORDER BY every output column: the fixture's (l_orderkey, l_linenumber)
       // is not unique, and any remaining ties are fully identical rows.
       // The DECIMAL columns are re-rendered as scale-faithful strings ("24.00")
@@ -657,7 +657,7 @@ object RelationalQueries extends QueryDomain {
       // representations hash differently in the driver compare even when the
       // values are identical, so both engines emit the canonical text form.
       orderedSmall(
-        SchemaConform.conformOrdered(t(s, dir, "lineitem"), target),
+        SchemaConform.conform(t(s, dir, "lineitem"), target),
         $"l_orderkey", $"l_linenumber", $"l_quantity", $"l_extendedprice",
         $"l_returnflag", $"l_shipdate")
         .withColumn("l_quantity", $"l_quantity".cast("string"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.operators._
+import graft.meta.Ckpt.Syntax
 import graft.queries.QueryShared._
 
 /** Embedding-similarity + multimodal gates: brute-force cosine top-k,
@@ -438,11 +439,11 @@ object VectorQueries extends QueryDomain {
       // Eager checkpoint: the residuals feed FOUR separate actions (two
       // seed collects, two Lloyd-iteration collects) before the final
       // union job — without materialization each action re-runs the
-      // corpus-wide assign fold (the positive case for localCheckpoint:
+      // corpus-wide assign fold (the positive case for a checkpoint:
       // cross-ACTION reuse, not within-job subtree dedup, which
-      // ReuseExchange already covers — the r17 curve-gate lesson).
+      // ReuseExchange already covers).
       val res = VectorOps.ivfResiduals(e, "vec_id", "embedding", centroids)
-        .localCheckpoint()
+        .ckptEager
       val seedCbs = res.filter($"id".between(20, 27)).select(explode(array(
           (0 until 4).map(sub =>
             struct(lit(sub).as("sub"), $"id".as("cid"),

@@ -40,15 +40,4 @@ object SchemaConform {
     )
     lowered.select(kept.map(c => col(c).cast(target(c)).alias(c)).toIndexedSeq: _*)
   }
-
-  /** Ordered-target variant: project and cast in the *target's* column order
-    * (attnum order), for callers that want catalog ordering instead.
-    */
-  def conformOrdered(df: DataFrame, target: Seq[(String, DataType)]): DataFrame = {
-    val lowered = lowercaseColumns(df)
-    val have = lowered.columns.toSet
-    val kept = target.filter { case (n, _) => have(n) }
-    require(kept.nonEmpty, "No DataFrame column matches the target table schema")
-    lowered.select(kept.map { case (n, dt) => col(n).cast(dt).alias(n) }.toIndexedSeq: _*)
-  }
 }

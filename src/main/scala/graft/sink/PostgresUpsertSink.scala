@@ -5,20 +5,12 @@ import org.apache.spark.sql.functions.col
 import scala.collection.mutable
 import scala.util.control.NonFatal
 
-/** Per-partition write statistics, one row per Spark partition; summed on the
-  * driver (reference O14, `/root/reference/psycopg2_database_helper.py:337-357`).
+/** Write statistics of one Spark partition, or of a whole load as the `+`
+  * of its partitions' (reference O14, `psycopg2_database_helper.py:337-357`).
   * `transactions` counts commits, `statements` `executeBatch` calls and
   * `rollbacks` savepoint rollbacks, all over committed transactions: a
   * transaction re-run after a reconnect counts once.
   */
-final case class PartitionStats(
-    loaded: Long,
-    rejected: Long,
-    errors: Seq[String],
-    transactions: Long,
-    statements: Long,
-    rollbacks: Long)
-
 final case class LoadStats(
     loaded: Long,
     rejected: Long,
@@ -26,6 +18,10 @@ final case class LoadStats(
     transactions: Long,
     statements: Long,
     rollbacks: Long) {
+  def +(o: LoadStats): LoadStats =
+    LoadStats(loaded + o.loaded, rejected + o.rejected, errors ++ o.errors,
+      transactions + o.transactions, statements + o.statements, rollbacks + o.rollbacks)
+
   def report: String =
     s"Total rows loaded: $loaded\nTotal rows rejected: $rejected" +
       s"\nTransactions: $transactions, statements: $statements, rollbacks: $rollbacks" +
@@ -38,13 +34,8 @@ final case class LoadStats(
   *  - partitioning policy: `partitionCols` set → hash-`repartition` so rows
   *    sharing an upsert key land on one connection (avoids cross-connection
   *    conflict/deadlock on the same key); otherwise a round-robin
-  *    `repartition(parallelism)` — a shuffle barrier, so capping connections
-  *    does NOT narrow the upstream scan/conform stage the way the
-  *    reference's `coalesce` does
-  *    (`/root/reference/psycopg2_database_helper.py:321-325`): `coalesce(1)`
-  *    there collapses the whole pipeline to one task. Callers that want the
-  *    reference's zero-shuffle behavior (tiny inputs) pass
-  *    `shuffleBarrier = false`.
+  *    `repartition(parallelism)`. Either is a shuffle barrier, so capping
+  *    connections does not narrow the upstream scan/conform stage.
   *  - one lazily-opened connection per partition
   *    (`/root/reference/psycopg2_database_helper.py:152-154`).
   *  - rows grouped into transactions of at most `batchSize` rows, each
@@ -89,10 +80,7 @@ object PostgresUpsertSink {
       parallelism: Int = 1,
       partitionCols: Seq[String] = Nil,
       colsNotForUpdate: Seq[String] = Nil,
-      maxRejects: Option[Long] = None,
-      shuffleBarrier: Boolean = true,
-      reconnectAttempts: Int = 1,
-      maxErrors: Int = 100): LoadStats = {
+      maxRejects: Option[Long] = None): LoadStats = {
 
     val sql = UpsertSqlGen.build(
       df.schema.fieldNames.toIndexedSeq, tableName,
@@ -100,31 +88,27 @@ object PostgresUpsertSink {
 
     val routed =
       if (partitionCols.nonEmpty) df.repartition(parallelism, partitionCols.map(col): _*)
-      else if (shuffleBarrier) df.repartition(parallelism)
-      else df.coalesce(parallelism)
+      else df.repartition(parallelism)
 
-    val stats = routed
+    routed
       .mapPartitions { rows: Iterator[Row] =>
-        Iterator.single(
-          writePartition(rows, sql, factory, batchSize, maxRejects,
-            reconnectAttempts, maxErrors))
-      }(Encoders.product[PartitionStats])
+        Iterator.single(writePartition(rows, sql, factory, batchSize, maxRejects))
+      }(Encoders.product[LoadStats])
       .collect()
-
-    LoadStats(
-      stats.map(_.loaded).sum,
-      stats.map(_.rejected).sum,
-      stats.flatMap(_.errors).toIndexedSeq,
-      stats.map(_.transactions).sum,
-      stats.map(_.statements).sum,
-      stats.map(_.rollbacks).sum)
+      .foldLeft(LoadStats(0L, 0L, Vector.empty, 0L, 0L, 0L))(_ + _)
   }
+
+  /** Reconnect-and-resume recoveries per partition. */
+  private val ReconnectAttempts = 1
+
+  /** Error messages kept per partition. */
+  private val MaxErrors = 100
 
   /** Body of one executor task. Package-private for direct unit testing.
     *
     * Transient-fault posture: a [[SinkConnectionLostException]] (network
     * drop, server restart) between/within batches triggers up to
-    * `reconnectAttempts` reconnect-and-resume recoveries per partition —
+    * `ReconnectAttempts` reconnect-and-resume recoveries per partition —
     * committed batches are durable by design, and the in-flight batch is
     * re-run in full on the fresh connection. If the loss struck during
     * `commit()` the transaction's fate is in doubt; re-running is still
@@ -138,16 +122,13 @@ object PostgresUpsertSink {
       sql: String,
       factory: ConnectionFactory,
       batchSize: Int,
-      maxRejects: Option[Long],
-      reconnectAttempts: Int = 1,
-      maxErrors: Int = 100): PartitionStats = {
+      maxRejects: Option[Long]): LoadStats = {
     require(batchSize > 0, "batchSize must be positive")
-    require(maxErrors >= 1, "maxErrors must be positive")
     var conn: SinkConnection = null
     var seen = 0L
     var rejected = 0L
     var transactions, statements, rollbacks = 0L
-    var reconnectsLeft = reconnectAttempts
+    var reconnectsLeft = ReconnectAttempts
     // Error MESSAGES are capped per partition (`rejected` still counts every
     // bad row): uncapped, a systematically bad feed at 10⁵ partitions would
     // ship an unbounded string list through the stats collect to the driver
@@ -156,7 +137,7 @@ object PostgresUpsertSink {
     var suppressed = 0L
     val errors = mutable.ArrayBuffer.empty[String]
     def recordErrors(errs: Seq[String]): Unit = {
-      val room = maxErrors - errors.size
+      val room = MaxErrors - errors.size
       errors ++= errs.take(room)
       suppressed += math.max(0, errs.size - room)
     }
@@ -208,8 +189,8 @@ object PostgresUpsertSink {
       }
       if (!poisoned) flush()
       if (suppressed > 0)
-        errors += s"($suppressed further error messages suppressed by maxErrors=$maxErrors)"
-      PartitionStats(seen - rejected, rejected, errors.toIndexedSeq,
+        errors += s"($suppressed further error messages suppressed by maxErrors=$MaxErrors)"
+      LoadStats(seen - rejected, rejected, errors.toIndexedSeq,
         transactions, statements, rollbacks)
     } finally if (conn != null) conn.close()
   }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.meta.Ckpt.Syntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -19,39 +20,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   *
   * Scale posture: the parse is per-row (splittable text scan), the DLQ
   * write is one extra pass over the cached rows, and the returned frame
-  * is a materialized CHECKPOINT of the good rows — the parse cache
-  * itself is unpersisted before returning (r15 ADVICE: a long-running
-  * session ingesting many feeds must not accumulate a pinned cached copy
-  * of every input). A LOCAL checkpoint's executor blocks free with the
-  * returned frame's lifetime; a RELIABLE checkpoint's files do NOT —
-  * see the storage-retention contract below.
-  *
-  * Fault-tolerance tradeoff (r16 ADVICE, documented contract): when the
-  * session has a RELIABLE checkpoint directory configured
-  * (`sparkContext.setCheckpointDir`), the good rows checkpoint there and
-  * survive executor loss. Without one, the fallback is a LOCAL
-  * checkpoint: executor-resident blocks that are neither replicated nor
-  * recomputable — any executor loss makes the returned frame
-  * unrecoverable, and downstream filter/column pushdown into the source
-  * scan is cut either way (the materialization severs lineage BY DESIGN:
-  * the corrupt column must not be optimized out from under the DLQ
-  * split). Production ingests at scale should set a checkpoint dir; the
-  * returned frame is then as durable as any shuffle output.
-  *
-  * Storage-retention contract of the reliable path (r17 ADVICE):
-  * `Dataset.checkpoint()` files persist ON DISK under
-  * `<checkpointDir>/<session-uuid>/rdd-<id>/` until something reclaims
-  * them — unlike a local checkpoint's executor blocks, they do NOT free
-  * with the returned frame's lifetime. Spark auto-deletes them when the
-  * frame's RDD is garbage-collected ONLY if the session was built with
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
-  * false, and it is a SparkConf setting fixed at context start, not a
-  * runtime SQL conf). A long-running session ingesting many feeds
-  * without that flag accumulates one `rdd-<id>` subtree per call. So:
-  * set the cleaner flag at session build, or periodically delete the
-  * checkpoint directory's stale subtrees (safe once the frames read
-  * from them are dropped), or accept the accumulation knowingly — the
-  * durability is the point; the disk it holds is the price.
+  * is an eager checkpoint of the good rows. The parse cache itself is
+  * unpersisted before returning, so a long-running session ingesting many
+  * feeds does not accumulate a pinned cached copy of every input. Whether
+  * that checkpoint is reliable or local, and what it retains on disk,
+  * follows the session's checkpoint dir: see [[graft.meta.Ckpt]].
   */
 object Quarantine {
 
@@ -71,13 +44,8 @@ object Quarantine {
       .write.mode("overwrite").text(dlqPath)
     // Eager checkpoint: materializes the good rows (their lineage no
     // longer filters the corrupt column, so the cache is no longer load-
-    // bearing), then release the parse cache immediately. Reliable when a
-    // checkpoint dir is configured, local otherwise — see the class-doc
-    // fault-tolerance contract.
-    val filtered = raw.filter(col("_corrupt").isNull).drop("_corrupt")
-    val good =
-      if (spark.sparkContext.getCheckpointDir.isDefined) filtered.checkpoint()
-      else filtered.localCheckpoint()
+    // bearing), then release the parse cache immediately.
+    val good = raw.filter(col("_corrupt").isNull).drop("_corrupt").ckptEager
     raw.unpersist()
     good
   }

@@ -56,10 +56,4 @@ object PgTypeMapping {
     case "bytea"                                 => BinaryType
     case _                                       => StringType
   }
-
-  /** Map a full catalog column listing `(name, typeWithTypmod)` to a Spark
-    * schema, preserving catalog (attnum) order.
-    */
-  def toStructType(columns: Seq[(String, String)]): StructType =
-    StructType(columns.map { case (n, t) => StructField(n, toSparkType(t)) })
 }

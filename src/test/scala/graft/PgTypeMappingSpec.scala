@@ -65,10 +65,4 @@ class PgTypeMappingSpec extends AnyFunSuite {
     assert(PgTypeMapping.parseSparkName("int").toOption.get == IntegerType)
     assert(PgTypeMapping.parseSparkName("not_a_type").isLeft)
   }
-
-  test("toStructType preserves order") {
-    val st = PgTypeMapping.toStructType(Seq("a" -> "bigint", "b" -> "numeric(4,1)", "c" -> "text"))
-    assert(st == StructType(Seq(
-      StructField("a", LongType), StructField("b", DecimalType(4, 1)), StructField("c", StringType))))
-  }
 }

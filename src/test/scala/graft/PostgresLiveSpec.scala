@@ -142,10 +142,11 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("per-batch commit durability: committed batches survive a poisoned feed") {
     live()
     psql("CREATE TABLE live_poison (id int PRIMARY KEY, name varchar(10), qty int NOT NULL)")
-    // One partition (single id-range after hash partitioning is not
-    // deterministic — use parallelism 1 via direct writePartition shape):
-    // first batch all good, second batch entirely poison → circuit breaker
-    // trips, but batch 1 is already committed on the server.
+    // One input partition and parallelism 1: the sink's round-robin
+    // repartition(1) has one map task and one output partition, so it
+    // neither sorts nor reorders, and the rows reach the connection in
+    // input order. First batch all good, second batch entirely poison →
+    // circuit breaker trips, but batch 1 is already committed on the server.
     val spark = SparkSpec.session
     val good = (1 to 4).map(i => Row(i, s"n$i", i))
     val poison = (5 to 8).map(i => Row(i, null, null))
@@ -153,7 +154,7 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sparkContext.parallelize(good ++ poison, 1), schema)
     val stats = PostgresUpsertSink.upsert(df, "live_poison",
       uniqueKey = Some(Seq("id")), factory = PsqlConnectionFactory(sockDir),
-      batchSize = 4, parallelism = 1, shuffleBarrier = false)
+      batchSize = 4, parallelism = 1)
     assert(stats.rejected === 4)
     assert(tableState("live_poison").keySet === (1 to 4).toSet)
   }

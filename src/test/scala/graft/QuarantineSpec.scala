@@ -89,8 +89,7 @@ class QuarantineSpec extends AnyFunSuite with SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val dir = stage(Seq("""{"id":1,"name":"a"}""", """broken"""))
     val prev = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(ckpt)
+    withCheckpointDir(ckpt) {
       val out = Quarantine.readJsonLines(spark, s"$dir/in.json",
         "id INT, name STRING", s"$dir/dlq")
       assert(out.count() == 1)
@@ -99,6 +98,8 @@ class QuarantineSpec extends AnyFunSuite with SparkSpec {
       // contract is the durable artifact: blocks under the configured dir.
       val wrote = Files.walk(Paths.get(ckpt)).toArray.length > 1
       assert(wrote, "reliable checkpoint must write under the configured dir")
-    } finally prev.foreach(spark.sparkContext.setCheckpointDir)
+    }
+    assert(spark.sparkContext.getCheckpointDir == prev,
+      "the checkpoint dir must not outlive the spec")
   }
 }

@@ -29,12 +29,6 @@ class SchemaConformSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("z"))
   }
 
-  test("conformOrdered follows target (attnum) order") {
-    val df = Seq(("a", 1L)).toDF("name", "id")
-    val out = SchemaConform.conformOrdered(df, Seq("id" -> LongType, "name" -> StringType))
-    assert(out.columns.toSeq == Seq("id", "name"))
-  }
-
   test("single Project node: conform collapses to one projection over the scan") {
     val df = spark.read.parquet(s"$sf0001/lineitem.parquet")
     val target = Map(

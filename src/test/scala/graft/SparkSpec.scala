@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirBridge
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.Harness
@@ -8,6 +9,17 @@ import graft.tools.Harness
 trait SparkSpec { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `dir` as the session's reliable checkpoint dir, so
+    * every [[graft.meta.Ckpt]] site checkpoints reliably, then restores the
+    * previous setting, so later suites in the JVM keep local checkpoints.
+    */
+  def withCheckpointDir[A](dir: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try body finally CheckpointDirBridge.set(sc, prev)
+  }
 }
 
 object SparkSpec {
