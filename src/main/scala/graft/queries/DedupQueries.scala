@@ -184,17 +184,13 @@ object DedupQueries extends QueryDomain {
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           ()
         }
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
+        Staging.rmTree(new java.io.File(tmp))
       }
-      // Heavy clone: each micro-batch runs a full connected-components
-      // contraction inside foreachBatch — per-batch shuffle parallelism,
-      // not the state-store floor, binds ([[Staging.streamSessionHeavy]]).
-      val ss = Staging.streamSessionHeavy(s)
-      val src = ss.readStream.schema(Staging.stagedSchema(ss, staged))
-        .option("maxFilesPerTrigger", 1).parquet(staged)
+      // Each micro-batch runs a full connected-components contraction
+      // inside foreachBatch — per-batch shuffle parallelism, not the
+      // state-store floor, binds ([[Staging.FoldParts]]).
+      val ss = Staging.streamSession(s, Staging.FoldParts)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
       val (q, labels) = GraphOps.streamComponents(src, "doc_i", "doc_j")
       try q.processAllAvailable() finally q.stop()
       labels()
@@ -823,22 +819,16 @@ object DedupQueries extends QueryDomain {
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
       val name = windowIndex(s, dir) // catalog shared across sessions
-      val schema = Staging.replayDocsSchema(ss, staged)
       // The staged stream schema is (doc_id, text, ts) — no source column;
       // the fixture's identity source = 'src' || doc_id % 20 (every gate
       // SF) makes doc_id % 20 =!= 0 the exact training-side filter. A
       // fixture change breaks this LOUDLY (hash mismatch vs the shared
       // oracle), not silently.
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .filter($"doc_id" % 20 =!= 0)
-      val sink = Staging.nextStreamSink(ss)
-      val q = CorpusOps.windowProbeEmissions(ss, src, "doc_id", "text", name)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      val out = CorpusOps.windowProbeEmissions(ss, src, "doc_id", "text", name)
       orderedSmall(
-        ss.table(sink).groupBy($"doc_a", $"doc_b")
+        Staging.drain(ss, out).groupBy($"doc_a", $"doc_b")
           .agg(count(lit(1)).as("n_shared_windows")),
         $"doc_a", $"doc_b")
     },
@@ -976,18 +966,12 @@ object DedupQueries extends QueryDomain {
       val ss = Staging.streamSession(s)
       val terms = CorpusOps.dsirModelTerms(docs(s, dir), "text",
         isTarget = $"lang" === "en", buckets = 512)
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .filter($"doc_id" % 4 === 3 && $"text".isNotNull && $"text" =!= "")
-      val sink = Staging.nextStreamSink(ss)
-      val q = src.select($"doc_id",
+      val out = src.select($"doc_id",
           size(TextOps.tokens($"text")).cast("long").as("n_tokens"),
           CorpusOps.dsirScore($"text", terms).as("weight"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).orderBy($"doc_id")
+      Staging.drain(ss, out).orderBy($"doc_id")
     },
 
     "q_threshold_pick" -> { (s, dir) =>
@@ -1190,17 +1174,11 @@ object DedupQueries extends QueryDomain {
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
       val name = lshProbeIndex(s, dir) // catalog is shared across sessions
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .filter($"doc_id" % 4 === 3)
-      val sink = Staging.nextStreamSink(ss)
-      val q = MinHashLsh.lshProbeEmissions(ss, src, "doc_id", "text", name,
+      val out = MinHashLsh.lshProbeEmissions(ss, src, "doc_id", "text", name,
           threshNum = 1, threshDen = 2)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).distinct()
+      Staging.drain(ss, out).distinct()
         .select($"new_id", $"corpus_id", $"n_common".cast("long").as("n_common"),
           $"n_union".cast("long").as("n_union"))
         .orderBy($"new_id", $"corpus_id")

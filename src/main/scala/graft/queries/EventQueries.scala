@@ -35,7 +35,7 @@ object EventQueries extends QueryDomain {
     "q_event_windows" -> { (s, dir) =>
       import s.implicits._
       // Streaming-style tumbling windows on a batch frame. The watermarked
-      // readStream twin is [[graft.streaming.EventStreams.hourlyEventWindows]]
+      // stream twin is [[graft.streaming.EventStreams.hourlyEventWindows]]
       // (same groupBy(window(...)); MemoryStream-tested in EventStreamsSpec).
       events(s, dir)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
@@ -139,7 +139,7 @@ object EventQueries extends QueryDomain {
     "q_stream_windows" -> { (s, dir) =>
       import s.implicits._
       // The STREAMING path under the oracle gate: the events fixture played
-      // through readStream → watermarked tumbling windows in APPEND mode —
+      // through a file stream → watermarked tumbling windows in APPEND mode —
       // the production shape (complete mode would hold every window ever
       // seen in state forever) — must hash-match the DuckDB batch
       // aggregation. Append emits a window only once the watermark passes
@@ -148,13 +148,12 @@ object EventQueries extends QueryDomain {
       // watermark past every real window's close + the 2-hour
       // production-default delay at its batch's end, and emission happens
       // in the engine's watermark-driven NO-DATA batch that follows --
-      // pinned on in the clone session ([[Staging.streamSession]]; this is
-      // how the r18-r21 gates already emitted in practice, see
+      // pinned on in the clone session ([[Staging.streamSession]]; see
       // [[Staging.streamSessionizeDir]]). Sentinel windows are filtered
       // back out of the sink. n_users is approximate (HLL) in streaming and
       // is not part of the gated output.
       //
-      // Micro-batch economy (r22): ONE data batch -- no maxFilesPerTrigger,
+      // Micro-batch economy: ONE data batch -- no maxFilesPerTrigger,
       // so the source takes every staged file at the first trigger -- plus
       // the no-data finalization batch. Every extra micro-batch pays a full
       // state-store commit cycle per state partition plus offset/commit-log
@@ -162,19 +161,14 @@ object EventQueries extends QueryDomain {
       // mFPT=1 doc-replay gates and EventStreamsSpec, not here. The stream
       // runs in a low-state-partition clone session -- see
       // [[Staging.streamSession]].
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
         .select($"tsm", $"event_type", $"user_id", $"value")
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams.hourlyEventWindows(stream)
+      val out = graft.streaming.EventStreams.hourlyEventWindows(stream)
         .drop("n_users_approx")
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"event_type" =!= "sentinel")
+      Staging.drain(ss, out).filter($"event_type" =!= "sentinel")
         .orderBy($"window_start", $"event_type")
     },
 
@@ -202,24 +196,19 @@ object EventQueries extends QueryDomain {
       // join is stateless per micro-batch): streamed purchases enriched
       // with each user's corpus-wide event count and first-seen second,
       // both computed batch-side. Gate = the batch twin of the same join.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
       val profile = events(ss, dir)
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n_user_events"),
           min(expr("ts div 1000000000")).as("first_seen_sec"))
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .filter($"event_type" === "purchase")
         .select($"event_id", $"user_id", expr("ts div 1000000000").as("sec"), $"value")
-      val sink = Staging.nextStreamSink(ss)
-      val q = stream.join(profile, Seq("user_id"))
+      val out = stream.join(profile, Seq("user_id"))
         .select($"event_id", $"user_id", $"n_user_events",
           ($"sec" - $"first_seen_sec").as("user_age_sec"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).orderBy($"event_id")
+      Staging.drain(ss, out).orderBy($"event_id")
     },
 
     "q_stream_join" -> { (s, dir) =>
@@ -237,11 +226,9 @@ object EventQueries extends QueryDomain {
       // floor division of non-negative nanos, mirrored exactly by the
       // oracle's `epoch_ns // 1000`, and the gated `lag_us` is an integer
       // difference of those exact values.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      def src = ss.readStream.schema(schema)
-        .parquet(staged)
+      def src = Staging.replay(ss, staged, oneFilePerBatch = false)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
       val buys = src.filter($"event_type" === "purchase")
         .select($"event_id".as("buy_id"), $"user_id", $"tsm".as("b_ts"),
@@ -251,14 +238,11 @@ object EventQueries extends QueryDomain {
         .select($"event_id".as("view_id"), $"user_id".as("v_user"),
           $"tsm".as("v_ts"), expr("ts div 1000").as("v_us"))
         .withWatermark("v_ts", "2 hours")
-      val sink = Staging.nextStreamSink(ss)
-      val q = buys.join(views,
+      val out = buys.join(views,
           $"user_id" === $"v_user" &&
             $"v_ts" >= $"b_ts" - expr("INTERVAL 1 HOUR") && $"v_ts" <= $"b_ts")
         .select($"buy_id", $"view_id", $"user_id", ($"b_us" - $"v_us").as("lag_us"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).orderBy($"buy_id", $"view_id")
+      Staging.drain(ss, out).orderBy($"buy_id", $"view_id")
     },
 
     "q_stream_outer_join" -> { (s, dir) =>
@@ -274,11 +258,9 @@ object EventQueries extends QueryDomain {
       // -1) are filtered AFTER the sink — the documented Staging protocol.
       // The oracle is the plain batch LEFT JOIN; null sort order is pinned
       // NULLS FIRST on both engines.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      def src = ss.readStream.schema(schema)
-        .parquet(staged)
+      def src = Staging.replay(ss, staged, oneFilePerBatch = false)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
       val buys = src.filter($"event_type".isin("purchase", "sentinel"))
         .select($"event_id".as("buy_id"), $"user_id", $"tsm".as("b_ts"),
@@ -288,15 +270,12 @@ object EventQueries extends QueryDomain {
         .select($"event_id".as("view_id"), $"user_id".as("v_user"),
           $"tsm".as("v_ts"), expr("ts div 1000").as("v_us"))
         .withWatermark("v_ts", "2 hours")
-      val sink = Staging.nextStreamSink(ss)
-      val q = buys.join(views,
+      val out = buys.join(views,
           $"user_id" === $"v_user" &&
             $"v_ts" >= $"b_ts" - expr("INTERVAL 1 HOUR") && $"v_ts" <= $"b_ts",
           "left_outer")
         .select($"buy_id", $"view_id", $"user_id", ($"b_us" - $"v_us").as("lag_us"))
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"user_id" =!= -1L)
+      Staging.drain(ss, out).filter($"user_id" =!= -1L)
         .orderBy($"buy_id", $"view_id".asc_nulls_first)
     },
 
@@ -304,7 +283,7 @@ object EventQueries extends QueryDomain {
       import s.implicits._
       // Streaming exact dedup under the gate
       // ([[graft.streaming.EventStreams.dedupEvents]]): the events fixture
-      // replayed through TWO readStream sources unioned — every event
+      // replayed through TWO file-stream sources unioned — every event
       // delivered twice, the at-least-once failure mode — must reproduce
       // the batch DISTINCT on event_id exactly. First-seen rows emit
       // immediately in append mode, so no sentinel protocol is needed (the
@@ -312,20 +291,16 @@ object EventQueries extends QueryDomain {
       // usual predicate); the watermark bounds dedup-key state by the
       // horizon — the unbounded-stream posture. `value` is an untouched
       // passthrough (no accumulation → bit-exact vs the oracle).
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      def src = ss.readStream.schema(schema).parquet(staged)
+      def src = Staging.replay(ss, staged, oneFilePerBatch = false)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
         .select($"tsm", $"event_id", $"user_id", $"event_type",
           expr("ts div 1000000000").as("ep"), $"value")
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .dedupEvents(src.unionByName(src), Seq("event_id"))
         .drop("tsm")
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"event_type" =!= "sentinel").orderBy($"event_id")
+      Staging.drain(ss, out).filter($"event_type" =!= "sentinel").orderBy($"event_id")
     },
 
     "q_stream_neardup" -> { (s, dir) =>
@@ -341,18 +316,12 @@ object EventQueries extends QueryDomain {
       // distinct the batch operator ends in.
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .simhashNearDup(src, "doc_id", "text", "tsm",
           horizonSec = 100000000000L, bits = 60, bandBits = 15, maxHamming = 3)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).distinct().orderBy($"doc_i", $"doc_j")
+      Staging.drain(ss, out).distinct().orderBy($"doc_i", $"doc_j")
     },
 
     "q_stream_topk" -> { (s, dir) =>
@@ -372,17 +341,12 @@ object EventQueries extends QueryDomain {
       // doc-replay gates and the EventStreams specs cover that boundary.
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = false)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .mgCandidatesStream(src, CorpusOps.wordNgramsAll($"text", 2), "tsm",
           capacity = 800, nShards = 8, horizonSec = 3600L)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val cands = ss.table(sink).select($"item").distinct()
+      val cands = Staging.drain(ss, out).select($"item").distinct()
       val it = graft.Tables.docs(ss, dir)
         .select(explode(CorpusOps.wordNgramsAll(col("text"), 2)).as("item"))
       val totals = it.agg(count(lit(1)).as("total"))
@@ -410,23 +374,17 @@ object EventQueries extends QueryDomain {
       //
       // Micro-batch economy: same two-batch packing and low-state-partition
       // clone session as q_stream_windows (see the comment there).
-      val gapSec = 21600L
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"user_id".as("userId"),
           expr("ts div 1000000000").as("epochSec"),
           ($"event_type" === "purchase").as("isPurchase"),
           ($"value".cast("decimal(18,4)") * 10000).cast("double").as("value"))
         .as[graft.streaming.EventStreams.SessionEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams.sessionize(stream, gapSec = gapSec)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      val out = graft.streaming.EventStreams.sessionize(stream, gapSec = Staging.EventsGapSec)
       val w = Window.partitionBy($"userId").orderBy($"startEpoch")
-      ss.table(sink).filter($"userId" >= 0L)
+      Staging.drain(ss, out).filter($"userId" >= 0L)
         .withColumn("session_idx", row_number().over(w).cast("long"))
         .select($"userId".as("user_id"), $"session_idx",
           $"startEpoch".as("start_epoch"), $"endEpoch".as("end_epoch"),
@@ -444,25 +402,19 @@ object EventQueries extends QueryDomain {
       // watermark passes its horizon, and the timeout fold must land on
       // q_cusum's exact integers. Sentinel files drive the watermark past
       // every real user's deadline.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"user_id".as("key"),
           expr("ts div 1000").as("ts"),
           $"event_id".as("tie"),
           expr("CAST(CAST(COALESCE(value, 0.0) AS DECIMAL(18,4)) * 10000 AS LONG)")
             .as("v"))
         .as[graft.streaming.EventStreams.CusumEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .cusumExact(stream, refValueE4 = 600000L, thresholdE4 = 2000000L,
           horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= -1L)
+      Staging.drain(ss, out).filter($"key" =!= -1L)
         .select($"key".as("user_id"), $"n",
           $"cusumFinal".as("cusum_final"), $"nOver".as("n_over"))
         .orderBy($"user_id")
@@ -477,22 +429,16 @@ object EventQueries extends QueryDomain {
       // integers land bit-identically on the batch division via the
       // digit-string route. The 20th stream gate; shares q_burstiness'
       // hour windows and oracle arithmetic.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"event_type".as("key"),
           expr("ts div 1000").as("ts"),
           $"event_id".as("tie"), lit(0L).as("v"))
         .as[graft.streaming.EventStreams.BudgetEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .fanoExact(stream, windowSec = 3600L, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"nWindows".as("n_windows"),
           $"nEvents".as("n_events"), $"fano")
         .orderBy($"event_type")
@@ -507,23 +453,17 @@ object EventQueries extends QueryDomain {
       // count-map state class. Levels sort ONCE, at emission; the BigInt
       // trimmed sum lands on the batch division via the digit-string
       // route (shared-arithmetic oracle).
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .filter($"value".isNotNull)
         .select($"event_type".as("key"), expr("ts div 1000").as("ts"),
           expr("CAST(floor(value * 10000.0 + 0.5) AS LONG)").as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .trimmedMeanExact(stream, trimNum = 1, trimDen = 10, unitScale = 4,
           horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"n", $"nKept".as("n_kept"),
           $"trimmedMean".as("trimmed_mean"))
         .orderBy($"event_type")
@@ -536,22 +476,16 @@ object EventQueries extends QueryDomain {
       // rank-⌈n/2⌉ walk over the same value→count state map — one state
       // class, many rank statistics. The med double is the exact integer
       // level over the unit, identical on both engines.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .filter($"value".isNotNull)
         .select($"event_type".as("key"), expr("ts div 1000").as("ts"),
           expr("CAST(floor(value * 10000.0 + 0.5) AS LONG)").as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .countingMedianExact(stream, unitScale = 4, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"n", $"med")
         .orderBy($"event_type")
     },
@@ -569,23 +503,17 @@ object EventQueries extends QueryDomain {
       // the SAME formula the batch operator uses, so the batch oracle
       // gates the whole chain. QI pair rides one composite stream key
       // ('|'-joined), split back at emission.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select(concat($"event_type", lit("|"),
             expr("ts div 86400000000000").cast("string")).as("key"),
           expr("ts div 1000").as("ts"),
           expr("user_id % 50").as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val counts = ss.table(sink)
+      val counts = Staging.drain(ss, out)
         .filter(!$"key".startsWith("sentinel|"))
         .select(substring_index($"key", "|", 1).as("event_type"),
           substring_index($"key", "|", -1).cast("long").as("day"),
@@ -609,21 +537,14 @@ object EventQueries extends QueryDomain {
       // pins equal to n_chars (checked: 0 mismatches at both SFs).
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select(coalesce($"lang", lit("sentinel")).as("key"),
           expr("ts div 1000").as("ts"),
           coalesce(length($"text").cast("long"), lit(0L)).as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val counts = ss.table(sink).filter($"key" =!= "sentinel")
+      val counts = Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("lang"), $"v", $"c")
       StatOps.ksDriftFromCounts(counts, "lang", "v", "c")
         .orderBy($"lang")
@@ -642,22 +563,15 @@ object EventQueries extends QueryDomain {
       // oracle gates the chain. Sixth statistic of the count-map class.
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select(coalesce($"lang", lit("sentinel")).as("key"),
           expr("ts div 1000").as("ts"),
           coalesce(expr("try_cast(substring(source, 4) AS LONG)"), lit(-1L))
             .as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val cells = ss.table(sink).filter($"key" =!= "sentinel")
+      val cells = Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("lang"),
           concat(lit("src"), $"v".cast("string")).as("source"), $"c")
       StatOps.chiSquareFromCounts(cells, "lang", "source", "c")
@@ -680,15 +594,14 @@ object EventQueries extends QueryDomain {
       val langsArr = array(langs.map(lit): _*)
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
       // The null-source marker is IN-BAND (a separator-bearing out-of-band
       // marker would break the arity-2 decode below — the separator IS the
       // out-of-band character), so the fixture-convention assumption "no
       // real source is literally named 'sentinel'" is ENFORCED where the
       // key is built, loudly, instead of silently folding such a source
-      // into the NULL group (r19 ADVICE): a colliding row raises at
-      // stream time. The staging protocol's own watermark rows
-      // (writeDocMetaSentinel: doc_id = −1, source = lang = 'sentinel')
+      // into the NULL group: a colliding row raises at stream time. The
+      // staging protocol's own watermark rows ([[Staging.streamDocMetaDir]]'s
+      // sentinel: doc_id = −1, source = lang = 'sentinel')
       // are exempt — their key is the intended sentinel; the hazard is
       // only a REAL doc (doc_id ≥ 0) whose arity-2 key would decode to
       // the NULL source group.
@@ -696,9 +609,7 @@ object EventQueries extends QueryDomain {
         raise_error(lit("q_stream_cohens_kappa: a real source literally " +
           "named 'sentinel' collides with the null-source key marker — " +
           "rename the marker for this corpus"))).otherwise($"source")
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select(
           concat_ws("\u0001",
             coalesce(srcChecked, lit("sentinel")), $"lang").as("key"),
@@ -706,24 +617,20 @@ object EventQueries extends QueryDomain {
           (array_position(langsArr,
             graft.operators.TextStats.predictedLang($"text")) - 1L).as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       // Sentinel rows carry a NULL gold lang: concat_ws skips nulls, so
       // their key collapses to exactly "sentinel" — arity 1 under split.
       // A REAL doc with NULL source but non-null lang keys as
       // "sentinel\u0001<lang>" (arity 2): the arity filter below KEEPS it
       // and the when() maps its source back to the NULL group the batch
-      // operator and oracle carry — the previous key =!= "sentinel" filter
-      // alone grouped such rows under the literal string "sentinel" (r18
-      // ADVICE). The no-real-source-named-"sentinel" assumption is no
-      // longer a fixture convention: srcChecked above raises loudly on a
-      // colliding row before it can reach this decode.
+      // operator and oracle carry — a bare key =!= "sentinel" filter would
+      // group such rows under the literal string "sentinel". The
+      // no-real-source-named-"sentinel" assumption is not a fixture
+      // convention: srcChecked above raises loudly on a colliding row
+      // before it can reach this decode.
       val kp = split($"key", "\u0001")
-      val cells = ss.table(sink).filter(size(kp) === 2)
+      val cells = Staging.drain(ss, out).filter(size(kp) === 2)
         .select(
           when(kp.getItem(0) === "sentinel", lit(null).cast("string"))
             .otherwise(kp.getItem(0)).as("source"),
@@ -747,12 +654,9 @@ object EventQueries extends QueryDomain {
       // maintainable monitor with state bounded by users per QI group.
       // Eighth statistic of the count-map class; the batch q_k_anonymity
       // oracle gates the chain.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select(
           concat_ws("\u0001", $"event_type",
             expr("ts div 86400000000000"),
@@ -760,19 +664,15 @@ object EventQueries extends QueryDomain {
           expr("ts div 1000").as("ts"),
           coalesce($"user_id", lit(-1L)).as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
       // lateSec = 0 (default): the events replay is ONE real file (every
       // real row enters at watermark 0), and the sessionize sentinels sit
       // only 10/20 gaps out -- a doc-replay-sized lateness allowance would
       // hold the watermark short of recent groups' timeouts forever (the
       // doc replays need it because real docs split across two files).
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       val kf = split($"key", "\u0001")
-      val cells = ss.table(sink)
+      val cells = Staging.drain(ss, out)
         .filter(split($"key", "\u0001").getItem(0) =!= "sentinel")
         .select(kf.getItem(0).as("event_type"),
           kf.getItem(1).cast("long").as("day"),
@@ -784,7 +684,7 @@ object EventQueries extends QueryDomain {
           // counts only non-null value cells toward n_sensitive, matching
           // the batch operator's countDistinct null-skip — left as -1 the
           // sentinel cell would silently inflate l-diversity on a fixture
-          // with null user_ids (r18 ADVICE).
+          // with null user_ids.
           when($"v" === -1L, lit(null).cast("long")).otherwise($"v").as("v"),
           $"c")
       graft.operators.GovernanceOps
@@ -809,22 +709,15 @@ object EventQueries extends QueryDomain {
       val langsArr = array(langs.map(lit): _*)
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select(coalesce($"lang", lit("sentinel")).as("key"),
           expr("ts div 1000").as("ts"),
           (array_position(langsArr,
             graft.operators.TextStats.predictedLang($"text")) - 1L).as("v"))
         .as[graft.streaming.EventStreams.ValueEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .valueCountsExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      val cells = ss.table(sink).filter($"key" =!= "sentinel")
+      val cells = Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("gold"),
           element_at(langsArr, ($"v" + 1L).cast("int")).as("pred"), $"c")
       graft.operators.EvalOps
@@ -844,20 +737,13 @@ object EventQueries extends QueryDomain {
       // divisions via the digit-string route (shared-arithmetic oracle).
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select($"source".as("key"), expr("ts div 1000").as("ts"),
           $"lang".as("cls"))
         .as[graft.streaming.EventStreams.ClassEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .classBalanceExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("source"), $"n", $"nClasses".as("n_classes"),
           $"simpson", $"enc")
         .orderBy($"source")
@@ -874,19 +760,12 @@ object EventQueries extends QueryDomain {
       // sentinels drive the watermark without contributing tokens.
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select($"source".as("key"), expr("ts div 1000").as("ts"), $"text")
         .as[graft.streaming.EventStreams.DocEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .vocabGiniExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("source"), $"mTokens".as("m_tokens"),
           $"totalTokens".as("total_tokens"), $"gini")
         .orderBy($"source")
@@ -901,19 +780,12 @@ object EventQueries extends QueryDomain {
       // Same parity-split replay; shared batch oracle.
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select($"source".as("key"), expr("ts div 1000").as("ts"), $"text")
         .as[graft.streaming.EventStreams.DocEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .vocabRichnessExact(stream, horizonSec = 21600L, lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("source"), $"totalTokens".as("total_tokens"),
           $"mTokens".as("m_tokens"), $"nHapax".as("n_hapax"),
           $"nDis".as("n_dis"), $"ttr", $"hapaxRate".as("hapax_rate"),
@@ -935,18 +807,11 @@ object EventQueries extends QueryDomain {
       val prof = graft.operators.LangId.profiles(
         docs(s, dir).filter(pmod($"doc_id", lit(4L)) =!= 3),
         "text", "lang", gramLen = 3, topK = 64)
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .filter($"doc_id" % 4 === 3)
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.operators.LangId.classifyEmissions(
+      val out = graft.operators.LangId.classifyEmissions(
           src, "doc_id", "text", prof, gramLen = 3, topK = 64)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink)
+      Staging.drain(ss, out)
         .join(graft.Tables.docs(ss, dir)
           .filter(pmod($"doc_id", lit(4L)) === 3)
           .select($"doc_id", $"lang".as("lang_true")), Seq("doc_id"))
@@ -971,23 +836,16 @@ object EventQueries extends QueryDomain {
       // the batch formula in SQL.
       val staged = Staging.streamDocMetaDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocMetaSchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = true)
         .select($"source".as("key"), expr("ts div 1000").as("ts"),
           expr("CASE WHEN pmod(doc_id div 20, 2) = 0 THEN 'a' ELSE 'b' END")
             .as("side"),
           $"text")
         .as[graft.streaming.EventStreams.DocSideEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .tokenShiftExact(stream, k = 10, horizonSec = 21600L,
           lateSec = 2592000L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("source"), $"rnk", $"token",
           $"cA".as("c_a"), $"cB".as("c_b"),
           $"shiftNum".as("shift_num"), $"shift")
@@ -1004,24 +862,18 @@ object EventQueries extends QueryDomain {
       // emitted doubles land bit-identical on the batch oracle's r
       // columns. Sentinel files drive the watermark; the sentinel key
       // filters from the sink.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"event_type".as("key"),
           expr("ts div 1000").as("ts"),
           $"event_id".as("tie"),
           expr("CAST(CAST(COALESCE(value, 0.0) AS DECIMAL(18,4)) * 10000 " +
             "AS LONG)").as("v"))
         .as[graft.streaming.EventStreams.BudgetEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .acfExact(stream, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"n", $"r1", $"r2", $"r3")
         .orderBy($"event_type")
     },
@@ -1039,24 +891,18 @@ object EventQueries extends QueryDomain {
       // cumsum the oracle computes. Budget 3000e4 cuts mid-stream at
       // both SFs. Sentinel files drive the watermark past every real
       // key's deadline; the sentinel key filters from the sink.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"event_type".as("key"),
           expr("ts div 1000").as("ts"),
           $"event_id".as("tie"),
           expr("CAST(CAST(GREATEST(COALESCE(value, 0.0), 0.0) " +
             "AS DECIMAL(18,4)) * 10000 AS LONG)").as("v"))
         .as[graft.streaming.EventStreams.BudgetEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .budgetAdmitExact(stream, budget = 30000000L, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"n",
           $"nAdmit".as("n_admit"), $"tokAdmit".as("tok_admit"))
         .orderBy($"event_type")
@@ -1073,11 +919,9 @@ object EventQueries extends QueryDomain {
       // Sentinel files drive the watermark past every user's deadline;
       // sentinel rows ride as step -1 (they advance the watermark but
       // never enter a fold) and their user filters out of the sink.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .select($"user_id".as("userId"),
           expr("ts div 1000").as("ts"),
           $"event_id".as("tie"),
@@ -1086,13 +930,9 @@ object EventQueries extends QueryDomain {
             .when($"event_type" === "purchase", 2)
             .otherwise(-1).as("step"))
         .as[graft.streaming.EventStreams.FunnelEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .funnelExact(stream, numSteps = 3, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"userId" >= 0L)
+      Staging.drain(ss, out).filter($"userId" >= 0L)
         .select($"userId".as("user_id"),
           element_at($"times", 1).as("t_view"),
           element_at($"times", 2).as("t_click"),
@@ -1112,24 +952,18 @@ object EventQueries extends QueryDomain {
       // lands on the identical sketch. Inserts and readout share the batch
       // aggregate's KmvBuffer, and the gate faces the same KMV SQL oracle
       // shape as q_kmv_distinct — over events, keyed by type.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .filter($"user_id".isNotNull) // sentinels are -1: they pass, then filter from the sink
         .select($"event_type".as("key"),
           TextOps.polyHash($"user_id".cast("string")).as("h"),
           expr("ts div 1000").as("ts"))
         .as[graft.streaming.EventStreams.KmvEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .kmvDistinctExact(stream, k = 64, range = TextOps.Prime,
           horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type"), $"nMin".as("n_min"),
           $"kthHash".as("kth_hash"), $"estDistinct".as("est_distinct"))
         .orderBy($"event_type")
@@ -1147,27 +981,21 @@ object EventQueries extends QueryDomain {
       // aggregate's HashSampleBuffer. The hash key is the UNIQUE event id,
       // so the sample is a uniform row sample; the oracle replays the same
       // bottom-64 selection over the events table.
-      val staged = Staging.streamSessionizeDir(s, dir, gapSec = 21600L)
+      val staged = Staging.streamSessionizeDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replaySchema(ss, staged)
-      val stream = ss.readStream.schema(schema)
-        .parquet(staged)
+      val stream = Staging.replay(ss, staged, oneFilePerBatch = false)
         .filter($"user_id".isNotNull) // sentinels are -1: they pass, then filter from the sink
         .select($"event_type".as("key"),
           TextOps.polyHash($"event_id".cast("string")).as("h"),
           ($"value".cast("decimal(18,4)") * 10000).cast("long").as("v"),
           expr("ts div 1000").as("ts"))
         .as[graft.streaming.EventStreams.SampleEvent]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .hashSampleExact(stream, k = 64, horizonSec = 21600L)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       // Positional reads via the shared helper — the rank convention has
       // ONE home (Sketches.sampleQuantileCols), so this gate cannot drift
       // from the batch q_sample_quantiles.
-      ss.table(sink).filter($"key" =!= "sentinel")
+      Staging.drain(ss, out).filter($"key" =!= "sentinel")
         .select($"key".as("event_type") +: $"nSample".as("n_sample") +:
           Sketches.sampleQuantileCols($"values", Seq(25, 50, 75, 90)): _*)
         .orderBy($"event_type")

@@ -560,10 +560,7 @@ object RelationalQueries extends QueryDomain {
       // Output — and oracle — identical to q_cdc_apply.
       val staged = streamCdcDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.stagedSchema(ss, s"$staged/a_upd.parquet")
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
         .withWatermark("tsm", "0 seconds")
         // No op-filter here: the null-op sentinels ride into the operator
@@ -576,16 +573,13 @@ object RelationalQueries extends QueryDomain {
             struct($"c_custkey", $"c_name", $"c_nationkey", $"c_acctbal")).as("payload"),
           $"tsm".cast("long").as("epochSec"), $"tsm")
         .as[graft.streaming.EventStreams.CdcEvent[CdcCustomer]]
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .cdcMaterialize(src, horizonSec = 3600L)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       val c = t(ss, dir, "customer")
         .select($"c_custkey", $"c_name", $"c_nationkey", $"c_acctbal")
       val untouched = c.join(
         cdcChangeBatch(ss, dir).select($"c_custkey").distinct(), Seq("c_custkey"), "left_anti")
-      orderedSmall(ss.table(sink).unionByName(untouched), $"c_custkey")
+      orderedSmall(Staging.drain(ss, out).unionByName(untouched), $"c_custkey")
     },
 
     "q_scd2" -> { (s, dir) =>
@@ -717,31 +711,19 @@ object RelationalQueries extends QueryDomain {
     * — the [[Staging.streamDocsDir]] sentinel + pinned-no-data-batch
     * protocol.
     */
-  private def streamCdcDir(s: SparkSession, dir: String): String =
+  private[queries] def streamCdcDir(s: SparkSession, dir: String): String =
     Staging.dir("streamcdc", dir, "customer") { p =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p))
       val ch = cdcChangeBatch(s, dir)
         .withColumn("ts", ((lit(1700000000L) + col("ord") * 60L) * 1000000000L).cast("long"))
-      val now = System.currentTimeMillis()
-      val monthNs = 30L * 86400 * 1000000000L
-      def sentinel(tsv: Long): DataFrame = {
-        val cols = ch.schema.fields.map { f =>
-          if (f.name == "ts") lit(tsv).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }
-        s.range(1).select(cols.toIndexedSeq: _*)
+      Seq("a_upd.parquet", "b_ins.parquet", "c_del.parquet").zipWithIndex.foreach {
+        case (name, i) => Staging.writeOneParquet(ch.filter(col("ord") === i + 1), p, name)
       }
       val maxTs = 1700000000L * 1000000000L + 3L * 60 * 1000000000L
-      Seq(
-        "a_upd.parquet" -> ch.filter(col("ord") === 1),
-        "b_ins.parquet" -> ch.filter(col("ord") === 2),
-        "c_del.parquet" -> ch.filter(col("ord") === 3),
-        "d_sentinel.parquet" -> sentinel(maxTs + 10 * monthNs)
-      ).zipWithIndex.foreach { case ((name, df), i) =>
-        Staging.writeOneParquet(df, p, name)
-        java.nio.file.Paths.get(p, name).toFile.setLastModified(now - 50000 + i * 10000L)
-        ()
-      }
+      val monthNs = 30L * 86400 * 1000000000L
+      Staging.writeSentinel(s"$p/d_sentinel.parquet", ch.schema,
+        Map("ts" -> (maxTs + 10 * monthNs)))
+      Staging.stampInNameOrder(p)
     }
 
   private val discPrice =

@@ -1,11 +1,23 @@
 package graft.queries
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Shared tmpdir staging for fixture-backed queries (CSV/JSON round-trips,
   * file-stream sources): one materialization per (kind, sfDir, table) per
   * JVM under a pid-unique path, recursively deleted at JVM exit. The pid
   * component keeps concurrent harness runs from racing on a shared tmpdir.
+  *
+  * It is also the one home of the staged-replay protocol every stream gate
+  * runs: a `stream*Dir` stages the fixture as parquet files whose names and
+  * modification times both give the replay order, real data first; the
+  * gate reads it with [[replay]] in a [[streamSession]] clone, applies its
+  * operator, and collects the output with [[drain]]. A gate whose emission
+  * waits on the watermark rides a replay that ends in ONE far-future
+  * sentinel row, written by [[writeSentinel]] in the data file's own
+  * schema, and filters the sentinel's key back out of the drained rows.
   */
 private[queries] object Staging {
 
@@ -18,8 +30,7 @@ private[queries] object Staging {
   // gate for the JVM lifetime (slow leak in long-lived multi-session
   // harnesses). Accessed only under `synchronized` (WeakHashMap is unsafe
   // to share otherwise).
-  private val lastStreamSink =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]
+  private val lastStreamSink = new java.util.WeakHashMap[SparkSession, String]
 
   /** Stage once per (kind, dir, table); `write(path)` materializes on first
     * use. Returns the staged path. First-use creation is serialized (two
@@ -54,88 +65,38 @@ private[queries] object Staging {
   def memo[T](kind: String, sfDir: String)(compute: => T): T =
     memoized.getOrElseUpdate((kind, sfDir), compute).asInstanceOf[T]
 
-  /** Events fixture + ONE far-future sentinel file for the append-mode
-    * stream gates (`q_stream_sessionize`, `q_stream_windows`): the sentinel
-    * advances the watermark past every real session's `end + gap` deadline
-    * (and, a fortiori, past every real window's close + delay) so event-time
-    * timeouts close ALL real sessions and append mode finalizes ALL real
-    * windows. Emission fires in a batch AFTER the watermark advances; that
-    * batch is the engine's watermark-driven NO-DATA batch, which
-    * [[streamSession]] pins on (`noDataMicroBatches.enabled`), and
-    * `processAllAvailable` waits for it — so no second, data-carrying
-    * sentinel is needed to trigger emission.
-    * Modification times order the replay events-first. Sentinel rows carry
+  /** Session gap of the events replay (6 h). Its sentinel lands 10 gaps past
+    * the last real event: beyond every events gate's session gap, state
+    * horizon and 2-hour watermark delay.
+    */
+  val EventsGapSec = 21600L
+
+  /** Events fixture + ONE far-future sentinel file for the events stream
+    * gates: the sentinel advances the watermark past every real session's
+    * `end + gap` deadline (and, a fortiori, past every real window's close
+    * + delay) so event-time timeouts close ALL real sessions and append
+    * mode finalizes ALL real windows. Emission fires in a batch AFTER the
+    * watermark advances; that batch is the engine's watermark-driven
+    * NO-DATA batch, which [[streamSession]] pins on
+    * (`noDataMicroBatches.enabled`), and `processAllAvailable` waits for it
+    * — so no second, data-carrying sentinel is needed to trigger emission.
+    * The replay is the NORMALIZED events frame ([[graft.Tables.events]]:
+    * `ts` as a nanosecond BIGINT whatever the fixture's physical type), and
+    * the sentinel is written in that file's schema. Sentinel rows carry
     * `user_id = -1` / `event_type = 'sentinel'`; callers filter them back
     * out of their sink.
     */
-  def streamSessionizeDir(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      gapSec: Long): String =
+  def streamSessionizeDir(spark: SparkSession, sfDir: String): String =
     dir("streamsess", sfDir, "events") { p =>
       Files.createDirectories(Paths.get(p))
-      // The replay is the NORMALIZED events frame ([[graft.Tables.events]]:
-      // ts as a nanosecond BIGINT whatever the fixture's physical type), so
-      // the int64-ts sentinel files below always share its schema — staging
-      // a raw fixture copy broke every stream gate when the fixture flipped
-      // to timestamp[us] (round 10). Spark writes to a side dir and only the
-      // part file moves in, so the replay directory holds exactly the files
-      // the stream reads, ordered by the modification times set below.
-      val tmp = p + "_stage"
-      graft.Tables.events(spark, sfDir).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written under $tmp"))
-      Files.move(part.toPath, Paths.get(p, "a_events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(tmp))
-      val maxTs = spark.read.parquet(s"$p/a_events.parquet")
-        .agg(org.apache.spark.sql.functions.max("ts")).head().getLong(0)
-      val gapNs = gapSec * 1000000000L
-      // One-row sentinel files written directly with parquet-java — a Spark
-      // job per sentinel (write + part-file move) was machinery for a single
-      // row that an in-process writer produces in microseconds.
-      writeSentinel(Paths.get(p, "b_sentinel.parquet"), maxTs + 10 * gapNs)
-      val now = System.currentTimeMillis()
-      Seq("a_events.parquet" -> (now - 30000), "b_sentinel.parquet" -> (now - 20000))
-        .foreach { case (n, t) =>
-          Paths.get(p, n).toFile.setLastModified(t); ()
-        }
+      writeOneParquet(graft.Tables.events(spark, sfDir), p, "a_events.parquet")
+      val data = spark.read.parquet(s"$p/a_events.parquet")
+      val maxTs = data.agg(max("ts")).head().getLong(0)
+      writeSentinel(s"$p/b_sentinel.parquet", data.schema, Map(
+        "event_id" -> -1L, "user_id" -> -1L, "event_type" -> "sentinel",
+        "value" -> 0.0, "ts" -> (maxTs + 10 * EventsGapSec * 1000000000L)))
+      stampInNameOrder(p)
     }
-
-  /** A single sentinel row (`user_id = -1`, `event_type = 'sentinel'`)
-    * written as a standalone parquet file, schema-compatible with the events
-    * fixture (the stream gates read by the pinned fixture schema, so only
-    * names/types must line up — column order is irrelevant).
-    */
-  private def writeSentinel(path: java.nio.file.Path, ts: Long): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      """message sentinel {
-        |  optional int64 event_id;
-        |  optional int64 user_id;
-        |  optional binary event_type (UTF8);
-        |  optional double value;
-        |  optional int64 ts;
-        |}""".stripMargin)
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path.toString),
-        new org.apache.hadoop.conf.Configuration()))
-      .withType(schema)
-      .build()
-    val g = new SimpleGroupFactory(schema).newGroup()
-    g.add("event_id", -1L)
-    g.add("user_id", -1L)
-    g.add("event_type", "sentinel")
-    g.add("value", 0.0)
-    g.add("ts", ts)
-    try writer.write(g) finally writer.close()
-  }
 
   /** Documents replay for the streaming document gates: the documents
     * fixture with a synthetic event time (`ts` = (1.6e9 + doc_id) seconds,
@@ -150,101 +111,40 @@ private[queries] object Staging {
     * they advance event time without entering any operator state.
     * (q_stream_neardup emits inline and simply never sees them.)
     */
-  def streamDocsDir(spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
-    dir("streamdocs", sfDir, "documents") { p =>
-      Files.createDirectories(Paths.get(p))
-      import org.apache.spark.sql.functions._
-      val docs = graft.Tables.t(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"),
-          ((col("doc_id") + 1600000000L) * 1000000000L).cast("long").as("ts"))
-      val now = System.currentTimeMillis()
-      Seq(0, 1).foreach { parity =>
-        val tmp = s"${p}_stage$parity"
-        docs.filter(col("doc_id") % 2 === parity).coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val name = if (parity == 0) "a_docs.parquet" else "b_docs.parquet"
-        Files.move(part.toPath, Paths.get(p, name),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
-        Paths.get(p, name).toFile.setLastModified(now - 30000 + parity * 10000); ()
-      }
-      val maxTs = spark.read.parquet(s"$p/b_docs.parquet")
-        .agg(org.apache.spark.sql.functions.max("ts")).head().getLong(0)
-      val monthNs = 30L * 86400 * 1000000000L
-      writeDocSentinel(Paths.get(p, "c_sentinel.parquet"), maxTs + 10 * monthNs)
-      Paths.get(p, "c_sentinel.parquet").toFile.setLastModified(now - 15000); ()
-    }
+  def streamDocsDir(spark: SparkSession, sfDir: String): String =
+    stageDocs(spark, sfDir, "streamdocs", Seq("doc_id", "text"), Map("doc_id" -> -1L))
 
   /** Documents-with-metadata replay for the corpus-health stream gates
     * (q_stream_simpson, q_stream_gini): like [[streamDocsDir]] but also
-    * carrying `source` and `lang`, split on doc_id parity into two
-    * micro-batch files so per-source count-map STATE must merge across a
-    * batch boundary. ONE far-future sentinel file follows (`source =
-    * 'sentinel'`, NULL text) — the [[streamSessionizeDir]] sentinel +
-    * pinned-no-data-batch protocol; callers filter the sentinel KEY's rows
+    * carrying `source` and `lang`, so per-source count-map STATE must merge
+    * across the parity batch boundary. Its sentinel carries `source = lang
+    * = 'sentinel'` and NULL text; callers filter the sentinel KEY's rows
     * from the sink (a NULL text contributes no tokens to the gini state).
     */
-  def streamDocMetaDir(spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
-    dir("streamdocmeta", sfDir, "documents") { p =>
-      Files.createDirectories(Paths.get(p))
-      import org.apache.spark.sql.functions._
-      val docs = graft.Tables.t(spark, sfDir, "documents")
-        .select(col("doc_id"), col("source"), col("lang"), col("text"),
-          ((col("doc_id") + 1600000000L) * 1000000000L).cast("long").as("ts"))
-      val now = System.currentTimeMillis()
-      Seq(0, 1).foreach { parity =>
-        val name = if (parity == 0) "a_docs.parquet" else "b_docs.parquet"
-        writeOneParquet(docs.filter(col("doc_id") % 2 === parity), p, name)
-        Paths.get(p, name).toFile.setLastModified(now - 30000 + parity * 5000L); ()
-      }
-      val maxTs = spark.read.parquet(s"$p/b_docs.parquet")
-        .agg(org.apache.spark.sql.functions.max("ts")).head().getLong(0)
-      val monthNs = 30L * 86400 * 1000000000L
-      writeDocMetaSentinel(Paths.get(p, "c_sentinel.parquet"), maxTs + 10 * monthNs)
-      Paths.get(p, "c_sentinel.parquet").toFile.setLastModified(now - 15000); ()
-    }
+  def streamDocMetaDir(spark: SparkSession, sfDir: String): String =
+    stageDocs(spark, sfDir, "streamdocmeta", Seq("doc_id", "source", "lang", "text"),
+      Map("doc_id" -> -1L, "source" -> "sentinel", "lang" -> "sentinel"))
 
-  /** A single `source = 'sentinel'` NULL-text row for the documents-with-
-    * metadata replay (see [[streamDocMetaDir]]).
+  /** The two-file documents replay behind [[streamDocsDir]] and
+    * [[streamDocMetaDir]]: `cols` plus `ts`, then one sentinel with
+    * `sentinel` set and `ts` 10 months past the last real document.
     */
-  private def writeDocMetaSentinel(path: java.nio.file.Path, ts: Long): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      """message doc_meta_sentinel {
-        |  optional int64 doc_id;
-        |  optional binary source (UTF8);
-        |  optional binary lang (UTF8);
-        |  optional binary text (UTF8);
-        |  optional int64 ts;
-        |}""".stripMargin)
-    val writer = ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path.toString),
-        new org.apache.hadoop.conf.Configuration()))
-      .withType(schema)
-      .build()
-    val g = new SimpleGroupFactory(schema).newGroup()
-    g.add("doc_id", -1L)
-    g.add("source", "sentinel")
-    g.add("lang", "sentinel")
-    // `text` deliberately unset: NULL contributes no tokens but the row
-    // still drives the watermark and times the sentinel key out.
-    g.add("ts", ts)
-    try writer.write(g) finally writer.close()
-  }
-
-  /** Schema of the staged documents-with-metadata replay. */
-  def replayDocMetaSchema(spark: org.apache.spark.sql.SparkSession, staged: String)
-      : org.apache.spark.sql.types.StructType =
-    stagedSchema(spark, s"$staged/a_docs.parquet")
+  private def stageDocs(spark: SparkSession, sfDir: String, kind: String,
+      cols: Seq[String], sentinel: Map[String, Any]): String =
+    dir(kind, sfDir, "documents") { p =>
+      Files.createDirectories(Paths.get(p))
+      val docs = graft.Tables.t(spark, sfDir, "documents")
+        .select(cols.map(col) :+
+          ((col("doc_id") + 1600000000L) * 1000000000L).cast("long").as("ts"): _*)
+      writeOneParquet(docs.filter(col("doc_id") % 2 === 0), p, "a_docs.parquet")
+      writeOneParquet(docs.filter(col("doc_id") % 2 === 1), p, "b_docs.parquet")
+      val last = spark.read.parquet(s"$p/b_docs.parquet")
+      val maxTs = last.agg(max("ts")).head().getLong(0)
+      val monthNs = 30L * 86400 * 1000000000L
+      writeSentinel(s"$p/c_sentinel.parquet", last.schema,
+        sentinel + ("ts" -> (maxTs + 10 * monthNs)))
+      stampInNameOrder(p)
+    }
 
   /** Embeddings replay for the streaming SRP near-dup gate: batch 1 is the
     * base corpus, batch 2 the planted near-dup twins (q_embed_neardup's
@@ -254,10 +154,9 @@ private[queries] object Staging {
     * (1.6e9 + vec_id % 1e6) seconds as nanosecond BIGINT (twins
     * co-temporal with their base). No sentinels: emission is inline.
     */
-  def streamEmbDir(spark: org.apache.spark.sql.SparkSession, sfDir: String): String =
+  def streamEmbDir(spark: SparkSession, sfDir: String): String =
     dir("streamemb", sfDir, "embeddings") { p =>
       Files.createDirectories(Paths.get(p))
-      import org.apache.spark.sql.functions._
       val e = graft.Tables.t(spark, sfDir, "embeddings")
       val ts = ((col("vec_id") % 1000000L + 1600000000L) * 1000000000L).cast("long")
       val base = e.select(col("vec_id"), col("embedding"), ts.as("ts"))
@@ -265,13 +164,9 @@ private[queries] object Staging {
         concat(array(element_at(col("embedding"), 1) * lit(2.0f)),
           slice(col("embedding"), 2, 63)).as("embedding"))
         .select(col("vec_id"), col("embedding"), ts.as("ts"))
-      val now = System.currentTimeMillis()
-      Seq("a_base.parquet" -> base, "b_planted.parquet" -> planted)
-        .zipWithIndex.foreach { case ((name, df), i) =>
-          writeOneParquet(df, p, name)
-          Paths.get(p, name).toFile.setLastModified(now - 30000 + i * 10000L)
-          ()
-        }
+      writeOneParquet(base, p, "a_base.parquet")
+      writeOneParquet(planted, p, "b_planted.parquet")
+      stampInNameOrder(p)
     }
 
   /** Query vectors 100–109 as a TWO-file replay (one micro-batch each
@@ -279,30 +174,23 @@ private[queries] object Staging {
     * gate. No sentinel files: the probe holds no state and waits on no
     * watermark — every emission lands in its own batch.
     */
-  def streamQueryVecDir(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): String =
+  def streamQueryVecDir(spark: SparkSession, sfDir: String): String =
     dir("streamqvec", sfDir, "embeddings") { p =>
       Files.createDirectories(Paths.get(p))
-      import org.apache.spark.sql.functions._
       val e = graft.Tables.t(spark, sfDir, "embeddings")
         .filter(col("vec_id").between(100, 109))
         .select(col("vec_id"), col("embedding"))
-      val now = System.currentTimeMillis()
-      Seq(("a_q.parquet", col("vec_id") < 105),
-          ("b_q.parquet", col("vec_id") >= 105))
-        .zipWithIndex.foreach { case ((name, pred), i) =>
-          writeOneParquet(e.filter(pred), p, name)
-          Paths.get(p, name).toFile.setLastModified(now - 30000 + i * 10000L)
-          ()
-        }
+      writeOneParquet(e.filter(col("vec_id") < 105), p, "a_q.parquet")
+      writeOneParquet(e.filter(col("vec_id") >= 105), p, "b_q.parquet")
+      stampInNameOrder(p)
     }
 
   /** Write `df` as ONE parquet file named `name` directly under `destDir`
     * (Spark writes to a side dir; only the part file moves in, so no
-    * _SUCCESS/.crc artifact lands next to it).
+    * _SUCCESS/.crc artifact lands next to it and the replay directory holds
+    * exactly the files the stream reads).
     */
-  private[queries] def writeOneParquet(
-      df: org.apache.spark.sql.DataFrame, destDir: String, name: String): Unit = {
+  def writeOneParquet(df: DataFrame, destDir: String, name: String): Unit = {
     val tmp = s"${destDir}_stage_$name"
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = Option(new java.io.File(tmp).listFiles()).toSeq.flatten
@@ -310,154 +198,154 @@ private[queries] object Staging {
       .getOrElse(sys.error(s"no part file written under $tmp"))
     Files.move(part.toPath, Paths.get(destDir, name),
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(tmp))
+    rmTree(new java.io.File(tmp))
   }
 
-  /** A single NULL-text sentinel row for the documents replay (see
-    * [[streamDocsDir]]), written directly with parquet-java.
+  /** Stamps the files under a staged replay dir with modification times in
+    * name order, 10 s apart and in the past: the file-stream source orders
+    * its files by modification time, so the replay runs in name order.
     */
-  private def writeDocSentinel(path: java.nio.file.Path, ts: Long): Unit = {
+  def stampInNameOrder(dir: String): Unit = {
+    val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten.sortBy(_.getName)
+    val now = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(now - 10000L * (files.size + 1 - i)); ()
+    }
+  }
+
+  /** One sentinel row as a standalone parquet file at `path`, written
+    * directly with parquet-java (a Spark job per sentinel was machinery for
+    * a single row). The file's schema is `schema` — the replay's own data
+    * schema — converted by Spark's parquet writer converter with every field
+    * optional, so the sentinel's physical types cannot drift from the data
+    * file it rides with. Only the `values` fields are set; the rest are NULL.
+    */
+  def writeSentinel(path: String, schema: StructType, values: Map[String, Any]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
-    val schema = MessageTypeParser.parseMessageType(
-      """message doc_sentinel {
-        |  optional int64 doc_id;
-        |  optional binary text (UTF8);
-        |  optional int64 ts;
-        |}""".stripMargin)
+    val pq = new org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter()
+      .convert(StructType(schema.map(_.copy(nullable = true))))
     val writer = ExampleParquetWriter
       .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path.toString),
-        new org.apache.hadoop.conf.Configuration()))
-      .withType(schema)
+        new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration()))
+      .withType(pq)
       .build()
-    val g = new SimpleGroupFactory(schema).newGroup()
-    g.add("doc_id", -1L)
-    // `text` deliberately unset: a NULL payload vanishes in every
-    // downstream filter/explode while the row still drives the watermark.
-    g.add("ts", ts)
+    val g = new SimpleGroupFactory(pq).newGroup()
+    values.foreach { case (name, v) =>
+      schema(name).dataType match {
+        case LongType => g.add(name, v.asInstanceOf[Long])
+        case DoubleType => g.add(name, v.asInstanceOf[Double])
+        case StringType => g.add(name, v.asInstanceOf[String])
+        case t => throw new IllegalArgumentException(s"sentinel field $name: unsupported type $t")
+      }
+    }
     try writer.write(g) finally writer.close()
   }
 
-  /** Schema of the staged documents replay (see [[replaySchema]]). */
-  def replayDocsSchema(spark: org.apache.spark.sql.SparkSession, staged: String)
-      : org.apache.spark.sql.types.StructType =
-    stagedSchema(spark, s"$staged/a_docs.parquet")
-
-  // One stream-tuned clone per parent session (weak keys, same rationale as
-  // lastStreamSink). Accessed only under `synchronized`.
-  private val streamSessions =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.SparkSession]
-
-  /** A clone of `spark` (shared SparkContext, separate SQL conf) with few
-    * shuffle partitions, for the finite-fixture stream gates. Stateful
-    * micro-batches pay one state-store open/commit cycle PER shuffle
-    * partition PER batch regardless of data volume, so a 32-partition conf
-    * spends its wall-clock on empty store commits for a fixture with a few
-    * thousand keys. Partition count changes no results (per-key
-    * aggregation/sessionization/join output is partitioning-independent).
-    *
-    * 2 partitions, not the r18–r21 8 (r22, engine-reported
-    * `stateOperators.commitTimeMs` per micro-batch, same box, same gates):
-    * commit wall-clock scales with partition count even when state is tiny
-    * and the files land on tmpfs — a 1-row ks-drift micro-batch summed
-    * 0.6–3.4 s of commit across 8 partitions vs 0.08–0.13 s across 2, and
-    * the probed gate minima moved windows 2.54→1.91 s, cusum 2.48→1.64 s,
-    * ksdrift 3.20→2.44 s (parts=1 measured within noise of 2; 2 keeps the
-    * update fold parallel for the token-heavy gates).
-    * SPARK_GRAFT_STREAM_PARTS overrides for A/Bs. Production streams on
-    * real volume keep their session's own partitioning — this clone exists
-    * only behind the fixture gates.
-    *
-    * `noDataMicroBatches.enabled = true` (the engine default) is PINNED
-    * because the staged-replay sentinel protocol now depends on it: a
-    * single far-future sentinel advances the watermark at its batch's end,
-    * and the emission batch that follows is the engine's watermark-driven
-    * no-data batch (`processAllAvailable` waits for it — measured, and the
-    * r21 sweep already emitted through it, see [[streamSessionizeDir]]).
+  /** Shuffle partitions of the clone for gates whose micro-batches are keyed
+    * state updates. Stateful micro-batches pay one state-store open/commit
+    * cycle PER shuffle partition PER batch regardless of data volume, so a
+    * 32-partition conf spends its wall-clock on empty store commits for a
+    * fixture with a few thousand keys. Commit wall-clock scales with
+    * partition count even when state is tiny and the files land on tmpfs
+    * (engine-reported `stateOperators.commitTimeMs` per micro-batch, same
+    * box, same gates): a 1-row ks-drift micro-batch summed 0.6–3.4 s of
+    * commit across 8 partitions vs 0.08–0.13 s across 2, and the gate
+    * minima moved windows 2.54→1.91 s, cusum 2.48→1.64 s, ksdrift
+    * 3.20→2.44 s. One partition measured within noise of 2; 2 keeps the
+    * update fold parallel for the token-heavy gates.
     */
-  def streamSession(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = synchronized {
-    Option(streamSessions.get(spark)).getOrElse {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))
-      s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      streamSessions.put(spark, s2)
-      s2
-    }
-  }
+  val StateParts = 2
 
-  // The compute-heavy clone (weak keys, same rationale as streamSessions).
-  private val heavyStreamSessions =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      org.apache.spark.sql.SparkSession]
-
-  /** [[streamSession]]'s sibling for the TWO stream gates whose per-batch
-    * work is a real distributed fold rather than a keyed state update —
+  /** Shuffle partitions of the clone for the two gates whose per-batch work
+    * is a real distributed fold rather than a keyed state update —
     * q_stream_components (a connected-components contraction per
     * micro-batch inside foreachBatch) and q_stream_embed_neardup (a 64-dim
     * SRP signature + bucket self-join per batch). For those the
     * state-store-commit floor is NOT the binding cost, per-batch shuffle
     * parallelism is: at 2 partitions both regressed (components 3.8→4.4 s,
-    * embed_neardup 2.2→3.4 s isolated minima) while every
-    * state-floor-bound gate improved. 8 partitions is the r18–r21 measured
-    * balance for them. SPARK_GRAFT_STREAM_PARTS_HEAVY overrides.
+    * embed_neardup 2.2→3.4 s isolated minima) while every state-bound gate
+    * improved.
     */
-  def streamSessionHeavy(spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = synchronized {
-    Option(heavyStreamSessions.get(spark)).getOrElse {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_HEAVY", "8"))
-      s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-      heavyStreamSessions.put(spark, s2)
-      s2
+  val FoldParts = 8
+
+  // One stream-tuned clone per (parent session, partitions); weak keys, same
+  // rationale as lastStreamSink. Accessed only under `synchronized`.
+  private val streamSessions =
+    new java.util.WeakHashMap[SparkSession, Map[Int, SparkSession]]
+
+  /** A clone of `spark` (shared SparkContext, separate SQL conf) with
+    * `partitions` shuffle partitions ([[StateParts]] or [[FoldParts]]), for
+    * the finite-fixture stream gates. Partition count changes no results
+    * (per-key aggregation/sessionization/join output is
+    * partitioning-independent). Production streams on real volume keep
+    * their session's own partitioning — this clone exists only behind the
+    * fixture gates.
+    *
+    * `noDataMicroBatches.enabled = true` (the engine default) is PINNED
+    * because the staged-replay sentinel protocol depends on it: a single
+    * far-future sentinel advances the watermark at its batch's end, and the
+    * emission batch that follows is the engine's watermark-driven no-data
+    * batch (`processAllAvailable` waits for it, see [[streamSessionizeDir]]).
+    */
+  def streamSession(spark: SparkSession, partitions: Int = StateParts): SparkSession =
+    synchronized {
+      val clones = Option(streamSessions.get(spark)).getOrElse(Map.empty[Int, SparkSession])
+      clones.getOrElse(partitions, {
+        val s2 = spark.newSession()
+        s2.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+        s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+        streamSessions.put(spark, clones.updated(partitions, s2))
+        s2
+      })
     }
+
+  /** The staged replay at `staged` as a file stream in `ss`, one file per
+    * micro-batch when `oneFilePerBatch`. The pinned schema is that of the
+    * dir's first data file by name — real data, never a sentinel, whose
+    * names sort last — so for the events replay it is the NORMALIZED file
+    * where `ts` is a nanosecond BIGINT: pinning the raw fixture's schema
+    * would re-import the physical-type drift the normalization absorbs. A
+    * staged file is immutable once written (the [[dir]] contract), so the
+    * schema is memoized per dir per JVM; without the memo every stream-gate
+    * invocation pays a driver-side footer read just to re-learn it.
+    */
+  def replay(ss: SparkSession, staged: String, oneFilePerBatch: Boolean): DataFrame = {
+    val schema = memo[StructType]("schema", staged) {
+      val first = Option(new java.io.File(staged).list()).toSeq.flatten
+        .filter(_.endsWith(".parquet")).sorted.headOption
+        .getOrElse(sys.error(s"no staged parquet file under $staged"))
+      ss.read.parquet(s"$staged/$first").schema
+    }
+    val r = ss.readStream.schema(schema)
+    (if (oneFilePerBatch) r.option("maxFilesPerTrigger", 1) else r).parquet(staged)
   }
 
-  /** Schema of the staged replay — the NORMALIZED events file, where `ts`
-    * is a nanosecond BIGINT regardless of the fixture's physical type.
-    * Stream gates pin THIS schema; pinning the raw fixture's schema would
-    * re-import the physical-type drift the normalization exists to absorb.
+  /** Runs the streaming `frame` of `ss` into a fresh append-mode memory sink
+    * until every staged file — and the no-data batch after the last — is
+    * processed, stops the query whether or not it failed, and returns the
+    * sink's rows. The session's previous sink is dropped first, so each
+    * session holds at most one drained result.
     */
-  def replaySchema(spark: org.apache.spark.sql.SparkSession, staged: String)
-      : org.apache.spark.sql.types.StructType =
-    stagedSchema(spark, s"$staged/a_events.parquet")
+  def drain(ss: SparkSession, frame: Dataset[_]): DataFrame = {
+    val sink = nextStreamSink(ss)
+    val q = frame.writeStream.format("memory").queryName(sink).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    ss.table(sink)
+  }
 
-  /** Schema of one staged parquet file, memoized per (path, JVM): a staged
-    * file is immutable once written (the [[dir]] contract), so its schema
-    * is a pure function of the path — without the memo every stream-gate
-    * invocation pays a driver-side footer read + Spark-session round trip
-    * just to re-learn the pinned schema (36 gates × reps per bench sweep).
-    */
-  def stagedSchema(spark: org.apache.spark.sql.SparkSession, file: String)
-      : org.apache.spark.sql.types.StructType =
-    memo[org.apache.spark.sql.types.StructType]("schema", file) {
-      spark.read.parquet(file).schema
-    }
-
-  /** Unique memory-sink name; the calling session's PREVIOUS streaming sink
-    * is dropped so each session holds at most one materialized result.
-    */
-  def nextStreamSink(spark: org.apache.spark.sql.SparkSession): String = synchronized {
+  private def nextStreamSink(spark: SparkSession): String = synchronized {
     Option(lastStreamSink.get(spark)).foreach(spark.catalog.dropTempView(_))
     val name = s"graft_stream_windows_${sinkIds.incrementAndGet()}"
     lastStreamSink.put(spark, name)
     name
   }
 
+  def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree))
+    f.delete(); ()
+  }
+
   private def cleanupOnExit(path: String): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(new java.io.File(path))))
 }

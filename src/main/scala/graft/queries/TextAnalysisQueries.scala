@@ -595,18 +595,11 @@ object TextAnalysisQueries extends QueryDomain {
       // batch gate row-for-row; the SAME oracle gates both.
       val staged = Staging.streamDocsDir(s, dir)
       val ss = Staging.streamSession(s)
-      val schema = Staging.replayDocsSchema(ss, staged)
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .filter($"doc_id" >= 0) // drop the replay's watermark sentinels
         .select($"doc_id", regexp_replace($"text", " line ", "\n").as("text"))
-      val sink = Staging.nextStreamSink(ss)
-      val q = CorpusOps.qualityRules(src, "doc_id", "text", minWords = 30)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(sink).orderBy($"doc_id")
+      val out = CorpusOps.qualityRules(src, "doc_id", "text", minWords = 30)
+      Staging.drain(ss, out).orderBy($"doc_id")
     },
 
     "q_lang_ngram" -> { (s, dir) =>

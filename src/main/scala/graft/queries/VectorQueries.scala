@@ -379,17 +379,10 @@ object VectorQueries extends QueryDomain {
       val staged = Staging.streamQueryVecDir(s, dir)
       val name = ivfPqIndexName(s, dir) // catalog shared across sessions
       val ss = Staging.streamSession(s)
-      val schema = Staging.stagedSchema(ss, s"$staged/a_q.parquet")
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-      val sink = Staging.nextStreamSink(ss)
-      val q = VectorOps.ivfPqProbeEmissions(ss, src, "vec_id", "embedding",
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
+      val out = VectorOps.ivfPqProbeEmissions(ss, src, "vec_id", "embedding",
           name, m = 2, dim = 64, nProbe = 3)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      VectorOps.ivfPqCloseFromParts(ss.table(sink), m = 2, k = 5)
+      VectorOps.ivfPqCloseFromParts(Staging.drain(ss, out), m = 2, k = 5)
         .select($"query_id", $"rank".as("rnk"), $"neighbor_id", $"adc")
         .orderBy($"query_id", $"rnk")
     },
@@ -566,28 +559,22 @@ object VectorQueries extends QueryDomain {
       // attached by ONE batch join over the small pair set — output, and
       // oracle, identical to q_embed_neardup. Heavy clone: the per-batch
       // SRP signature + bucket self-join is a real fold, not a keyed
-      // update — see [[Staging.streamSessionHeavy]].
+      // update — see [[Staging.FoldParts]].
       val staged = Staging.streamEmbDir(s, dir)
-      val ss = Staging.streamSessionHeavy(s)
-      val schema = Staging.stagedSchema(ss, s"$staged/a_base.parquet")
-      val src = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
+      val ss = Staging.streamSession(s, Staging.FoldParts)
+      val src = Staging.replay(ss, staged, oneFilePerBatch = true)
         .withColumn("tsm", timestamp_micros(expr("ts div 1000")))
-      val sink = Staging.nextStreamSink(ss)
-      val q = graft.streaming.EventStreams
+      val out = graft.streaming.EventStreams
         .srpNearDup(src, "vec_id", "embedding", "tsm",
           dim = 64, horizonSec = 100000000000L,
           bits = 32, bandBits = 8, maxHamming = 3)
-        .writeStream.format("memory").queryName(sink).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
       val e = t(ss, dir, "embeddings")
       val planted = e.select(($"vec_id" + 1000000L).as("vec_id"),
         concat(array(element_at($"embedding", 1) * lit(2.0f)),
           slice($"embedding", 2, 63)).as("embedding"))
       val all = e.select($"vec_id", $"embedding").unionByName(planted)
         .select($"vec_id", $"embedding", VectorOps.norm2($"embedding").as("nn"))
-      val pairs = ss.table(sink).distinct()
+      val pairs = Staging.drain(ss, out).distinct()
       orderedSmall(
         pairs
           .join(all.select($"vec_id".as("doc_i"), $"embedding".as("v_i"), $"nn".as("nn_i")), "doc_i")

@@ -11,11 +11,9 @@ object Harness {
   /** `local[cores]` with `cores` shuffle partitions, UTC session time, parquet
     * TIMESTAMP(NANOS) read as a nanosecond BIGINT (`Tables.events` adapts to
     * either physical type), no UI, ERROR logging (the bench's metric line must
-    * be the last stdout content). `cores` is `SPARK_GRAFT_CPUS`, else the
-    * machine's core count.
+    * be the last stdout content).
     */
-  def session(cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
-      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)): SparkSession = {
+  def session(cores: Int = defaultCores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -26,6 +24,10 @@ object Harness {
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }
+
+  /** The drivers' core count: `SPARK_GRAFT_CPUS`, else the machine's. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   /** The sentinel's plan: one exchange, no table input, and a fixed 32 range
     * partitions whatever the core count, so its time measures the box, not

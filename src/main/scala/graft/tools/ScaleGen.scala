@@ -28,7 +28,9 @@ object ScaleGen {
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, "factor must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Its own builder, not Harness.session: nanosAsLong would change the
+    // `ts` type it writes.
+    val cpus = Harness.defaultCores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
