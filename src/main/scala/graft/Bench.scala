@@ -13,20 +13,18 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   * consumes every row of every column downstream of the full plan.
   *
   * Batch queries run SPARK_GRAFT_REPS times (default 3) and stream queries
-  * SPARK_GRAFT_STREAM_REPS times (default 2 — r19 VERDICT item 2: the 36
-  * staged-replay stream gates were the sweep's most expensive block, their
-  * three draws historically agree within noise, and the third stream pass is
-  * what the r19 driver timeout killed). Per-query stats report the MEDIAN of
-  * the draws taken (plus the min, as `queries_min`): single-run numbers on a
-  * shared 32-way box showed 2× phantom regressions round-to-round, and the
-  * median ignores one bad draw. Reps are interleaved round-robin across the
-  * query list so one noisy wall-clock window cannot poison all of a query's
-  * draws (the grouped-reps failure mode seen in round 6). `value` is the sum
-  * of medians.
+  * SPARK_GRAFT_STREAM_REPS times (default 2: the 36 staged-replay stream
+  * gates are the sweep's most expensive block, their three draws agree
+  * within noise, and a third stream pass is what pushes a full sweep past
+  * a caller's timeout). Per-query stats report the MEDIAN of the draws taken
+  * (plus the min, as `queries_min`): single-run numbers on a shared 32-way
+  * box showed 2× phantom regressions run-to-run, and the median ignores
+  * one bad draw. Reps are interleaved round-robin across the query list so
+  * one noisy wall-clock window cannot poison all of a query's draws.
+  * `value` is the sum of medians.
   *
-  * SURVIVABILITY (r19 VERDICT item 1 — the r19 driver bench was SIGTERM'd
-  * mid-stream-pass and recorded `rc 124, parsed: null`, i.e. the round
-  * shipped NO driver-side perf number despite 40 minutes of measurement):
+  * SURVIVABILITY (a bench SIGTERM'd mid-stream-pass must still leave a
+  * parseable record, not `parsed: null`):
   *  - SPARK_GRAFT_BUDGET_SEC (default 1500) is a wall-clock budget. Once
   *    elapsed time crosses it, no further queries START; the run finalizes
   *    from the draws already taken, with `"budget_truncated":true` and a
@@ -34,42 +32,41 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   *    queries report the stats of the draws they DID take — null stays
   *    reserved for real failures, so breakage still can't masquerade as
   *    speed.
-  *  - After EVERY rep pass AND at every SentinelStride boundary inside a
-  *    pass (r20 ADVICE: a kill during the first multi-minute pass used to
-  *    leave no record at all) the full record is written to BENCH.json and
-  *    the stdout summary line is cached in-process with `"partial":true`.
+  *  - After EVERY rep pass AND at every mid-pass sentinel draw (a kill
+  *    during the first multi-minute pass must still leave a record) the
+  *    full record is written to BENCH.json and the stdout summary line is
+  *    cached in-process with `"partial":true`.
   *  - A JVM shutdown hook prints the latest cached line: a SIGTERM'd run
   *    emits the last checkpoint's parseable summary as its final stdout
   *    instead of nothing. On normal completion the final `"partial":false`
-  *    line is printed FIRST and the hook disarmed after (r20 ADVICE: the
-  *    old order had a window where a SIGTERM between disarm and println
-  *    emitted nothing; a duplicated identical line is harmless to a tail
-  *    parse, a missing one is not).
+  *    line is printed FIRST and the hook disarmed after (disarming first
+  *    leaves a window where a SIGTERM between disarm and println emits
+  *    nothing; a duplicated identical line is harmless to a tail parse, a
+  *    missing one is not).
   *
   * Pass order interleaves the stream group into the batch reps —
   * batch-pass-1, stream-pass-1, batch-pass-2, stream-pass-2, batch-pass-3
-  * (r20 VERDICT item 3: the old all-batch-then-all-stream order meant a
-  * budget hit mid-batch-pass-2 left all 36 stream gates with ZERO draws;
-  * min/median semantics already tolerate unequal rep counts, so a truncated
-  * run now still carries ≥1 draw per stream gate). Within each group the
-  * round-robin interleaving is preserved, and each group still runs in its
-  * own passes so the staged-replay protocol's I/O stays confined to the
-  * stream windows (r18 VERDICT item 2).
+  * (an all-batch-then-all-stream order leaves all 36 stream gates with ZERO
+  * draws when the budget hits mid-batch-pass-2; min/median semantics
+  * tolerate unequal rep counts, so a truncated run still carries ≥1 draw
+  * per stream gate). Within each group the round-robin interleaving is
+  * preserved, and each group runs in its own passes so the staged-replay
+  * protocol's I/O stays confined to the stream windows.
   *
   * The session is [[graft.tools.Harness.session]]. The fixed SENTINEL
-  * ([[graft.tools.Harness.sentinel]], a constant tiny plan) runs at
-  * each rep-pass head AND every `SentinelStride` queries inside the pass;
-  * the full (pass, offset, seconds) trace lands in BENCH.json, so a noisy
-  * sweep region is identified by its own record instead of argued from
-  * cross-round deltas.
+  * ([[graft.tools.Harness.sentinel]], a constant tiny plan) runs up to
+  * [[SentinelsPerPass]] times in every rep pass, at the offsets
+  * [[sentinelOffsets]] spreads across it (the first at the pass head); the
+  * full (pass, offset, seconds) trace lands in BENCH.json, so a noisy sweep
+  * region is identified by its own record instead of argued from
+  * run-to-run deltas.
   *
-  * STDOUT DISCIPLINE (r20 VERDICT item 1 — two consecutive rounds of
-  * `parsed: null`): the driver parses a ~2000-char stdout TAIL, so the
-  * metric line must fit that window in EVERY terminal state. r20's line
-  * overflowed to ~2,530 chars because the `not_run` array carried all 36
-  * unreached stream-gate names (701 chars) after a budget hit. The stdout
-  * line now carries: the summary fields, the 18-query BASELINE.md subset
-  * (medians AND minima — the cross-round comparison contract), and
+  * STDOUT DISCIPLINE: the caller parses a ~2000-char stdout TAIL, so the
+  * metric line must fit that window in EVERY terminal state. A line that
+  * carried all 36 unreached stream-gate names (701 chars) in `not_run`
+  * after a budget hit overflowed to ~2,530 chars and parsed as null.
+  * The stdout line carries: the summary fields, the 18-query BASELINE.md subset
+  * (medians AND minima — the cross-run comparison contract), and
   * `failed`/`not_run` as COUNTS plus a first-3 `_head` sample. The full
   * name arrays, the complete per-query maps, the raw rep draws and the
   * sentinel trace all stay in BENCH.json. BenchSubsetSpec constructs the
@@ -77,10 +74,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
   * 5-digit values everywhere) and pins its length ≤ MaxStdoutLineChars.
   */
 object Bench {
-  /** The 18-query BASELINE.md subset — the cross-round comparison contract
-    * (bench_vs_baseline = subset sum / 25.89 s round-2 anchor). Public so
+  /** The 18-query BASELINE.md subset — the cross-run comparison contract
+    * (bench_vs_baseline = subset sum / 25.89 s anchor). Public so
     * BenchSubsetSpec can pin every member against `SparkEntry.queries` —
-    * a rename otherwise shrinks the sum silently (r12 ADVICE).
+    * a rename otherwise shrinks the sum silently.
     */
   val baselineSubset: Set[String] = Set(
     "q1_pricing_summary", "q3_top_unshipped", "q5_region_revenue",
@@ -101,6 +98,21 @@ object Bench {
     * always exact; the full lists live in BENCH.json).
     */
   val HeadSample: Int = 3
+
+  /** The most sentinel draws one rep pass takes, whatever its length. */
+  val SentinelsPerPass: Int = 6
+
+  /** The offsets inside an `n`-query pass at which the sentinel runs: the
+    * pass head, then every ⌈n / [[SentinelsPerPass]]⌉ queries, so a short
+    * `SPARK_GRAFT_ONLY` pass is tagged mid-pass as densely as a full one.
+    * A 240-gate pass runs for minutes, so a single head-of-pass draw cannot
+    * vouch for the box minutes later; spaced draws give each region of the
+    * sweep its own noise tag.
+    */
+  private[graft] def sentinelOffsets(n: Int): Seq[Int] = {
+    val stride = math.max(1, (n + SentinelsPerPass - 1) / SentinelsPerPass)
+    0 until n by stride
+  }
 
   private def nameArray(names: Seq[String]): String =
     names.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -163,8 +175,8 @@ object Bench {
     // Reps are INTERLEAVED round-robin (full query list `reps` times), not
     // grouped per query: grouped reps put one query's three draws in the
     // same ~30 s wall-clock window, so sustained co-tenant noise poisons
-    // all three and the median keeps it (round 6 recorded q_dedup_simhash
-    // at 8.72 s vs 0.86 s re-measured). Spreading a query's draws across
+    // all three and the median keeps it (q_dedup_simhash once read 8.72 s
+    // grouped vs 0.86 s re-measured). Spreading a query's draws across
     // the whole run makes a correlated-noise window hit at most one draw
     // per query. A query failing ANY rep records null — breakage can't
     // masquerade as speed.
@@ -179,13 +191,8 @@ object Bench {
         None
       }
     sentinelOnce() // warm-up draw, not recorded
-    // The sentinel TRACE (r18 VERDICT item 2): one draw at each pass head
-    // PLUS one every `SentinelStride` queries inside the pass, each recorded
-    // as (pass, offset, seconds). A 240-gate pass runs for minutes, so a
-    // single head-of-pass draw cannot vouch for the box minutes later; the
-    // trace makes each region of the sweep carry its own noise tag
-    // mechanically.
-    val SentinelStride = 40
+    // The sentinel TRACE: the draws at each pass's sentinelOffsets, each
+    // recorded as (pass, offset, seconds).
     var sentinelTrace = Vector.empty[(Int, Int, Double)]
     def tracedSentinel(pass: Int, offset: Int): Unit =
       sentinelOnce().foreach(t => sentinelTrace :+= ((pass, offset, t)))
@@ -216,14 +223,14 @@ object Bench {
       val notRunNames = results.collect { case (k, ts) if ts.isEmpty && !failedOnce(k) => k }
       val total = measured.map { case (_, ts) => median(ts) }.sum
       val subsetRes = results.filter(r => baselineSubset(r._1))
-      // The contract number is the sum of per-query MINIMA, not medians: the
-      // r12 driver medians were contention artifacts (q_correlation 11.77 s
+      // The contract number is the sum of per-query MINIMA, not medians:
+      // sweep medians have been contention artifacts (q_correlation 11.77 s
       // median vs 1.07 s min on an idle box), and the minimum is the draw
       // least polluted by co-tenants — the contention-immune estimator the
-      // cross-round record should key on (r12 VERDICT item 3; convention
-      // documented in BASELINE.md). The median sum stays as a secondary field.
+      // cross-run record should key on (convention documented in
+      // BASELINE.md). The median sum stays as a secondary field.
       //
-      // Completeness semantics (r20): the r12 hazard is a MISSING member
+      // Completeness semantics: the hazard is a MISSING member
       // silently shrinking the sum and reading as an improvement. Fewer
       // draws per member cannot shrink a min-sum (a min over fewer draws is
       // ≥ the min over more), so under budget truncation the sum stays
@@ -244,8 +251,8 @@ object Bench {
       val sentinelJson =
         if (sentinelTs.isEmpty) "null"
         else f"""{"median":${median(sentinelTs)}%.3f,"min":${sentinelTs.min}%.3f}"""
-      // Sentinel-NORMALIZED subset ratio (r17 VERDICT item 7): subset minima
-      // divided by the sentinel minimum, so cross-round comparisons separate
+      // Sentinel-NORMALIZED subset ratio: subset minima divided by the
+      // sentinel minimum, so cross-run comparisons separate
       // box contention from plan movement mechanically. Null whenever either
       // input is untrustworthy (missing subset member / no sentinel draws).
       val subsetNormJson =
@@ -290,7 +297,7 @@ object Bench {
     // normal completion (SIGTERM from the driver's timeout, OOM-killer
     // sibling, anything). The hook writes to the same inherited stdout fd
     // the final line would use, so the driver's tail parse sees a well-formed
-    // record with "partial":true instead of nothing (r19: rc 124/parsed null).
+    // record with "partial":true instead of nothing.
     val lastPartialLine = new AtomicReference[String]("")
     val hookArmed = new AtomicBoolean(true)
     sys.addShutdownHook {
@@ -301,15 +308,13 @@ object Bench {
     }
 
     // Stream gates (the 36 staged-replay q_stream_* monitors) run in their
-    // OWN rep passes (r18 VERDICT item 2): their fixed micro-batch protocol
-    // cost (staging reads, checkpoint dirs, state-store lifecycle) is the
-    // sweep's heaviest I/O, and isolating it keeps any cross-talk confined
-    // to the stream windows. The passes INTERLEAVE with the batch passes
-    // (batch-1, stream-1, batch-2, stream-2, batch-3, …) so a budget
-    // truncation at any point after the first two passes leaves ≥1 draw for
-    // every gate of both groups (r20: the budget fired before the
-    // all-batch-then-all-stream order ever reached the stream group — 0 of
-    // 36 stream gates measured driver-side).
+    // OWN rep passes: their fixed micro-batch protocol cost (staging reads,
+    // checkpoint dirs, state-store lifecycle) is the sweep's heaviest I/O,
+    // and isolating it keeps any cross-talk confined to the stream windows.
+    // The passes INTERLEAVE with the batch passes (batch-1, stream-1,
+    // batch-2, stream-2, batch-3, …) so a budget truncation at any point
+    // after the first two passes leaves ≥1 draw for every gate of both
+    // groups.
     val (streamNames, batchNames) = names.partition(_.startsWith("q_stream_"))
     val passPlan: Seq[Seq[String]] =
       (0 until math.max(reps, streamReps)).flatMap { i =>
@@ -319,23 +324,24 @@ object Bench {
     var pass = 0
     var budgetHit = false
     for (group <- passPlan if !budgetHit) {
+      val marks = sentinelOffsets(group.length).toSet
       var offset = 0
       tracedSentinel(pass, offset)
       val it = group.iterator
       while (it.hasNext && !budgetHit) {
         // Budget check BEFORE each query starts: a crossed budget stops new
-        // work immediately (not just at pass boundaries — the r19 stream
-        // passes alone ran >10 min, far past any useful boundary check),
+        // work immediately (not just at pass boundaries — a stream pass
+        // alone can run >10 min, far past any useful boundary check),
         // finalizing from the draws already taken.
         if (elapsedSec > budgetSec) {
           budgetHit = true
         } else {
           val name = it.next()
-          if (offset > 0 && offset % SentinelStride == 0) {
+          if (offset > 0 && marks(offset)) {
             tracedSentinel(pass, offset)
-            // Mid-pass crash-safe checkpoint (r20 ADVICE): a kill during the
-            // first multi-minute pass must still leave a BENCH.json and a
-            // cached stdout line from minutes in, not nothing.
+            // Mid-pass crash-safe checkpoint: a kill during the first
+            // multi-minute pass must still leave a BENCH.json and a cached
+            // stdout line from minutes in, not nothing.
             lastPartialLine.set(emit(partial = true, budgetTruncated = false))
           }
           val t0 = System.nanoTime()
@@ -358,11 +364,10 @@ object Bench {
     }
     // Normal completion. Stop Spark BEFORE the metric line: spark.stop() can
     // log shutdown lines, and the metric JSON must be the very last stdout
-    // content for the driver's tail parse (r12 VERDICT item 1). The hook
-    // stays ARMED through spark.stop() AND through the final println with
-    // the final line cached: stop() takes seconds, and a SIGTERM landing
-    // anywhere in that window would otherwise print nothing (r20 ADVICE —
-    // the old code disarmed BEFORE printing; a duplicate identical final
+    // content for the caller's tail parse. The hook stays ARMED through
+    // spark.stop() AND through the final println with the final line
+    // cached: stop() takes seconds, and a SIGTERM landing anywhere in that
+    // window would otherwise print nothing (a duplicate identical final
     // line from the hook is harmless to the driver's tail parse).
     val finalLine = emit(partial = false, budgetTruncated = budgetHit)
     lastPartialLine.set(finalLine)

@@ -12,12 +12,11 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
-  private def domains: Seq[QueryDomain] =
-    Seq(RelationalQueries, PipelineQueries, SourceQueries)
+  private def domains: Seq[QueryDomain] = Seq(RelationalQueries, DedupQueries,
+    TextAnalysisQueries, EventQueries, VectorQueries, SourceQueries)
 
-  /** One entry per implemented operator from SURVEY.md §2. Same loud
-    * duplicate-key guard as [[graft.queries.PipelineQueries]]: `++`
-    * silently shadows a colliding gate name across domains.
+  /** One entry per implemented operator from SURVEY.md §2. The guard is
+    * loud because `++` silently shadows a gate name that two domains share.
     */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
     val m = domains.map(_.queries).reduce(_ ++ _)

@@ -11,8 +11,7 @@ import graft.meta.Ckpt.Syntax
 /** Deduplication + sketch gates: exact/fingerprint dedup, MinHash-LSH,
   * SimHash, blocked n-gram Jaccard (exact and df-capped), containment,
   * dup clusters, substring spans, KMV/CMS/Misra-Gries sketches — with
-  * their DuckDB oracles. One family file of [[PipelineQueries]] (split
-  * r18; determinism conventions documented there).
+  * their DuckDB oracles. Determinism conventions: [[QueryDomain]].
   */
 object DedupQueries extends QueryDomain {
 

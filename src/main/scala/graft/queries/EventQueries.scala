@@ -9,8 +9,7 @@ import graft.queries.QueryShared._
 
 /** Event gates: sessionization, time windows, funnels, and the
   * streaming (`q_stream_*`) twins over the replayed events fixture —
-  * with their DuckDB oracles. One family file of [[PipelineQueries]]
-  * (split r18; determinism conventions documented there).
+  * with their DuckDB oracles. Determinism conventions: [[QueryDomain]].
   */
 object EventQueries extends QueryDomain {
 

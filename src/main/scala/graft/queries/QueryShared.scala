@@ -6,10 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.operators._
 
-/** Helpers shared across the pipeline query-family files (split out
-  * of PipelineQueries r18): DuckDB dialect builders (hashes, dot
-  * products, CTE chains), staged-index builders, and the oracle
-  * texts shared by batch/stream gate twins.
+/** Helpers shared across the pipeline query-family files: DuckDB
+  * dialect builders (hashes, dot products, CTE chains), staged-index
+  * builders, and the oracle texts shared by batch/stream gate twins.
   */
 object QueryShared {
 

@@ -9,9 +9,8 @@ import graft.queries.QueryShared._
 
 /** Text-analysis gates: stats, quality rules, language-ID, token
   * counting, fingerprints, BPE/tokenization/packing, mixing/selection,
-  * governance/privacy — with their DuckDB oracles. One family file of
-  * [[PipelineQueries]] (split r18; determinism conventions documented
-  * there).
+  * governance/privacy — with their DuckDB oracles. Determinism
+  * conventions: [[QueryDomain]].
   */
 object TextAnalysisQueries extends QueryDomain {
 
@@ -146,7 +145,7 @@ object TextAnalysisQueries extends QueryDomain {
       // that vocabulary-bounded table. The oracle unrolls the same 6
       // iterations as chained CTEs — pair counts, argmax, and a
       // list_reduce greedy fold bit-identical to the Spark `aggregate`
-      // fold ([[PipelineQueries.bpeOracle]]).
+      // fold ([[QueryShared.bpeOracle]]).
       CorpusOps.learnBpeMerges(docs(s, dir), "doc_id", "text", 6)
         .orderBy($"rank")
     },

@@ -10,9 +10,8 @@ import graft.queries.QueryShared._
 
 /** Embedding-similarity + multimodal gates: brute-force cosine top-k,
   * IVF/PQ/SQ8/BQ/MRL ANN tiers with recall gates, SemDeDup, and the
-  * binary-column multimodal quartet — with their DuckDB oracles. One
-  * family file of [[PipelineQueries]] (split r18; determinism
-  * conventions documented there).
+  * binary-column multimodal quartet — with their DuckDB oracles.
+  * Determinism conventions: [[QueryDomain]].
   */
 object VectorQueries extends QueryDomain {
 

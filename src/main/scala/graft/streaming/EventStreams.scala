@@ -1,14 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming twins of the batch event operators
-  * ([[graft.queries.PipelineQueries]] `q_event_windows` / `q_sessionize`):
+  * ([[graft.queries.EventQueries]] `q_event_windows` / `q_sessionize`):
   * same logical aggregation, expressed over an unbounded source with
   * watermark-driven state eviction. A `readStream` source slots in wherever
   * the batch queries use `spark.read` — the transformations are identical.
+  *
+  * The keyed-state operators that emit once per key when its event-time
+  * horizon closes all run through one protocol, [[closeAtHorizon]]; each
+  * supplies only its key, event time, zero state, fold and close.
   */
 object EventStreams {
 
@@ -94,6 +99,10 @@ object EventStreams {
     * corner that can still split vs the batch twin is TWO simultaneous
     * pending chains for one user (disorder deeper than one gap-separated
     * chain), where the earlier chain is emitted immediately.
+    *
+    * Not a [[closeAtHorizon]] operator: it emits inline when a gap closes a
+    * session, and its deadline comes from the session's end, not the
+    * latest event.
     */
   def sessionize(
       events: Dataset[SessionEvent],
@@ -127,9 +136,9 @@ object EventStreams {
             // Stragglers from BEFORE the open session's period (late by more
             // than the gap) cannot join it — absorbing one would drag the
             // session start across a real gap. They fold into their own
-            // chain, CARRIED IN KEYED STATE across micro-batches (r15
-            // ADVICE: closing at batch end split an in-watermark session
-            // spanning two batches that the batch operator would merge) and
+            // chain, CARRIED IN KEYED STATE across micro-batches (closing
+            // at batch end would split an in-watermark session spanning two
+            // batches that the batch operator merges) and
             // emitted only when the watermark passes the chain's deadline.
             // One slot is carried; the corner where disorder sustains TWO
             // simultaneous pending chains emits the earlier at once — the
@@ -218,20 +227,97 @@ object EventStreams {
       }
   }
 
+  /** Keyed state of every [[closeAtHorizon]] operator: the operator's own
+    * state `S` plus the running-max emission deadline (public: encoders
+    * codegen against its accessors).
+    */
+  final case class Horizon[S](state: S, deadlineMs: Long)
+
+  /** The event-time step of every operator whose input carries µs `ts`:
+    * `event_time` from `ts`, watermarked `lateSec` behind. Disorder deeper
+    * than `lateSec` is dropped at the source — the trade every watermarked
+    * operator makes.
+    */
+  private def microsWatermark[E: Encoder](events: Dataset[E], lateSec: Long): Dataset[E] =
+    events
+      .withColumn("event_time", timestamp_micros(col("ts")))
+      .withWatermark("event_time", s"$lateSec seconds")
+      .as[E]
+
+  /** The keyed-state protocol of every horizon-close operator: group the
+    * (already watermarked) `events` by `key`, `fold` each micro-batch's rows
+    * into the key's state (starting from `zero`) and emit nothing; once the
+    * watermark passes the key's deadline — its latest event time plus
+    * `horizonSec` — `close` the state into output rows and drop it. The
+    * timeout is event-time, not processing-time: a processing-time timeout
+    * would spin empty micro-batches forever on an idle stream.
+    *
+    * The deadline is a RUNNING MAX across micro-batches,
+    * `max(prev, maxEventMs + horizonSec·1000 + 1)`. A deadline taken from
+    * the current batch alone would SHRINK when a later micro-batch delivers
+    * older (still-in-watermark) events, letting the key time out early; a
+    * further in-watermark arrival would then open a second group and emit a
+    * duplicate row for the key. The timeout is armed strictly above the
+    * current watermark.
+    *
+    * `fold` must consume every row it is given: the helper takes the
+    * maximum event time as the fold reads them, so no micro-batch is
+    * materialized just to find its latest event.
+    */
+  private def closeAtHorizon[E, K: Encoder, S: TypeTag, O: Encoder](
+      events: Dataset[E], horizonSec: Long)(
+      key: E => K, eventMs: E => Long, zero: S)(
+      fold: (S, Iterator[E]) => S)(
+      close: (K, S) => Iterator[O]): Dataset[O] = {
+    implicit val stateEnc: Encoder[Horizon[S]] = Encoders.product[Horizon[S]]
+    val horizonMs = horizonSec * 1000L
+    events
+      .groupByKey(key)
+      .flatMapGroupsWithState[Horizon[S], O](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, rows: Iterator[E], state: GroupState[Horizon[S]]) =>
+          val prev = state.getOption
+          if (state.hasTimedOut) {
+            state.remove()
+            prev.iterator.flatMap(h => close(k, h.state))
+          } else {
+            var deadlineMs = prev.fold(0L)(_.deadlineMs)
+            val folded = fold(prev.fold(zero)(_.state), rows.map { e =>
+              deadlineMs = math.max(deadlineMs, eventMs(e) + horizonMs + 1)
+              e
+            })
+            state.update(Horizon(folded, deadlineMs))
+            state.setTimeoutTimestamp(math.max(
+              deadlineMs, state.getCurrentWatermarkMs() + 1))
+            Iterator.empty
+          }
+      }
+  }
+
+  /** A count-map fold: one increment per item `items` yields for a row.
+    * Increments commute, so the map is a function of the item multiset —
+    * neither arrival order nor volume grows it past the item domain.
+    */
+  private def counting[E, A](
+      items: E => IterableOnce[A]): (Map[A, Long], Iterator[E]) => Map[A, Long] =
+    (m, rows) => rows.foldLeft(m)((acc, e) => items(e).iterator.foldLeft(acc)(bump))
+
+  private def bump[A](m: Map[A, Long], a: A): Map[A, Long] = m.updated(a, m.getOrElse(a, 0L) + 1L)
+
+  /** Tokens of a document text, mirroring [[graft.operators.TextOps.tokens]]
+    * (`split(text, " ")`, trailing empties kept); a None text (the sentinel
+    * protocol) has none.
+    */
+  private def tokens(text: Option[String]): Iterator[String] =
+    text.iterator.flatMap(_.split(" ", -1))
+
+  private def dbl(x: BigInt): Double = java.lang.Double.parseDouble(x.toString)
+
   /** Input row for [[funnelExact]]: `ts` is the total-order value (µs),
     * `tie` breaks equal timestamps, `step` is the 0-based funnel step this
     * event matches (pre-filtered — non-step events carry no information).
     */
   final case class FunnelEvent(userId: Long, ts: Long, tie: Long, step: Int)
-
-  /** Buffered per-user events awaiting the watermark. `deadlineMs` is the
-    * RUNNING-MAX horizon deadline: a deadline computed from the current
-    * batch's max timestamp alone would SHRINK when a later micro-batch
-    * delivers older (still-in-watermark) events, letting a key time out and
-    * emit early — and a subsequent in-watermark arrival would then open a
-    * second group, emitting a duplicate row for the key.
-    */
-  final case class FunnelBuf(events: List[FunnelEvent], deadlineMs: Long = 0L)
 
   /** One user's funnel result — the streaming twin of
     * [[graft.operators.FunnelOps.funnel]]'s output row. `times(i)` is the
@@ -249,8 +335,7 @@ object EventStreams {
     * stream twin buffers its horizon. State per user is bounded by
     * step-events within the watermark horizon (production bounds
     * `horizonSec`; the replay gate's horizon covers the finite fixture).
-    * `lateSec` is the watermark delay — disorder deeper than it is
-    * dropped at the source, the trade every watermarked operator makes.
+    * `lateSec` is the watermark delay.
     */
   def funnelExact(
       events: Dataset[FunnelEvent],
@@ -259,53 +344,27 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
     require(numSteps >= 1, s"numSteps must be >= 1, got $numSteps")
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[FunnelEvent]
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[FunnelBuf, FunnelOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[FunnelEvent], state: GroupState[FunnelBuf]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.map(_.events).getOrElse(Nil)
-            state.remove()
-            val times = Array.fill(numSteps)(Option.empty[Long])
-            // The exact batch fold: rows in (ts, tie) order; step 0
-            // completes at its first row; step i at the first step-i row
-            // strictly after the row that completed step i-1 (guaranteed
-            // here because times(i-1) was set while scanning an earlier
-            // row — each event carries exactly one step).
-            buffered.sortBy(e => (e.ts, e.tie)).foreach { e =>
-              if (e.step == 0 && times(0).isEmpty) times(0) = Some(e.ts)
-              else if (e.step > 0 && e.step < numSteps &&
-                  times(e.step).isEmpty && times(e.step - 1).isDefined)
-                times(e.step) = Some(e.ts)
-            }
-            Iterator.single(FunnelOut(userId, times.toSeq,
-              times.takeWhile(_.isDefined).size))
-          } else {
-            // Buffer only rows carrying a step (state economy: noise
-            // events are most of a real stream); ANY arrival refreshes
-            // the horizon deadline, so a user with zero step events
-            // still emits its all-null row at timeout — matching the
-            // batch operator, which reports every entity it saw.
-            val arrived = rows.toSeq
-            val stepRows = arrived.filter(e => e.step >= 0 && e.step < numSteps)
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            // Deadline is the running max across batches (see FunnelBuf's
-            // doc): an out-of-order batch must never PULL IN a deadline a
-            // newer event already pushed out.
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(FunnelBuf(
-              state.getOption.map(_.events).getOrElse(Nil) ++ stepRows, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    // Buffer only rows carrying a step (noise events are most of a real
+    // stream); every arrival still refreshes the horizon deadline, so a
+    // user with zero step events emits its all-null row at timeout —
+    // matching the batch operator, which reports every entity it saw.
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.userId, _.ts / 1000L, List.empty[FunnelEvent])(
+        (buf, rows) => buf ++ rows.filter(e => e.step >= 0 && e.step < numSteps)) {
+      (userId, buf) =>
+        val times = Array.fill(numSteps)(Option.empty[Long])
+        // The exact batch fold: rows in (ts, tie) order; step 0 completes
+        // at its first row; step i at the first step-i row strictly after
+        // the row that completed step i-1 (guaranteed here because
+        // times(i-1) was set while scanning an earlier row — each event
+        // carries exactly one step).
+        buf.sortBy(e => (e.ts, e.tie)).foreach { e =>
+          if (e.step == 0 && times(0).isEmpty) times(0) = Some(e.ts)
+          else if (e.step > 0 && times(e.step).isEmpty && times(e.step - 1).isDefined)
+            times(e.step) = Some(e.ts)
+        }
+        Iterator.single(FunnelOut(userId, times.toSeq, times.takeWhile(_.isDefined).size))
+    }
   }
 
   /** Input row for [[cusumExact]]: `ts` µs, `tie` breaks equal
@@ -314,11 +373,6 @@ object EventStreams {
     * once at the source so stream and batch share identical integers).
     */
   final case class CusumEvent(key: Long, ts: Long, tie: Long, v: Long)
-
-  /** Buffered per-key observations awaiting the watermark; running-max
-    * deadline, same monotonicity argument as [[FunnelBuf]].
-    */
-  final case class CusumBuf(events: List[CusumEvent], deadlineMs: Long = 0L)
 
   /** One key's closed detector state — the stream twin of
     * [[graft.operators.TimeSeriesOps.cusum]]'s output row.
@@ -333,9 +387,7 @@ object EventStreams {
     * the event-time timeout, over the fully-(ts, tie)-ordered buffer —
     * bit-identical to the batch operator's answer (shared oracle). State
     * per key is the horizon's observations (production bounds
-    * `horizonSec`; the replay gate's horizon covers the finite fixture);
-    * disorder deeper than `lateSec` is dropped at the source — the
-    * documented watermark trade.
+    * `horizonSec`; the replay gate's horizon covers the finite fixture).
     */
   def cusumExact(
       events: Dataset[CusumEvent],
@@ -345,37 +397,16 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[CusumOut] = {
     import events.sparkSession.implicits._
     require(thresholdE4 > 0, s"threshold must be positive, got $thresholdE4")
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[CusumEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumBuf, CusumOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[CusumEvent], state: GroupState[CusumBuf]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.map(_.events).getOrElse(Nil)
-            state.remove()
-            var s = 0L
-            var a = 0L
-            buffered.sortBy(e => (e.ts, e.tie)).foreach { e =>
-              s = math.max(0L, s + e.v - refValueE4)
-              if (s > thresholdE4) a += 1
-            }
-            Iterator.single(CusumOut(key, buffered.size, s, a))
-          } else {
-            val arrived = rows.toSeq
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(CusumBuf(
-              state.getOption.map(_.events).getOrElse(Nil) ++ arrived, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, List.empty[CusumEvent])(_ ++ _) { (key, buf) =>
+      var s = 0L
+      var a = 0L
+      buf.sortBy(e => (e.ts, e.tie)).foreach { e =>
+        s = math.max(0L, s + e.v - refValueE4)
+        if (s > thresholdE4) a += 1
       }
+      Iterator.single(CusumOut(key, buf.size, s, a))
+    }
   }
 
   /** Input row for [[budgetAdmitExact]]: `ts` µs, `tie` breaks equal
@@ -384,11 +415,6 @@ object EventStreams {
     * monotone-cumsum prefix rule the operator relies on).
     */
   final case class BudgetEvent(key: String, ts: Long, tie: Long, v: Long)
-
-  /** Buffered per-key observations awaiting the watermark; running-max
-    * deadline, same monotonicity argument as [[FunnelBuf]].
-    */
-  final case class BudgetBuf(events: List[BudgetEvent], deadlineMs: Long = 0L)
 
   /** One key's closed admission summary. */
   final case class BudgetOut(key: String, n: Int, nAdmit: Long, tokAdmit: Long)
@@ -405,8 +431,7 @@ object EventStreams {
     * buffer — bit-identical to the batch window cumsum (shared oracle).
     * With non-negative `v` the cumsum is monotone, so "cum ≤ budget" IS
     * the prefix rule (negative counts are rejected at fold time). State
-    * per key is the horizon's observations; disorder deeper than
-    * `lateSec` drops at the source — the documented watermark trade.
+    * per key is the horizon's observations.
     */
   def budgetAdmitExact(
       events: Dataset[BudgetEvent],
@@ -415,49 +440,19 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[BudgetOut] = {
     import events.sparkSession.implicits._
     require(budget >= 0, s"budget must be >= 0, got $budget")
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[BudgetEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[BudgetBuf, BudgetOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[BudgetEvent], state: GroupState[BudgetBuf]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.map(_.events).getOrElse(Nil)
-            state.remove()
-            var cum = 0L
-            var nAdmit = 0L
-            var tokAdmit = 0L
-            buffered.sortBy(e => (e.ts, e.tie)).foreach { e =>
-              require(e.v >= 0,
-                s"budgetAdmitExact: negative token count ${e.v} (key $key)")
-              cum += e.v
-              if (cum <= budget) { nAdmit += 1; tokAdmit += e.v }
-            }
-            Iterator.single(BudgetOut(key, buffered.size, nAdmit, tokAdmit))
-          } else {
-            val arrived = rows.toSeq
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(BudgetBuf(
-              state.getOption.map(_.events).getOrElse(Nil) ++ arrived, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, List.empty[BudgetEvent])(_ ++ _) { (key, buf) =>
+      var cum = 0L
+      var nAdmit = 0L
+      var tokAdmit = 0L
+      buf.sortBy(e => (e.ts, e.tie)).foreach { e =>
+        require(e.v >= 0, s"budgetAdmitExact: negative token count ${e.v} (key $key)")
+        cum += e.v
+        if (cum <= budget) { nAdmit += 1; tokAdmit += e.v }
       }
+      Iterator.single(BudgetOut(key, buf.size, nAdmit, tokAdmit))
+    }
   }
-
-  /** Per-key windowed-count state for [[fanoExact]] — O(#observed
-    * windows), NOT O(#events): counts are commutative increments, so the
-    * state is horizon/windowSec entries per key no matter the event rate
-    * (the mergeable class, like [[kmvDistinctExact]], unlike the
-    * buffer-until-watermark folds).
-    */
-  final case class FanoState(wins: Map[Long, Long], deadlineMs: Long = 0L)
 
   /** One key's closed burstiness summary — the stream twin of
     * [[graft.operators.TimeSeriesOps.fanoFactor]]'s (n, S, fano) columns.
@@ -469,10 +464,10 @@ object EventStreams {
     * ratio of per-window event counts, closed at the event-time timeout.
     * Unlike [[cusumExact]]/[[acfExact]] the statistic is a function of
     * the window-count MULTISET (order-free, increment-commutative), so
-    * the state is the count map itself — O(horizon/windowSec) entries
-    * per key, independent of event volume and arrival order. The closing
-    * integers are the batch operator's (n·Σc² − S², n·S) computed in
-    * BigInt, and fano takes the digit-string → correctly-rounded-parse
+    * the state is the window→count map itself — O(horizon/windowSec)
+    * entries per key, independent of event volume and arrival order. The
+    * closing integers are the batch operator's (n·Σc² − S², n·S) computed
+    * in BigInt, and fano takes the digit-string → correctly-rounded-parse
     * route, landing bit-identically on the batch division.
     */
   def fanoExact(
@@ -482,41 +477,17 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[FanoOut] = {
     import events.sparkSession.implicits._
     require(windowSec > 0, s"windowSec must be positive, got $windowSec")
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[BudgetEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[FanoState, FanoOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[BudgetEvent], state: GroupState[FanoState]) =>
-          if (state.hasTimedOut) {
-            val wins = state.getOption.map(_.wins).getOrElse(Map.empty)
-            state.remove()
-            val n = BigInt(wins.size)
-            val s = wins.valuesIterator.map(BigInt(_)).sum
-            val cc = wins.valuesIterator.map(c => BigInt(c) * c).sum
-            val num = n * cc - s * s
-            val den = n * s
-            def dbl(x: BigInt): Double =
-              java.lang.Double.parseDouble(x.toString)
-            val fano = if (den == 0) None else Some(dbl(num) / dbl(den))
-            Iterator.single(FanoOut(key, wins.size, s.toLong, fano))
-          } else {
-            val prev = state.getOption.map(_.wins).getOrElse(Map.empty)
-            var wins = prev
-            var maxMs = state.getOption.map(_.deadlineMs).getOrElse(0L)
-            rows.foreach { e =>
-              val w = Math.floorDiv(e.ts, windowSec * 1000000L)
-              wins = wins.updated(w, wins.getOrElse(w, 0L) + 1L)
-              maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-            }
-            state.update(FanoState(wins, maxMs))
-            state.setTimeoutTimestamp(math.max(
-              maxMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[Long, Long])(
+        counting(e => Some(Math.floorDiv(e.ts, windowSec * 1000000L)))) { (key, wins) =>
+      val n = BigInt(wins.size)
+      val s = wins.valuesIterator.map(BigInt(_)).sum
+      val cc = wins.valuesIterator.map(c => BigInt(c) * c).sum
+      val num = n * cc - s * s
+      val den = n * s
+      val fano = if (den == 0) None else Some(dbl(num) / dbl(den))
+      Iterator.single(FanoOut(key, wins.size, s.toLong, fano))
+    }
   }
 
   /** One key's closed ACF summary — the stream twin of
@@ -544,56 +515,27 @@ object EventStreams {
       horizonSec: Long,
       lateSec: Long = 0L): Dataset[AcfOut] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[BudgetEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[BudgetBuf, AcfOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[BudgetEvent], state: GroupState[BudgetBuf]) =>
-          if (state.hasTimedOut) {
-            val buffered = state.getOption.map(_.events).getOrElse(Nil)
-            state.remove()
-            val v = buffered.sortBy(e => (e.ts, e.tie)).map(e => BigInt(e.v)).toArray
-            val n = BigInt(v.length)
-            val s = v.sum
-            val u = v.map(x => n * x - s)
-            val den = u.iterator.map(x => x * x).sum
-            def dbl(x: BigInt): Double = java.lang.Double.parseDouble(x.toString)
-            def r(lag: Int): Option[Double] =
-              if (den == 0 || v.length <= lag) None
-              else {
-                val c = (0 until v.length - lag).iterator
-                  .map(i => u(i) * u(i + lag)).sum
-                Some(dbl(c) / dbl(den))
-              }
-            Iterator.single(AcfOut(key, v.length, r(1), r(2), r(3)))
-          } else {
-            val arrived = rows.toSeq
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(BudgetBuf(
-              state.getOption.map(_.events).getOrElse(Nil) ++ arrived, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, List.empty[BudgetEvent])(_ ++ _) { (key, buf) =>
+      val v = buf.sortBy(e => (e.ts, e.tie)).map(e => BigInt(e.v)).toArray
+      val n = BigInt(v.length)
+      val s = v.sum
+      val u = v.map(x => n * x - s)
+      val den = u.iterator.map(x => x * x).sum
+      def r(lag: Int): Option[Double] =
+        if (den == 0 || v.length <= lag) None
+        else {
+          val c = (0 until v.length - lag).iterator.map(i => u(i) * u(i + lag)).sum
+          Some(dbl(c) / dbl(den))
+        }
+      Iterator.single(AcfOut(key, v.length, r(1), r(2), r(3)))
+    }
   }
 
   /** Input row for [[classBalanceExact]]: group key, µs event time, class
     * label.
     */
   final case class ClassEvent(key: String, ts: Long, cls: String)
-
-  /** Per-key class→count state for [[classBalanceExact]] — O(#classes)
-    * entries per key (the mergeable count-map class, like [[FanoState]]):
-    * increments commute, so volume and arrival order never grow it.
-    */
-  final case class ClassBalanceState(classes: Map[String, Long], deadlineMs: Long = 0L)
 
   /** One key's closed class-balance summary — the stream twin of
     * [[graft.operators.CorpusOps.classBalance]]'s (n, n_classes, simpson,
@@ -607,52 +549,29 @@ object EventStreams {
     * n²/Σcᵢ² over the class counts observed in the horizon, closed at the
     * event-time timeout. The statistic is a function of the class-count
     * MULTISET (order-free, increment-commutative), so like [[fanoExact]]
-    * the state is the count map itself — the measured-cheap mergeable
-    * class (BASELINE r15: ~2.7×/decade vs ~3.9× for buffer-until-
-    * watermark). The closing integers are the batch operator's, computed
-    * in BigInt, and both doubles take the digit-string →
-    * correctly-rounded-parse route, landing bit-identically on the batch
-    * divisions (shared-oracle gateable).
+    * the state is the class→count map itself, O(#classes) per key — the
+    * measured-cheap mergeable class (~2.7× cost per decade of input vs
+    * ~3.9× for buffer-until-watermark). The closing integers are the
+    * batch operator's, computed in BigInt, and both doubles take the
+    * digit-string → correctly-rounded-parse route, landing bit-identically
+    * on the batch divisions (shared-oracle gateable).
     */
   def classBalanceExact(
       events: Dataset[ClassEvent],
       horizonSec: Long,
       lateSec: Long = 0L): Dataset[ClassBalanceOut] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[ClassEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ClassBalanceState, ClassBalanceOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[ClassEvent], state: GroupState[ClassBalanceState]) =>
-          if (state.hasTimedOut) {
-            val classes = state.getOption.map(_.classes).getOrElse(Map.empty)
-            state.remove()
-            if (classes.isEmpty) Iterator.empty
-            else {
-              val n = classes.valuesIterator.map(BigInt(_)).sum
-              val sq = classes.valuesIterator.map(c => BigInt(c) * c).sum
-              def dbl(x: BigInt): Double =
-                java.lang.Double.parseDouble(x.toString)
-              Iterator.single(ClassBalanceOut(key, n.toLong, classes.size,
-                dbl(sq) / dbl(n * n), dbl(n * n) / dbl(sq)))
-            }
-          } else {
-            val prev = state.getOption
-            var classes = prev.map(_.classes).getOrElse(Map.empty[String, Long])
-            var maxMs = prev.map(_.deadlineMs).getOrElse(0L)
-            rows.foreach { e =>
-              classes = classes.updated(e.cls, classes.getOrElse(e.cls, 0L) + 1L)
-              maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-            }
-            state.update(ClassBalanceState(classes, maxMs))
-            state.setTimeoutTimestamp(math.max(
-              maxMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[String, Long])(counting(e => Some(e.cls))) {
+      (key, classes) =>
+        if (classes.isEmpty) Iterator.empty
+        else {
+          val n = classes.valuesIterator.map(BigInt(_)).sum
+          val sq = classes.valuesIterator.map(c => BigInt(c) * c).sum
+          Iterator.single(ClassBalanceOut(key, n.toLong, classes.size,
+            dbl(sq) / dbl(n * n), dbl(n * n) / dbl(sq)))
+        }
+    }
   }
 
   /** Input row for [[vocabGiniExact]]: group key, µs event time, document
@@ -660,12 +579,6 @@ object EventStreams {
     * sentinel protocol).
     */
   final case class DocEvent(key: String, ts: Long, text: Option[String])
-
-  /** Per-key token→count state for [[vocabGiniExact]] — bounded by the
-    * key's VOCABULARY, not its token volume (same mergeable count-map
-    * class as [[ClassBalanceState]]).
-    */
-  final case class VocabGiniState(toks: Map[String, Long], deadlineMs: Long = 0L)
 
   /** One key's closed vocabulary-concentration summary — the stream twin
     * of [[graft.operators.CorpusOps.vocabGini]]'s (m_tokens, total_tokens,
@@ -679,68 +592,41 @@ object EventStreams {
     * over the token counts observed in the horizon, closed at the
     * event-time timeout. The rank identity Σᵢ(2i − m − 1)cᵢ is a function
     * of the count MULTISET (tie order provably cancels — the batch
-    * scaladoc's argument), so the state is the token count map: the
-    * mergeable class again, with the close fold paying one
-    * vocabulary-sized sort per key AT EMISSION only. Tokenization mirrors
-    * [[graft.operators.TextOps.tokens]] (`split(text, " ")`, trailing
-    * empties kept) so the counts are the batch operator's; gini takes the
-    * digit-string → correctly-rounded-parse route onto the batch division.
+    * scaladoc's argument), so the state is the token count map, bounded by
+    * the key's VOCABULARY, not its token volume: the mergeable class
+    * again, with the close fold paying one vocabulary-sized sort per key
+    * AT EMISSION only. Tokenization mirrors the batch operator's, so the
+    * counts are its counts; gini takes the digit-string →
+    * correctly-rounded-parse route onto the batch division.
     */
   def vocabGiniExact(
       docs: Dataset[DocEvent],
       horizonSec: Long,
       lateSec: Long = 0L): Dataset[VocabGiniOut] = {
     import docs.sparkSession.implicits._
-    docs
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[DocEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[VocabGiniState, VocabGiniOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[DocEvent], state: GroupState[VocabGiniState]) =>
-          if (state.hasTimedOut) {
-            val toks = state.getOption.map(_.toks).getOrElse(Map.empty)
-            state.remove()
-            if (toks.isEmpty) Iterator.empty
-            else {
-              // Rank ascending by (count, token) — the batch window's order;
-              // within a tied count block the weights sum identically
-              // whatever the order, so the tie-break is display-stable only.
-              val ranked = toks.toArray.sortBy { case (t, c) => (c, t) }
-              val m = BigInt(ranked.length)
-              var num = BigInt(0)
-              var total = BigInt(0)
-              var i = 0
-              while (i < ranked.length) {
-                val c = BigInt(ranked(i)._2)
-                num += (BigInt(2) * (i + 1) - m - 1) * c
-                total += c
-                i += 1
-              }
-              def dbl(x: BigInt): Double =
-                java.lang.Double.parseDouble(x.toString)
-              Iterator.single(VocabGiniOut(key, ranked.length.toLong,
-                total.toLong, dbl(num) / dbl(m * total)))
-            }
-          } else {
-            val prev = state.getOption
-            var toks = prev.map(_.toks).getOrElse(Map.empty[String, Long])
-            var maxMs = prev.map(_.deadlineMs).getOrElse(0L)
-            rows.foreach { e =>
-              e.text.foreach { t =>
-                t.split(" ", -1).foreach { tok =>
-                  toks = toks.updated(tok, toks.getOrElse(tok, 0L) + 1L)
-                }
-              }
-              maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-            }
-            state.update(VocabGiniState(toks, maxMs))
-            state.setTimeoutTimestamp(math.max(
-              maxMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
+    closeAtHorizon(microsWatermark(docs, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[String, Long])(counting(e => tokens(e.text))) {
+      (key, toks) =>
+        if (toks.isEmpty) Iterator.empty
+        else {
+          // Rank ascending by (count, token) — the batch window's order;
+          // within a tied count block the weights sum identically
+          // whatever the order, so the tie-break is display-stable only.
+          val ranked = toks.toArray.sortBy { case (t, c) => (c, t) }
+          val m = BigInt(ranked.length)
+          var num = BigInt(0)
+          var total = BigInt(0)
+          var i = 0
+          while (i < ranked.length) {
+            val c = BigInt(ranked(i)._2)
+            num += (BigInt(2) * (i + 1) - m - 1) * c
+            total += c
+            i += 1
           }
-      }
+          Iterator.single(VocabGiniOut(key, ranked.length.toLong,
+            total.toLong, dbl(num) / dbl(m * total)))
+        }
+    }
   }
 
   /** One key's closed lexical-diversity summary — the stream twin of
@@ -751,60 +637,35 @@ object EventStreams {
       ttr: Double, hapaxRate: Double, disRate: Double)
 
   /** Streaming vocabulary richness (TTR + hapax/dis-legomena fractions)
-    * — the same [[VocabGiniState]] token count map as [[vocabGiniExact]]
-    * (the mergeable class; one state shape serves both statistics), with
-    * a counting close instead of the rank fold: all three ratios are
-    * IEEE divisions of exact longs, landing bit-identically on the batch
-    * operator's (shared-oracle gateable).
+    * — the same token count map as [[vocabGiniExact]] (the mergeable
+    * class; one state shape serves both statistics), with a counting
+    * close instead of the rank fold: all three ratios are IEEE divisions
+    * of exact longs, landing bit-identically on the batch operator's
+    * (shared-oracle gateable).
     */
   def vocabRichnessExact(
       docs: Dataset[DocEvent],
       horizonSec: Long,
       lateSec: Long = 0L): Dataset[VocabRichnessOut] = {
     import docs.sparkSession.implicits._
-    docs
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[DocEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[VocabGiniState, VocabRichnessOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[DocEvent], state: GroupState[VocabGiniState]) =>
-          if (state.hasTimedOut) {
-            val toks = state.getOption.map(_.toks).getOrElse(Map.empty)
-            state.remove()
-            if (toks.isEmpty) Iterator.empty
-            else {
-              val m = toks.size.toLong
-              var total = 0L
-              var hapax = 0L
-              var dis = 0L
-              toks.valuesIterator.foreach { c =>
-                total += c
-                if (c == 1L) hapax += 1L else if (c == 2L) dis += 1L
-              }
-              Iterator.single(VocabRichnessOut(key, total, m, hapax, dis,
-                m.toDouble / total.toDouble, hapax.toDouble / m.toDouble,
-                dis.toDouble / m.toDouble))
-            }
-          } else {
-            val prev = state.getOption
-            var toks = prev.map(_.toks).getOrElse(Map.empty[String, Long])
-            var maxMs = prev.map(_.deadlineMs).getOrElse(0L)
-            rows.foreach { e =>
-              e.text.foreach { t =>
-                t.split(" ", -1).foreach { tok =>
-                  toks = toks.updated(tok, toks.getOrElse(tok, 0L) + 1L)
-                }
-              }
-              maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-            }
-            state.update(VocabGiniState(toks, maxMs))
-            state.setTimeoutTimestamp(math.max(
-              maxMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
+    closeAtHorizon(microsWatermark(docs, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[String, Long])(counting(e => tokens(e.text))) {
+      (key, toks) =>
+        if (toks.isEmpty) Iterator.empty
+        else {
+          val m = toks.size.toLong
+          var total = 0L
+          var hapax = 0L
+          var dis = 0L
+          toks.valuesIterator.foreach { c =>
+            total += c
+            if (c == 1L) hapax += 1L else if (c == 2L) dis += 1L
           }
-      }
+          Iterator.single(VocabRichnessOut(key, total, m, hapax, dis,
+            m.toDouble / total.toDouble, hapax.toDouble / m.toDouble,
+            dis.toDouble / m.toDouble))
+        }
+    }
   }
 
   /** Input row for [[tokenShiftExact]]: group key, µs event time, corpus
@@ -812,13 +673,6 @@ object EventStreams {
     */
   final case class DocSideEvent(key: String, ts: Long, side: String,
       text: Option[String])
-
-  /** Per-key two-sided token count state for [[tokenShiftExact]] — the
-    * mergeable count-map class ([[VocabGiniState]]) twice over: bounded by
-    * the key's VOCABULARY per corpus side, never token volume.
-    */
-  final case class TokenShiftState(a: Map[String, Long], b: Map[String, Long],
-      deadlineMs: Long = 0L)
 
   /** One ranked token mover — the stream twin of
     * [[graft.operators.CorpusOps.tokenShift]]'s output row (shiftNum is
@@ -830,19 +684,19 @@ object EventStreams {
   /** Streaming TOP-K TOKEN MOVERS between two corpus versions arriving on
     * one stream — [[graft.operators.CorpusOps.tokenShift]]'s exact
     * |c_a·N_b − c_b·N_a| ranking per key, closed at the event-time
-    * timeout. Two corpus versions = two keyed count maps in ONE state
-    * value (the r16 precedent that one mergeable state shape serves many
-    * statistics); the close fold pays one vocabulary-sized sort per key
-    * AT EMISSION only. Tokenization mirrors [[graft.operators.TextOps
-    * .tokens]]; the numerators are BigInt cross-products and `shift`
-    * takes the digit-string → correctly-rounded-parse route onto the
-    * batch division, so emissions land bit-identically on the batch
-    * oracle. Keys that closed with either side EMPTY emit nothing (no
-    * movers between a corpus and nothing — the batch operator's N·N > 0
-    * domain). Tie-order caveat as [[graft.operators.LangId
-    * .classifyEmissions]]: the close fold's token tie-break is Java
-    * String order (≡ the batch UTF8String byte order on ASCII tokens,
-    * the fixture's domain).
+    * timeout. Two corpus versions = two token count maps in ONE state
+    * value (one mergeable state shape serves many statistics), each
+    * bounded by the key's vocabulary on that side, never token volume;
+    * the close fold pays one vocabulary-sized sort per key AT EMISSION
+    * only. Tokenization mirrors [[graft.operators.TextOps.tokens]]; the
+    * numerators are BigInt cross-products and `shift` takes the
+    * digit-string → correctly-rounded-parse route onto the batch
+    * division, so emissions land bit-identically on the batch oracle.
+    * Keys that closed with either side EMPTY emit nothing (no movers
+    * between a corpus and nothing — the batch operator's N·N > 0 domain).
+    * Tie-order caveat as [[graft.operators.LangId.classifyEmissions]]: the
+    * close fold's token tie-break is Java String order (≡ the batch
+    * UTF8String byte order on ASCII tokens, the fixture's domain).
     */
   def tokenShiftExact(
       docs: Dataset[DocSideEvent],
@@ -851,75 +705,41 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[TokenShiftOut] = {
     require(k >= 1, s"k must be >= 1, got $k")
     import docs.sparkSession.implicits._
-    docs
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[DocSideEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TokenShiftState, TokenShiftOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[DocSideEvent], state: GroupState[TokenShiftState]) =>
-          if (state.hasTimedOut) {
-            val st = state.getOption
-            state.remove()
-            val a = st.map(_.a).getOrElse(Map.empty[String, Long])
-            val b = st.map(_.b).getOrElse(Map.empty[String, Long])
-            if (a.isEmpty || b.isEmpty) Iterator.empty
-            else {
-              val na = BigInt(a.valuesIterator.sum)
-              val nb = BigInt(b.valuesIterator.sum)
-              def dbl(x: BigInt): Double =
-                java.lang.Double.parseDouble(x.toString)
-              val den = dbl(na * nb)
-              (a.keySet ++ b.keySet).iterator.map { tok =>
-                val ca = a.getOrElse(tok, 0L)
-                val cb = b.getOrElse(tok, 0L)
-                (tok, ca, cb, (BigInt(ca) * nb - BigInt(cb) * na).abs)
-              }.toArray
-                .sortWith { (x, y) =>
-                  x._4 > y._4 || (x._4 == y._4 && x._1 < y._1)
-                }
-                .take(k).iterator.zipWithIndex.map {
-                  case ((tok, ca, cb, num), i) =>
-                    TokenShiftOut(key, i + 1, tok, ca, cb, num.toString,
-                      dbl(num) / den)
-                }
-            }
-          } else {
-            val prev = state.getOption
-            var a = prev.map(_.a).getOrElse(Map.empty[String, Long])
-            var b = prev.map(_.b).getOrElse(Map.empty[String, Long])
-            var maxMs = prev.map(_.deadlineMs).getOrElse(0L)
-            rows.foreach { e =>
-              e.text.foreach { t =>
-                t.split(" ", -1).foreach { tok =>
-                  if (e.side == "a") a = a.updated(tok, a.getOrElse(tok, 0L) + 1L)
-                  else b = b.updated(tok, b.getOrElse(tok, 0L) + 1L)
-                }
-              }
-              maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-            }
-            state.update(TokenShiftState(a, b, maxMs))
-            state.setTimeoutTimestamp(math.max(
-              maxMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
+    val none = Map.empty[String, Long]
+    closeAtHorizon(microsWatermark(docs, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, (none, none))(
+        (ab, rows) => rows.foldLeft(ab) { case ((a, b), e) =>
+          if (e.side == "a") (tokens(e.text).foldLeft(a)(bump), b)
+          else (a, tokens(e.text).foldLeft(b)(bump))
+        }) { case (key, (a, b)) =>
+      if (a.isEmpty || b.isEmpty) Iterator.empty
+      else {
+        val na = BigInt(a.valuesIterator.sum)
+        val nb = BigInt(b.valuesIterator.sum)
+        val den = dbl(na * nb)
+        (a.keySet ++ b.keySet).iterator.map { tok =>
+          val ca = a.getOrElse(tok, 0L)
+          val cb = b.getOrElse(tok, 0L)
+          (tok, ca, cb, (BigInt(ca) * nb - BigInt(cb) * na).abs)
+        }.toArray
+          .sortWith((x, y) => x._4 > y._4 || (x._4 == y._4 && x._1 < y._1))
+          .take(k).iterator.zipWithIndex.map { case ((tok, ca, cb, num), i) =>
+            TokenShiftOut(key, i + 1, tok, ca, cb, num.toString, dbl(num) / den)
           }
       }
+    }
   }
 
   /** Input row for the value-level statistics twins
-    * ([[trimmedMeanExact]], [[countingMedianExact]]): group key, µs event
-    * time, PRE-QUANTIZED integer value (the batch operators' ⌊v·10^s+0.5⌋
-    * chain applied upstream).
+    * ([[trimmedMeanExact]], [[countingMedianExact]], [[valueCountsExact]]):
+    * group key, µs event time, PRE-QUANTIZED integer value (the batch
+    * operators' ⌊v·10^s+0.5⌋ chain applied upstream). All three keep the
+    * per-key value→count map — O(#distinct quantized values), the
+    * mergeable count-map class once more: each statistic is a function of
+    * the value MULTISET, so neither volume nor arrival order grows the
+    * state.
     */
   final case class ValueEvent(key: String, ts: Long, v: Long)
-
-  /** Per-key value→count state — O(#distinct quantized values), the
-    * mergeable count-map class once more: both rank statistics below are
-    * functions of the value MULTISET, so increments commute and neither
-    * volume nor arrival order grows the state.
-    */
-  final case class ValueCountsState(vals: Map[Long, Long], deadlineMs: Long = 0L)
 
   /** One key's closed trimmed mean — the stream twin of
     * [[graft.operators.StatOps.trimmedMean]]'s (n, n_kept, trimmed_mean)
@@ -933,22 +753,6 @@ object EventStreams {
     * in original units.
     */
   final case class MedianOut(key: String, n: Long, med: Double)
-
-  private def valueCountsFold(
-      rows: Iterator[ValueEvent],
-      state: GroupState[ValueCountsState],
-      horizonSec: Long): Unit = {
-    val prev = state.getOption
-    var vals = prev.map(_.vals).getOrElse(Map.empty[Long, Long])
-    var maxMs = prev.map(_.deadlineMs).getOrElse(0L)
-    rows.foreach { e =>
-      vals = vals.updated(e.v, vals.getOrElse(e.v, 0L) + 1L)
-      maxMs = math.max(maxMs, e.ts / 1000L + horizonSec * 1000L + 1)
-    }
-    state.update(ValueCountsState(vals, maxMs))
-    state.setTimeoutTimestamp(math.max(
-      maxMs, state.getCurrentWatermarkMs() + 1))
-  }
 
   /** Streaming EXACT trimmed mean — [[graft.operators.StatOps
     * .trimmedMean]]'s level-range rank-interval arithmetic run once at
@@ -970,50 +774,37 @@ object EventStreams {
     require(trimNum >= 0 && trimDen > 0 && 2 * trimNum < trimDen,
       s"need 0 <= trimNum/trimDen < 1/2, got $trimNum/$trimDen")
     val unit = math.pow(10.0, unitScale)
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[ValueEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ValueCountsState, TrimmedMeanOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[ValueEvent], state: GroupState[ValueCountsState]) =>
-          if (state.hasTimedOut) {
-            val vals = state.getOption.map(_.vals).getOrElse(Map.empty)
-            state.remove()
-            if (vals.isEmpty) Iterator.empty
-            else {
-              val levels = vals.toArray.sortBy(_._1)
-              val n = levels.iterator.map(_._2).sum
-              val lo = n * trimNum / trimDen
-              val hi = n - lo
-              var cum = 0L
-              var nKept = 0L
-              var trimSum = BigInt(0)
-              levels.foreach { case (v, m) =>
-                val keep = math.max(0L, math.min(cum + m, hi) - math.max(cum, lo))
-                nKept += keep
-                trimSum += BigInt(keep) * v
-                cum += m
-              }
-              val mean =
-                if (nKept == 0L) None
-                else Some(java.lang.Double.parseDouble(trimSum.toString) /
-                  (nKept.toDouble * unit))
-              Iterator.single(TrimmedMeanOut(key, n, nKept, mean))
-            }
-          } else {
-            valueCountsFold(rows, state, horizonSec)
-            Iterator.empty
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[Long, Long])(counting(e => Some(e.v))) {
+      (key, vals) =>
+        if (vals.isEmpty) Iterator.empty
+        else {
+          val levels = vals.toArray.sortBy(_._1)
+          val n = levels.iterator.map(_._2).sum
+          val lo = n * trimNum / trimDen
+          val hi = n - lo
+          var cum = 0L
+          var nKept = 0L
+          var trimSum = BigInt(0)
+          levels.foreach { case (v, m) =>
+            val keep = math.max(0L, math.min(cum + m, hi) - math.max(cum, lo))
+            nKept += keep
+            trimSum += BigInt(keep) * v
+            cum += m
           }
-      }
+          val mean =
+            if (nKept == 0L) None
+            else Some(dbl(trimSum) / (nKept.toDouble * unit))
+          Iterator.single(TrimmedMeanOut(key, n, nKept, mean))
+        }
+    }
   }
 
-  /** Streaming EXACT lower median — the third statistic off the
-    * [[ValueCountsState]] map: walk the sorted levels to rank ⌈n/2⌉.
-    * The med double is one IEEE division of the exact integer level by
-    * the unit — identical to the batch decimal→double conversion (both
-    * correctly round the same rational).
+  /** Streaming EXACT lower median — the second statistic off the value
+    * count map: walk the sorted levels to rank ⌈n/2⌉. The med double is
+    * one IEEE division of the exact integer level by the unit — identical
+    * to the batch decimal→double conversion (both correctly round the
+    * same rational).
     */
   def countingMedianExact(
       events: Dataset[ValueEvent],
@@ -1022,38 +813,26 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[MedianOut] = {
     import events.sparkSession.implicits._
     val unit = math.pow(10.0, unitScale)
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[ValueEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ValueCountsState, MedianOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[ValueEvent], state: GroupState[ValueCountsState]) =>
-          if (state.hasTimedOut) {
-            val vals = state.getOption.map(_.vals).getOrElse(Map.empty)
-            state.remove()
-            if (vals.isEmpty) Iterator.empty
-            else {
-              val levels = vals.toArray.sortBy(_._1)
-              val n = levels.iterator.map(_._2).sum
-              val k = (n + 1) / 2
-              var cum = 0L
-              var med = levels.last._1
-              val it = levels.iterator
-              var found = false
-              while (it.hasNext && !found) {
-                val (v, m) = it.next()
-                cum += m
-                if (cum >= k) { med = v; found = true }
-              }
-              Iterator.single(MedianOut(key, n, med.toDouble / unit))
-            }
-          } else {
-            valueCountsFold(rows, state, horizonSec)
-            Iterator.empty
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[Long, Long])(counting(e => Some(e.v))) {
+      (key, vals) =>
+        if (vals.isEmpty) Iterator.empty
+        else {
+          val levels = vals.toArray.sortBy(_._1)
+          val n = levels.iterator.map(_._2).sum
+          val k = (n + 1) / 2
+          var cum = 0L
+          var med = levels.last._1
+          val it = levels.iterator
+          var found = false
+          while (it.hasNext && !found) {
+            val (v, m) = it.next()
+            cum += m
+            if (cum >= k) { med = v; found = true }
           }
-      }
+          Iterator.single(MedianOut(key, n, med.toDouble / unit))
+        }
+    }
   }
 
   /** One closed (key, value, count) row from [[valueCountsExact]] — the
@@ -1061,18 +840,17 @@ object EventStreams {
     */
   final case class ValueCountOut(key: String, v: Long, c: Long)
 
-  /** Streaming per-key VALUE COUNTS — the mergeable count-map state
-    * ([[ValueCountsState]]) emitted RAW at the event-time timeout, one
-    * row per (key, value) with its exact count, values ascending. The
-    * building block for statistics that are per-key count maps composed
-    * with a CROSS-key normalization no keyed state can see (t-closeness'
-    * global sensitive-value distribution, any Σ-over-all-groups
-    * denominator): the stream owns the per-key accumulation (bounded by
-    * the value domain, increment-commutative, so arrival order and
-    * volume never grow state), and the consumer runs the closing
-    * cross-key formula batch-side over these emitted counts — e.g.
-    * [[graft.operators.GovernanceOps.tClosenessFromCounts]], whose batch
-    * twin is the identical formula over a batch `groupBy(...).count`,
+  /** Streaming per-key VALUE COUNTS — the value count map emitted RAW at
+    * the event-time timeout, one row per (key, value) with its exact
+    * count, values ascending. The building block for statistics that are
+    * per-key count maps composed with a CROSS-key normalization no keyed
+    * state can see (t-closeness' global sensitive-value distribution, any
+    * Σ-over-all-groups denominator): the stream owns the per-key
+    * accumulation (bounded by the value domain, increment-commutative, so
+    * arrival order and volume never grow state), and the consumer runs
+    * the closing cross-key formula batch-side over these emitted counts —
+    * e.g. [[graft.operators.GovernanceOps.tClosenessFromCounts]], whose
+    * batch twin is the identical formula over a batch `groupBy(...).count`,
     * so one oracle gates both.
     */
   def valueCountsExact(
@@ -1080,37 +858,17 @@ object EventStreams {
       horizonSec: Long,
       lateSec: Long = 0L): Dataset[ValueCountOut] = {
     import events.sparkSession.implicits._
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[ValueEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ValueCountsState, ValueCountOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[ValueEvent], state: GroupState[ValueCountsState]) =>
-          if (state.hasTimedOut) {
-            val vals = state.getOption.map(_.vals).getOrElse(Map.empty)
-            state.remove()
-            vals.toArray.sortBy(_._1).iterator
-              .map { case (v, c) => ValueCountOut(key, v, c) }
-          } else {
-            valueCountsFold(rows, state, horizonSec)
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Map.empty[Long, Long])(counting(e => Some(e.v))) {
+      (key, vals) =>
+        vals.toArray.sortBy(_._1).iterator.map { case (v, c) => ValueCountOut(key, v, c) }
+    }
   }
 
   /** Input row for [[hashSampleExact]]: group key, pre-hashed UNIQUE row
     * key, BIGINT value, µs.
     */
   final case class SampleEvent(key: String, h: Long, v: Long, ts: Long)
-
-  /** Keyed state: the bottom-k (hash, value) pairs (parallel seqs, hash
-    * ascending) plus the running-max horizon deadline (same monotonicity
-    * argument as [[FunnelBuf]]).
-    */
-  final case class SampleState(
-      hashes: Seq[Long], vals: Seq[Long], deadlineMs: Long = 0L)
 
   /** Final sample per key: the sampled values sorted ascending — read
     * quantiles positionally, exactly like the batch aggregate's output.
@@ -1123,7 +881,8 @@ object EventStreams {
     * anchors: the sample is a commutative, idempotent function of the
     * (hash, value) SET (bounded pairwise union, duplicate hashes keep the
     * minimum value), so it folds incrementally under any arrival order,
-    * state is O(k) pairs per key by construction, and any micro-batch
+    * state is O(k) pairs per key by construction (the bottom-k hashes and
+    * their values as parallel seqs, hash ascending), and any micro-batch
     * slicing of a replay lands on the identical sample.
     *
     * Determinism: inserts go through the SAME
@@ -1139,55 +898,27 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[SampleOut] = {
     import events.sparkSession.implicits._
     require(k >= 2, s"k must be >= 2, got $k")
-    def load(state: GroupState[SampleState]): graft.functions.HashSampleBuffer = {
+    def load(s: (Seq[Long], Seq[Long])): graft.functions.HashSampleBuffer = {
       val buf = new graft.functions.HashSampleBuffer(k)
-      state.getOption.foreach { s =>
-        var i = 0
-        while (i < s.hashes.length) { buf.insert(s.hashes(i), s.vals(i)); i += 1 }
-      }
+      s._1.lazyZip(s._2).foreach((h, v) => buf.insert(h, v))
       buf
     }
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[SampleEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SampleState, SampleOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[SampleEvent], state: GroupState[SampleState]) =>
-          if (state.hasTimedOut) {
-            val buf = load(state)
-            state.remove()
-            val out = java.util.Arrays.copyOf(buf.vals, buf.n)
-            java.util.Arrays.sort(out)
-            Iterator.single(SampleOut(key, buf.n, out.toSeq))
-          } else {
-            val arrived = rows.toSeq
-            val buf = load(state)
-            arrived.foreach(e => buf.insert(e.h, e.v))
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(SampleState(buf.hashes.take(buf.n).toVector,
-              buf.vals.take(buf.n).toVector, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, (Seq.empty[Long], Seq.empty[Long]))(
+        (s, rows) => {
+          val buf = load(s)
+          rows.foreach(e => buf.insert(e.h, e.v))
+          (buf.hashes.take(buf.n).toVector, buf.vals.take(buf.n).toVector)
+        }) { (key, s) =>
+      val buf = load(s)
+      val out = java.util.Arrays.copyOf(buf.vals, buf.n)
+      java.util.Arrays.sort(out)
+      Iterator.single(SampleOut(key, buf.n, out.toSeq))
+    }
   }
 
   /** Input row for [[kmvDistinctExact]]: group key, pre-hashed value, µs. */
   final case class KmvEvent(key: String, h: Long, ts: Long)
-
-  /** Keyed state: the bottom-k distinct hashes, sorted ascending, plus the
-    * running-max horizon deadline (same monotonicity argument as
-    * [[FunnelBuf]] — a batch of older in-watermark events must never shrink
-    * a previously set deadline, or the key emits early and a later arrival
-    * re-opens it as a duplicate group).
-    */
-  final case class KmvState(hashes: Seq[Long], deadlineMs: Long = 0L)
 
   /** Final sketch per key, same readout as the batch aggregate. */
   final case class KmvOut(key: String, nMin: Int, kthHash: Long, estDistinct: Double)
@@ -1197,10 +928,10 @@ object EventStreams {
     * the funnel's buffering problem: the KMV sketch is a COMMUTATIVE,
     * idempotent function of the value SET (a bounded union of minima), so
     * unlike the ordered funnel chain it folds incrementally under any
-    * arrival order and disorder costs nothing. State per key is O(k)
-    * longs, period — not bounded-by-horizon like sessionize's buffers,
-    * bounded by construction; a key's final sketch emits once the
-    * watermark passes its horizon deadline.
+    * arrival order and disorder costs nothing. State per key is the
+    * bottom-k distinct hashes, sorted ascending — O(k) longs, period: not
+    * bounded-by-horizon like the buffers, bounded by construction; a key's
+    * final sketch emits once the watermark passes its horizon deadline.
     *
     * Determinism: inserts go through the SAME [[graft.functions.KmvBuffer]]
     * the batch aggregate uses, and the readout shares
@@ -1217,35 +948,22 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[KmvOut] = {
     import events.sparkSession.implicits._
     require(k >= 2, s"k must be >= 2, got $k")
-    events
-      .withColumn("event_time", timestamp_micros(col("ts")))
-      .withWatermark("event_time", s"$lateSec seconds")
-      .as[KmvEvent]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KmvState, KmvOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KmvEvent], state: GroupState[KmvState]) =>
-          if (state.hasTimedOut) {
-            val buf = new graft.functions.KmvBuffer(k)
-            state.getOption.foreach(_.hashes.foreach(buf.insert))
-            state.remove()
-            val (kth, est) = buf.kthAndEstimate(range)
-            Iterator.single(KmvOut(key, buf.n, kth, est))
-          } else {
-            val arrived = rows.toSeq
-            val buf = new graft.functions.KmvBuffer(k)
-            state.getOption.foreach(_.hashes.foreach(buf.insert))
-            arrived.foreach(e => buf.insert(e.h))
-            val maxMs = arrived.iterator.map(_.ts).max / 1000L
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              maxMs + horizonSec * 1000L + 1)
-            state.update(KmvState(buf.mins.take(buf.n).toVector, deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    def load(mins: Seq[Long]): graft.functions.KmvBuffer = {
+      val buf = new graft.functions.KmvBuffer(k)
+      mins.foreach(buf.insert)
+      buf
+    }
+    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, Seq.empty[Long])(
+        (mins, rows) => {
+          val buf = load(mins)
+          rows.foreach(e => buf.insert(e.h))
+          buf.mins.take(buf.n).toVector
+        }) { (key, mins) =>
+      val buf = load(mins)
+      val (kth, est) = buf.kthAndEstimate(range)
+      Iterator.single(KmvOut(key, buf.n, kth, est))
+    }
   }
 
   /** One CDC change in flight (see [[cdcMaterialize]]): `op` is 'u'
@@ -1283,10 +1001,14 @@ object EventStreams {
     * watermark (observed: zero emission, wm frozen at the last data batch).
     * Callers must make carrier rows encoder-safe: non-null key/ord (any
     * value) and a NULL payload struct (`when(op.isNotNull, struct(...))`).
+    * This is why the operator keeps its own protocol instead of
+    * [[closeAtHorizon]]: there every row of a group creates state and moves
+    * the deadline, so a carrier sharing a real key's group would push that
+    * key's deadline to the sentinel's far-future time and it would never
+    * emit.
     */
-  def cdcMaterialize[P <: Product : scala.reflect.runtime.universe.TypeTag](
+  def cdcMaterialize[P <: Product : TypeTag](
       changes: Dataset[CdcEvent[P]], horizonSec: Long): Dataset[P] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
     implicit val keepEnc: Encoder[CdcKeep[P]] = Encoders.product[CdcKeep[P]]
     implicit val outEnc: Encoder[P] = Encoders.product[P]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
@@ -1329,11 +1051,6 @@ object EventStreams {
   /** One item routed to an MG shard (see [[mgCandidatesStream]]). */
   final case class MgEvent(item: String, shard: Int, epochSec: Long)
 
-  /** Per-shard Misra–Gries state: ≤ capacity (item, count) pairs plus the
-    * running-max emission deadline (parallel Seqs — flat encoder columns).
-    */
-  final case class MgShardState(items: Seq[String], counts: Seq[Long], deadlineMs: Long)
-
   /** One surviving MG candidate with its stored (under)count. */
   final case class MgCandidate(shard: Int, item: String, stored_cnt: Long)
 
@@ -1351,15 +1068,16 @@ object EventStreams {
     * `shardTotal/(capacity+1)` is at most the global bound — every global
     * heavy hitter above `total/capacity` is GUARANTEED to survive its
     * shard, after any arrival order; the union of shard candidates is the
-    * superset the exact pass needs). State is O(nShards · capacity),
-    * independent of stream length and vocabulary size.
+    * superset the exact pass needs). State is the shard's ≤ capacity
+    * (item, count) map — O(nShards · capacity), independent of stream
+    * length and vocabulary size.
     *
     * `itemsExpr` must be an ARRAY column over `source`'s rows (wrap a
     * scalar in `array(...)`); the watermark is applied on `tsCol` BEFORE
     * the explode, so rows whose array is empty/null (e.g. null-text
     * sentinels) still advance event time. Emission is timeout-driven
-    * (running-max deadline `maxEventTime + horizonSec`, the r11
-    * discipline); each shard emits once and clears.
+    * ([[closeAtHorizon]], epoch-second event time); each shard emits once
+    * and clears.
     */
   def mgCandidatesStream(
       source: DataFrame,
@@ -1380,36 +1098,19 @@ object EventStreams {
         col(tsCol).cast("long").as("epochSec"),
         col(tsCol)) // untouched attribute keeps the watermark defined
       .as[MgEvent]
-    items
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState[MgShardState, MgCandidate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (shard: Int, rows: Iterator[MgEvent], state: GroupState[MgShardState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.toVector.flatMap { s =>
-              s.items.zip(s.counts).map { case (i, c) => MgCandidate(shard, i, c) }
-            }.sortBy(_.item)
-            state.remove()
-            out.iterator
-          } else {
-            // Restore: ≤ capacity resident entries re-add as plain inserts
-            // (every stored count is positive), so the buffer round-trips
-            // exactly through MgBuffer.add.
-            val buf = new graft.functions.MgBuffer(capacity)
-            state.getOption.foreach(s =>
-              s.items.zip(s.counts).foreach { case (i, c) => buf.add(i, c) })
-            val arrived = rows.toVector
-            arrived.foreach(e => buf.add(e.item, 1L))
-            val deadlineMs = math.max(
-              state.getOption.map(_.deadlineMs).getOrElse(0L),
-              arrived.iterator.map(_.epochSec).max * 1000L + horizonSec * 1000L + 1)
-            val entries = buf.counts.toVector
-            state.update(MgShardState(entries.map(_._1), entries.map(_._2), deadlineMs))
-            state.setTimeoutTimestamp(math.max(
-              deadlineMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.empty
-          }
-      }
+    closeAtHorizon(items, horizonSec)(
+        _.shard, _.epochSec * 1000L, Map.empty[String, Long])(
+        (counts, rows) => {
+          // Restore: ≤ capacity resident entries re-add as plain inserts
+          // (every stored count is positive), so the buffer round-trips
+          // exactly through MgBuffer.add.
+          val buf = new graft.functions.MgBuffer(capacity)
+          counts.foreach { case (i, c) => buf.add(i, c) }
+          rows.foreach(e => buf.add(e.item, 1L))
+          buf.counts.toMap
+        }) { (shard, counts) =>
+      counts.toVector.sortBy(_._1).iterator.map { case (i, c) => MgCandidate(shard, i, c) }
+    }
   }
 
   /** One banded document in flight to a bucket (see [[simhashNearDup]]). */
@@ -1426,8 +1127,7 @@ object EventStreams {
   final case class NearDupPair(doc_i: Long, doc_j: Long, hamming: Long)
 
   /** Streaming banded-SimHash near-dup detection — the streaming twin of
-    * [[graft.operators.SimHash.nearDupPairs]], the one pipeline family
-    * whose stream twin was missing (r12 VERDICT item 7).
+    * [[graft.operators.SimHash.nearDupPairs]].
     *
     * Signatures come from the SAME compiled per-row fold as the batch
     * operator ([[graft.operators.SimHash.bandedSignaturesWith]] — one code
@@ -1450,7 +1150,7 @@ object EventStreams {
     * eviction is WATERMARK-driven — an entry leaves when the watermark
     * (not merely a newer arrival) passes `ts + horizonSec`, so a late
     * partner within the watermark delay still finds it. Timeout deadlines
-    * are a running max (never regress, r11 discipline). A re-delivered
+    * are a running max (never regress). A re-delivered
     * docId is ignored (at-least-once input → exactly-once state), matching
     * `q_stream_dedup`'s posture.
     *
@@ -1471,7 +1171,7 @@ object EventStreams {
     // watermark attribute) so no part of it is pushed below the
     // EventTimeWatermark node — null-text sentinel rows flow through the
     // watermark exec before being dropped and can drive eviction on their
-    // own (r13 ADVICE; pinned by the sentinel-eviction spec case).
+    // own (pinned by the sentinel-eviction spec case).
     val banded = graft.operators.SimHash.bandedSignaturesWith(
       docs.withWatermark(tsCol, watermarkDelay),
       idCol, textCol, bits, bandBits, maxHamming, carry = Seq(tsCol),
@@ -1519,7 +1219,7 @@ object EventStreams {
       // and the signature-0 bucket would pair them quadratically). Every
       // conjunct is anchored to tsCol so none is split off and pushed below
       // the EventTimeWatermark node: degenerate sentinel rows must pass
-      // through the watermark exec before being dropped (r13 ADVICE; see
+      // through the watermark exec before being dropped (see
       // simhashNearDup / SimHash.textSignaturesWith).
       .filter((col("sig").isNotNull || col(tsCol).isNull) &&
         (col("nn") > 0 || col(tsCol).isNull) && col(tsCol).isNotNull)
@@ -1541,7 +1241,9 @@ object EventStreams {
     * arrivals verify by exact Hamming against their bucket only and emit
     * inline; watermark-driven eviction before pairing, running-max
     * deadlines, duplicate-docId delivery ignored (see [[simhashNearDup]]'s
-    * scaladoc for the full contract).
+    * scaladoc for the full contract). Not a [[closeAtHorizon]] operator: it
+    * emits pairs inline on arrival and evicts each held entry on its own
+    * deadline instead of closing the whole key at once.
     */
   def nearDupBandedStream(
       banded: Dataset[BandedDoc], maxHamming: Int, horizonSec: Long): Dataset[NearDupPair] = {

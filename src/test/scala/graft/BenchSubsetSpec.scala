@@ -75,4 +75,12 @@ class BenchSubsetSpec extends AnyFunSuite {
     assert(node.get("failed_head").size() <= Bench.HeadSample)
     assert(node.get("not_run_head").size() <= Bench.HeadSample)
   }
+
+  test("sentinel draws: at most six per pass, spread across short and long passes") {
+    assert(Bench.sentinelOffsets(206) === Seq(0, 35, 70, 105, 140, 175))
+    assert(Bench.sentinelOffsets(206).length === Bench.SentinelsPerPass)
+    assert(Bench.sentinelOffsets(36) === Seq(0, 6, 12, 18, 24, 30))
+    assert(Bench.sentinelOffsets(18) === Seq(0, 3, 6, 9, 12, 15))
+    assert(Bench.sentinelOffsets(1) === Seq(0))
+  }
 }

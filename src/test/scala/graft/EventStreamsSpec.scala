@@ -1,10 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{array, col}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
-import graft.streaming.EventStreams.{SessionEvent, SessionOut}
+import graft.streaming.EventStreams.{FunnelEvent, KmvEvent, SessionEvent, SessionOut, ValueEvent}
 
 class EventStreamsSpec extends AnyFunSuite with SparkSpec {
 
@@ -155,40 +159,98 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("funnel horizon deadline is monotone: an older in-watermark batch never re-arms an early emit") {
-    // funnelExact twin of the KMV monotonicity regression below: a late
-    // (in-watermark) batch must not pull the horizon deadline in — under
-    // the shrunk deadline the user folds early WITHOUT the late-arriving
-    // early step, then a further in-watermark step row opens a second
-    // group and emits a duplicate userId row.
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    import graft.streaming.EventStreams.FunnelEvent
-    val input = MemoryStream[FunnelEvent]
-    val q = EventStreams.funnelExact(input.toDS(), numSteps = 3,
-      horizonSec = 100L, lateSec = 1000L)
-      .writeStream.format("memory").queryName("funnel_monotone").outputMode("append").start()
+  /** One horizon-close operator in the deadline-shrink scenario of
+    * [[monotoneDeadline]]: `arrival(i, sec)` is the tracked key's i-th row
+    * (i = 1, 2, 3) at event second `sec`, `advance(sec)` a row that only
+    * advances the watermark, `tracked` selects the tracked key's closed
+    * rows, and `closedAll` checks that its one close folded all three
+    * arrivals.
+    */
+  private final class Monotone[E](val name: String,
+      val arrival: (Int, Long) => E, val advance: Long => E,
+      val op: Dataset[E] => DataFrame, val tracked: Column,
+      val closedAll: Row => Boolean)(implicit val enc: Encoder[E])
+
+  /** Regression for the deadline-shrink bug: a timeout set from the
+    * CURRENT batch's max event time alone lets a later micro-batch of
+    * older (still-in-watermark) events PULL IN the deadline — the key then
+    * closes early, and a further in-watermark arrival re-opens a second
+    * group, emitting a duplicate row for the key. The running-max deadline
+    * carried in the [[EventStreams.Horizon]] state forbids both. Watermark
+    * delay 1000 s, horizon 100 s.
+    */
+  private def monotoneDeadline[E](c: Monotone[E]): Unit = {
+    implicit val enc: Encoder[E] = c.enc
+    implicit val sq: SQLContext = spark.sqlContext
+    val sink = "monotone_" + c.name.filter(_.isLetter).toLowerCase
+    val input = MemoryStream[E]
+    val q = c.op(input.toDS())
+      .writeStream.format("memory").queryName(sink).outputMode("append").start()
+    def feed(row: E): Unit = { input.addData(row); q.processAllAvailable() }
     try {
-      def us(sec: Long) = sec * 1000000L
-      // step 2 (the LAST step) arrives first, at 2000 s
-      input.addData(FunnelEvent(1L, us(2000), 0L, 2)); q.processAllAvailable()
-      // watermark = 1000 s; deadline = 2100 s. Steps 0 and 1 arrive LATE
-      // but in-watermark (1200 s) — the deadline must not shrink to 1300 s
-      input.addData(
-        FunnelEvent(1L, us(1200), 0L, 0),
-        FunnelEvent(1L, us(1201), 0L, 1)); q.processAllAvailable()
-      // watermark → 1500 s: past the shrunk deadline, before the true one
-      input.addData(FunnelEvent(9L, us(2500), 0L, 0)); q.processAllAvailable()
-      assert(spark.table("funnel_monotone").filter($"userId" === 1L).isEmpty,
-        "user must NOT fold before the watermark passes the true deadline")
-      // watermark past 2100 s; the next data batch fires the timeout
-      input.addData(FunnelEvent(8L, us(3200), 0L, 0)); q.processAllAvailable()
-      input.addData(FunnelEvent(7L, us(3400), 0L, 0)); q.processAllAvailable()
-      val out = spark.table("funnel_monotone").filter($"userId" === 1L).collect()
-      assert(out.length == 1, s"user must emit exactly once, got ${out.length}")
-      assert(out(0).getInt(2) == 3,
-        "the single fold must see the late early steps: full 0->1->2 completion")
+      // watermark = 1000 s; deadline = 2100 s. An OLDER arrival (1200 s,
+      // in-watermark) must not shrink it to 1300 s.
+      feed(c.arrival(1, 2000))
+      feed(c.arrival(2, 1200))
+      // watermark → 1500 s: past the SHRUNK deadline, before the true one
+      feed(c.advance(2500))
+      assert(spark.table(sink).filter(c.tracked).isEmpty,
+        s"${c.name}: key must NOT close before the watermark passes its true deadline")
+      // another in-watermark arrival folds into the SAME open group
+      feed(c.arrival(3, 1600))
+      // watermark past the true deadline (2100 s); the next batch fires the timeout
+      feed(c.advance(3200))
+      feed(c.advance(3400))
+      val out = spark.table(sink).filter(c.tracked).collect()
+      assert(out.length == 1, s"${c.name}: key must close exactly once, got ${out.toSeq}")
+      assert(c.closedAll(out(0)),
+        s"${c.name}: the one close must fold all three arrivals, got ${out(0)}")
     } finally q.stop()
+  }
+
+  private def us(sec: Long) = sec * 1000000L
+
+  // One table across the three state kinds: an event buffer (funnel), a
+  // sketch (KMV), a count map (value counts), and MG candidates, whose
+  // event time is epoch seconds and whose watermark-advancing rows are
+  // NULL-item rows that never reach a shard.
+  Seq[Monotone[_]](
+    new Monotone[FunnelEvent]("funnel",
+      // the LAST step arrives first; steps 0 and 1 arrive late, in-watermark
+      (i, sec) => FunnelEvent(1L, us(sec), 0L, Map(1 -> 2, 2 -> 0, 3 -> 1)(i)),
+      sec => FunnelEvent(9L, us(sec), 0L, 0),
+      ds => EventStreams.funnelExact(ds, numSteps = 3, horizonSec = 100L,
+        lateSec = 1000L).toDF(),
+      col("userId") === 1L,
+      _.getInt(2) == 3)(Encoders.product[FunnelEvent]),
+    new Monotone[KmvEvent]("KMV",
+      (i, sec) => KmvEvent("a", 10L * i, us(sec)),
+      sec => KmvEvent("wm", 1L, us(sec)),
+      ds => EventStreams.kmvDistinctExact(ds, k = 64,
+        range = graft.operators.TextOps.Prime, horizonSec = 100L,
+        lateSec = 1000L).toDF(),
+      col("key") === "a",
+      _.getInt(1) == 3)(Encoders.product[KmvEvent]),
+    new Monotone[ValueEvent]("valueCounts",
+      (_, sec) => ValueEvent("a", us(sec), 7L),
+      sec => ValueEvent("wm", us(sec), 0L),
+      ds => EventStreams.valueCountsExact(ds, horizonSec = 100L,
+        lateSec = 1000L).toDF(),
+      col("key") === "a",
+      _.getLong(2) == 3L)(Encoders.product[ValueEvent]),
+    new Monotone[(Timestamp, String)]("MG candidates",
+      (_, sec) => (new Timestamp(sec * 1000L), "x"),
+      sec => (new Timestamp(sec * 1000L), null),
+      ds => EventStreams.mgCandidatesStream(ds.toDF("tsm", "item"),
+        array(col("item")), "tsm", capacity = 4, nShards = 1,
+        horizonSec = 100L, watermarkDelay = "1000 seconds").toDF(),
+      col("item") === "x",
+      _.getLong(2) == 3L)(Encoders.tuple(Encoders.TIMESTAMP, Encoders.STRING))
+  ).foreach { c =>
+    test(s"${c.name} horizon deadline is monotone: an older in-watermark batch " +
+      "never re-arms an early emit") {
+      monotoneDeadline(c)
+    }
   }
 
   test("streaming KMV sketch: slicing/disorder invariant, O(k) state under a hot key") {
@@ -236,43 +298,6 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val shuffled = run(rng.shuffle(evts).grouped(7777).toSeq, "kmv_shuffled", lateSec = 5L)
     assert(ordered == ((ref.n, refKth, refEst)), "stream sketch must equal the batch readout")
     assert(shuffled == ordered, "sketch must be independent of slicing and order")
-  }
-
-  test("KMV horizon deadline is monotone: an older in-watermark batch never re-arms an early emit") {
-    // Regression for the deadline-shrink bug: setting the timeout from the
-    // CURRENT batch's max event time alone lets a later micro-batch of
-    // older (still-in-watermark) events PULL IN a previously set deadline —
-    // the key then emits early, and a subsequent in-watermark arrival
-    // re-opens a second group, emitting a duplicate key row. The running-
-    // max deadline carried in KmvState forbids both.
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    import graft.streaming.EventStreams.KmvEvent
-    val input = MemoryStream[KmvEvent]
-    val q = EventStreams.kmvDistinctExact(input.toDS(), k = 64,
-      range = graft.operators.TextOps.Prime, horizonSec = 100L,
-      lateSec = 1000L)
-      .writeStream.format("memory").queryName("kmv_monotone").outputMode("append").start()
-    try {
-      def s(sec: Long) = sec * 1000000L // µs
-      input.addData(KmvEvent("a", 10L, s(2000))); q.processAllAvailable()
-      // watermark = 1000 s; deadline = 2100 s. An OLDER event (1200 s,
-      // in-watermark) must not shrink it to 1300 s:
-      input.addData(KmvEvent("a", 20L, s(1200))); q.processAllAvailable()
-      // advance the watermark to 1500 s — past the SHRUNK deadline, before
-      // the true one; the buggy code emits "a" here
-      input.addData(KmvEvent("wm", 1L, s(2500))); q.processAllAvailable()
-      assert(spark.table("kmv_monotone").filter($"key" === "a").isEmpty,
-        "key must NOT emit before the watermark passes its true deadline")
-      // another in-watermark arrival folds into the SAME open group
-      input.addData(KmvEvent("a", 30L, s(1600))); q.processAllAvailable()
-      // advance past the true deadline (2100 s) and fire the timeout batch
-      input.addData(KmvEvent("wm2", 1L, s(3200))); q.processAllAvailable()
-      input.addData(KmvEvent("wm3", 1L, s(3400))); q.processAllAvailable()
-      val out = spark.table("kmv_monotone").filter($"key" === "a").collect()
-      assert(out.length == 1, s"key must emit exactly once, got ${out.length}")
-      assert(out(0).getInt(1) == 3, "the sketch must hold all three in-watermark hashes")
-    } finally q.stop()
   }
 
   test("streaming hash sample: slicing/disorder invariant, equals the batch buffer readout") {
@@ -1215,5 +1240,25 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
         .map { case ((k, v), es) => (k, v, es.size.toLong) }.toSet
       assert(got == want, s"missing=${want -- got} extra=${got -- want}")
     } finally q.stop()
+  }
+
+  test("convention guard: only closeAtHorizon and the three documented exceptions " +
+    "run the keyed-state protocol in EventStreams") {
+    val file = Paths.get("src/main/scala/graft/streaming/EventStreams.scala")
+    assert(Files.isRegularFile(file), s"run from the repository root: $file")
+    val allowed = Set("closeAtHorizon", "sessionize", "cdcMaterialize", "nearDupBandedStream")
+    val member = """^  (?:private )?def (\w+)""".r
+    val call = "flatMapGroupsWithState|setTimeoutTimestamp".r
+    var owner = ""
+    val hits = Files.readAllLines(file).asScala.zipWithIndex.flatMap { case (line, i) =>
+      member.findFirstMatchIn(line).foreach(m => owner = m.group(1))
+      val code = line.trim
+      val comment = code.startsWith("*") || code.startsWith("/*") || code.startsWith("//")
+      if (!comment && call.findFirstIn(code).isDefined) Some((owner, s"$file:${i + 1}: $code"))
+      else None
+    }
+    val offenders = hits.collect { case (o, at) if !allowed(o) => s"$at (in $o)" }
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    assert(hits.map(_._1).toSet === allowed, "every allowed member runs the protocol")
   }
 }
