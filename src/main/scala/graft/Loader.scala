@@ -24,8 +24,10 @@ object Loader {
   /** One load job. `targetTable` is `schema.table` (reference
     * `--target_pg_table`, `/root/reference/main.py:22-26`); a bare name gets
     * schema `public`. `batchSize` is the maximum number of rows per sink
-    * transaction: a partition that has rejected rows commits smaller ones
-    * (see [[graft.sink.PostgresUpsertSink]]).
+    * transaction: a partition that has rejected rows commits smaller ones,
+    * sized so that about one transaction in four holds a bad row, and a row
+    * with text longer than its column's `varchar(n)`/`char(n)` limit goes
+    * in a transaction of its own (see [[graft.sink.PostgresUpsertSink]]).
     */
   final case class LoadConfig(
       source: String,
@@ -57,20 +59,33 @@ object Loader {
   /** Conform a source frame to the catalog's view of the target table —
     * the metadata + logical-rewrite phases
     * (`/root/reference/load_postgres_from_spark_df.py:84-91,127-163`) without
-    * the sink, exposed for callers that want the cast plan only.
+    * the sink, exposed for callers that want the cast plan only. Each column
+    * whose target type limits its length (`varchar(n)`, `char(n)`) carries
+    * that limit as metadata, which [[graft.sink.PostgresUpsertSink]] reads.
     */
   def conformToTable(df: DataFrame, catalog: PgCatalog, cfg: LoadConfig): DataFrame =
-    // DataFrame column order drives the INSERT column list, as in the
-    // reference's `psycopg2_database_helper.py:316-319`.
-    SchemaConform.conform(df, targetTypes(catalog, cfg))
+    conform(df, target(catalog, cfg))
 
-  /** The target table's columns as Spark types, from one catalog lookup. */
-  private def targetTypes(catalog: PgCatalog, cfg: LoadConfig): Map[String, DataType] = {
+  /** The target table's columns as Spark types, and the character limits of
+    * those that have one, from one catalog lookup.
+    */
+  private final case class Target(types: Map[String, DataType], maxChars: Map[String, Int])
+
+  private def target(catalog: PgCatalog, cfg: LoadConfig): Target = {
     val colTypes = catalog.columnTypes(cfg.schema, cfg.table)
     require(colTypes.nonEmpty,
       s"Target table ${cfg.schema}.${cfg.table} has no columns in the catalog")
-    colTypes.map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg, cfg.typeOverrides) }.toMap
+    Target(
+      colTypes.map { case (n, pg) => n -> PgTypeMapping.toSparkType(pg, cfg.typeOverrides) }.toMap,
+      colTypes.flatMap { case (n, pg) => PgTypeMapping.maxChars(pg).map(n -> _) }.toMap)
   }
+
+  /** The conform step of both load paths. DataFrame column order drives the
+    * INSERT column list, as in the reference's
+    * `psycopg2_database_helper.py:316-319`.
+    */
+  private def conform(df: DataFrame, t: Target): DataFrame =
+    SchemaConform.conform(df, t.types, t.maxChars)
 
   /** The sink call with `cfg`'s batching, routing and reject settings. */
   private def upsert(df: DataFrame, key: Option[Seq[String]],
@@ -103,12 +118,12 @@ object Loader {
       checkpointDir: String,
       onBatch: (Long, LoadStats) => Unit = (id, s) => println(s"[graft] batch $id: ${s.report}"))
       : StreamingQuery = {
-    val target = targetTypes(catalog, cfg)
+    val t = target(catalog, cfg)
     val key = catalog.uniqueKey(cfg.schema, cfg.table)
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(batchId, upsert(SchemaConform.conform(batch.toDF(), target), key, factory, cfg))
+        onBatch(batchId, upsert(conform(batch.toDF(), t), key, factory, cfg))
       }
       .start()
   }

@@ -2,7 +2,8 @@ package graft.schema
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, MetadataBuilder}
+import graft.sink.PostgresUpsertSink
 
 /** Conform a source DataFrame to an external (Postgres-style) target schema.
   *
@@ -29,8 +30,13 @@ object SchemaConform {
 
   /** Project onto the target's columns and cast. `target` maps lower-case
     * column name → Spark type (derived via [[graft.types.PgTypeMapping]]).
+    * `maxChars` maps a column to the most characters its target column
+    * holds; the limit rides on the conformed column's metadata under
+    * [[graft.sink.PostgresUpsertSink.MaxCharsKey]], where the sink reads it.
+    * It changes no value.
     */
-  def conform(df: DataFrame, target: Map[String, DataType]): DataFrame = {
+  def conform(df: DataFrame, target: Map[String, DataType],
+      maxChars: Map[String, Int] = Map.empty): DataFrame = {
     val lowered = lowercaseColumns(df)
     val kept = lowered.columns.filter(target.contains)
     require(
@@ -38,6 +44,11 @@ object SchemaConform {
       s"None of the DataFrame columns [${lowered.columns.mkString(", ")}] " +
         s"exist in the target table [${target.keys.mkString(", ")}]"
     )
-    lowered.select(kept.map(c => col(c).cast(target(c)).alias(c)).toIndexedSeq: _*)
+    lowered.select(kept.map { c =>
+      val cast = col(c).cast(target(c))
+      maxChars.get(c).fold(cast.alias(c)) { n =>
+        cast.as(c, new MetadataBuilder().putLong(PostgresUpsertSink.MaxCharsKey, n).build())
+      }
+    }.toIndexedSeq: _*)
   }
 }

@@ -14,6 +14,7 @@ import org.apache.spark.sql.types._
 object PgTypeMapping {
 
   private val NumericTypmod = """(?:numeric|decimal)\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)""".r
+  private val CharTypmod = """(?:character varying|varchar|character|char|bpchar)\s*\(\s*(\d+)\s*\)""".r
 
   /** Parse one Postgres type name (as produced by `atttypid::regtype` or
     * `format_type(atttypid, atttypmod)`) into a Spark type.
@@ -32,6 +33,16 @@ object PgTypeMapping {
       case Some(ddl) => parseSparkName(ddl).fold(err => throw new IllegalArgumentException(err), identity)
       case None      => builtin(t)
     }
+  }
+
+  /** The most characters a column of `pgType` holds: `n` for
+    * `character varying(n)`, `varchar(n)`, `character(n)`, `char(n)` and
+    * `bpchar(n)`; `None` for every other type, bare `varchar` and `text`
+    * among them.
+    */
+  def maxChars(pgType: String): Option[Int] = pgType.trim.toLowerCase match {
+    case CharTypmod(n) => Some(n.toInt)
+    case _             => None
   }
 
   /** Spark DDL type name (`int`, `decimal(12,2)`, …) → `DataType`, as a

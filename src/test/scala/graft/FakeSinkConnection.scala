@@ -35,9 +35,12 @@ class FakeSinkConnection(id: String, failOn: Seq[Any] => Boolean) extends SinkCo
     * batch or transaction).
     */
   val log = mutable.ArrayBuffer.empty[String]
+  /** The rows of every `executeBatch` call, in order. */
+  val sent = mutable.ArrayBuffer.empty[Seq[Seq[Any]]]
 
   def executeBatch(sql: String, batch: Seq[Seq[Any]]): Unit = {
     batchCalls += 1
+    sent += batch
     // Harsh mode: rows before the failing one DO land in the transaction,
     // like a real driver mid-batch failure — only rollback-to-savepoint can
     // undo them. Catches implementations that skip the rollback.

@@ -53,6 +53,27 @@ class LoaderSpec extends AnyFunSuite with SparkSpec {
     assert(df.schema("n_nationkey").dataType.typeName == "long")
   }
 
+  test("conformToTable: varchar(n)/char(n) limits ride on their columns as metadata; rows unchanged") {
+    val limited = StaticCatalog(
+      ListMap("n_nationkey" -> "bigint", "n_name" -> "character varying(25)",
+        "n_regionkey" -> "character(2)"),
+      Some(Seq("n_nationkey")))
+    val unlimited = StaticCatalog(
+      ListMap("n_nationkey" -> "bigint", "n_name" -> "text", "n_regionkey" -> "text"),
+      Some(Seq("n_nationkey")))
+    val source = spark.read.parquet(s"$sf0001/nation.parquet")
+    val df = Loader.conformToTable(source, limited, cfg)
+    val key = graft.sink.PostgresUpsertSink.MaxCharsKey
+    val limits = df.schema.fields.collect {
+      case f if f.metadata.contains(key) => f.name -> f.metadata.getLong(key)
+    }.toMap
+    assert(limits == Map("n_name" -> 25L, "n_regionkey" -> 2L))
+    val plain = Loader.conformToTable(source, unlimited, cfg)
+    assert(plain.schema.fields.forall(!_.metadata.contains(key)))
+    assert(df.schema.map(f => f.name -> f.dataType) == plain.schema.map(f => f.name -> f.dataType))
+    assert(df.collect().toSeq == plain.collect().toSeq)
+  }
+
   test("insert-only mode when the catalog reports no unique key") {
     val noKey = StaticCatalog(ListMap("n_nationkey" -> "bigint", "n_name" -> "text"), None)
     val factory = new FakeConnectionFactory("loader_nokey", Set.empty)
@@ -90,6 +111,33 @@ class LoaderSpec extends AnyFunSuite with SparkSpec {
       assert(landed.size == 3 && landed.forall(_.size == 2), s"got $landed")
       assert(landed.map(_.head.asInstanceOf[Long]).sorted == Seq(1L, 2L, 3L))
       assert(batches.map(_._2).sum == 3)
+    } finally q.stop()
+  }
+
+  test("streamToPostgres: varchar(n) limits reach the sink; text columns have none") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val catalog = StaticCatalog(
+      ListMap("k" -> "bigint", "v" -> "character varying(2)", "t" -> "text"), Some(Seq("k")))
+    val factory = new FakeConnectionFactory("loader_stream_limits", Set(2L))
+    val input = MemoryStream[(Long, String, String)]
+    val stats = scala.collection.mutable.ArrayBuffer.empty[graft.sink.LoadStats]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_limits_ckpt").toString
+    val q = Loader.streamToPostgres(
+      input.toDF.toDF("k", "v", "t"),
+      cfg.copy(targetTable = "public.kvt", parallelism = 1),
+      catalog, factory, ckpt,
+      onBatch = (_, s) => stats.synchronized { stats += s })
+    try {
+      input.addData((1L, "a", "x" * 50), (2L, "abc", "y"), (3L, "b", "z"))
+      q.processAllAvailable()
+      val total = stats.reduce(_ + _)
+      // Row 2's v is past varchar(2): sent alone and refused; row 1's long
+      // text column is not predicted.
+      assert(total.sentAlone == 1 && total.rejected == 1 && total.loaded == 2)
+      val landed = FakeSinkState.committed("loader_stream_limits")
+      assert(landed.map(_.head.asInstanceOf[Long]).sorted == Seq(1L, 3L))
     } finally q.stop()
   }
 

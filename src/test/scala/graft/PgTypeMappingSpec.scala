@@ -60,6 +60,20 @@ class PgTypeMappingSpec extends AnyFunSuite {
     assert(toSparkType("bigint", ov) == LongType)
   }
 
+  test("maxChars: the length of varchar(n) and char(n) forms, None otherwise") {
+    import PgTypeMapping.maxChars
+    assert(maxChars("character varying(255)") == Some(255))
+    assert(maxChars("varchar(12)") == Some(12))
+    assert(maxChars("character(3)") == Some(3))
+    assert(maxChars("char(1)") == Some(1))
+    assert(maxChars("bpchar(7)") == Some(7))
+    assert(maxChars(" VARCHAR (12) ") == Some(12))
+    assert(maxChars("text") == None)
+    assert(maxChars("varchar") == None)
+    assert(maxChars("character varying") == None)
+    assert(maxChars("numeric(12,2)") == None)
+  }
+
   test("parseSparkName: valid DDL names succeed, junk is a Left") {
     assert(PgTypeMapping.parseSparkName("decimal").toOption.get == DecimalType(10, 0))
     assert(PgTypeMapping.parseSparkName("int").toOption.get == IntegerType)

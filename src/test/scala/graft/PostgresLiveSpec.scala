@@ -255,18 +255,29 @@ class PostgresLiveSpec extends AnyFunSuite with BeforeAndAfterAll {
         case 1 => s"$i,a name far too long,1"
         case _ => s"$i,n$i,-1"
       }
+    // Row 2001's name is 15 characters, 3 past varchar(12). The catalog is
+    // read before the column widens to varchar(15), as a stream's catalog
+    // read at start goes stale, so the sink predicts a reject, sends the row
+    // alone, and the server lands it.
+    val wide = "n2001-abcdefghi"
     val csvDir = Files.createTempDirectory("graft-bulk")
     Files.writeString(csvDir.resolve("part1.csv"),
-      ("id,name,qty" +: (1 to 2000).map(line)).mkString("", "\n", "\n"))
+      ("id,name,qty" +: (1 to 2000).map(line) :+ s"2001,$wide,1").mkString("", "\n", "\n"))
     val cfg = Loader.LoadConfig(source = "csv", path = csvDir.toString,
       targetTable = "public.live_bulk",
       sourceOptions = Map("header" -> "true"), batchSize = 1000, parallelism = 2)
-    val stats = Loader.loadPostgres(SparkSpec.session, cfg, new PsqlCatalog(psql),
+    val read = new PsqlCatalog(psql)
+    val stale = graft.meta.StaticCatalog(
+      read.columnTypes("public", "live_bulk"), read.uniqueKey("public", "live_bulk"))
+    psql("ALTER TABLE live_bulk ALTER COLUMN name TYPE varchar(15)")
+    val stats = Loader.loadPostgres(SparkSpec.session, cfg, stale,
       PsqlConnectionFactory(sockDir))
-    assert(stats.rejected === poison.size && stats.loaded === 2000 - poison.size)
+    assert(stats.rejected === poison.size && stats.loaded === 2001 - poison.size)
     assert(stats.rollbacks >= stats.rejected && stats.statements > stats.transactions)
+    // The five 19-character names and row 2001 go alone; one of the six lands.
+    assert(stats.sentAlone === 6)
     assert(psql("SELECT id, name, qty FROM live_bulk ORDER BY id") ===
-      (1 to 2000).filterNot(poison).map(i => s"$i|n$i|${i % 97}"))
+      (1 to 2000).filterNot(poison).map(i => s"$i|n$i|${i % 97}") :+ s"2001|$wide|1")
     s"rm -rf $csvDir".!
   }
 

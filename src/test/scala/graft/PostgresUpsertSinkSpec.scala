@@ -97,14 +97,62 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     assert(conn.batchCalls <= 13, s"batchCalls=${conn.batchCalls}")
   }
 
-  /** Runs `writePartition` on one fake connection, outside Spark. */
-  private def writeOne(keys: Seq[Long], bad: Set[Long], batchSize: Int) = {
-    val conn = new FakeSinkConnection("", r => bad(r.head.asInstanceOf[Long]))
+  /** Character limit of column `v` in [[writeOne]]'s feed. */
+  private val VChars = 8
+
+  /** Runs `writePartition` on one fake connection, outside Spark. Rows are
+    * `(k, v)`; the keys in `long` get a `v` past its `VChars` limit, which the
+    * fake refuses like `bad` unless `acceptLong`.
+    */
+  private def writeOne(keys: Seq[Long], bad: Set[Long], batchSize: Int,
+      long: Set[Long] = Set.empty, acceptLong: Boolean = false) = {
+    val refused = if (acceptLong) bad else bad ++ long
+    val conn = new FakeSinkConnection("", r => refused(r.head.asInstanceOf[Long]))
     val factory = new graft.sink.ConnectionFactory { def connect() = conn }
     val stats = PostgresUpsertSink.writePartition(
-      keys.iterator.map(k => org.apache.spark.sql.Row(k, s"v$k")), "sql", factory,
-      batchSize = batchSize, maxRejects = None)
+      keys.iterator.map(k => org.apache.spark.sql.Row(k, if (long(k)) s"v$k-far-too-long" else s"v$k")),
+      "sql", factory, batchSize = batchSize, maxRejects = None, maxChars = Array(0, VChars))
     (stats, conn)
+  }
+
+  /** Keys of each transaction's first statement, in commit order. */
+  private def firstStatementKeys(conn: FakeSinkConnection): Seq[Seq[Long]] =
+    transactionsOf(conn).map(_._1.head.map(_.head.asInstanceOf[Long]))
+
+  /** The fake's calls regrouped by transaction: the rows of each statement
+    * and the rollbacks, for every committed transaction.
+    */
+  private def transactionsOf(conn: FakeSinkConnection): Seq[(Seq[Seq[Seq[Any]]], Int)] = {
+    val txns = scala.collection.mutable.ArrayBuffer.empty[(Seq[Seq[Seq[Any]]], Int)]
+    var stmts = Vector.empty[Seq[Seq[Any]]]
+    var rollbacks, call = 0
+    conn.log.foreach {
+      case c if c.startsWith("exec ") => stmts :+= conn.sent(call); call += 1
+      case c if c.startsWith("rollback ") => rollbacks += 1
+      case c if c.startsWith("commit ") =>
+        txns += ((stmts, rollbacks)); stmts = Vector.empty; rollbacks = 0
+      case _ => ()
+    }
+    txns.toSeq
+  }
+
+  /** The halving split's cost for one transaction whose first statement
+    * has bad rows at `bad`: (statements, rows sent, rollbacks).
+    */
+  private def halvingModel(size: Int, bad: Seq[Int]): (Long, Long, Long) = {
+    var calls, rows, rollbacks = 0L
+    var stack = List((0, size))
+    while (stack.nonEmpty) {
+      val (from, n) = stack.head
+      stack = stack.tail
+      calls += 1
+      rows += n
+      if (bad.exists(p => p >= from && p < from + n)) {
+        rollbacks += 1
+        if (n > 1) stack = (from, n / 2) :: (from + n / 2, n - n / 2) :: stack
+      }
+    }
+    (calls, rows, rollbacks)
   }
 
   /** Rows each transaction sent in its first statement, in order. */
@@ -117,13 +165,13 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("transaction size: batchSize until the first reject, then 2^⌊log₂(good/rejected)⌋") {
+  test("transaction size: batchSize until the first reject, then 2^⌊log₂(good/rejected)⌋ / 4") {
     import PostgresUpsertSink.transactionSize
     assert(transactionSize(0, 0, 1000) == 1000)
-    assert(transactionSize(99, 1, 1000) == 64)
-    assert(transactionSize(127, 1, 1000) == 64)
-    assert(transactionSize(128, 1, 1000) == 128)
-    assert(transactionSize(3, 1, 1000) == 2)
+    assert(transactionSize(99, 1, 1000) == 16)
+    assert(transactionSize(127, 1, 1000) == 16)
+    assert(transactionSize(128, 1, 1000) == 32)
+    assert(transactionSize(3, 1, 1000) == 1)
     assert(transactionSize(1, 1, 1000) == 1)
     assert(transactionSize(0, 1, 1000) == 1)
     assert(transactionSize(5, 10, 1000) == 1)
@@ -197,7 +245,7 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     assert(allBad.rejected == 10 && allBad.loaded == 0)
     // Turning bad mid-feed: the first transaction with a reject is only
     // partly rejected, so the run counts from the next transaction
-    // (sizes 8 then 2 at good/rejected = 45/5, then 45/13).
+    // (sizes 2 then 1 at good/rejected = 45/5, then 45/7).
     val turnsBad = writeOne(1L to 200L, (46L to 200L).toSet, batchSize = 10)._1
     assert(turnsBad.loaded == 45 && turnsBad.rejected == 15)
     // Alternating good/bad: transactions shrink to one row, and no run of
@@ -205,6 +253,81 @@ class PostgresUpsertSinkSpec extends AnyFunSuite with SparkSpec {
     val (alt, conn) = writeOne(1L to 400L, (1L to 400L).filter(_ % 2 == 0).toSet, batchSize = 10)
     assert(alt.loaded == 200 && alt.rejected == 200)
     assert(transactionSizes(conn.log.toSeq).drop(1).forall(_ == 1))
+  }
+
+  test("property: every transaction costs the halving model of its first statement's bad rows") {
+    // The tier-1 twin of the benchmark's split self-check: each row goes to
+    // the server as its own row, none is judged on the Spark side, and the
+    // split is the plain halving one, also for rows sent alone.
+    val rng = new scala.util.Random(3)
+    for (rate <- Seq(0.001, 0.01, 0.15); batchSize <- Seq(64, 1000); withLong <- Seq(false, true)) {
+      val keys = 1L to 4000L
+      val bad = keys.filter(_ => rng.nextDouble() < rate).toSet
+      val long = if (withLong) keys.filter(k => !bad(k) && rng.nextDouble() < 0.005).toSet else Set.empty[Long]
+      val (stats, conn) = writeOne(keys, bad, batchSize, long)
+      val refused = bad ++ long
+      val clue = s"rate=$rate batchSize=$batchSize withLong=$withLong"
+      val txns = transactionsOf(conn)
+      val firstBad = txns.map { case (stmts, _) =>
+        stmts.head.map(_.head.asInstanceOf[Long]).zipWithIndex.collect { case (k, i) if refused(k) => i }
+      }
+      txns.zip(firstBad).foreach { case ((stmts, rollbacks), pos) =>
+        assert((stmts.size.toLong, stmts.map(_.size.toLong).sum, rollbacks.toLong) ==
+          halvingModel(stmts.head.size, pos), clue)
+      }
+      val firstKeys = txns.flatMap(_._1.head.map(_.head.asInstanceOf[Long]))
+      assert(refused.subsetOf(firstKeys.toSet), s"a bad key missing from every first statement, $clue")
+      assert(firstBad.map(_.size).sum == refused.size, clue)
+      assert(stats.rejected == refused.size && stats.sentAlone == long.size, clue)
+      assert(firstKeys == keys, s"every row sent once in feed order, $clue")
+    }
+  }
+
+  test("over-length rows go alone, each right after a flush of the pending transaction, in feed order") {
+    val (stats, conn) = writeOne(1L to 50L, Set.empty, batchSize = 10, long = Set(7L, 8L, 30L))
+    assert(firstStatementKeys(conn) == Seq(
+      1L to 6L, Seq(7L), Seq(8L), 9L to 18L, 19L to 28L, Seq(29L), Seq(30L), 31L to 40L, 41L to 50L))
+    assert(stats.loaded == 47 && stats.rejected == 3 && stats.sentAlone == 3)
+    assert(stats.transactions == 9 && stats.statements == 9 && stats.rollbacks == 3)
+    assert(stats.report.contains("rollbacks: 3, sent alone: 3"), stats.report)
+  }
+
+  test("an over-length row the server accepts lands and counts as loaded") {
+    val (stats, conn) = writeOne(1L to 20L, Set.empty, batchSize = 10, long = Set(5L), acceptLong = true)
+    assert(stats.loaded == 20 && stats.rejected == 0 && stats.sentAlone == 1)
+    assert(conn.committed.map(_.head.asInstanceOf[Long]) == (1L to 20L))
+    assert(conn.committed(4) == Seq(5L, "v5-far-too-long"))
+  }
+
+  test("predicted rejects do not shrink the batched transactions") {
+    // A 1% reject rate among batched rows would cut transactions to
+    // 2^⌊log₂(99)⌋ / 4 = 16 rows; rows sent alone leave the size at
+    // batchSize, so only the flushes before them cut a transaction short.
+    val long = (100L to 3000L by 100L).toSet
+    val (stats, conn) = writeOne(1L to 3000L, Set.empty, batchSize = 64, long = long)
+    assert(stats.rejected == long.size && stats.sentAlone == long.size)
+    val segments = (0L +: long.toSeq.sorted :+ 3001L).sliding(2).map { case Seq(a, b) => (a + 1) until b }
+    val expected = segments.flatMap(_.grouped(64)).map(_.toSeq).toSeq
+    assert(firstStatementKeys(conn).filterNot(s => s.size == 1 && long(s.head)) == expected)
+  }
+
+  test("an all-over-length feed trips the breaker after batchSize rejects") {
+    val (stats, _) = writeOne(1L to 100L, Set.empty, batchSize = 10, long = (1L to 100L).toSet)
+    assert(stats.rejected == 10 && stats.loaded == 0 && stats.sentAlone == 10)
+  }
+
+  test("over-length rule: more code points than the limit, and a non-space past it") {
+    import PostgresUpsertSink.{predictedReject, tooLong}
+    assert(!tooLong("abcdefgh", 8) && tooLong("abcdefghi", 8))
+    assert(!tooLong("abcdefgh   ", 8), "excess spaces are truncated, not refused")
+    assert(tooLong("abcdefgh  x", 8) && tooLong("abcdefgh\t", 8))
+    val smile = new String(Character.toChars(0x1F600)) // two UTF-16 units, one code point
+    assert(!tooLong(smile * 8, 8) && tooLong(smile * 9, 8))
+    assert(!tooLong("", 1))
+    assert(predictedReject(Seq(1L, "abc"), Array(0, 2)))
+    assert(!predictedReject(Seq("abc", "ab"), Array(0, 2)), "only limited columns count")
+    assert(!predictedReject(Seq(1L, null), Array(0, 2)))
+    assert(!predictedReject(Seq(1L, "abc"), Array.emptyIntArray))
   }
 
   test("shuffle barrier keeps upstream task count independent of sink parallelism") {
