@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.meta.Ckpt.Syntax
+import graft.meta.IndexTables
+import scala.collection.immutable.ArraySeq
 
 /** Corpus-curation operators for training-data pipelines: repetition-based
   * quality filtering (the Gopher/RefinedWeb "most frequent n-gram covers too
@@ -351,10 +353,9 @@ object CorpusOps {
       .select(col("doc_id"), explode(TextOps.tokens(col("graft_text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
-    ScaleJoins.writeBucketed(tf, s"${name}_postings", Seq("token"), buckets)
-    // doc lengths bucketed on the score join's key (and orphan-location-safe
-    // through the same writer)
-    ScaleJoins.writeBucketed(
+    IndexTables.overwrite(tf, s"${name}_postings", Seq("token"), buckets)
+    // doc lengths bucketed on the score join's key
+    IndexTables.overwrite(
       d.select(col("doc_id"),
         TextStats.nTokens(col("graft_text")).as("dl")),
       s"${name}_doclen", Seq("doc_id"), buckets)
@@ -482,8 +483,8 @@ object CorpusOps {
     * index must not depend on future probes, so boilerplate is defined by
     * the reference side alone, which is also the cheaper probe).
     *
-    * Same lifecycle discipline as [[MinHashLsh.saveLshIndex]]: parameters
-    * live in `{name}_meta` so probes cannot drift from the build.
+    * Same lifecycle discipline as [[MinHashLsh.saveLshIndex]]: `n` is the
+    * `graft.window_n` property of `{name}_windows`, so probes cannot drift.
     */
   def saveWindowIndex(ref: DataFrame, idCol: String, textCol: String,
       name: String, n: Int, maxRefDf: Option[Int] = None,
@@ -500,13 +501,10 @@ object CorpusOps {
         w.join(under, Seq("w"))
       case None => w
     }
-    ScaleJoins.writeBucketed(kept.select(col("w"), col("ref_id")),
+    IndexTables.overwrite(kept.select(col("w"), col("ref_id")),
       s"${name}_windows", Seq("w"), buckets)
-    ScaleJoins.dropOrphanManagedDir(ref.sparkSession, s"${name}_meta")
-    val spark = ref.sparkSession
-    import spark.implicits._
-    Seq((n, buckets)).toDF("window_n", "buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    IndexTables.setProperties(ref.sparkSession, s"${name}_windows",
+      Map("window_n" -> n.toString))
   }
 
   /** Probe the window index with a batch of training documents: one
@@ -524,7 +522,7 @@ object CorpusOps {
   def windowProbeEmissions(spark: org.apache.spark.sql.SparkSession,
       probeDocs: DataFrame, idCol: String, textCol: String,
       name: String): DataFrame = {
-    val n = spark.table(s"${name}_meta").select("window_n").head().getInt(0)
+    val n = IndexTables.intProperty(spark, s"${name}_windows", "window_n")
     probeDocs.filter(length(col(textCol)) >= n)
       .select(col(idCol).as("doc_a"),
         explode(TextOps.windowHashes(col(textCol), n)).as("w"))
@@ -1305,7 +1303,7 @@ object CorpusOps {
     * batch operator does.
     */
   def dsirScore(textCol: Column, terms: Array[Long]): Column = {
-    val tbl = array(terms.map(lit(_)): _*)
+    val tbl = array(ArraySeq.unsafeWrapArray(terms.map(lit(_))): _*)
     aggregate(TextOps.tokens(textCol), lit(0L),
       (acc, tk) => acc + element_at(tbl,
         (TextOps.polyHash(tk) % terms.length).cast("int") + 1))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.meta.IndexTables
 
 /** Data-governance operators: retention sweeps and right-to-be-forgotten
   * (RTBF/GDPR-delete) over a training corpus AND the derived index tables.
@@ -16,10 +17,11 @@ import org.apache.spark.sql.functions._
   * the corpus — thousands against billions — so it broadcasts, and the
   * corpus side never shuffles: at 100 TB the sweep is one scan + rewrite,
   * embarrassingly parallel. Derived BUCKETED tables (the LSH/IVF/postings
-  * indexes) rewrite through [[ScaleJoins.rewriteBucketed]], which preserves
-  * the catalog bucket spec and the bucket-aligned zero-shuffle read — so a
-  * purge also COMPACTS (one file per bucket out) and every post-purge probe
-  * keeps its no-Exchange plan (pinned in GovernanceOpsSpec).
+  * indexes) rewrite through [[IndexTables.rewrite]], which preserves the
+  * catalog bucket spec, the index parameters stored as table properties
+  * and the bucket-aligned zero-shuffle read — so a purge also COMPACTS
+  * (one file per bucket out) and every post-purge probe keeps its
+  * no-Exchange plan (pinned in GovernanceOpsSpec).
   */
 object GovernanceOps {
 
@@ -91,15 +93,15 @@ object GovernanceOps {
   }
 
   /** Purge tombstoned keys from a BUCKETED managed table in place,
-    * preserving its bucket spec ([[ScaleJoins.rewriteBucketed]]): the read
-    * is bucket-aligned (no shuffle), the anti-join is broadcast
+    * preserving its bucket spec and properties ([[IndexTables.rewrite]]):
+    * the read is bucket-aligned (no shuffle), the anti-join is broadcast
     * (partition-local), and the writer re-emits one file per non-empty
     * bucket — purge and compaction in the same single pass. Returns
     * (dataFilesBefore, dataFilesAfter).
     */
   def purgeKeysBucketed(spark: SparkSession, table: String, keyCol: String,
       tombstones: DataFrame, tombKeyCol: String): (Int, Int) =
-    ScaleJoins.rewriteBucketed(spark, table) { df =>
+    IndexTables.rewrite(spark, table) { df =>
       // Restore the table's column ORDER after the using-column join:
       // Spark moves the join key to the front of a USING join's output,
       // and a purge must be a pure row filter — readers address bucketed

@@ -88,8 +88,8 @@ object MergeOps {
     * The only contact with the base is a LEFT SEMI join on the change keys
     * — broadcast when the batch is small (Catalyst decides), and
     * partition-pruned/shuffle-free when the base is stored bucketed on the
-    * key ([[ScaleJoins.writeBucketed]]). Nothing re-shuffles the base's
-    * full measure columns; a nightly full re-aggregation becomes a
+    * key ([[graft.meta.IndexTables.overwrite]]). Nothing re-shuffles the
+    * base's full measure columns; a nightly full re-aggregation becomes a
     * per-batch O(|delta|) touch-up.
     *
     * Measures must be non-null-valued expressions (cast/`coalesce` nulls

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.meta.IndexTables
 
 /** MinHash + banded LSH near-duplicate detection — the scale path for
   * document dedup: candidate pairs come only from shared LSH band buckets
@@ -167,13 +168,14 @@ object MinHashLsh {
   /** Build and persist a banded-LSH corpus index — the production dedup
     * pattern at 100 TB: the corpus's signatures are computed ONCE and every
     * later ingest batch probes them, instead of re-shingling petabytes per
-    * batch. Two bucketed tables ([[ScaleJoins.writeBucketed]]):
+    * batch. Two bucketed tables ([[IndexTables.overwrite]]):
     * `<name>_bands` (doc_id, band, band_key) bucketed by (band, band_key) —
     * so a probe's band join reads corpus buckets CO-LOCATED, with no
     * Exchange on the corpus side — and `<name>_sets` (doc_id, sh) bucketed
     * by doc_id for the exact-verify join, likewise corpus-shuffle-free.
-    * `<name>_meta` records (numHashes, numBands, shingleN, buckets) so
-    * append/probe can never run with mismatched parameters.
+    * `<name>_bands` carries `num_hashes`, `num_bands` and `shingle_n` as
+    * `graft.*` properties, stamped last, so append/probe can never run
+    * with mismatched parameters or against a half-written build.
     */
   def saveLshIndex(
       docs: DataFrame, idCol: String, textCol: String, name: String,
@@ -182,27 +184,25 @@ object MinHashLsh {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val sh = shingleDocs(docs, idCol, textCol, shingleN)
     val banded = bandedKeys(signatures(sh, numHashes), numBands, numHashes / numBands)
-    ScaleJoins.writeBucketed(banded, s"${name}_bands", Seq("band", "band_key"), buckets)
-    ScaleJoins.writeBucketed(sh, s"${name}_sets", Seq("doc_id"), buckets)
-    ScaleJoins.dropOrphanManagedDir(docs.sparkSession, s"${name}_meta")
-    import docs.sparkSession.implicits._
-    Seq((numHashes, numBands, shingleN, buckets))
-      .toDF("num_hashes", "num_bands", "shingle_n", "buckets")
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
+    IndexTables.overwrite(banded, s"${name}_bands", Seq("band", "band_key"), buckets)
+    IndexTables.overwrite(sh, s"${name}_sets", Seq("doc_id"), buckets)
+    IndexTables.setProperties(docs.sparkSession, s"${name}_bands", Map(
+      "num_hashes" -> numHashes.toString, "num_bands" -> numBands.toString,
+      "shingle_n" -> shingleN.toString))
   }
 
-  private def readLshMeta(
-      spark: org.apache.spark.sql.SparkSession, name: String): (Int, Int, Int, Int) = {
-    val r = spark.table(s"${name}_meta")
-      .select("num_hashes", "num_bands", "shingle_n", "buckets").head()
-    (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))
+  /** (numHashes, numBands, shingleN) of a [[saveLshIndex]]-built index. */
+  private def lshParams(
+      spark: org.apache.spark.sql.SparkSession, name: String): (Int, Int, Int) = {
+    def p(key: String) = IndexTables.intProperty(spark, s"${name}_bands", key)
+    (p("num_hashes"), p("num_bands"), p("shingle_n"))
   }
 
   /** Incremental index maintenance — the daily-ingest path: signatures for
-    * the NEW docs only (parameters come from the index's own meta table,
-    * so they cannot drift), appended to both bucketed tables under the SAME
-    * bucket spec (Spark validates the spec on append), preserving the
-    * probe-side co-location. The index state afterwards is IDENTICAL to a
+    * the NEW docs only (parameters come from the bands table's properties,
+    * so they cannot drift), appended to both bucketed tables under each
+    * table's own catalog bucket spec ([[IndexTables.append]]), preserving
+    * the probe-side co-location. The index state afterwards is IDENTICAL to a
     * full [[saveLshIndex]] over (old ∪ new) — the equality `q_lsh_probe`
     * pins against a brute-force oracle over the union. Cost is O(|new|):
     * a growing corpus never recomputes or rewrites existing signatures.
@@ -210,7 +210,7 @@ object MinHashLsh {
   def appendToLshIndex(
       spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, idCol: String, textCol: String, name: String): Unit = {
-    val (nh, nb, sn, buckets) = readLshMeta(spark, name)
+    val (nh, nb, sn) = lshParams(spark, name)
     val sh = shingleDocs(newDocs, idCol, textCol, sn)
     val banded = bandedKeys(signatures(sh, nh), nb, nh / nb)
     // The two appends are not atomic; order them so a failure BETWEEN them
@@ -219,10 +219,8 @@ object MinHashLsh {
     // sets join only ever looks up ids the bands table produced. The
     // reverse order would leave band rows whose verify lookup silently
     // drops candidates (missed duplicates) until the next repair.
-    sh.write.bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .mode("append").saveAsTable(s"${name}_sets")
-    banded.write.bucketBy(buckets, "band", "band_key").sortBy("band", "band_key")
-      .mode("append").saveAsTable(s"${name}_bands")
+    IndexTables.append(sh, s"${name}_sets")
+    IndexTables.append(banded, s"${name}_bands")
   }
 
   /** Probe the persisted index with a new batch: cross pairs
@@ -255,7 +253,7 @@ object MinHashLsh {
     * (spec-pinned).
     *
     * Lifecycle: any WRITE to the tables ([[appendToLshIndex]], a
-    * [[graft.operators.ScaleJoins.compactBucketed]] swap, an RTBF purge)
+    * [[IndexTables.compact]] swap, an RTBF purge)
     * invalidates/drops the cache entries — re-invoke after each index
     * maintenance operation. Eager (`count()` per table) so the first
     * micro-batch doesn't pay the materialization.
@@ -292,7 +290,7 @@ object MinHashLsh {
       spark: org.apache.spark.sql.SparkSession,
       probeDocs: DataFrame, idCol: String, textCol: String, name: String,
       threshNum: Int = 1, threshDen: Int = 2): DataFrame = {
-    val (nh, nb, sn, _) = readLshMeta(spark, name)
+    val (nh, nb, sn) = lshParams(spark, name)
     val rpb = nh / nb
     // CARRIED-SHINGLES plan — the stateless-streaming shape. The batch
     // form's "join candidates back to the probe's shingle sets by new_id"
@@ -340,7 +338,7 @@ object MinHashLsh {
       spark: org.apache.spark.sql.SparkSession,
       probeDocs: DataFrame, idCol: String, textCol: String, name: String,
       threshNum: Int, threshDen: Int, dedupCandidates: Boolean): DataFrame = {
-    val (nh, nb, sn, _) = readLshMeta(spark, name)
+    val (nh, nb, sn) = lshParams(spark, name)
     val pSh = shingleDocs(probeDocs, idCol, textCol, sn)
     val pBand = bandedKeys(signatures(pSh, nh), nb, nh / nb)
     val cand0 = pBand.toDF("new_id", "band", "band_key")

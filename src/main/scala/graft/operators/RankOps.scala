@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.collection.immutable.ArraySeq
 
 /** Scalable global ordering primitives: dense global row numbering without
   * a single-partition window, plus the two classic consumers — equi-depth
@@ -95,7 +96,7 @@ object RankOps {
     val right = ranked
       .withColumn("__graft_bkt",
         explode(array(bucket, bucket - 1L)))
-    val cols = df.columns
+    val cols = ArraySeq.unsafeWrapArray(df.columns)
     val li = left.select(
       (cols.map(c => col(c).as(s"${c}_i")) :+
         col("__graft_rank").as("__rank_i") :+ col("__graft_bkt")): _*)

@@ -5,71 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Join strategies for the two big-cluster failure modes Catalyst cannot
-  * always fix alone: repeated shuffles of the same fact table (→ bucketing)
-  * and hot keys that funnel a shuffle into a handful of straggler tasks
-  * (→ salting). Both are plain public Spark APIs; what this module adds is
-  * the policy and the tests proving the plan shape (no Exchange over a
-  * bucketed side; a salted join's results are identical to the plain join).
+  * always fix alone: repeated shuffles of the same fact table (→ bucketing,
+  * tables written by [[graft.meta.IndexTables]]) and hot keys that funnel a
+  * shuffle into a handful of straggler tasks (→ salting). Both are plain
+  * public Spark APIs; what this module adds is the policy and the tests
+  * proving the plan shape (no Exchange over a bucketed side; a salted
+  * join's results are identical to the plain join).
   */
 object ScaleJoins {
-
-  /** Persist `df` as a bucketed+sorted table: `n` buckets by `cols`, the
-    * layout that lets every later equi-join or aggregation on `cols` read
-    * co-located buckets with NO shuffle. At 100 TB this is the difference
-    * between re-shuffling the fact table per query and shuffling it once at
-    * ingest.
-    *
-    * Overwrite is made robust against ORPHAN locations: a previous JVM
-    * (crashed, or simply a fresh in-memory catalog over the same warehouse
-    * dir) can leave the table's directory behind with no catalog entry, and
-    * `saveAsTable` then fails with LOCATION_ALREADY_EXISTS instead of
-    * overwriting — the dir is cleared first when the catalog has no entry
-    * (when it does, overwrite handles both halves itself).
-    *
-    * The cleanup is deliberately NARROW: only an UNQUALIFIED table name on
-    * a `file:` warehouse, and only the managed-table layout (a directory of
-    * data files, no nested dirs beyond partition/bucket files) is eligible.
-    * With a shared/persistent metastore "not in this session's catalog"
-    * does not imply orphaned, a qualified `db.tbl` name computes a
-    * different path (<db>.db/<tbl>), and hdfs/s3 warehouses can't be
-    * reached through java.io — all three cases fall through to
-    * `saveAsTable`'s own handling rather than guessing at a delete.
-    */
-  def writeBucketed(df: DataFrame, table: String, cols: Seq[String], n: Int): Unit = {
-    dropOrphanManagedDir(df.sparkSession, table)
-    df.write
-      .bucketBy(n, cols.head, cols.tail: _*)
-      .sortBy(cols.head, cols.tail: _*)
-      .mode("overwrite")
-      .saveAsTable(table)
-  }
-
-  /** The orphan-location cleanup [[writeBucketed]]'s scaladoc describes,
-    * shared with every other managed-table overwrite writer (e.g. the IVF
-    * index's centroids table — r13: a stale warehouse dir from a previous
-    * JVM failed its fresh-catalog `saveAsTable` with
-    * LOCATION_ALREADY_EXISTS). Same narrow eligibility: unqualified name,
-    * `file:` warehouse, no catalog entry, plain directory directly under
-    * the warehouse root.
-    */
-  private[operators] def dropOrphanManagedDir(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val whUri = spark.conf.get("spark.sql.warehouse.dir")
-    val isLocalFs = !whUri.contains("://") || whUri.startsWith("file:")
-    if (!table.contains(".") && isLocalFs && !spark.catalog.tableExists(table)) {
-      val wh = whUri.stripPrefix("file:")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      val loc = new java.io.File(wh, table.toLowerCase(java.util.Locale.ROOT))
-      // Only the abandoned managed-table shape: a plain directory directly
-      // under the warehouse root — never a file, never a symlinked path.
-      if (loc.isDirectory && loc.getParentFile.getCanonicalPath ==
-          new java.io.File(wh).getCanonicalPath) {
-        rm(loc)
-      }
-    }
-  }
 
   /** Morton (Z-order) value of two non-negative integer columns: bit `b` of
     * `x` lands at z-bit `2b`, bit `b` of `y` at `2b+1`. Rows close in z are
@@ -147,15 +90,17 @@ object ScaleJoins {
     saltedLarge.join(replicatedSmall, keys :+ "graft_salt").drop("graft_salt")
   }
 
-  /** Co-located join of two tables previously written via [[writeBucketed]]
-    * with the same bucket spec: reads align bucket-to-bucket, no Exchange.
+  /** Co-located join of two tables written bucketed with the same bucket
+    * spec ([[graft.meta.IndexTables.overwrite]]): reads align
+    * bucket-to-bucket, no Exchange.
     */
   def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
       keys: Seq[String]): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), keys)
 
   /** Persist `df` hive-partitioned by `cols` (one directory level per
-    * column). The complementary lever to [[writeBucketed]]: bucketing
+    * column). The complementary lever to bucketing
+    * ([[graft.meta.IndexTables.overwrite]]): bucketing
     * co-locates high-cardinality JOIN keys; directory partitioning makes
     * low-cardinality FILTER columns (date, source, event type) prunable at
     * planning time — a predicate on `cols` never opens the other
@@ -231,87 +176,6 @@ object ScaleJoins {
       sized.write.mode("overwrite").parquet(out.toString)
     }
     (leaves.map(_._3).sum, walk(dst).map(_._3).sum)
-  }
-
-  /** Compaction for BUCKETED managed tables — the maintenance pass
-    * [[compactParquet]] cannot perform: each incremental append (e.g.
-    * [[graft.operators.MinHashLsh.appendToLshIndex]] /
-    * `VectorOps.appendToIvfIndex`) accretes one file-set per append into
-    * the bands/sets/inverted-list tables, and after ~100 daily appends the
-    * index hits the small-file wall — but a path-level rewrite would
-    * destroy the bucket spec that gives the probes their zero-shuffle
-    * co-location. This rewrite goes through the CATALOG: the table's own
-    * `bucketSpec` (numBuckets, bucket columns, sort columns) is read from
-    * its metadata and re-applied verbatim, so the compacted table is
-    * bit-for-bit the same logical relation under the same spec and every
-    * downstream bucketed join keeps its no-Exchange plan (pinned in
-    * MinHashLshSpec against a post-compaction probe plan).
-    *
-    * The rewrite is ZERO-SHUFFLE: with auto-bucketed-scan forced off for
-    * the read, the scan itself is bucket-aligned (one task per bucket,
-    * every file of that bucket concatenated), and the bucketed writer then
-    * emits exactly ONE file per non-empty bucket — k appends × t tasks ×
-    * b buckets collapses to ≤ numBuckets files with no Exchange anywhere.
-    * (An explicit `repartition(n, bucketCols)` does NOT work here: Catalyst
-    * elides it against the table's claimed distribution while the
-    * auto-bucketed-scan rule independently decides a plain scan is cheaper,
-    * leaving arbitrary split-aligned tasks — measured 16 → 13 files
-    * instead of 16 → 4.) Per-bucket target file size is therefore set at
-    * index build time via the bucket count, which is the bucketed-layout
-    * contract anyway.
-    *
-    * Swap discipline: the rewrite lands in a temp table first (reads of
-    * the live table are never racing its overwrite), then DROP + RENAME —
-    * the same not-atomic-but-safe ordering as the index appends: a crash
-    * between the two leaves either the intact original or the intact
-    * compacted copy under the temp name, never a half-written table.
-    * Returns (filesBefore, filesAfter).
-    */
-  def compactBucketed(spark: SparkSession, table: String): (Int, Int) =
-    rewriteBucketed(spark, table)(identity)
-
-  /** Rewrite a bucketed managed table through `transform`, preserving its
-    * catalog bucket spec — the shared core of [[compactBucketed]]
-    * (transform = identity) and
-    * [[GovernanceOps.purgeKeysBucketed]] (transform = tombstone
-    * anti-join). The transform must be row-level (filter/project): anything
-    * that moves rows BETWEEN buckets would still write correctly (the
-    * writer recomputes bucket ids) but would forfeit the zero-shuffle
-    * bucket-aligned read. Returns (dataFilesBefore, dataFilesAfter).
-    */
-  private[operators] def rewriteBucketed(spark: SparkSession, table: String)(
-      transform: DataFrame => DataFrame): (Int, Int) = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — use compactParquet for unbucketed data"))
-    val fs = new org.apache.hadoop.fs.Path(meta.location)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dataFiles(loc: java.net.URI): Int =
-      fs.listStatus(new org.apache.hadoop.fs.Path(loc)).count { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-    val before = dataFiles(meta.location)
-    val bCols = spec.bucketColumnNames
-    val tmp = table + "__compact"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmp`")
-    dropOrphanManagedDir(spark, tmp)
-    val scanKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(scanKey)
-    spark.conf.set(scanKey, "false")
-    try {
-      val w0 = transform(spark.table(table)).write
-        .bucketBy(spec.numBuckets, bCols.head, bCols.tail: _*)
-      val w = if (spec.sortColumnNames.nonEmpty)
-        w0.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-      else w0
-      w.mode("overwrite").saveAsTable(tmp)
-    } finally spark.conf.set(scanKey, prev)
-    spark.sql(s"DROP TABLE `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-    (before,
-      dataFiles(spark.sessionState.catalog.getTableMetadata(ident).location))
   }
 
   /** Capped co-occurrence projection: distinct unordered item pairs that

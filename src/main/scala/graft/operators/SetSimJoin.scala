@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.meta.Ckpt.Syntax
+import scala.collection.immutable.ArraySeq
 
 /** Exact set-similarity self-join via an inverted index with prefix
   * filtering (the SSJoin/PPJoin family, Chaudhuri et al. ICDE'06 / Xiao et
@@ -347,7 +348,7 @@ object SetSimJoin {
           when(col("graft_hot_toks").isNull, col(setCol))
             .otherwise(array_except(col(setCol), col("graft_hot_toks"))))
         .drop("graft_hot_toks", "graft_hot_n", "graft_hot_df", "graft_cap_k")
-        .select(docs.columns.map(col): _*)
+        .select(ArraySeq.unsafeWrapArray(docs.columns.map(col)): _*)
     } else {
       require(idCol.nonEmpty,
         s"capTokenDf: a block carries $maxHotPerBlock hot tokens > " +
@@ -367,7 +368,7 @@ object SetSimJoin {
           // whose every token was hot (or whose set was already empty).
           coalesce(col("graft_kept"), slice(col(setCol), 1, 0)))
         .drop("graft_kept", "graft_cap_id")
-        .select(docs.columns.map(col): _*)
+        .select(ArraySeq.unsafeWrapArray(docs.columns.map(col)): _*)
     }
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.meta.Ckpt.Syntax
+import graft.meta.IndexTables
+import scala.collection.immutable.ArraySeq
 
 /** Embedding-vector operators over ARRAY<FLOAT> columns (Spark has no native
   * vector type): cosine similarity, brute-force top-k, and an IVF-style
@@ -682,7 +684,7 @@ object VectorOps {
 
   /** Build and persist an IVF index: assignment runs once (the compiled
     * zero-shuffle [[graft.functions.NearestCentroid]] fold), and the member
-    * rows land bucketed by `cluster_id` via [[ScaleJoins.writeBucketed]] —
+    * rows land bucketed by `cluster_id` via [[IndexTables.overwrite]] —
     * so every later [[ivfSearchLoaded]] reads each probed cluster's members
     * co-located, with no Exchange on the member side (plan-proven in
     * VectorOpsSpec). The cached `vnn` is the same strict left-fold double
@@ -695,13 +697,10 @@ object VectorOps {
       .filter(col("cluster_id").isNotNull)
       .select(col("id").as("neighbor_id"), col("vec").as("dvec"),
         col("vnn").as("dnn"), col("cluster_id"))
-    ScaleJoins.writeBucketed(members, s"${name}_members", Seq("cluster_id"), buckets)
-    // Same orphan-location robustness as the members table: a stale
-    // warehouse dir from a previous JVM otherwise fails the fresh-catalog
-    // saveAsTable with LOCATION_ALREADY_EXISTS.
-    ScaleJoins.dropOrphanManagedDir(data.sparkSession, s"${name}_centroids")
-    centroids.select(col(idCol).as("cluster_id"), col(vecCol).as("cvec"))
-      .write.mode("overwrite").saveAsTable(s"${name}_centroids")
+    IndexTables.overwrite(members, s"${name}_members", Seq("cluster_id"), buckets)
+    IndexTables.overwrite(
+      centroids.select(col(idCol).as("cluster_id"), col(vecCol).as("cvec")),
+      s"${name}_centroids")
   }
 
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, name: String): LoadedIvfIndex =
@@ -712,7 +711,7 @@ object VectorOps {
     * touch of existing members) and append them to the bucketed
     * inverted-list table under the SAME bucket spec — resolved from the
     * table's catalog metadata, never restated by the caller
-    * ([[appendBucketed]]) — so the probe-side co-location survives the
+    * ([[IndexTables.append]]) — so the probe-side co-location survives the
     * append.
     * The index state afterwards is IDENTICAL to a full [[saveIvfIndex]]
     * over (old ∪ new) with those centroids — the equality the
@@ -733,28 +732,7 @@ object VectorOps {
       .filter(col("cluster_id").isNotNull)
       .select(col("id").as("neighbor_id"), col("vec").as("dvec"),
         col("vnn").as("dnn"), col("cluster_id"))
-    appendBucketed(spark, members, s"${name}_members")
-  }
-
-  /** Append rows to a graft-written bucketed index table under the table's
-    * OWN catalog bucket spec — the spec is the table's property, not the
-    * caller's to restate (r19 ADVICE: a caller-supplied bucket count only
-    * surfaced as a Spark append-time error when it drifted, and nothing
-    * resolved the sort columns at all). The [[ScaleJoins.rewriteBucketed]]
-    * resolution shape.
-    */
-  private def appendBucketed(spark: org.apache.spark.sql.SparkSession,
-      rows: DataFrame, table: String): Unit = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$table has no bucket spec — not a graft-written bucketed index table"))
-    val bc = spec.bucketColumnNames
-    val w0 = rows.write.bucketBy(spec.numBuckets, bc.head, bc.tail: _*)
-    val w = if (spec.sortColumnNames.nonEmpty)
-      w0.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w0
-    w.mode("append").saveAsTable(table)
+    IndexTables.append(members, s"${name}_members")
   }
 
   /** [[ivfSearch]] over a [[loadIvfIndex]]-loaded index — same probe-and-rank
@@ -784,7 +762,7 @@ object VectorOps {
 
   /** Build and persist an IVF-PQ index: [[ivfPqEncode]] runs once (compiled
     * zero-shuffle assignment + broadcast codebook argmin) and the code rows
-    * land bucketed by `cluster_id` via [[ScaleJoins.writeBucketed]], so a
+    * land bucketed by `cluster_id` via [[IndexTables.overwrite]], so a
     * later [[ivfPqSearchLoaded]] reads each probed cluster's codes
     * co-located. Centroids and codebooks persist beside them — the probe
     * session needs NOTHING but the three tables (the [[saveIvfIndex]]
@@ -795,13 +773,12 @@ object VectorOps {
       idCol: String, vecCol: String, codebooks: DataFrame,
       m: Int, dim: Int, name: String, buckets: Int = 32): Unit = {
     val enc = ivfPqEncode(data, idCol, vecCol, centroids, codebooks, m, dim)
-    ScaleJoins.writeBucketed(enc, s"${name}_codes", Seq("cluster_id"), buckets)
-    ScaleJoins.dropOrphanManagedDir(data.sparkSession, s"${name}_centroids")
-    centroids.select(col(idCol).as("cluster_id"), col(vecCol).as("cvec"))
-      .write.mode("overwrite").saveAsTable(s"${name}_centroids")
-    ScaleJoins.dropOrphanManagedDir(data.sparkSession, s"${name}_codebooks")
-    codebooks.select(col("sub"), col("cid"), col("cvec"))
-      .write.mode("overwrite").saveAsTable(s"${name}_codebooks")
+    IndexTables.overwrite(enc, s"${name}_codes", Seq("cluster_id"), buckets)
+    IndexTables.overwrite(
+      centroids.select(col(idCol).as("cluster_id"), col(vecCol).as("cvec")),
+      s"${name}_centroids")
+    IndexTables.overwrite(codebooks.select(col("sub"), col("cid"), col("cvec")),
+      s"${name}_codebooks")
   }
 
   /** Incremental IVF-PQ maintenance — [[appendToIvfIndex]] for the code
@@ -821,40 +798,37 @@ object VectorOps {
     val centroids = spark.table(s"${name}_centroids")
       .select(col("cluster_id").as(idCol), col("cvec").as(vecCol))
     val codebooks = spark.table(s"${name}_codebooks")
-    // m and dim live in the codebook table's shape: subs are 0..m−1 and
-    // every codeword is dim/m wide (one tiny aggregate — the table is
-    // driver-sized by construction). The bucket spec likewise lives in
-    // the catalog ([[appendBucketed]]) — the append restates NOTHING the
-    // persisted index already knows.
+    // Bucket spec from the catalog, m and dim from the codebooks: the
+    // append restates NOTHING the persisted index already knows.
+    val (m, dim) = codebookShape(codebooks, name)
+    IndexTables.append(
+      ivfPqEncode(newData, idCol, vecCol, centroids, codebooks, m, dim),
+      s"${name}_codes")
+  }
+
+  /** (m, dim) of a persisted codebook table, whose subs are 0..m−1 and
+    * codewords all dim/m wide: one aggregate over a driver-sized table.
+    */
+  private def codebookShape(codebooks: DataFrame, name: String): (Int, Int) = {
     val shape = codebooks
       .agg(max(col("sub")).cast("int"), min(size(col("cvec"))), max(size(col("cvec"))))
       .head()
     val (m, sdMin, sdMax) = (shape.getInt(0) + 1, shape.getInt(1), shape.getInt(2))
     require(sdMin == sdMax, s"ragged codeword widths in ${name}_codebooks")
-    val enc = ivfPqEncode(newData, idCol, vecCol, centroids, codebooks,
-      m, m * sdMin)
-    appendBucketed(spark, enc, s"${name}_codes")
+    (m, m * sdMin)
   }
 
-  /** The refresh-epoch table property [[refreshIvfPqIndex]] stamps into the
-    * codebooks AND codes tables: the two overwrites are separate non-atomic
-    * writes, and a failure between them would leave old codes paired with
-    * new codebooks — ADC rankings silently wrong (r20 ADVICE). Matching
+  /** The `graft.refresh_epoch` property [[refreshIvfPqIndex]] stamps into
+    * the codebooks AND codes tables: the two writes are separate and
+    * non-atomic, and a failure between them would leave old codes paired
+    * with new codebooks, ranking ADC results silently wrong. Matching
     * epochs (or both absent — a [[saveIvfPqIndex]]-built index that has
     * never been refreshed) prove the pair is consistent.
     */
-  private val RefreshEpochKey = "graft.refresh_epoch"
+  private val RefreshEpochKey = "refresh_epoch"
 
-  private def refreshEpoch(spark: org.apache.spark.sql.SparkSession,
-      table: String): Option[String] = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    spark.sessionState.catalog.getTableMetadata(ident).properties.get(RefreshEpochKey)
-  }
-
-  private def stampRefreshEpoch(spark: org.apache.spark.sql.SparkSession,
-      table: String, epoch: Long): Unit =
-    spark.sql(
-      s"ALTER TABLE $table SET TBLPROPERTIES('$RefreshEpochKey'='$epoch')")
+  private def refreshEpoch(spark: org.apache.spark.sql.SparkSession, table: String) =
+    IndexTables.properties(spark, table).get(RefreshEpochKey)
 
   /** Fails loudly when the codebooks/codes epochs disagree — the partially-
     * refreshed state nothing else in the persisted index marks.
@@ -885,8 +859,8 @@ object VectorOps {
     * `iters` integer-quantized Lloyd rounds, so the refreshed codebooks
     * are bit-reproducible by an unrolled oracle), then re-encode and
     * rewrite the codes tier in place. Coarse centroids, table names, and
-    * the bucket layout (resolved from the codes table's own catalog spec,
-    * [[appendBucketed]]'s rule) all survive; later [[appendToIvfPqIndex]]
+    * the bucket layout (the codes table's own catalog spec, kept by
+    * [[IndexTables.rewrite]]) all survive; later [[appendToIvfPqIndex]]
     * calls encode against the refreshed codebooks automatically.
     *
     * A refresh necessarily rewrites EVERY code row — codes are a function
@@ -895,7 +869,7 @@ object VectorOps {
     * assignment + broadcast codebook argmin) into one bucketed write of
     * 1 + m LONGs per member; no raw vectors are ever stored, no probe
     * plan changes shape. m and the subspace width are read off the
-    * persisted codebook table ([[appendToIvfPqIndex]]'s inference) — the
+    * persisted codebook table ([[codebookShape]], as on append) — the
     * caller restates nothing the index already knows.
     *
     * @param data the CURRENT corpus (the rows the refreshed index should
@@ -910,12 +884,7 @@ object VectorOps {
     val centroids = spark.table(s"${name}_centroids")
       .select(col("cluster_id").as(idCol), col("cvec").as(vecCol))
     val oldCbs = spark.table(s"${name}_codebooks")
-    val shape = oldCbs
-      .agg(max(col("sub")).cast("int"), min(size(col("cvec"))), max(size(col("cvec"))))
-      .head()
-    val (m, sdMin, sdMax) = (shape.getInt(0) + 1, shape.getInt(1), shape.getInt(2))
-    require(sdMin == sdMax, s"ragged codeword widths in ${name}_codebooks")
-    val dim = m * sdMin
+    val (m, dim) = codebookShape(oldCbs, name)
     // The residuals feed iters+1 driver actions (the trainer's seed
     // collect + one collect per Lloyd round) and then the full re-encode —
     // the cross-action-reuse case an eager checkpoint exists for (the
@@ -925,33 +894,21 @@ object VectorOps {
     // — safe to both persist as the new codebook table and feed the
     // re-encode without any read-after-overwrite hazard.
     val newCbs = trainPqCodebooksInt(res, "rvec", oldCbs, m, dim, iters, scale)
-    // Resolve the codes table's bucket spec BEFORE any overwrite, then
-    // rewrite codebooks first (append-after-refresh must see the new ones
-    // even if the codes rewrite fails halfway — codes are reproducible
-    // from data, codebooks are the trained state).
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_codes")
-    val spec = spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
-      .getOrElse(throw new IllegalArgumentException(
-        s"${name}_codes has no bucket spec — not a graft-written IVF-PQ index"))
-    // Refresh-epoch protocol (r20 ADVICE — the two overwrites below are
-    // non-atomic): bump the epoch off the codebooks' current stamp, stamp
-    // the codebooks immediately after their overwrite, and stamp the codes
-    // only after THEIR overwrite lands. A failure anywhere between leaves
-    // the epochs unequal, which loadIvfPqIndex rejects loudly instead of
-    // silently serving old codes against new codebooks.
-    val epoch = refreshEpoch(spark, s"${name}_codebooks")
-      .map(_.toLong).getOrElse(0L) + 1L
-    newCbs.select(col("sub"), col("cid"), col("cvec"))
-      .write.mode("overwrite").saveAsTable(s"${name}_codebooks")
-    stampRefreshEpoch(spark, s"${name}_codebooks", epoch)
+    // Codebooks are written first: append-after-refresh must see the new
+    // ones even if the codes rewrite fails (codes are reproducible from
+    // data, codebooks are the trained state). The epoch, bumped off the
+    // codebooks' stamp, is stamped on each table right after its write, so
+    // a failure between the two writes leaves the epochs unequal, which
+    // loadIvfPqIndex rejects loudly. The codes rewrite replaces every row
+    // from `data` under the table's own bucket spec.
+    val epoch = Map(RefreshEpochKey -> (refreshEpoch(spark, s"${name}_codebooks")
+      .map(_.toLong).getOrElse(0L) + 1L).toString)
+    IndexTables.overwrite(newCbs.select(col("sub"), col("cid"), col("cvec")),
+      s"${name}_codebooks")
+    IndexTables.setProperties(spark, s"${name}_codebooks", epoch)
     val enc = ivfPqEncode(data, idCol, vecCol, centroids, newCbs, m, dim)
-    val bc = spec.bucketColumnNames
-    val w0 = enc.write.bucketBy(spec.numBuckets, bc.head, bc.tail: _*)
-    val w = if (spec.sortColumnNames.nonEmpty)
-      w0.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-    else w0
-    w.mode("overwrite").saveAsTable(s"${name}_codes")
-    stampRefreshEpoch(spark, s"${name}_codes", epoch)
+    IndexTables.rewrite(spark, s"${name}_codes")(_ => enc)
+    IndexTables.setProperties(spark, s"${name}_codes", epoch)
   }
 
   /** [[ivfPqSearch]] over a [[loadIvfPqIndex]]-loaded index: the probe
@@ -1000,21 +957,21 @@ object VectorOps {
     // Centroid tables are tiny by contract (the coarse quantizer is
     // driver-sized in every IVF deployment); collecting them here is what
     // buys the row-local, state-free probe rank. The contract is ENFORCED,
-    // not assumed (r19 ADVICE): every centroid is inlined into the per-row
-    // probe sort as a literal struct, so plan size AND per-row cost grow
-    // linearly with the coarse quantizer — a cap keeps an oversized one
-    // from compiling a megabyte plan that evaluates thousands of dot
-    // products per arriving query row.
-    // limit(cap + 1) BEFORE the collect (r20 ADVICE): the guard must fire
-    // before an oversized centroid table materializes on the driver, not
-    // after — the cap protects the driver as well as the plan size. One
-    // extra row is enough to prove the violation.
-    val cen = spark.table(s"${name}_centroids")
+    // not assumed: every centroid is inlined into the per-row probe sort
+    // as a literal struct, so plan size AND per-row cost grow linearly with
+    // the coarse quantizer — a cap keeps an oversized one from compiling a
+    // megabyte plan that evaluates thousands of dot products per arriving
+    // query row.
+    // limit(cap + 1) BEFORE the collect: the guard must fire before an
+    // oversized centroid table materializes on the driver, not after — the
+    // cap protects the driver as well as the plan size. One extra row is
+    // enough to prove the violation.
+    val cen = ArraySeq.unsafeWrapArray(spark.table(s"${name}_centroids")
       .select(col("cluster_id").cast("long"),
         transform(col("cvec"), _.cast("double")))
       .limit(maxInlinedCentroids + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1)
+      .sortBy(_._1))
     require(cen.length <= maxInlinedCentroids,
       s"ivfPqProbeEmissions inlines every coarse centroid of " +
         s"'$name' into the row-local probe rank, past maxInlinedCentroids=" +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.operators._
+import graft.meta.IndexTables
 
 /** Helpers shared across the pipeline query-family files: DuckDB
   * dialect builders (hashes, dot products, CTE chains), staged-index
@@ -700,7 +701,7 @@ object QueryShared {
   private[queries] def windowIndex(s: SparkSession, dir: String): String =
     Staging.memo[String]("windowidx", dir) {
       import s.implicits._
-      val nm = "graft_window_idx_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val nm = Staging.fixtureName("graft_window_idx_", dir)
       CorpusOps.saveWindowIndex(docs(s, dir).filter($"source" === "src0"),
         "doc_id", "text", nm, n = 24, maxRefDf = Some(3), buckets = 8)
       nm
@@ -716,13 +717,12 @@ object QueryShared {
       s: SparkSession, dir: String): (String, String) =
     Staging.memo[(String, String)]("bucketjoin", dir) {
       import s.implicits._
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val ot = s"graft_bkt_orders_$tag"
-      val lt = s"graft_bkt_lineitem_$tag"
-      ScaleJoins.writeBucketed(
+      val ot = Staging.fixtureName("graft_bkt_orders_", dir)
+      val lt = Staging.fixtureName("graft_bkt_lineitem_", dir)
+      IndexTables.overwrite(
         t(s, dir, "orders").select($"o_orderkey", $"o_orderpriority"),
         ot, Seq("o_orderkey"), 16)
-      ScaleJoins.writeBucketed(
+      IndexTables.overwrite(
         t(s, dir, "lineitem").select($"l_orderkey".as("o_orderkey"),
           $"l_extendedprice", $"l_discount"),
         lt, Seq("o_orderkey"), 16)
@@ -732,7 +732,7 @@ object QueryShared {
   /** The q_lsh_probe / q_stream_lsh_probe shared index staging: corpus =
     * doc_id%4 ∈ {0,1} built, ingest %4 == 2 appended as TWO batches
     * (%8 == 2 then %8 == 6), then the bucketed tables are compacted
-    * ([[graft.operators.ScaleJoins.compactBucketed]]) — so every probe in
+    * ([[graft.meta.IndexTables.compact]]) — so every probe in
     * the suite runs against a POST-COMPACTION index, pinning that
     * compaction preserves probe results. Staged once per (sf, JVM)
     * ([[Staging.memo]]); a repeat append would duplicate band rows, and
@@ -743,13 +743,13 @@ object QueryShared {
     Staging.memo[String]("lshprobe", dir) {
       import s.implicits._
       val d = docs(s, dir)
-      val nm = "graft_lsh_probe_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val nm = Staging.fixtureName("graft_lsh_probe_", dir)
       MinHashLsh.saveLshIndex(d.filter($"doc_id" % 4 <= 1), "doc_id", "text", nm,
         numHashes = 32, numBands = 8, shingleN = 3, buckets = 8)
       MinHashLsh.appendToLshIndex(s, d.filter($"doc_id" % 8 === 2), "doc_id", "text", nm)
       MinHashLsh.appendToLshIndex(s, d.filter($"doc_id" % 8 === 6), "doc_id", "text", nm)
-      ScaleJoins.compactBucketed(s, s"${nm}_bands")
-      ScaleJoins.compactBucketed(s, s"${nm}_sets")
+      IndexTables.compact(s, s"${nm}_bands")
+      IndexTables.compact(s, s"${nm}_sets")
       nm
     }
 

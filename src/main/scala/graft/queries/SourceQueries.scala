@@ -290,7 +290,7 @@ object SourceQueries extends QueryDomain {
     "q_bucket_join" -> { (s, dir) =>
       import s.implicits._
       // Co-located fact-fact join over pre-bucketed tables
-      // ([[graft.operators.ScaleJoins.writeBucketed]] +
+      // ([[graft.meta.IndexTables.overwrite]] +
       // [[graft.operators.ScaleJoins.bucketedJoin]]): orders and lineitem
       // both bucket 16 ways on the order key at WRITE time, so the join
       // reads align bucket-to-bucket with zero Exchange — at 100 TB the

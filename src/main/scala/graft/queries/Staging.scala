@@ -42,15 +42,18 @@ private[queries] object Staging {
     val key = (kind, sfDir, table)
     staged.getOrElse(key, synchronized {
       staged.getOrElseUpdate(key, {
-        val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
-        val p = s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_" +
-          s"${ProcessHandle.current().pid()}_${tag}_$table"
+        val p = s"${System.getProperty("java.io.tmpdir")}/" + fixtureName(
+          s"graft_${kind}_${ProcessHandle.current().pid()}_", sfDir) + s"_$table"
         cleanupOnExit(p)
         write(p)
         p
       })
     })
   }
+
+  /** Per-fixture name: `prefix` + `sfDir` with non-alphanumerics as `_`. */
+  def fixtureName(prefix: String, sfDir: String): String =
+    prefix + sfDir.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Memoize a small driver-side value per (kind, sfDir) per JVM — the
     * value analogue of [[dir]], for gate inputs that are LEARNED from a

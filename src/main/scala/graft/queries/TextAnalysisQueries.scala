@@ -445,7 +445,7 @@ object TextAnalysisQueries extends QueryDomain {
       // re-tokenizing the corpus — build-once/probe-many, the text twin of
       // the persisted IVF index. Shares q_bm25_topk's oracle verbatim:
       // identical output is the round-trip contract.
-      val idx = s"bm25_idx_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+      val idx = Staging.fixtureName("bm25_idx_", dir)
       Staging.dir("bm25idx", dir, "documents") { _ =>
         CorpusOps.saveTextIndex(docs(s, dir), "doc_id", "text", idx, buckets = 8)
       }

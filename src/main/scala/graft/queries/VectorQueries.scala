@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.operators._
 import graft.meta.Ckpt.Syntax
+import graft.meta.IndexTables
 import graft.queries.QueryShared._
 
 /** Embedding-similarity + multimodal gates: brute-force cosine top-k,
@@ -35,14 +36,14 @@ object VectorQueries extends QueryDomain {
           struct(lit(1).as("sub"), $"id".as("cid"),
             slice($"rvec", 33, 32).as("cvec")))).as("cb"))
         .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
-      val nm = "graft_ivfpq_index_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val nm = Staging.fixtureName("graft_ivfpq_index_", dir)
       VectorOps.saveIvfPqIndex(e.filter($"vec_id" % 2 === 0), centroids,
         "vec_id", "embedding", cbs, m = 2, dim = 64, nm, buckets = 8)
       VectorOps.appendToIvfPqIndex(s, e.filter($"vec_id" % 4 === 1),
         "vec_id", "embedding", nm)
       VectorOps.appendToIvfPqIndex(s, e.filter($"vec_id" % 4 === 3),
         "vec_id", "embedding", nm)
-      ScaleJoins.compactBucketed(s, s"${nm}_codes")
+      IndexTables.compact(s, s"${nm}_codes")
       nm
     }
 
@@ -70,7 +71,7 @@ object VectorQueries extends QueryDomain {
             struct(lit(sub).as("sub"), $"id".as("cid"),
               slice($"rvec", sub * 16 + 1, 16).as("cvec"))): _*)).as("cb"))
         .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
-      val nm = "graft_ivfpq_refresh_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      val nm = Staging.fixtureName("graft_ivfpq_refresh_", dir)
       VectorOps.saveIvfPqIndex(e.filter($"vec_id" % 2 === 0), centroids,
         "vec_id", "embedding", seedCbs, m = 4, dim = 64, nm, buckets = 8)
       VectorOps.appendToIvfPqIndex(s, e.filter($"vec_id" % 4 === 1),
@@ -261,7 +262,7 @@ object VectorQueries extends QueryDomain {
       // later as TWO appends (assigned with the persisted centroids,
       // bucketed appends under the same spec — never a rebuild), then the
       // accreted member file-sets are compacted
-      // ([[ScaleJoins.compactBucketed]]) — so the probe below runs against
+      // ([[IndexTables.compact]]) — so the probe below runs against
       // a post-compaction index, pinning that compaction preserves search
       // results for the IVF family too. Probing the loaded index must
       // equal q_ann_ivf's search over the whole table with the same
@@ -270,7 +271,7 @@ object VectorQueries extends QueryDomain {
       // bench reps must measure the PROBE, not the build.
       val e = t(s, dir, "embeddings")
       val name = Staging.memo[String]("ivfappend", dir) {
-        val nm = "graft_ivf_append_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+        val nm = Staging.fixtureName("graft_ivf_append_", dir)
         val centroids = e.filter($"vec_id" < 10)
         VectorOps.saveIvfIndex(e.filter($"vec_id" % 2 === 0), centroids,
           "vec_id", "embedding", nm, buckets = 8)
@@ -278,7 +279,7 @@ object VectorQueries extends QueryDomain {
           "vec_id", "embedding", nm)
         VectorOps.appendToIvfIndex(s, e.filter($"vec_id" % 4 === 3),
           "vec_id", "embedding", nm)
-        ScaleJoins.compactBucketed(s, s"${nm}_members")
+        IndexTables.compact(s, s"${nm}_members")
         nm
       }
       VectorOps.ivfSearchLoaded(VectorOps.loadIvfIndex(s, name),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, MetadataBuilder}
 import graft.sink.PostgresUpsertSink
+import scala.collection.immutable.ArraySeq
 
 /** Conform a source DataFrame to an external (Postgres-style) target schema.
   *
@@ -26,7 +27,7 @@ object SchemaConform {
     * the Postgres side because the catalog stores lower-cased identifiers).
     */
   def lowercaseColumns(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.toLowerCase): _*)
+    df.toDF(ArraySeq.unsafeWrapArray(df.columns.map(_.toLowerCase)): _*)
 
   /** Project onto the target's columns and cast. `target` maps lower-case
     * column name → Spark type (derived via [[graft.types.PgTypeMapping]]).

@@ -79,7 +79,7 @@ class AvroSourceSpec extends AnyFunSuite with SparkSpec {
     val back = AvroIo.read(spark, dir)
     assert(back.rdd.getNumPartitions >= 2, "per-file decode tasks expected")
     assert(back.count() === 1000)
-    assert(back.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0) === 499500L)
+    assert(back.agg(org.apache.spark.sql.functions.sum("id")).head().getLong(0) === 499500L)
   }
 
   test("registry dispatches 'avro' and lowercases columns") {

@@ -649,15 +649,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("bm25 over the persisted index round-trips to the on-the-fly form") {
     import org.apache.spark.sql.functions._
-    // Managed-table hygiene (the VectorOpsSpec IVF round-trip pattern): a
-    // killed previous JVM leaves warehouse dirs a fresh catalog can't DROP.
-    def cleanup(): Unit = Seq("bm25_rt_spec_postings", "bm25_rt_spec_doclen").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"spark-warehouse/$tbl"))
-    }
+    def cleanup(): Unit = dropTables("bm25_rt_spec_postings", "bm25_rt_spec_doclen")
     cleanup()
     try {
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")

@@ -19,7 +19,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Long, Double)]
     val windows = EventStreams.hourlyEventWindows(
-      input.toDF.toDF("tsm", "event_type", "user_id", "value"), watermark = "1 hour")
+      input.toDF().toDF("tsm", "event_type", "user_id", "value"), watermark = "1 hour")
     val q = windows.writeStream.format("memory").queryName("ew_test")
       .outputMode("append").start()
     try {
@@ -47,7 +47,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Timestamp, String, Long, Double)]
     val q = EventStreams.hourlyEventWindows(
-      input.toDF.toDF("tsm", "event_type", "user_id", "value"), watermark = "1 hour")
+      input.toDF().toDF("tsm", "event_type", "user_id", "value"), watermark = "1 hour")
       .writeStream.format("memory").queryName("ew_late").outputMode("append").start()
     try {
       input.addData((ts("2025-01-01 05:30:00"), "click", 1L, 1.0))
@@ -71,7 +71,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long)]
     val q = EventStreams.dedupEvents(
-        input.toDF.toDF("tsm", "event_id"), Seq("event_id"), watermark = "1 hour")
+        input.toDF().toDF("tsm", "event_id"), Seq("event_id"), watermark = "1 hour")
       .writeStream.format("memory").queryName("dd_test").outputMode("append").start()
     def rowsFor(id: Long) =
       spark.table("dd_test").filter($"event_id" === id).count()
@@ -788,7 +788,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions._
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Timestamp, Long, Long, String, String)]
-    val src = input.toDF.toDF("tsm", "key", "ord", "op", "v")
+    val src = input.toDF().toDF("tsm", "key", "ord", "op", "v")
       .withWatermark("tsm", "0 seconds")
       // no op-filter: null-op rows are watermark carriers (a filter here
       // would be pushed below the watermark node — cdcMaterialize scaladoc)
@@ -838,7 +838,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val batch2 = Seq.fill(8)("warm") ++ noise.drop(20) ++ Seq.fill(5)("hot")
     val input = MemoryStream[(Timestamp, String)]
     val q = EventStreams.mgCandidatesStream(
-        input.toDF.toDF("tsm", "item"), array(col("item")), "tsm",
+        input.toDF().toDF("tsm", "item"), array(col("item")), "tsm",
         capacity = capacity, nShards = 2, horizonSec = 60L)
       .writeStream.format("memory").queryName("mg_test").outputMode("append").start()
     try {
@@ -879,7 +879,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val v1 = vec(); val v2 = vec()
     val input = MemoryStream[(Timestamp, Long, Seq[Float])]
     val q = EventStreams.srpNearDup(
-        input.toDF.toDF("tsm", "vec_id", "embedding"), "vec_id", "embedding", "tsm",
+        input.toDF().toDF("tsm", "vec_id", "embedding"), "vec_id", "embedding", "tsm",
         dim = 64, horizonSec = 1000000L)
       .writeStream.format("memory").queryName("srp_test").outputMode("append").start()
     try {
@@ -916,7 +916,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val b = "utterly different vocabulary nothing shared whatsoever"
     val input = MemoryStream[(Timestamp, Long, String)]
     val q = EventStreams.simhashNearDup(
-        input.toDF.toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
+        input.toDF().toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
         horizonSec = 1000000L)
       .writeStream.format("memory").queryName("nd_test").outputMode("append").start()
     try {
@@ -954,7 +954,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val a = "alpha beta gamma delta epsilon zeta"
     val input = MemoryStream[(Timestamp, Long, String)]
     val q = EventStreams.simhashNearDup(
-        input.toDF.toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
+        input.toDF().toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
         horizonSec = 100L)
       .writeStream.format("memory").queryName("nd_sentinel").outputMode("append").start()
     def pairs = spark.table("nd_sentinel").distinct().as[(Long, Long, Long)].collect().toSet
@@ -980,7 +980,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val v1 = Seq.fill(64)(rng.nextFloat() * 2 - 1)
     val input = MemoryStream[(Timestamp, Long, Seq[Float])]
     val q = EventStreams.srpNearDup(
-        input.toDF.toDF("tsm", "vec_id", "embedding"), "vec_id", "embedding", "tsm",
+        input.toDF().toDF("tsm", "vec_id", "embedding"), "vec_id", "embedding", "tsm",
         dim = 64, horizonSec = 100L)
       .writeStream.format("memory").queryName("srp_sentinel").outputMode("append").start()
     def pairs = spark.table("srp_sentinel").distinct().as[(Long, Long, Long)].collect().toSet
@@ -1005,7 +1005,7 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
     val a = "alpha beta gamma delta epsilon zeta"
     val input = MemoryStream[(Timestamp, Long, String)]
     val q = EventStreams.simhashNearDup(
-        input.toDF.toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
+        input.toDF().toDF("tsm", "doc_id", "text"), "doc_id", "text", "tsm",
         horizonSec = 100L)
       .writeStream.format("memory").queryName("nd_evict").outputMode("append").start()
     def pairs = spark.table("nd_evict").distinct().as[(Long, Long, Long)].collect().toSet

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.meta.IndexTables
 import graft.operators.{GovernanceOps, MinHashLsh}
 
 class GovernanceOpsSpec extends AnyFunSuite with SparkSpec {
@@ -79,9 +80,7 @@ class GovernanceOpsSpec extends AnyFunSuite with SparkSpec {
     assert(purged.nonEmpty, "retained corpus must still hold near-dups")
     // Bucket spec survived the purge rewrite; probe plan still reads the
     // corpus co-located (no exchange over either index table).
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier("gov_spec_purged_bands"))
-      .bucketSpec
+    val spec = IndexTables.bucketSpec(spark, "gov_spec_purged_bands")
     assert(spec.exists(s => s.numBuckets == 4 &&
       s.bucketColumnNames == Seq("band", "band_key")))
     val plan = MinHashLsh.lshProbe(spark, probe, "doc_id", "text",

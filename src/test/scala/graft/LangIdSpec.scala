@@ -88,7 +88,7 @@ class LangIdSpec extends AnyFunSuite with SparkSpec {
     val online = LangId.classifyEmissions(probe, "doc_id", "text", p,
         gramLen = 3, topK = 32)
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
-    assert(batch.map(r => r._1 -> r._2).toMap.filterKeys(_ <= 2L).toMap ==
+    assert(batch.map(r => r._1 -> r._2).toMap.view.filterKeys(_ <= 2L).toMap ==
       Map(1L -> "emoji", 2L -> "ascii"), s"fixture sanity: $batch")
     assert(online == batch)
     // 2 code points (4 UTF-16 units) with gramLen 3: no grams on EITHER
@@ -112,7 +112,7 @@ class LangIdSpec extends AnyFunSuite with SparkSpec {
         .sortBy { case (g, c) => (-c, g) }.take(k)
         .zipWithIndex.map { case ((g, _), i) => g -> (i + 1L) }.toMap
     val prof = train.groupBy(_._2).view
-      .mapValues(rows => rankTop(rows.flatMap(r => gramsOf(r._3)))).toMap
+      .mapValues(rows => rankTop(rows.toSeq.flatMap(r => gramsOf(r._3)))).toMap
     val trainDf = spark.read.parquet(s"$sf0001/documents.parquet")
       .filter($"doc_id" % 4 =!= 3)
     val probeDf = spark.read.parquet(s"$sf0001/documents.parquet")

@@ -98,7 +98,7 @@ class LoaderSpec extends AnyFunSuite with SparkSpec {
     val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
     val q = Loader.streamToPostgres(
-      input.toDF.toDF("K", "v", "dropped_col"), // uppercase + extra column: conform must fix both
+      input.toDF().toDF("K", "v", "dropped_col"), // uppercase + extra column: conform must fix both
       cfg.copy(targetTable = "public.kv", parallelism = 2),
       catalog, factory, ckpt,
       onBatch = (id, s) => batches.synchronized { batches += id -> s.loaded })
@@ -125,7 +125,7 @@ class LoaderSpec extends AnyFunSuite with SparkSpec {
     val stats = scala.collection.mutable.ArrayBuffer.empty[graft.sink.LoadStats]
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_limits_ckpt").toString
     val q = Loader.streamToPostgres(
-      input.toDF.toDF("k", "v", "t"),
+      input.toDF().toDF("k", "v", "t"),
       cfg.copy(targetTable = "public.kvt", parallelism = 1),
       catalog, factory, ckpt,
       onBatch = (_, s) => stats.synchronized { stats += s })

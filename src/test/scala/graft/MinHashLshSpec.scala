@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.meta.IndexTables
 import graft.operators.MinHashLsh
 
 class MinHashLshSpec extends AnyFunSuite with SparkSpec {
@@ -161,19 +162,20 @@ class MinHashLshSpec extends AnyFunSuite with SparkSpec {
       .as[(Long, Long, Int, Int)].collect().toSet
     val beforePairs = pairs()
     assert(beforePairs.nonEmpty, "fixture must plant cross-parity near-dups")
-    val (bandsBefore, bandsAfter) =
-      graft.operators.ScaleJoins.compactBucketed(spark, s"${name}_bands")
-    val (setsBefore, setsAfter) =
-      graft.operators.ScaleJoins.compactBucketed(spark, s"${name}_sets")
+    val (bandsBefore, bandsAfter) = IndexTables.compact(spark, s"${name}_bands")
+    val (setsBefore, setsAfter) = IndexTables.compact(spark, s"${name}_sets")
     // 1 build + 3 appends × up-to-4-files each collapse to ≤ 4 (one file
     // per non-empty bucket) — and the drop is strict.
     assert(bandsAfter <= 4 && bandsAfter < bandsBefore, s"$bandsBefore -> $bandsAfter")
     assert(setsAfter <= 4 && setsAfter < setsBefore, s"$setsBefore -> $setsAfter")
     // The compacted table still carries the bucket spec in the catalog...
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(s"${name}_bands")).bucketSpec
+    val spec = IndexTables.bucketSpec(spark, s"${name}_bands")
     assert(spec.exists(s => s.numBuckets == 4 &&
       s.bucketColumnNames == Seq("band", "band_key")))
+    // ...and the build parameters the probe reads, carried over by the
+    // rewrite...
+    assert(IndexTables.properties(spark, s"${name}_bands") ===
+      Map("num_hashes" -> "32", "num_bands" -> "8", "shingle_n" -> "3"))
     // ...the probe result is unchanged...
     assert(pairs() === beforePairs)
     // ...and the probe plan is still exchange-free on the corpus side.
@@ -240,19 +242,10 @@ class MinHashLshSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compactBucketed refuses unbucketed tables") {
-    // A previous JVM's warehouse dir may linger with no catalog entry;
-    // overwrite can't clear it for a first-time CREATE (the writeBucketed
-    // orphan story) — stage through ScaleJoins so the dir is cleaned.
-    spark.sql("DROP TABLE IF EXISTS lsh_spec_flat")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val dir = new java.io.File(wh, "lsh_spec_flat")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    if (dir.exists()) rm(dir)
-    spark.range(10).write.mode("overwrite").saveAsTable("lsh_spec_flat")
+    dropTables("lsh_spec_flat")
+    IndexTables.overwrite(spark.range(10).toDF(), "lsh_spec_flat")
     intercept[IllegalArgumentException] {
-      graft.operators.ScaleJoins.compactBucketed(spark, "lsh_spec_flat")
+      IndexTables.compact(spark, "lsh_spec_flat")
     }
   }
 }

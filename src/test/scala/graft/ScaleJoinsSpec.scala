@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.meta.IndexTables
 import graft.operators.ScaleJoins
 
 class ScaleJoinsSpec extends AnyFunSuite with SparkSpec {
@@ -12,8 +13,8 @@ class ScaleJoinsSpec extends AnyFunSuite with SparkSpec {
       .select($"o_orderkey", $"o_custkey", $"o_totalprice")
     val lineitem = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select($"l_orderkey".as("o_orderkey"), $"l_quantity")
-    ScaleJoins.writeBucketed(orders, "b_orders", Seq("o_orderkey"), 4)
-    ScaleJoins.writeBucketed(lineitem, "b_lineitem", Seq("o_orderkey"), 4)
+    IndexTables.overwrite(orders, "b_orders", Seq("o_orderkey"), 4)
+    IndexTables.overwrite(lineitem, "b_lineitem", Seq("o_orderkey"), 4)
     // fixture tables are broadcast-sized, which would bypass the bucketed
     // scan entirely — force the shuffle-join path the technique targets
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -28,8 +29,7 @@ class ScaleJoinsSpec extends AnyFunSuite with SparkSpec {
       assert(joined.count() == expected)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
+      dropTables("b_orders", "b_lineitem")
     }
   }
 

@@ -98,7 +98,7 @@ class SimHashSpec extends AnyFunSuite with SparkSpec {
     // band would candidate-match every doc against every other.
     val orAll = docs
       .select(explode(transform(TextOps.tokens(col("text")), TextOps.wideHash(_))).as("h"))
-      .agg(expr("bit_or(h)")).head.getLong(0)
+      .agg(expr("bit_or(h)")).head().getLong(0)
     (0 until 4).foreach { band =>
       assert(((orAll >> (band * 15)) & 0x7fffL) != 0L, s"band $band is dead")
     }

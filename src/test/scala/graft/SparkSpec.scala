@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.CheckpointDirBridge
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.meta.IndexTables
 import graft.tools.Harness
 
 /** Shared local SparkSession for suites that need one. */
@@ -19,6 +20,14 @@ trait SparkSpec { self: AnyFunSuite =>
     val prev = sc.getCheckpointDir
     sc.setCheckpointDir(dir)
     try body finally CheckpointDirBridge.set(sc, prev)
+  }
+
+  /** Drops each table, then the warehouse dir a killed previous JVM may
+    * have left for it (a fresh catalog cannot DROP such an orphan).
+    */
+  def dropTables(names: String*): Unit = names.foreach { t =>
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    IndexTables.dropOrphanDir(spark, t)
   }
 }
 

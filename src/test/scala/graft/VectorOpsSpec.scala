@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.VectorOps
+import graft.meta.IndexTables
+import graft.operators.{GovernanceOps, VectorOps}
 
 class VectorOpsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -152,16 +153,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("IVF round-trip: saved+loaded search == in-session search, member side unshuffled") {
-    // Managed-table hygiene: DROP removes catalog entry + warehouse dir for
-    // the current JVM, but a crashed/killed previous run leaves orphan dirs
-    // that a fresh in-memory catalog can't DROP — clear both, both ends.
-    def cleanup(): Unit = Seq("ivf_rt_members", "ivf_rt_centroids").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"spark-warehouse/$tbl"))
-    }
+    def cleanup(): Unit = dropTables("ivf_rt_members", "ivf_rt_centroids")
     cleanup()
     try {
       val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -195,28 +187,28 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     } finally cleanup()
   }
 
+  /** m = 2 seed codebooks: the residuals of vec_ids 20–27, each split
+    * into two 32-wide sub-codewords.
+    */
+  private def seedCodebooks(e: org.apache.spark.sql.DataFrame,
+      centroids: org.apache.spark.sql.DataFrame) =
+    VectorOps.ivfResiduals(
+        e.filter($"vec_id".between(20, 27)), "vec_id", "embedding", centroids)
+      .select(explode(array(
+        struct(lit(0).as("sub"), $"id".as("cid"), slice($"rvec", 1, 32).as("cvec")),
+        struct(lit(1).as("sub"), $"id".as("cid"), slice($"rvec", 33, 32).as("cvec")))).as("cb"))
+      .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
+
   test("IVF-PQ index round-trip: saved+appended+loaded probe == in-session " +
     "search; codes scan bucketed, no raw vectors in the loaded plan") {
     def cleanup(): Unit =
-      Seq("ivfpq_rt_codes", "ivfpq_rt_centroids", "ivfpq_rt_codebooks")
-        .foreach { tbl =>
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-          }
-          rm(new java.io.File(s"spark-warehouse/$tbl"))
-        }
+      dropTables("ivfpq_rt_codes", "ivfpq_rt_centroids", "ivfpq_rt_codebooks")
     cleanup()
     try {
       val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       val centroids = e.filter($"vec_id" < 10)
       val queries = e.filter($"vec_id".between(100, 109))
-      val res8 = VectorOps.ivfResiduals(
-        e.filter($"vec_id".between(20, 27)), "vec_id", "embedding", centroids)
-      val cbs = res8.select(explode(array(
-          struct(lit(0).as("sub"), $"id".as("cid"), slice($"rvec", 1, 32).as("cvec")),
-          struct(lit(1).as("sub"), $"id".as("cid"), slice($"rvec", 33, 32).as("cvec")))).as("cb"))
-        .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
+      val cbs = seedCodebooks(e, centroids)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       val inSession = rows(VectorOps.ivfPqSearch(
@@ -264,23 +256,12 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     "with the trained codebooks; bucket layout survives the rewrite") {
     val tables = Seq("ivfpq_rf", "ivfpq_rf2")
       .flatMap(n => Seq(s"${n}_codes", s"${n}_centroids", s"${n}_codebooks"))
-    def cleanup(): Unit = tables.foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"spark-warehouse/$tbl"))
-    }
+    def cleanup(): Unit = dropTables(tables: _*)
     cleanup()
     try {
       val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       val centroids = e.filter($"vec_id" < 10)
-      val res8 = VectorOps.ivfResiduals(
-        e.filter($"vec_id".between(20, 27)), "vec_id", "embedding", centroids)
-      val seeds = res8.select(explode(array(
-          struct(lit(0).as("sub"), $"id".as("cid"), slice($"rvec", 1, 32).as("cvec")),
-          struct(lit(1).as("sub"), $"id".as("cid"), slice($"rvec", 33, 32).as("cvec")))).as("cb"))
-        .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
+      val seeds = seedCodebooks(e, centroids)
       // Life cycle: build on the even half with SEED codebooks, append the
       // odd half, refresh (retrain 2 rounds on the full corpus + rewrite).
       VectorOps.saveIvfPqIndex(e.filter($"vec_id" % 2 === 0), centroids,
@@ -318,13 +299,13 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
       assert(!p.contains("Exchange hashpartitioning(cluster_id"),
         s"codes side must not shuffle on cluster_id:\n$p")
       assert(fromDisk.count() > 0)
-      // Refresh-epoch protocol (r20 ADVICE): a completed refresh stamps
+      // Refresh-epoch protocol: a completed refresh stamps
       // MATCHING epochs into codebooks and codes; a mismatch — the state a
       // crash between the two overwrites leaves — must make load fail
       // loudly instead of silently serving old codes with new codebooks.
       VectorOps.requireIvfPqEpochsMatch(spark, "ivfpq_rf")
-      spark.sql("ALTER TABLE ivfpq_rf_codebooks " +
-        "SET TBLPROPERTIES('graft.refresh_epoch'='99')")
+      IndexTables.setProperties(spark, "ivfpq_rf_codebooks",
+        Map("refresh_epoch" -> "99"))
       val ex = intercept[IllegalArgumentException](
         VectorOps.loadIvfPqIndex(spark, "ivfpq_rf"))
       assert(ex.getMessage.contains("PARTIALLY REFRESHED"))
@@ -333,14 +314,75 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     } finally cleanup()
   }
 
+  /** Builds `name` (m = 2, 4 buckets) with seed codebooks on the even
+    * vec_ids, appends the odd ones and refreshes the codebooks once: codes
+    * and codebooks both carry refresh epoch 1.
+    */
+  private def refreshedIvfPqIndex(name: String): Unit = {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val centroids = e.filter($"vec_id" < 10)
+    VectorOps.saveIvfPqIndex(e.filter($"vec_id" % 2 === 0), centroids,
+      "vec_id", "embedding", seedCodebooks(e, centroids), m = 2, dim = 64, name,
+      buckets = 4)
+    VectorOps.appendToIvfPqIndex(spark, e.filter($"vec_id" % 2 === 1),
+      "vec_id", "embedding", name)
+    VectorOps.refreshIvfPqIndex(spark, e, "vec_id", "embedding", name, iters = 1)
+  }
+
+  private def ivfPqTables(name: String) =
+    Seq("codes", "centroids", "codebooks").map(t => s"${name}_$t")
+
+  private def refreshEpochs(name: String) =
+    Seq("codebooks", "codes")
+      .map(t => IndexTables.properties(spark, s"${name}_$t").get("refresh_epoch"))
+
+  /** (query_id, rank, neighbor_id) of a loaded-index probe. */
+  private def ivfPqProbe(name: String) =
+    VectorOps.ivfPqSearchLoaded(VectorOps.loadIvfPqIndex(spark, name),
+        spark.read.parquet(s"$sf0001/embeddings.parquet")
+          .filter($"vec_id".between(100, 109)),
+        "vec_id", "embedding", m = 2, dim = 64, k = 3, nProbe = 2)
+      .select($"query_id", $"rank".cast("long"), $"neighbor_id")
+      .as[(Long, Long, Long)].collect().toSet
+
+  test("refreshIvfPqIndex then compacting the codes: the index still loads " +
+      "with matching epochs and probes unchanged") {
+    val name = "ivfpq_rfc"
+    dropTables(ivfPqTables(name): _*)
+    try {
+      refreshedIvfPqIndex(name)
+      assert(refreshEpochs(name) === Seq(Some("1"), Some("1")))
+      val before = ivfPqProbe(name)
+      assert(before.nonEmpty)
+      val (_, filesAfter) = IndexTables.compact(spark, s"${name}_codes")
+      assert(filesAfter <= 4)
+      // The compaction's table swap carries the codes' epoch over: a
+      // consistent index must not read as PARTIALLY REFRESHED.
+      assert(refreshEpochs(name) === Seq(Some("1"), Some("1")))
+      assert(ivfPqProbe(name) === before)
+    } finally dropTables(ivfPqTables(name): _*)
+  }
+
+  test("refreshIvfPqIndex then an RTBF purge of the codes: the index still " +
+      "loads with matching epochs and no purged neighbor") {
+    val name = "ivfpq_rfp"
+    dropTables(ivfPqTables(name): _*)
+    try {
+      refreshedIvfPqIndex(name)
+      val hits = ivfPqProbe(name).map(_._3)
+      assert(hits.nonEmpty)
+      val tombIds = hits.take(3)
+      GovernanceOps.purgeKeysBucketed(spark, s"${name}_codes", "id",
+        tombIds.toSeq.toDF("vec_id"), "vec_id")
+      assert(refreshEpochs(name) === Seq(Some("1"), Some("1")))
+      assert(ivfPqProbe(name).forall(r => !tombIds(r._3)))
+      assert(spark.table(s"${name}_codes").filter($"id".isin(tombIds.toSeq: _*))
+        .isEmpty)
+    } finally dropTables(ivfPqTables(name): _*)
+  }
+
   test("IVF append: built-then-appended index == built-at-once, bucketed scan survives") {
-    def cleanup(): Unit = Seq("ivf_ap_members", "ivf_ap_centroids").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"spark-warehouse/$tbl"))
-    }
+    def cleanup(): Unit = dropTables("ivf_ap_members", "ivf_ap_centroids")
     cleanup()
     try {
       val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
@@ -369,7 +411,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
       assert(!p.contains("Exchange hashpartitioning(cluster_id"),
         s"member side must not shuffle on cluster_id:\n$p")
       // The bucket spec is the TABLE's catalog property, not the caller's
-      // to restate (r19 ADVICE) — appending to a never-built index must
+      // to restate — appending to a never-built index must
       // fail loudly at spec resolution, not write an unbucketed table.
       intercept[Exception] {
         VectorOps.appendToIvfIndex(spark, e.filter($"vec_id" === 1),
@@ -381,10 +423,8 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
   test("saveIvfIndex survives orphan warehouse dirs from a previous JVM") {
     // A crashed/previous JVM leaves the tables' directories with no entry
     // in this session's fresh catalog; saveAsTable then refuses with
-    // LOCATION_ALREADY_EXISTS unless the writer clears the orphan (r13:
-    // hit by the driver-style fresh-JVM verify run on q_ivf_append's
-    // CENTROIDS table — members already went through writeBucketed's
-    // cleanup).
+    // LOCATION_ALREADY_EXISTS unless the writer clears the orphan — for the
+    // unbucketed centroids table as much as the bucketed members.
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
     Seq("ivf_orph_members", "ivf_orph_centroids").foreach { tbl =>
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -397,13 +437,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
         "vec_id", "embedding", "ivf_orph", buckets = 4)
       assert(spark.table("ivf_orph_members").count() > 0)
       assert(spark.table("ivf_orph_centroids").count() === 10)
-    } finally Seq("ivf_orph_members", "ivf_orph_centroids").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"spark-warehouse/$tbl"))
-    }
+    } finally dropTables("ivf_orph_members", "ivf_orph_centroids")
   }
 
   test("srpNearDupPairs ≡ brute-force hamming scan on fixture embeddings (pigeonhole)") {

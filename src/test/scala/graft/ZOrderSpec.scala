@@ -73,8 +73,8 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
       .sortWithinPartitions("l_partkey")
       .write.option("maxRecordsPerFile", 50L).mode("overwrite").parquet(xDir)
 
-    val gx = li.agg(max($"l_partkey")).head.getLong(0)
-    val gy = li.agg(max($"l_suppkey")).head.getLong(0)
+    val gx = li.agg(max($"l_partkey")).head().getLong(0)
+    val gy = li.agg(max($"l_suppkey")).head().getLong(0)
     // A box covering ~20% of x and ~10% of y.
     val (x0, x1) = (gx / 5, gx * 2 / 5)
     val (y0, y1) = (gy / 10, gy / 5)
