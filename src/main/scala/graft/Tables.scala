@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType, TimestampNTZType,
+  TimestampType}
 
 /** Shared helpers for the query surface: fixture loading plus the
   * determinism conventions that keep Spark results hash-identical to the
@@ -87,4 +88,13 @@ object Tables {
   /** Decimal cast of a double for exact arithmetic mid-expression. */
   def dec(c: Column, precision: Int = 18, scale: Int = 4): Column =
     c.cast(DecimalType(precision, scale))
+
+  /** A decimal as a double, through its canonical digit string: DuckDB's
+    * direct decimal->double on int128-backed values rounds twice (int ->
+    * double, then /10^scale) and lands one ulp off Spark's correctly-rounded
+    * BigDecimal path. A DECIMAL's digit string is exact (unlike a float's,
+    * which is renderer-dependent), and a string parse is correctly rounded
+    * in both engines.
+    */
+  def exactDouble(c: Column): Column = c.cast(StringType).cast(DoubleType)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -73,21 +72,11 @@ object CharShinglesImpl {
   * SparkEntry.oracleSql builds the same trigram set with a lateral
   * `generate_series`/`substr`).
   */
-case class CharShingles(child: Expression, n: Int) extends UnaryExpression {
+case class CharShingles(child: Expression, n: Int) extends UnaryExpression with StringInput {
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_char_shingles"
-
-  // Analysis-time type check (see PolyHash for rationale); NullType stays
-  // accepted — graft_char_shingles(NULL) is NULL, not an error.
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_char_shingles expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     CharShinglesImpl.shingles(input.asInstanceOf[UTF8String], n)

@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -18,8 +18,12 @@ import org.apache.spark.sql.types._
   * oracle-gateable where `TABLESAMPLE`/`rand()` never is. Two rows carrying
   * the SAME hash (a collision, or a re-observed key) deterministically keep
   * the MINIMUM value, the order-free tie rule.
+  *
+  * The sketch's one owner ([[SketchBuffer]]): [[HashSampleValues]] and the
+  * stream twin `EventStreams.hashSampleExact` read it out through
+  * [[sortedValues]].
   */
-final class HashSampleBuffer(val k: Int) {
+final class HashSampleBuffer(val k: Int) extends SketchBuffer[HashSampleBuffer] {
   val hashes = new Array[Long](k)
   val vals = new Array[Long](k)
   var n = 0
@@ -38,6 +42,44 @@ final class HashSampleBuffer(val k: Int) {
     hashes(ins) = h
     vals(ins) = v
     if (n < k) n += 1
+  }
+
+  /** The bounded pairwise union: insert every pair of `other`. */
+  override def merge(other: HashSampleBuffer): HashSampleBuffer = {
+    var i = 0
+    while (i < other.n) { insert(other.hashes(i), other.vals(i)); i += 1 }
+    this
+  }
+
+  override def encode(): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + 16 * n)
+    bb.putInt(n)
+    var i = 0
+    while (i < n) { bb.putLong(hashes(i)); bb.putLong(vals(i)); i += 1 }
+    bb.array()
+  }
+
+  /** The sampled values, sorted ASCENDING (the hash order that selected
+    * them is sampling machinery, not signal — positional quantile reads
+    * need the value order).
+    */
+  def sortedValues: Array[Long] = {
+    val out = java.util.Arrays.copyOf(vals, n)
+    java.util.Arrays.sort(out)
+    out
+  }
+}
+
+object HashSampleBuffer extends SketchCodec[HashSampleBuffer] {
+  override def empty(k: Int): HashSampleBuffer = new HashSampleBuffer(k)
+
+  override def decode(k: Int, bytes: Array[Byte]): HashSampleBuffer = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new HashSampleBuffer(k)
+    buf.n = bb.getInt
+    var i = 0
+    while (i < buf.n) { buf.hashes(i) = bb.getLong; buf.vals(i) = bb.getLong; i += 1 }
+    buf
   }
 }
 
@@ -62,6 +104,8 @@ final class HashSampleBuffer(val k: Int) {
   * MERGE (bounded pairwise union) — map-side combine ships one k-pair
   * sample per (group, partition) instead of the value column, the
   * distributed-quantile shape that never sorts or shuffles the data itself.
+  * Insert, merge and encoding are [[HashSampleBuffer]]'s; the output is its
+  * [[HashSampleBuffer.sortedValues]] readout.
   */
 case class HashSampleValues(
     hashChild: Expression,
@@ -69,11 +113,10 @@ case class HashSampleValues(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[HashSampleBuffer] {
+    extends SketchAggregate[HashSampleBuffer](HashSampleBuffer) {
   require(k >= 2, s"hash sample needs k >= 2, got $k")
 
   override def children: Seq[Expression] = Seq(hashChild, valueChild)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_hash_sample"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -86,49 +129,10 @@ case class HashSampleValues(
           s"${h.catalogString}, ${v.catalogString}")
     }
 
-  override def createAggregationBuffer(): HashSampleBuffer = new HashSampleBuffer(k)
+  override protected def insert(buf: HashSampleBuffer, h: Any, v: Any): Unit =
+    buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Long])
 
-  override def update(buf: HashSampleBuffer, input: InternalRow): HashSampleBuffer = {
-    val h = hashChild.eval(input)
-    val v = valueChild.eval(input)
-    if (h != null && v != null)
-      buf.insert(h.asInstanceOf[Long], v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: HashSampleBuffer, other: HashSampleBuffer): HashSampleBuffer = {
-    var i = 0
-    while (i < other.n) { buf.insert(other.hashes(i), other.vals(i)); i += 1 }
-    buf
-  }
-
-  /** The sampled values, sorted ASCENDING (the hash order that selected
-    * them is sampling machinery, not signal — positional quantile reads
-    * need the value order).
-    */
-  override def eval(buf: HashSampleBuffer): Any = {
-    val out = java.util.Arrays.copyOf(buf.vals, buf.n)
-    java.util.Arrays.sort(out)
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: HashSampleBuffer): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(4 + 16 * buf.n)
-    bb.putInt(buf.n)
-    var i = 0
-    while (i < buf.n) { bb.putLong(buf.hashes(i)); bb.putLong(buf.vals(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): HashSampleBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new HashSampleBuffer(k)
-    buf.n = n
-    var i = 0
-    while (i < n) { buf.hashes(i) = bb.getLong; buf.vals(i) = bb.getLong; i += 1 }
-    buf
-  }
+  override def eval(buf: HashSampleBuffer): Any = new GenericArrayData(buf.sortedValues)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HashSampleValues =
     copy(mutableAggBufferOffset = newOffset)

@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded k-minimum-values state: the `n` smallest DISTINCT hash values
@@ -14,8 +14,12 @@ import org.apache.spark.sql.types._
   * operations are set-based, so the state after any sequence of updates and
   * merges depends only on the SET of input values — partition-order
   * independent, which is what makes the sketch oracle-checkable.
+  *
+  * The sketch's one owner ([[SketchBuffer]]): [[KmvSketch]], [[KmvMinima]]
+  * and the stream twin `EventStreams.kmvDistinctExact` read it out through
+  * [[minima]] and [[kthAndEstimate]].
   */
-final class KmvBuffer(val k: Int) {
+final class KmvBuffer(val k: Int) extends SketchBuffer[KmvBuffer] {
   val mins = new Array[Long](k)
   var n = 0
 
@@ -31,16 +35,63 @@ final class KmvBuffer(val k: Int) {
     if (n < k) n += 1
   }
 
-  /** The sketch readout — (kth smallest hash, distinct estimate). ONE
-    * definition shared by the batch aggregate ([[KmvSketch]].eval) and the
-    * streaming state twin (EventStreams.kmvDistinctExact) so the two paths
-    * cannot drift: under k distinct hashes the sketch IS the value set
-    * (exact count); at k, Bar-Yossef's (k−1)·range/h_(k) with both operands
-    * integer-exact in a double.
+  /** The bounded union: insert every minimum of `other`. */
+  override def merge(other: KmvBuffer): KmvBuffer = {
+    var i = 0
+    while (i < other.n) { insert(other.mins(i)); i += 1 }
+    this
+  }
+
+  override def encode(): Array[Byte] = {
+    val bb = ByteBuffer.allocate(4 + 8 * n)
+    bb.putInt(n)
+    var i = 0
+    while (i < n) { bb.putLong(mins(i)); i += 1 }
+    bb.array()
+  }
+
+  /** The sketch itself: the `n` smallest distinct hashes, ascending. */
+  def minima: Array[Long] = java.util.Arrays.copyOf(mins, n)
+
+  /** (kth smallest hash, distinct estimate): under k distinct hashes the
+    * sketch IS the value set (exact count); at k, Bar-Yossef's
+    * (k−1)·range/h_(k) with both operands integer-exact in a double.
     */
   def kthAndEstimate(range: Long): (Long, Double) =
     if (n < k) (if (n == 0) 0L else mins(n - 1), n.toDouble)
     else (mins(k - 1), (k - 1).toDouble * range.toDouble / mins(k - 1).toDouble)
+}
+
+object KmvBuffer extends SketchCodec[KmvBuffer] {
+  override def empty(k: Int): KmvBuffer = new KmvBuffer(k)
+
+  override def decode(k: Int, bytes: Array[Byte]): KmvBuffer = {
+    val bb = ByteBuffer.wrap(bytes)
+    val buf = new KmvBuffer(k)
+    buf.n = bb.getInt
+    var i = 0
+    while (i < buf.n) { buf.mins(i) = bb.getLong; i += 1 }
+    buf
+  }
+}
+
+/** The one KMV aggregate body over a LONG hash column: [[KmvSketch]] and
+  * [[KmvMinima]] differ only in their output type and readout.
+  */
+abstract class KmvAggregate extends SketchAggregate[KmvBuffer](KmvBuffer) {
+  def child: Expression
+  require(k >= 2, s"KMV needs k >= 2, got $k")
+
+  override def children: Seq[Expression] = Seq(child)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case LongType | NullType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects a BIGINT hash column, got ${other.catalogString}")
+  }
+
+  override protected def insert(buf: KmvBuffer, a: Any, b: Any): Unit =
+    buf.insert(a.asInstanceOf[Long])
 }
 
 /** KMV (k-minimum-values / bottom-k) distinct-count sketch over a LONG hash
@@ -60,9 +111,10 @@ final class KmvBuffer(val k: Int) {
   * Scale posture: O(k) state per group, O(log k) per row, and partial
   * buffers MERGE (a k-way bounded union) — map-side combine ships one
   * k-long sketch per (group, partition) instead of the value set, the
-  * textbook distributed-distinct-count shape. Output:
-  * `struct(n_min INT, kth_hash LONG, estimate DOUBLE)` — `n_min` and
-  * `kth_hash` are integer-exact for the oracle, `estimate` the derived
+  * textbook distributed-distinct-count shape. Insert, merge and encoding
+  * are [[KmvBuffer]]'s; the output is its [[KmvBuffer.kthAndEstimate]]
+  * readout: `struct(n_min INT, kth_hash LONG, estimate DOUBLE)` — `n_min`
+  * and `kth_hash` are integer-exact for the oracle, `estimate` the derived
   * headline number.
   *
   * @param child LONG hash column (hash upstream — keeps the sketch
@@ -76,63 +128,19 @@ case class KmvSketch(
     range: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[KmvBuffer] {
-  require(k >= 2, s"KMV needs k >= 2, got $k")
+    extends KmvAggregate {
   require(range > 0 && range <= (1L << 52),
     s"range must fit a double exactly for the cross-engine estimate, got $range")
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_kmv_distinct"
   override def dataType: DataType = StructType(Seq(
     StructField("n_min", IntegerType, nullable = false),
     StructField("kth_hash", LongType, nullable = false),
     StructField("estimate", DoubleType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | NullType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_kmv_distinct expects a BIGINT hash column, got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): KmvBuffer = new KmvBuffer(k)
-
-  override def update(buf: KmvBuffer, input: InternalRow): KmvBuffer = {
-    val v = child.eval(input)
-    if (v != null) buf.insert(v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(buf: KmvBuffer, other: KmvBuffer): KmvBuffer = {
-    var i = 0
-    while (i < other.n) {
-      buf.insert(other.mins(i))
-      i += 1
-    }
-    buf
-  }
-
   override def eval(buf: KmvBuffer): Any = {
     val (kth, est) = buf.kthAndEstimate(range)
     InternalRow(buf.n, kth, est)
-  }
-
-  override def serialize(buf: KmvBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.n)
-    bb.putInt(buf.n)
-    var i = 0
-    while (i < buf.n) { bb.putLong(buf.mins(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): KmvBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new KmvBuffer(k)
-    buf.n = n
-    var i = 0
-    while (i < n) { buf.mins(i) = bb.getLong; i += 1 }
-    buf
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketch =
@@ -141,5 +149,36 @@ case class KmvSketch(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvSketch =
+    copy(child = newChildren.head)
+}
+
+/** The KMV sketch ITSELF — the k smallest distinct hashes, ascending — as an
+  * ARRAY<BIGINT>, where [[KmvSketch]] returns only the derived scalar
+  * summary. Materializing the value set is what makes sketches COMPOSABLE
+  * under set algebra: two groups' minima arrays merge into a union sketch,
+  * and their overlap estimates fall out with plain array functions
+  * ([[graft.operators.Sketches.kmvOverlap]] — Beyer et al., SIGMOD'07).
+  * Same [[KmvAggregate]] body and [[KmvBuffer]] state; the output is the
+  * buffer's [[KmvBuffer.minima]] readout, a pure function of the input set,
+  * so it stays oracle-gateable.
+  */
+case class KmvMinima(
+    child: Expression,
+    k: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends KmvAggregate {
+
+  override def prettyName: String = "graft_kmv_minima"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def eval(buf: KmvBuffer): Any = new GenericArrayData(buf.minima)
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): KmvMinima =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): KmvMinima =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): KmvMinima =
     copy(child = newChildren.head)
 }

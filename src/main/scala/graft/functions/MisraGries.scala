@@ -1,13 +1,12 @@
 package graft.functions
 
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,8 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * item's. Any item's stored count undercounts its true frequency by at
   * most n/(k+1), so every item with true frequency > n/(k+1) is GUARANTEED
   * resident, after any update order.
+  *
+  * The sketch's one owner ([[SketchBuffer]]): [[MisraGries]] and the stream
+  * twin `EventStreams.mgCandidatesStream` read it out through
+  * [[candidates]].
   */
-final class MgBuffer(val k: Int) {
+final class MgBuffer(val k: Int) extends SketchBuffer[MgBuffer] {
   val counts: mutable.HashMap[String, Long] = mutable.HashMap.empty
 
   def add(item: String, c: Long): Unit = {
@@ -41,9 +44,61 @@ final class MgBuffer(val k: Int) {
   }
 
   /** Subtract `d` from every resident count, dropping non-positives. */
-  def shiftDown(d: Long): Unit = {
+  private def shiftDown(d: Long): Unit = {
     if (d > 0L) counts.filterInPlace((_, v) => v - d > 0L)
       .mapValuesInPlace((_, v) => v - d)
+  }
+
+  /** Sums counts over the union, then restores the ≤ k bound by
+    * subtracting the (k+1)-largest combined count from everyone and
+    * dropping non-positives (Agarwal et al., "Mergeable Summaries",
+    * PODS'12 — errors add, the guarantee survives arbitrary merge trees).
+    */
+  override def merge(other: MgBuffer): MgBuffer = {
+    other.counts.foreach { case (item, c) =>
+      counts.update(item, counts.getOrElse(item, 0L) + c)
+    }
+    if (counts.size > k) {
+      // (k+1)-largest count = the largest d whose subtraction leaves ≤ k.
+      val sorted = counts.values.toArray
+      java.util.Arrays.sort(sorted)
+      shiftDown(sorted(sorted.length - (k + 1)))
+    }
+    this
+  }
+
+  override def encode(): Array[Byte] = {
+    val entries = counts.toArray
+    val bytes = entries.map { case (s, _) => s.getBytes(StandardCharsets.UTF_8) }
+    val bb = ByteBuffer.allocate(4 + bytes.map(_.length + 12).sum)
+    bb.putInt(entries.length)
+    entries.indices.foreach { i =>
+      bb.putInt(bytes(i).length)
+      bb.put(bytes(i))
+      bb.putLong(entries(i)._2)
+    }
+    bb.array()
+  }
+
+  /** The resident (item, stored count) pairs, sorted by item. */
+  def candidates: Array[(String, Long)] = counts.toArray.sortBy(_._1)
+}
+
+object MgBuffer extends SketchCodec[MgBuffer] {
+  override def empty(k: Int): MgBuffer = new MgBuffer(k)
+
+  override def decode(k: Int, bytes: Array[Byte]): MgBuffer = {
+    val bb = ByteBuffer.wrap(bytes)
+    val n = bb.getInt
+    val buf = new MgBuffer(k)
+    var i = 0
+    while (i < n) {
+      val arr = new Array[Byte](bb.getInt)
+      bb.get(arr)
+      buf.counts.update(new String(arr, StandardCharsets.UTF_8), bb.getLong)
+      i += 1
+    }
+    buf
   }
 }
 
@@ -56,10 +111,9 @@ final class MgBuffer(val k: Int) {
   * item with frequency > n/(k+1) — holds for every order, which is what
   * the exact second pass needs and what the property spec pins.
   *
-  * Merging two summaries sums counts over the union, then restores the ≤ k
-  * bound by subtracting the (k+1)-largest combined count from everyone and
-  * dropping non-positives (Agarwal et al., "Mergeable Summaries", PODS'12
-  * — errors add, the guarantee survives arbitrary merge trees).
+  * Insert, the mergeable-summaries merge ([[MgBuffer.merge]]) and encoding
+  * are [[MgBuffer]]'s; the output is the items of its
+  * [[MgBuffer.candidates]] readout.
   *
   * Scale posture: O(k) state per group, map-side-merged partials — the
   * 100 TB shape for "what are the frequent tokens": one bounded summary
@@ -70,11 +124,10 @@ case class MisraGries(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MgBuffer] {
+    extends SketchAggregate[MgBuffer](MgBuffer) {
   require(k >= 1, s"MisraGries needs k >= 1, got $k")
 
   override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_misra_gries"
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -84,64 +137,12 @@ case class MisraGries(
       s"graft_misra_gries expects a STRING column, got ${other.catalogString}")
   }
 
-  override def createAggregationBuffer(): MgBuffer = new MgBuffer(k)
+  // .toString copies out of the unsafe row — the buffer must own its keys.
+  override protected def insert(buf: MgBuffer, a: Any, b: Any): Unit =
+    buf.add(a.asInstanceOf[UTF8String].toString, 1L)
 
-  override def update(buf: MgBuffer, input: InternalRow): MgBuffer = {
-    val v = child.eval(input)
-    // .toString copies out of the unsafe row — the buffer must own its keys.
-    if (v != null) buf.add(v.asInstanceOf[UTF8String].toString, 1L)
-    buf
-  }
-
-  override def merge(buf: MgBuffer, other: MgBuffer): MgBuffer = {
-    other.counts.foreach { case (item, c) =>
-      val cur = buf.counts.getOrElse(item, 0L)
-      if (cur > 0L) buf.counts.update(item, cur + c)
-      else buf.counts.update(item, c) // may overflow size bound; fixed below
-    }
-    if (buf.counts.size > k) {
-      // (k+1)-largest count = the largest d whose subtraction leaves ≤ k.
-      val sorted = buf.counts.values.toArray
-      java.util.Arrays.sort(sorted)
-      buf.shiftDown(sorted(sorted.length - (k + 1)))
-    }
-    buf
-  }
-
-  override def eval(buf: MgBuffer): Any = {
-    val items = buf.counts.keysIterator.toArray
-    java.util.Arrays.sort(items, java.util.Comparator.naturalOrder[String]())
-    new GenericArrayData(items.map(UTF8String.fromString(_): Any))
-  }
-
-  override def serialize(buf: MgBuffer): Array[Byte] = {
-    val entries = buf.counts.toArray
-    val bytes = entries.map { case (s, _) => s.getBytes(StandardCharsets.UTF_8) }
-    val bb = java.nio.ByteBuffer.allocate(
-      4 + bytes.map(_.length + 12).sum)
-    bb.putInt(entries.length)
-    entries.indices.foreach { i =>
-      bb.putInt(bytes(i).length)
-      bb.put(bytes(i))
-      bb.putLong(entries(i)._2)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): MgBuffer = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new MgBuffer(k)
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf.counts.update(new String(arr, StandardCharsets.UTF_8), bb.getLong)
-      i += 1
-    }
-    buf
-  }
+  override def eval(buf: MgBuffer): Any =
+    new GenericArrayData(buf.candidates.map(c => UTF8String.fromString(c._1): Any))
 
   override def withNewMutableAggBufferOffset(newOffset: Int): MisraGries =
     copy(mutableAggBufferOffset = newOffset)

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static mirror the generated Java calls into (same pattern as
@@ -85,19 +84,11 @@ object PackedShinglesImpl {
   * length-prefixed byte comparisons and per-row heap churn on every
   * exchange, aggregate and intersection.
   */
-case class PackedShingles(child: Expression, n: Int) extends UnaryExpression {
+case class PackedShingles(child: Expression, n: Int) extends UnaryExpression with StringInput {
   require(n >= 1 && n <= 3, s"packed shingle width must be in [1, 3], got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_packed_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_packed_shingles expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     PackedShinglesImpl.shingles(input.asInstanceOf[UTF8String], n)

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared implementation of the deterministic polynomial string hash
@@ -40,22 +39,10 @@ object PolyHashImpl {
   * so values are bit-identical to the HOF version and to the DuckDB oracle
   * (proved in TextOpsSpec).
   */
-case class PolyHash(child: Expression, base: Long) extends UnaryExpression {
+case class PolyHash(child: Expression, base: Long) extends UnaryExpression with StringInput {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_poly_hash"
-
-  // Analysis-time type check: without it a SQL call like
-  // graft_poly_hash(42) would pass resolution and die at execution with a
-  // codegen/ClassCastException instead of a clear AnalysisException.
-  // NullType stays accepted — graft_poly_hash(NULL) is NULL, not an error.
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_poly_hash expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     PolyHashImpl.hash(input.asInstanceOf[UTF8String], base)

@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static mirror the generated Java calls into (the [[PolyHashImpl]]
@@ -60,21 +59,13 @@ object TokenClassCountsImpl {
   * the one thing actually required: a single compiled scan with three
   * counters.
   */
-case class TokenClassCounts(child: Expression) extends UnaryExpression {
+case class TokenClassCounts(child: Expression) extends UnaryExpression with StringInput {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_word", IntegerType, nullable = false),
     StructField("n_digit", IntegerType, nullable = false),
     StructField("n_punct", IntegerType, nullable = false)))
   override def prettyName: String = "graft_token_class_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_token_class_counts expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     TokenClassCountsImpl.counts(input.asInstanceOf[UTF8String])

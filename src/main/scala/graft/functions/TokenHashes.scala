@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Static mirror the generated Java calls into (same pattern as
@@ -60,18 +59,10 @@ object TokenHashesImpl {
   * `wide` selects the 60-bit two-base combination ([[graft.operators
   * .TextOps.wideHash]]).
   */
-case class TokenHashes(child: Expression, wide: Boolean) extends UnaryExpression {
+case class TokenHashes(child: Expression, wide: Boolean) extends UnaryExpression with StringInput {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_token_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_token_hashes expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     TokenHashesImpl.hashes(input.asInstanceOf[UTF8String], wide)

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared implementation of fused distinct-window wide-hashing: the 60-bit
@@ -90,21 +89,11 @@ object WindowHashesImpl {
   * whose `transform(charShingles(…), wideHash)` formulation was the
   * dominant interpreted cost of both queries.
   */
-case class WindowHashes(child: Expression, n: Int) extends UnaryExpression {
+case class WindowHashes(child: Expression, n: Int) extends UnaryExpression with StringInput {
   require(n >= 2, s"window width must be >= 2, got $n")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_window_hashes"
-
-  // Analysis-time type check (see PolyHash for rationale); NullType stays
-  // accepted — graft_window_hashes(NULL) is NULL, not an error.
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_window_hashes expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     WindowHashesImpl.hashes(input.asInstanceOf[UTF8String], n)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -77,19 +76,11 @@ object WordShinglesImpl {
   * this runs one compiled O(bytes) scan and emits zero-copy slices — the
   * shingling stage of the MinHash dedup path and its verification joins.
   */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, n: Int) extends UnaryExpression with StringInput {
   require(n >= 1, s"shingle width must be >= 1, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_word_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_word_shingles expects a STRING argument, got ${other.catalogString}")
-    }
 
   override protected def nullSafeEval(input: Any): Any =
     WordShinglesImpl.shingles(input.asInstanceOf[UTF8String], n)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.meta.Ckpt.Syntax
 import graft.meta.IndexTables
 import scala.collection.immutable.ArraySeq
+import graft.Tables.{dec, exactDouble}
 
 /** Corpus-curation operators for training-data pipelines: repetition-based
   * quality filtering (the Gopher/RefinedWeb "most frequent n-gram covers too
@@ -1627,19 +1628,16 @@ object CorpusOps {
   def classBalance(df: DataFrame, groupCol: String, classCol: String): DataFrame = {
     val counts = df.select(col(groupCol).as("g"), col(classCol).as("cls"))
       .groupBy(col("g"), col("cls")).agg(count(lit(1)).as("c"))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     counts.groupBy(col("g"))
       .agg(sum(col("c")).as("n"), count(lit(1)).as("n_classes"),
-        sum(d18(col("c")) * d19(col("c"))).cast("decimal(38,0)").as("sq_sum"))
+        sum(dec(col("c"), 18, 0) * dec(col("c"), 19, 0)).cast("decimal(38,0)").as("sq_sum"))
       .select(col("g").as(groupCol), col("n"), col("n_classes"),
         col("sq_sum").cast("string").as("sq_sum"),
-        (dbl(col("sq_sum")) /
-          dbl((d18(col("n")) * d19(col("n"))).cast("decimal(38,0)")))
+        (exactDouble(col("sq_sum")) /
+          exactDouble((dec(col("n"), 18, 0) * dec(col("n"), 19, 0)).cast("decimal(38,0)")))
           .as("simpson"),
-        (dbl((d18(col("n")) * d19(col("n"))).cast("decimal(38,0)")) /
-          dbl(col("sq_sum"))).as("enc"))
+        (exactDouble((dec(col("n"), 18, 0) * dec(col("n"), 19, 0)).cast("decimal(38,0)")) /
+          exactDouble(col("sq_sum"))).as("enc"))
   }
 
   /** Per-source Gini coefficient of token-frequency CONCENTRATION — the
@@ -1678,19 +1676,16 @@ object CorpusOps {
     val ranked = counts
       .withColumn("i", row_number().over(w).cast("long"))
       .withColumn("m", count(lit(1)).over(wAll))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     ranked.groupBy(col("src"))
       .agg(
         max(col("m")).as("m_tokens"),
         sum(col("c")).as("total_tokens"),
-        sum(d19(lit(2L) * col("i") - col("m") - 1L) * d18(col("c")))
+        sum(dec(lit(2L) * col("i") - col("m") - 1L, 19, 0) * dec(col("c"), 18, 0))
           .cast("decimal(38,0)").as("gini_num"))
       .select(col("src").as(sourceCol), col("m_tokens"), col("total_tokens"),
         col("gini_num").cast("string").as("gini_num"),
-        (dbl(col("gini_num")) /
-          dbl((d18(col("m_tokens")) * d19(col("total_tokens")))
+        (exactDouble(col("gini_num")) /
+          exactDouble((dec(col("m_tokens"), 18, 0) * dec(col("total_tokens"), 19, 0))
             .cast("decimal(38,0)"))).as("gini"))
   }
 
@@ -1743,16 +1738,13 @@ object CorpusOps {
     val cb = counts(dfB)
     val na = ca.agg(sum(col("c")).as("na"))
     val nb = cb.agg(sum(col("c")).as("nb"))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     val joined = ca.withColumnRenamed("c", "c_a")
       .join(cb.withColumnRenamed("c", "c_b"), Seq("tok"), "full_outer")
       .na.fill(0L, Seq("c_a", "c_b"))
       .crossJoin(broadcast(na)).crossJoin(broadcast(nb))
       .select(col("tok"), col("c_a"), col("c_b"),
-        abs(d18(col("c_a")) * d19(col("nb")) -
-          d18(col("c_b")) * d19(col("na")))
+        abs(dec(col("c_a"), 18, 0) * dec(col("nb"), 19, 0) -
+          dec(col("c_b"), 18, 0) * dec(col("na"), 19, 0))
           .cast("decimal(38,0)").as("num"),
         col("na"), col("nb"))
     // Tie-complete boundary cut on the hash-keyed table: keep every token
@@ -1784,8 +1776,8 @@ object CorpusOps {
       .select(col("rnk").cast("int").as("rnk"), col("token"),
         col("c_a"), col("c_b"),
         col("num").cast("string").as("shift_num"),
-        (dbl(col("num")) /
-          dbl((d18(col("na")) * d19(col("nb"))).cast("decimal(38,0)")))
+        (exactDouble(col("num")) /
+          exactDouble((dec(col("na"), 18, 0) * dec(col("nb"), 19, 0)).cast("decimal(38,0)")))
           .as("shift"))
   }
 
@@ -1922,22 +1914,20 @@ object CorpusOps {
     val tot = cs.groupBy(col("tok")).agg(sum(col("c")).as("t"))
     val ns = cs.groupBy(col("src")).agg(sum(col("c")).as("n"))
     val tt = cs.agg(sum(col("c")).as("tt"))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
     val pres = cs.join(tot, Seq("tok"))
       .join(broadcast(ns), Seq("src"))
       .crossJoin(broadcast(tt))
       .groupBy(col("src"))
       .agg(
-        sum(abs(d18(col("c")) * d19(col("tt") - col("n")) -
-          d18(col("t") - col("c")) * d19(col("n")))).as("num_present"),
+        sum(abs(dec(col("c"), 18, 0) * dec(col("tt") - col("n"), 19, 0) -
+          dec(col("t") - col("c"), 18, 0) * dec(col("n"), 19, 0))).as("num_present"),
         sum(col("t")).as("t_present"))
     val f = pres.join(broadcast(ns), Seq("src")).crossJoin(broadcast(tt))
       .select(col("src").as(sourceCol),
         col("n").as("n_tokens"),
         (col("tt") - col("n")).as("m_tokens"),
         (col("num_present") +
-          d18(col("n")) * d19(col("tt") - col("t_present")))
+          dec(col("n"), 18, 0) * dec(col("tt") - col("t_present"), 19, 0))
           .cast("decimal(38,0)").as("tvd_num"))
     f.withColumn("tvd",
       when(col("m_tokens") === 0L, lit(null).cast("double"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.meta.IndexTables
+import graft.Tables.{dec, exactDouble}
 
 /** Data-governance operators: retention sweeps and right-to-be-forgotten
   * (RTBF/GDPR-delete) over a training corpus AND the derived index tables.
@@ -288,9 +289,6 @@ object GovernanceOps {
     val glob = cs.groupBy(col("sv")).agg(sum(col("c")).as("cg"))
     val ns = cs.groupBy(qi: _*).agg(sum(col("c")).as("n"))
     val nAll = cs.agg(sum(col("c")).as("nn"))
-    def d18(c: org.apache.spark.sql.Column) = c.cast("decimal(18,0)")
-    def d19(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
-    def dbl(c: org.apache.spark.sql.Column) = c.cast("string").cast("double")
     // NULL-SAFE (<=>) join keys throughout — still planned as hash joins
     // (EqualNullSafe is an equi-join key to Catalyst). A NULL sensitive
     // value is a legitimate category (its mass must not silently migrate
@@ -305,26 +303,26 @@ object GovernanceOps {
       .crossJoin(broadcast(nAll))
       .groupBy(qi: _*)
       .agg(
-        sum(abs(d18(col("c")) * d19(col("nn")) -
-          d18(col("cg")) * d19(col("n")))).as("num_present"),
+        sum(abs(dec(col("c"), 18, 0) * dec(col("nn"), 19, 0) -
+          dec(col("cg"), 18, 0) * dec(col("n"), 19, 0))).as("num_present"),
         sum(col("cg")).as("cg_present"))
     pres.join(nsR, qiEq).drop(quasiCols.map(c => s"${c}__tc"): _*)
       .crossJoin(broadcast(nAll))
       .select(qi ++ Seq(
         col("n").as("group_size"),
         (col("num_present") +
-          d18(col("n")) * d19(col("nn") - col("cg_present")))
+          dec(col("n"), 18, 0) * dec(col("nn") - col("cg_present"), 19, 0))
           .cast("decimal(38,0)").as("t_num"),
         col("n"), col("nn")): _*)
       .select(qi ++ Seq(
         col("group_size"),
         col("t_num").cast("string").as("t_num"),
-        (dbl(col("t_num")) /
+        (exactDouble(col("t_num")) /
           (lit(2.0) * col("n").cast("double") * col("nn").cast("double")))
           .as("t_closeness"),
         // IEEE chain on exact operands — identical across engines, so the
         // flag itself hash-gates.
-        (dbl(col("t_num")) * lit(tDen.toDouble) >
+        (exactDouble(col("t_num")) * lit(tDen.toDouble) >
           lit(2.0 * tNum) * col("n").cast("double") * col("nn").cast("double"))
           .as("t_risk")): _*)
   }

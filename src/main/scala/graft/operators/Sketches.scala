@@ -10,6 +10,13 @@ import org.apache.spark.sql.Column
   * input value set), unlike `approx_count_distinct`'s HLL registers — which
   * is what lets each sketch carry a DuckDB oracle twin and a hash-exact
   * correctness gate.
+  *
+  * Each aggregate here is a [[graft.functions.SketchAggregate]] over one
+  * sketch buffer ([[graft.functions.KmvBuffer]],
+  * [[graft.functions.HashSampleBuffer]], [[graft.functions.MgBuffer]]) that
+  * owns insert, merge, encoding and readout; the stream twins in
+  * [[graft.streaming.EventStreams]] keep the same buffer's encoding as
+  * their state and close through the same readout.
   */
 object Sketches {
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.meta.Ckpt.Syntax
+import graft.Tables.{dec, exactDouble}
 
 /** Distribution-level quality statistics for curation pipelines — the
   * z-score outlier screen every metrics/telemetry ingest runs before
@@ -82,20 +83,15 @@ object StatOps {
       sum(x).as("sx"), sum(y).as("sy"),
       sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
     val nD = col("n").cast("double")
-    // decimal -> double routes through the canonical digit string: DuckDB's
-    // direct decimal->double on int128-backed values rounds twice (int ->
-    // double, then /10^scale) and lands one ulp off Spark's correctly-rounded
-    // BigDecimal path. A DECIMAL's digit string is exact (unlike a float's,
-    // which is renderer-dependent), and a string parse is correctly rounded
-    // in both engines.
-    def dbl(c: String) = col(c).cast("string").cast("double")
-    val num = nD * dbl("sxy") - dbl("sx") * dbl("sy")
+    val Seq(sx, sy, sxx, syy, sxy) =
+      Seq("sx", "sy", "sxx", "syy", "sxy").map(c => exactDouble(col(c)))
+    val num = nD * sxy - sx * sy
     // n·Σx² − (Σx)² is ≥ 0 exactly but computed in doubles: for a near-
     // constant column it can round to a tiny NEGATIVE, where sqrt yields
     // NaN and `=!= 0` stays true — clamp at 0 and gate on > 0 so the
     // degenerate-group contract (NULL, never NaN) actually holds.
-    val den = sqrt(greatest(lit(0.0), nD * dbl("sxx") - dbl("sx") * dbl("sx"))) *
-      sqrt(greatest(lit(0.0), nD * dbl("syy") - dbl("sy") * dbl("sy")))
+    val den = sqrt(greatest(lit(0.0), nD * sxx - sx * sx)) *
+      sqrt(greatest(lit(0.0), nD * syy - sy * sy))
     agg.select(groupCols.map(col) ++ Seq(col("n"),
       when(den > 0.0, num / den).as("corr_xy"),
       when(col("n") > 1, num / (nD * (nD - lit(1.0)))).as("cov_samp")): _*)
@@ -178,18 +174,19 @@ object StatOps {
       sum(x).as("sx"), sum(y).as("sy"),
       sum(x * x).as("sxx"), sum(y * y).as("syy"), sum(x * y).as("sxy"))
     val nD = col("n").cast("double")
-    def dbl(c: String) = col(c).cast("string").cast("double") // see correlation
-    val num = nD * dbl("sxy") - dbl("sx") * dbl("sy")
+    val Seq(sx, sy, sxx, syy, sxy) =
+      Seq("sx", "sy", "sxx", "syy", "sxy").map(c => exactDouble(col(c)))
+    val num = nD * sxy - sx * sy
     // Same rounding hazard as correlation's den: the exact value is ≥ 0, so
     // a negative double is pure cancellation noise from a (near-)constant
     // column — gate on > 0 so degenerate groups report NULL, not a
     // noise-sign slope/r2.
-    val denX = nD * dbl("sxx") - dbl("sx") * dbl("sx")
-    val denY = nD * dbl("syy") - dbl("sy") * dbl("sy")
+    val denX = nD * sxx - sx * sx
+    val denY = nD * syy - sy * sy
     val slope = num / denX
     agg.select(groupCols.map(col) ++ Seq(col("n"),
       when(denX > 0.0, slope).as("slope"),
-      when(denX > 0.0, (dbl("sy") - slope * dbl("sx")) / nD).as("intercept"),
+      when(denX > 0.0, (sy - slope * sx) / nD).as("intercept"),
       when(denX > 0.0 && denY > 0.0, num * num / (denX * denY)).as("r2")): _*)
   }
 
@@ -711,11 +708,12 @@ object StatOps {
         pairs.map { case (a, b) => sum(q(a) * q(b)).as(s"sx_${a}_$b") }
     val m = df.agg(count(lit(1)).as("n"), aggs: _*)
     val nD = col("n").cast("double")
-    def dbl(c: String) = col(c).cast("string").cast("double")
     val rows = pairs.map { case (a, b) =>
-      val num = nD * dbl(s"sx_${a}_$b") - dbl(s"s_$a") * dbl(s"s_$b")
-      val den = sqrt(greatest(lit(0.0), nD * dbl(s"ss_$a") - dbl(s"s_$a") * dbl(s"s_$a"))) *
-        sqrt(greatest(lit(0.0), nD * dbl(s"ss_$b") - dbl(s"s_$b") * dbl(s"s_$b")))
+      val Seq(sa, sb, ssa, ssb, sab) =
+        Seq(s"s_$a", s"s_$b", s"ss_$a", s"ss_$b", s"sx_${a}_$b").map(c => exactDouble(col(c)))
+      val num = nD * sab - sa * sb
+      val den = sqrt(greatest(lit(0.0), nD * ssa - sa * sa)) *
+        sqrt(greatest(lit(0.0), nD * ssb - sb * sb))
       struct(lit(a).as("col_x"), lit(b).as("col_y"), col("n").as("n"),
         when(den > 0.0, num / den).as("corr_xy"))
     }
@@ -804,19 +802,16 @@ object StatOps {
     val hi = col("n") - lo
     val keep = greatest(lit(0L),
       least(col("cum") + col("m"), hi) - greatest(col("cum"), lo))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     lvl.withColumn("keep", keep)
       .groupBy(col("grp"))
       .agg(max(col("n")).as("n"),
         sum(col("keep")).as("n_kept"),
-        sum(d18(col("keep")) * d19(col("v"))).cast("decimal(38,0)")
+        sum(dec(col("keep"), 18, 0) * dec(col("v"), 19, 0)).cast("decimal(38,0)")
           .as("trim_sum"))
       .select(col("grp").as(groupCol), col("n"), col("n_kept"),
         col("trim_sum").cast("string").as("trim_sum"),
         when(col("n_kept") === 0L, lit(null).cast("double"))
-          .otherwise(dbl(col("trim_sum")) /
+          .otherwise(exactDouble(col("trim_sum")) /
             (col("n_kept").cast("double") * lit(unit))).as("trimmed_mean"))
   }
 
@@ -858,9 +853,6 @@ object StatOps {
         .select(col("g"), col(vc),
           (lit(2L) * col("cum") + col("m") + 1L).as(s"r2_$vc"))
     }
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     val joined = base
       .join(midranks("x"), Seq("g", "x"))
       .join(midranks("y"), Seq("g", "y"))
@@ -870,9 +862,9 @@ object StatOps {
         (col("r2_y") - (col("n") + 1L)).as("uy"))
     joined.groupBy(col("g"))
       .agg(max(col("n")).as("n"),
-        sum(d18(col("ux")) * d19(col("uy"))).cast("decimal(38,0)").as("sxy"),
-        sum(d18(col("ux")) * d19(col("ux"))).cast("decimal(38,0)").as("sxx"),
-        sum(d18(col("uy")) * d19(col("uy"))).cast("decimal(38,0)").as("syy"))
+        sum(dec(col("ux"), 18, 0) * dec(col("uy"), 19, 0)).cast("decimal(38,0)").as("sxy"),
+        sum(dec(col("ux"), 18, 0) * dec(col("ux"), 19, 0)).cast("decimal(38,0)").as("sxx"),
+        sum(dec(col("uy"), 18, 0) * dec(col("uy"), 19, 0)).cast("decimal(38,0)").as("syy"))
       .select(col("g").as(groupCol), col("n"),
         // Pins exposed as digit strings, not DECIMAL(38,0) — see
         // [[trimmedMean]]'s r15 drift note.
@@ -880,8 +872,8 @@ object StatOps {
         col("sxx").cast("string").as("sxx"),
         col("syy").cast("string").as("syy"),
         when(col("sxx") === 0 || col("syy") === 0, lit(null).cast("double"))
-          .otherwise(dbl(col("sxy")) /
-            sqrt(dbl(col("sxx")) * dbl(col("syy")))).as("rho"))
+          .otherwise(exactDouble(col("sxy")) /
+            sqrt(exactDouble(col("sxx")) * exactDouble(col("syy")))).as("rho"))
   }
 
   /** Per-group two-sample KOLMOGOROV–SMIRNOV drift of an integral measure
@@ -970,22 +962,19 @@ object StatOps {
       .crossJoin(broadcast(nAll))
     val w = Window.partitionBy(col("g")).orderBy(col("v").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     val cum = grid
       .withColumn("cum_c", sum(col("c")).over(w))
       .withColumn("cum_t", sum(col("t")).over(w))
     cum.groupBy(col("g"))
       .agg(max(col("n")).as("n"), max(col("nn") - col("n")).as("n_rest"),
-        max(abs(d18(col("cum_c")) * d19(col("nn") - col("n")) -
-            d18(col("cum_t") - col("cum_c")) * d19(col("n"))))
+        max(abs(dec(col("cum_c"), 18, 0) * dec(col("nn") - col("n"), 19, 0) -
+            dec(col("cum_t") - col("cum_c"), 18, 0) * dec(col("n"), 19, 0)))
           .cast("decimal(38,0)").as("ks_num"))
       .select(col("g").as(groupCol), col("n"), col("n_rest"),
         col("ks_num").cast("string").as("ks_num"),
         when(col("n_rest") === 0L, lit(null).cast("double"))
-          .otherwise(dbl(col("ks_num")) /
-            dbl((d18(col("n")) * d19(col("n_rest"))).cast("decimal(38,0)")))
+          .otherwise(exactDouble(col("ks_num")) /
+            exactDouble((dec(col("n"), 18, 0) * dec(col("n_rest"), 19, 0)).cast("decimal(38,0)")))
           .as("ks"))
   }
 

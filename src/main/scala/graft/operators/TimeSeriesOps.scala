@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables.{dec, exactDouble}
 
 /** Time-series regularization primitives: turning an irregular observation
   * table into the dense, gap-free series downstream window/feature logic
@@ -199,9 +200,6 @@ object TimeSeriesOps {
     val perWin = df.select((keys :+ win.as("graft_w")): _*)
       .groupBy((keys :+ col("graft_w")): _*)
       .agg(count(lit(1)).as("graft_c"))
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     // Σc² accumulates in LONG (exact while a window holds < 3·10⁹ rows
     // and the square mass < 9·10¹⁸); the cross-products then take the
     // (18,0)×(19,0) decimal route — precision 38, never the lossy ≥39
@@ -211,14 +209,14 @@ object TimeSeriesOps {
         sum(col("graft_c")).as("n_events"),
         sum(col("graft_c") * col("graft_c")).as("graft_cc"))
       .select((keys :+ col("n_windows") :+ col("n_events") :+
-        (d18(col("n_windows")) * d19(col("graft_cc")) -
-          d18(col("n_events")) * d19(col("n_events")))
+        (dec(col("n_windows"), 18, 0) * dec(col("graft_cc"), 19, 0) -
+          dec(col("n_events"), 18, 0) * dec(col("n_events"), 19, 0))
           .cast("decimal(38,0)").as("fano_num") :+
-        (d18(col("n_windows")) * d19(col("n_events")))
+        (dec(col("n_windows"), 18, 0) * dec(col("n_events"), 19, 0))
           .cast("decimal(38,0)").as("fano_den")): _*)
       .withColumn("fano",
         when(col("fano_den") === 0, lit(null).cast("double"))
-          .otherwise(dbl(col("fano_num")) / dbl(col("fano_den"))))
+          .otherwise(exactDouble(col("fano_num")) / exactDouble(col("fano_den"))))
       .withColumn("fano_num", col("fano_num").cast("string"))
       .withColumn("fano_den", col("fano_den").cast("string"))
   }
@@ -269,26 +267,23 @@ object TimeSeriesOps {
     val stats = base.groupBy(keys: _*)
       .agg(count(lit(1)).as("graft_n"), sum(col("graft_v")).as("graft_s"))
     val w = Window.partitionBy(keys: _*).orderBy(ordCols: _*)
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def d19(c: Column) = c.cast("decimal(19,0)")
     val withU = base.join(broadcast(stats), keyCols)
       .withColumn("graft_u", col("graft_n") * col("graft_v") - col("graft_s"))
     val withLeads = (1 to maxLag).foldLeft(withU) { (d, lag) =>
       d.withColumn(s"graft_u$lag", lead(col("graft_u"), lag).over(w))
     }
     val aggs =
-      sum(d18(col("graft_u")) * d19(col("graft_u"))).as("acf_den") +:
+      sum(dec(col("graft_u"), 18, 0) * dec(col("graft_u"), 19, 0)).as("acf_den") +:
         (1 to maxLag).map(lag =>
-          coalesce(sum(d18(col("graft_u")) * d19(col(s"graft_u$lag"))),
+          coalesce(sum(dec(col("graft_u"), 18, 0) * dec(col(s"graft_u$lag"), 19, 0)),
             lit(0).cast("decimal(38,0)")).as(s"c$lag"))
     val agg = withLeads.groupBy(keys: _*)
       .agg(max(col("graft_n")).as("n"), aggs: _*)
-    def dbl(c: Column) = c.cast("string").cast("double")
     val withR = (1 to maxLag).foldLeft(agg) { (d, lag) =>
       d.withColumn(s"r$lag",
         when(col("acf_den") === 0 || col("n") <= lag,
           lit(null).cast("double"))
-          .otherwise(dbl(col(s"c$lag")) / dbl(col("acf_den"))))
+          .otherwise(exactDouble(col(s"c$lag")) / exactDouble(col("acf_den"))))
     }
     ("acf_den" +: (1 to maxLag).map(l => s"c$l")).foldLeft(withR) {
       (d, c) => d.withColumn(c, col(c).cast("string"))

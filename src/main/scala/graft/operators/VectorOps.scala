@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.meta.Ckpt.Syntax
 import graft.meta.IndexTables
 import scala.collection.immutable.ArraySeq
+import graft.Tables.{dec, exactDouble}
 
 /** Embedding-vector operators over ARRAY<FLOAT> columns (Spark has no native
   * vector type): cosine similarity, brute-force top-k, and an IVF-style
@@ -1032,18 +1033,16 @@ object VectorOps {
       zip_with(asDouble(col("vec")), col("graft_cvec"),
         (x, y) => (q(x) - q(y)) * (q(x) - q(y))),
       lit(0L), (a, x) => a + x)
-    def d18(c: Column) = c.cast("decimal(18,0)")
-    def dbl(c: Column) = c.cast("string").cast("double")
     assignWithVec(data, centroids, idCol, vecCol)
       .filter(col("cluster_id").isNotNull)
       .join(broadcast(cen), Seq("cluster_id"))
       .select(col("cluster_id"), rowSq.as("graft_sq"))
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n"),
-        sum(d18(col("graft_sq"))).cast("decimal(38,0)").as("inertia_num"))
+        sum(dec(col("graft_sq"), 18, 0)).cast("decimal(38,0)").as("inertia_num"))
       .select(col("cluster_id"), col("n"),
         col("inertia_num").cast("string").as("inertia_num"),
-        (dbl(col("inertia_num")) / lit(unit * unit)).as("inertia"))
+        (exactDouble(col("inertia_num")) / lit(unit * unit)).as("inertia"))
   }
 
   /** Contiguous subvector `s` of `m` equal splits of a `dim`-wide vector

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.{HashSampleBuffer, KmvBuffer, MgBuffer, SketchBuffer, SketchCodec}
+
 /** Structured Streaming twins of the batch event operators
   * ([[graft.queries.EventQueries]] `q_event_windows` / `q_sessionize`):
   * same logical aggregation, expressed over an unbounded source with
@@ -13,7 +15,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The keyed-state operators that emit once per key when its event-time
   * horizon closes all run through one protocol, [[closeAtHorizon]]; each
-  * supplies only its key, event time, zero state, fold and close.
+  * supplies only its key, event time, zero state, fold and close. The
+  * three sketch twins hold their batch aggregate's encoded buffer as that
+  * state ([[sketchAtHorizon]]).
   */
 object EventStreams {
 
@@ -293,6 +297,24 @@ object EventStreams {
           }
       }
   }
+
+  /** [[closeAtHorizon]] over a bounded sketch: the state is the sketch
+    * buffer's encoding ([[graft.functions.SketchBuffer]]), the codec the
+    * batch aggregate's shuffle partials use. A fold decodes the state,
+    * inserts the batch's rows and encodes it again; a close decodes it and
+    * hands the buffer to `close` for the aggregate's own readout.
+    */
+  private def sketchAtHorizon[E, K: Encoder, B <: SketchBuffer[B], O: Encoder](
+      events: Dataset[E], horizonSec: Long)(
+      key: E => K, eventMs: E => Long, codec: SketchCodec[B], k: Int)(
+      insert: (B, E) => Unit)(
+      close: (K, B) => Iterator[O]): Dataset[O] =
+    closeAtHorizon(events, horizonSec)(key, eventMs, codec.empty(k).encode())(
+        (bytes, rows) => {
+          val buf = codec.decode(k, bytes)
+          rows.foreach(insert(buf, _))
+          buf.encode()
+        })((key, bytes) => close(key, codec.decode(k, bytes)))
 
   /** A count-map fold: one increment per item `items` yields for a row.
     * Increments commute, so the map is a function of the item multiset —
@@ -881,15 +903,16 @@ object EventStreams {
     * anchors: the sample is a commutative, idempotent function of the
     * (hash, value) SET (bounded pairwise union, duplicate hashes keep the
     * minimum value), so it folds incrementally under any arrival order,
-    * state is O(k) pairs per key by construction (the bottom-k hashes and
-    * their values as parallel seqs, hash ascending), and any micro-batch
+    * state is O(k) pairs per key by construction, and any micro-batch
     * slicing of a replay lands on the identical sample.
     *
-    * Determinism: inserts go through the SAME
-    * [[graft.functions.HashSampleBuffer]] the batch aggregate uses, and the
-    * readout is the same ascending value sort — a replayed stream's sample
-    * is bit-identical to the batch sample of the same rows (pinned in
-    * EventStreamsSpec with a disorder replay).
+    * Determinism: the state is the encoded
+    * [[graft.functions.HashSampleBuffer]] the batch aggregate merges
+    * ([[sketchAtHorizon]]), and the close is the buffer's
+    * [[graft.functions.HashSampleBuffer.sortedValues]] readout, the batch
+    * `eval`'s — a replayed stream's sample is bit-identical to the batch
+    * sample of the same rows (pinned in EventStreamsSpec with a disorder
+    * replay).
     */
   def hashSampleExact(
       events: Dataset[SampleEvent],
@@ -898,22 +921,9 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[SampleOut] = {
     import events.sparkSession.implicits._
     require(k >= 2, s"k must be >= 2, got $k")
-    def load(s: (Seq[Long], Seq[Long])): graft.functions.HashSampleBuffer = {
-      val buf = new graft.functions.HashSampleBuffer(k)
-      s._1.lazyZip(s._2).foreach((h, v) => buf.insert(h, v))
-      buf
-    }
-    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
-        _.key, _.ts / 1000L, (Seq.empty[Long], Seq.empty[Long]))(
-        (s, rows) => {
-          val buf = load(s)
-          rows.foreach(e => buf.insert(e.h, e.v))
-          (buf.hashes.take(buf.n).toVector, buf.vals.take(buf.n).toVector)
-        }) { (key, s) =>
-      val buf = load(s)
-      val out = java.util.Arrays.copyOf(buf.vals, buf.n)
-      java.util.Arrays.sort(out)
-      Iterator.single(SampleOut(key, buf.n, out.toSeq))
+    sketchAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, HashSampleBuffer, k)((buf, e) => buf.insert(e.h, e.v)) {
+      (key, buf) => Iterator.single(SampleOut(key, buf.n, buf.sortedValues.toSeq))
     }
   }
 
@@ -929,16 +939,16 @@ object EventStreams {
     * idempotent function of the value SET (a bounded union of minima), so
     * unlike the ordered funnel chain it folds incrementally under any
     * arrival order and disorder costs nothing. State per key is the
-    * bottom-k distinct hashes, sorted ascending — O(k) longs, period: not
-    * bounded-by-horizon like the buffers, bounded by construction; a key's
-    * final sketch emits once the watermark passes its horizon deadline.
+    * bottom-k distinct hashes — O(k) longs, period: not bounded-by-horizon
+    * like the buffers, bounded by construction; a key's final sketch emits
+    * once the watermark passes its horizon deadline.
     *
-    * Determinism: inserts go through the SAME [[graft.functions.KmvBuffer]]
-    * the batch aggregate uses, and the readout shares
-    * [[graft.functions.KmvBuffer.kthAndEstimate]] — a replayed stream's
-    * sketch is bit-identical to the batch sketch of the same rows, whatever
-    * the micro-batch slicing (pinned in EventStreamsSpec with a
-    * disorder-replay).
+    * Determinism: the state is the encoded [[graft.functions.KmvBuffer]]
+    * the batch aggregate merges ([[sketchAtHorizon]]), and the close is the
+    * buffer's [[graft.functions.KmvBuffer.kthAndEstimate]] readout, the
+    * batch `eval`'s — a replayed stream's sketch is bit-identical to the
+    * batch sketch of the same rows, whatever the micro-batch slicing
+    * (pinned in EventStreamsSpec with a disorder-replay).
     */
   def kmvDistinctExact(
       events: Dataset[KmvEvent],
@@ -948,19 +958,8 @@ object EventStreams {
       lateSec: Long = 0L): Dataset[KmvOut] = {
     import events.sparkSession.implicits._
     require(k >= 2, s"k must be >= 2, got $k")
-    def load(mins: Seq[Long]): graft.functions.KmvBuffer = {
-      val buf = new graft.functions.KmvBuffer(k)
-      mins.foreach(buf.insert)
-      buf
-    }
-    closeAtHorizon(microsWatermark(events, lateSec), horizonSec)(
-        _.key, _.ts / 1000L, Seq.empty[Long])(
-        (mins, rows) => {
-          val buf = load(mins)
-          rows.foreach(e => buf.insert(e.h))
-          buf.mins.take(buf.n).toVector
-        }) { (key, mins) =>
-      val buf = load(mins)
+    sketchAtHorizon(microsWatermark(events, lateSec), horizonSec)(
+        _.key, _.ts / 1000L, KmvBuffer, k)((buf, e) => buf.insert(e.h)) { (key, buf) =>
       val (kth, est) = buf.kthAndEstimate(range)
       Iterator.single(KmvOut(key, buf.n, kth, est))
     }
@@ -1059,8 +1058,9 @@ object EventStreams {
     * pipeline (`CorpusOps.heavyHitters`): fold the item stream into ≤
     * `capacity` counters per shard, emit the surviving candidates when the
     * watermark passes the horizon, then let a bounded exact pass count just
-    * the candidates. Folds through the SAME [[graft.functions.MgBuffer]]
-    * as the batch sketch — one code path.
+    * the candidates. The state is the encoded [[graft.functions.MgBuffer]]
+    * the batch sketch merges ([[sketchAtHorizon]]), and the close is its
+    * [[graft.functions.MgBuffer.candidates]] readout — one code path.
     *
     * Sharding is the scale knob: items route by hash to `nShards`
     * independent summaries (an item's full count lands in exactly one
@@ -1069,7 +1069,7 @@ object EventStreams {
     * heavy hitter above `total/capacity` is GUARANTEED to survive its
     * shard, after any arrival order; the union of shard candidates is the
     * superset the exact pass needs). State is the shard's ≤ capacity
-    * (item, count) map — O(nShards · capacity), independent of stream
+    * (item, count) entries — O(nShards · capacity), independent of stream
     * length and vocabulary size.
     *
     * `itemsExpr` must be an ARRAY column over `source`'s rows (wrap a
@@ -1098,18 +1098,9 @@ object EventStreams {
         col(tsCol).cast("long").as("epochSec"),
         col(tsCol)) // untouched attribute keeps the watermark defined
       .as[MgEvent]
-    closeAtHorizon(items, horizonSec)(
-        _.shard, _.epochSec * 1000L, Map.empty[String, Long])(
-        (counts, rows) => {
-          // Restore: ≤ capacity resident entries re-add as plain inserts
-          // (every stored count is positive), so the buffer round-trips
-          // exactly through MgBuffer.add.
-          val buf = new graft.functions.MgBuffer(capacity)
-          counts.foreach { case (i, c) => buf.add(i, c) }
-          rows.foreach(e => buf.add(e.item, 1L))
-          buf.counts.toMap
-        }) { (shard, counts) =>
-      counts.toVector.sortBy(_._1).iterator.map { case (i, c) => MgCandidate(shard, i, c) }
+    sketchAtHorizon(items, horizonSec)(
+        _.shard, _.epochSec * 1000L, MgBuffer, capacity)((buf, e) => buf.add(e.item, 1L)) {
+      (shard, buf) => buf.candidates.iterator.map { case (i, c) => MgCandidate(shard, i, c) }
     }
   }
 

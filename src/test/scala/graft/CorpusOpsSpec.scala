@@ -821,59 +821,65 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
   // ---- persisted decontamination window index --------------------------
 
   test("windowProbe ≡ the inline overlap with a ref-side-only boilerplate cap") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val ref = docs.filter($"source" === "src0")
-    val train = docs.filter($"source" =!= "src0")
-    CorpusOps.saveWindowIndex(ref, "doc_id", "text", "widx_spec",
-      n = 24, maxRefDf = Some(3), buckets = 4)
-    // Driver-side reference: distinct 24-char windows per doc, ref windows
-    // with ref-df <= 3, pair counts.
-    val refWins = ref.select($"doc_id",
-        explode(TextOps.windowHashes($"text", 24)).as("w"))
-      .as[(Long, Long)].collect()
-    val refDf = refWins.groupBy(_._2).view.mapValues(_.size).toMap
-    val keep = refWins.filter(p => refDf(p._2) <= 3)
-      .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-    val expect = train.select($"doc_id",
-        explode(TextOps.windowHashes($"text", 24)).as("w"))
-      .as[(Long, Long)].collect()
-      .flatMap { case (a, w) => keep.getOrElse(w, Array.empty[Long]).map(b => (a, b)) }
-      .filter { case (a, b) => a != b }
-      .groupBy(p => p).view.mapValues(_.size.toLong).toMap
-    val got = CorpusOps.windowProbe(spark, train, "doc_id", "text", "widx_spec")
-      .as[(Long, Long, Long)].collect()
-    assert(got.length == expect.size && got.nonEmpty)
-    got.foreach { case (a, b, n) => assert(expect((a, b)) == n, s"pair ($a,$b)") }
+    try {
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      val ref = docs.filter($"source" === "src0")
+      val train = docs.filter($"source" =!= "src0")
+      CorpusOps.saveWindowIndex(ref, "doc_id", "text", "widx_spec",
+        n = 24, maxRefDf = Some(3), buckets = 4)
+      // Driver-side reference: distinct 24-char windows per doc, ref windows
+      // with ref-df <= 3, pair counts.
+      val refWins = ref.select($"doc_id",
+          explode(TextOps.windowHashes($"text", 24)).as("w"))
+        .as[(Long, Long)].collect()
+      val refDf = refWins.groupBy(_._2).view.mapValues(_.size).toMap
+      val keep = refWins.filter(p => refDf(p._2) <= 3)
+        .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+      val expect = train.select($"doc_id",
+          explode(TextOps.windowHashes($"text", 24)).as("w"))
+        .as[(Long, Long)].collect()
+        .flatMap { case (a, w) => keep.getOrElse(w, Array.empty[Long]).map(b => (a, b)) }
+        .filter { case (a, b) => a != b }
+        .groupBy(p => p).view.mapValues(_.size.toLong).toMap
+      val got = CorpusOps.windowProbe(spark, train, "doc_id", "text", "widx_spec")
+        .as[(Long, Long, Long)].collect()
+      assert(got.length == expect.size && got.nonEmpty)
+      got.foreach { case (a, b, n) => assert(expect((a, b)) == n, s"pair ($a,$b)") }
+    } finally dropTables("widx_spec_windows")
   }
 
   test("forgetFromWindowIndex: a withdrawn benchmark doc vanishes from probes") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    val ref = docs.filter($"source" === "src0")
-    val train = docs.filter($"source" =!= "src0")
-    CorpusOps.saveWindowIndex(ref, "doc_id", "text", "widx_rtbf",
-      n = 24, maxRefDf = Some(3), buckets = 4)
-    def pairs() = CorpusOps.windowProbe(spark, train, "doc_id", "text", "widx_rtbf")
-      .as[(Long, Long, Long)].collect().toSet
-    val before = pairs()
-    val victim = before.head._2 // a benchmark doc that currently matches
-    graft.operators.GovernanceOps.forgetFromWindowIndex(spark, "widx_rtbf",
-      Seq(victim).toDF("doc_id"), "doc_id")
-    val after = pairs()
-    assert(after.forall(_._2 != victim), "forgotten benchmark doc still probed")
-    assert(after === before.filter(_._2 != victim),
-      "purge touched pairs of other benchmark docs")
+    try {
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      val ref = docs.filter($"source" === "src0")
+      val train = docs.filter($"source" =!= "src0")
+      CorpusOps.saveWindowIndex(ref, "doc_id", "text", "widx_rtbf",
+        n = 24, maxRefDf = Some(3), buckets = 4)
+      def pairs() = CorpusOps.windowProbe(spark, train, "doc_id", "text", "widx_rtbf")
+        .as[(Long, Long, Long)].collect().toSet
+      val before = pairs()
+      val victim = before.head._2 // a benchmark doc that currently matches
+      graft.operators.GovernanceOps.forgetFromWindowIndex(spark, "widx_rtbf",
+        Seq(victim).toDF("doc_id"), "doc_id")
+      val after = pairs()
+      assert(after.forall(_._2 != victim), "forgotten benchmark doc still probed")
+      assert(after === before.filter(_._2 != victim),
+        "purge touched pairs of other benchmark docs")
+    } finally dropTables("widx_rtbf_windows")
   }
 
   test("windowProbe: index side reads bucketed — no index-side exchange") {
-    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
-    CorpusOps.saveWindowIndex(docs.filter($"source" === "src0"),
-      "doc_id", "text", "widx_plan", n = 24, maxRefDf = Some(3), buckets = 4)
-    val plan = CorpusOps.windowProbe(spark,
-        docs.filter($"source" =!= "src0"), "doc_id", "text", "widx_plan")
-      .queryExecution.executedPlan.toString
-    val badExchange = "(?s)Exchange hashpartitioning[^\\n]*\\n[^E]*widx_plan".r
-    assert(badExchange.findFirstIn(plan).isEmpty,
-      s"index-side exchange over the bucketed windows table:\n$plan")
+    try {
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      CorpusOps.saveWindowIndex(docs.filter($"source" === "src0"),
+        "doc_id", "text", "widx_plan", n = 24, maxRefDf = Some(3), buckets = 4)
+      val plan = CorpusOps.windowProbe(spark,
+          docs.filter($"source" =!= "src0"), "doc_id", "text", "widx_plan")
+        .queryExecution.executedPlan.toString
+      val badExchange = "(?s)Exchange hashpartitioning[^\\n]*\\n[^E]*widx_plan".r
+      assert(badExchange.findFirstIn(plan).isEmpty,
+        s"index-side exchange over the bucketed windows table:\n$plan")
+    } finally dropTables("widx_plan_windows")
   }
 
   // ---- DSIR online scorer ---------------------------------------------

@@ -48,109 +48,118 @@ class GovernanceOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("forgetFromLshIndex: purged index ≡ from-scratch build on retained docs; " +
       "no forgotten id in probes; plan stays exchange-free") {
-    val corpus = docs.filter($"doc_id" % 4 <= 2)
-    val probe = docs.filter($"doc_id" % 4 === 3)
-    // Tombstone a corpus slice that includes planted near-dup partners so
-    // the purge provably removes probe RESULTS, not just inert rows
-    // (%8 == 5 holds several of the fixture's planted partners; %8 ∈
-    // {1,4,6} partners survive, so the retained index stays non-trivial).
-    val tomb = corpus.filter($"doc_id" % 8 === 5).select($"doc_id")
-    val tombIds = tomb.as[Long].collect().toSet
-    assert(tombIds.nonEmpty)
-    def pairs(name: String) =
-      MinHashLsh.lshProbe(spark, probe, "doc_id", "text", name)
-        .select("new_id", "corpus_id", "n_common", "n_union")
-        .as[(Long, Long, Int, Int)].collect().toSet
-    MinHashLsh.saveLshIndex(corpus, "doc_id", "text", "gov_spec_purged",
-      numHashes = 32, numBands = 8, buckets = 4)
-    val preForget = pairs("gov_spec_purged")
-    assert(preForget.exists(p => tombIds(p._2)),
-      "fixture must plant near-dups inside the tombstoned slice")
-    GovernanceOps.forgetFromLshIndex(spark, "gov_spec_purged", tomb, "doc_id")
-    val purged = pairs("gov_spec_purged")
-    // No forgotten id can surface from the purged index...
-    assert(purged.forall(p => !tombIds(p._2)))
-    // ...and the purged index state equals a from-scratch build on the
-    // retained corpus — row-identical probes.
-    MinHashLsh.saveLshIndex(
-      GovernanceOps.forgetDocs(corpus, "doc_id", tomb, "doc_id"),
-      "doc_id", "text", "gov_spec_scratch", numHashes = 32, numBands = 8,
-      buckets = 4)
-    assert(purged === pairs("gov_spec_scratch"))
-    assert(purged.nonEmpty, "retained corpus must still hold near-dups")
-    // Bucket spec survived the purge rewrite; probe plan still reads the
-    // corpus co-located (no exchange over either index table).
-    val spec = IndexTables.bucketSpec(spark, "gov_spec_purged_bands")
-    assert(spec.exists(s => s.numBuckets == 4 &&
-      s.bucketColumnNames == Seq("band", "band_key")))
-    val plan = MinHashLsh.lshProbe(spark, probe, "doc_id", "text",
-      "gov_spec_purged").queryExecution.executedPlan.toString
-    val badExchange = "(?s)Exchange hashpartitioning[^\\n]*\\n[^E]*gov_spec_purged".r
-    assert(badExchange.findFirstIn(plan).isEmpty,
-      s"corpus-side exchange after purge:\n$plan")
+    try {
+      val corpus = docs.filter($"doc_id" % 4 <= 2)
+      val probe = docs.filter($"doc_id" % 4 === 3)
+      // Tombstone a corpus slice that includes planted near-dup partners so
+      // the purge provably removes probe RESULTS, not just inert rows
+      // (%8 == 5 holds several of the fixture's planted partners; %8 ∈
+      // {1,4,6} partners survive, so the retained index stays non-trivial).
+      val tomb = corpus.filter($"doc_id" % 8 === 5).select($"doc_id")
+      val tombIds = tomb.as[Long].collect().toSet
+      assert(tombIds.nonEmpty)
+      def pairs(name: String) =
+        MinHashLsh.lshProbe(spark, probe, "doc_id", "text", name)
+          .select("new_id", "corpus_id", "n_common", "n_union")
+          .as[(Long, Long, Int, Int)].collect().toSet
+      MinHashLsh.saveLshIndex(corpus, "doc_id", "text", "gov_spec_purged",
+        numHashes = 32, numBands = 8, buckets = 4)
+      val preForget = pairs("gov_spec_purged")
+      assert(preForget.exists(p => tombIds(p._2)),
+        "fixture must plant near-dups inside the tombstoned slice")
+      GovernanceOps.forgetFromLshIndex(spark, "gov_spec_purged", tomb, "doc_id")
+      val purged = pairs("gov_spec_purged")
+      // No forgotten id can surface from the purged index...
+      assert(purged.forall(p => !tombIds(p._2)))
+      // ...and the purged index state equals a from-scratch build on the
+      // retained corpus — row-identical probes.
+      MinHashLsh.saveLshIndex(
+        GovernanceOps.forgetDocs(corpus, "doc_id", tomb, "doc_id"),
+        "doc_id", "text", "gov_spec_scratch", numHashes = 32, numBands = 8,
+        buckets = 4)
+      assert(purged === pairs("gov_spec_scratch"))
+      assert(purged.nonEmpty, "retained corpus must still hold near-dups")
+      // Bucket spec survived the purge rewrite; probe plan still reads the
+      // corpus co-located (no exchange over either index table).
+      val spec = IndexTables.bucketSpec(spark, "gov_spec_purged_bands")
+      assert(spec.exists(s => s.numBuckets == 4 &&
+        s.bucketColumnNames == Seq("band", "band_key")))
+      val plan = MinHashLsh.lshProbe(spark, probe, "doc_id", "text",
+        "gov_spec_purged").queryExecution.executedPlan.toString
+      val badExchange = "(?s)Exchange hashpartitioning[^\\n]*\\n[^E]*gov_spec_purged".r
+      assert(badExchange.findFirstIn(plan).isEmpty,
+        s"corpus-side exchange after purge:\n$plan")
+    } finally dropTables("gov_spec_purged_bands", "gov_spec_purged_sets",
+      "gov_spec_scratch_bands", "gov_spec_scratch_sets")
   }
 
   test("forgetFromIvfIndex: purged search ≡ from-scratch build on retained " +
       "vectors; no forgotten neighbor") {
-    import graft.operators.VectorOps
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val centroids = e.filter($"vec_id" < 10)
-    val queries = e.filter($"vec_id".between(100, 109))
-    def search(name: String) =
-      VectorOps.ivfSearchLoaded(VectorOps.loadIvfIndex(spark, name),
-        queries, "vec_id", "embedding", k = 3, nProbe = 2)
-        .select($"query_id", $"rank", $"neighbor_id")
-        .as[(Long, Long, Long)].collect().toSet
-    VectorOps.saveIvfIndex(e, centroids, "vec_id", "embedding",
-      "gov_spec_ivf", buckets = 4)
-    // Tombstone three vectors that ARE current search results, so the
-    // purge provably removes answers, not inert rows.
-    val tombIds = search("gov_spec_ivf").map(_._3).take(3)
-    assert(tombIds.nonEmpty)
-    val tomb = tombIds.toSeq.toDF("vec_id")
-    GovernanceOps.forgetFromIvfIndex(spark, "gov_spec_ivf", tomb, "vec_id")
-    val purged = search("gov_spec_ivf")
-    assert(purged.forall(r => !tombIds(r._3)))
-    VectorOps.saveIvfIndex(
-      GovernanceOps.forgetDocs(e, "vec_id", tomb, "vec_id"), centroids,
-      "vec_id", "embedding", "gov_spec_ivf_scratch", buckets = 4)
-    assert(purged === search("gov_spec_ivf_scratch"))
-    assert(purged.nonEmpty)
+    try {
+      import graft.operators.VectorOps
+      val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val centroids = e.filter($"vec_id" < 10)
+      val queries = e.filter($"vec_id".between(100, 109))
+      def search(name: String) =
+        VectorOps.ivfSearchLoaded(VectorOps.loadIvfIndex(spark, name),
+          queries, "vec_id", "embedding", k = 3, nProbe = 2)
+          .select($"query_id", $"rank", $"neighbor_id")
+          .as[(Long, Long, Long)].collect().toSet
+      VectorOps.saveIvfIndex(e, centroids, "vec_id", "embedding",
+        "gov_spec_ivf", buckets = 4)
+      // Tombstone three vectors that ARE current search results, so the
+      // purge provably removes answers, not inert rows.
+      val tombIds = search("gov_spec_ivf").map(_._3).take(3)
+      assert(tombIds.nonEmpty)
+      val tomb = tombIds.toSeq.toDF("vec_id")
+      GovernanceOps.forgetFromIvfIndex(spark, "gov_spec_ivf", tomb, "vec_id")
+      val purged = search("gov_spec_ivf")
+      assert(purged.forall(r => !tombIds(r._3)))
+      VectorOps.saveIvfIndex(
+        GovernanceOps.forgetDocs(e, "vec_id", tomb, "vec_id"), centroids,
+        "vec_id", "embedding", "gov_spec_ivf_scratch", buckets = 4)
+      assert(purged === search("gov_spec_ivf_scratch"))
+      assert(purged.nonEmpty)
+    } finally dropTables("gov_spec_ivf_centroids", "gov_spec_ivf_members",
+      "gov_spec_ivf_scratch_centroids", "gov_spec_ivf_scratch_members")
   }
 
   test("forgetFromIvfPqIndex: purged probe ≡ from-scratch encode of " +
       "retained vectors; no forgotten neighbor in the codes tier") {
-    import graft.operators.VectorOps
-    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
-    val centroids = e.filter($"vec_id" < 10)
-    val queries = e.filter($"vec_id".between(100, 109))
-    val res8 = VectorOps.ivfResiduals(
-      e.filter($"vec_id".between(20, 27)), "vec_id", "embedding", centroids)
-    val cbs = res8.select(explode(array(
-        struct(lit(0).as("sub"), $"id".as("cid"), slice($"rvec", 1, 32).as("cvec")),
-        struct(lit(1).as("sub"), $"id".as("cid"), slice($"rvec", 33, 32).as("cvec")))).as("cb"))
-      .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
-    def probe(name: String) =
-      VectorOps.ivfPqSearchLoaded(VectorOps.loadIvfPqIndex(spark, name),
-        queries, "vec_id", "embedding", m = 2, dim = 64, k = 5, nProbe = 3)
-        .select($"query_id", $"rank".cast("long"), $"neighbor_id")
-        .as[(Long, Long, Long)].collect().toSet
-    VectorOps.saveIvfPqIndex(e, centroids, "vec_id", "embedding", cbs,
-      m = 2, dim = 64, "gov_spec_ivfpq", buckets = 4)
-    // Tombstone vectors that ARE current probe results, so the purge
-    // provably removes answers, not inert rows.
-    val tombIds = probe("gov_spec_ivfpq").map(_._3).take(3)
-    assert(tombIds.nonEmpty)
-    val tomb = tombIds.toSeq.toDF("vec_id")
-    GovernanceOps.forgetFromIvfPqIndex(spark, "gov_spec_ivfpq", tomb, "vec_id")
-    val purged = probe("gov_spec_ivfpq")
-    assert(purged.forall(r => !tombIds(r._3)))
-    VectorOps.saveIvfPqIndex(
-      GovernanceOps.forgetDocs(e, "vec_id", tomb, "vec_id"), centroids,
-      "vec_id", "embedding", cbs, m = 2, dim = 64,
-      "gov_spec_ivfpq_scratch", buckets = 4)
-    assert(purged === probe("gov_spec_ivfpq_scratch"))
-    assert(purged.nonEmpty)
+    try {
+      import graft.operators.VectorOps
+      val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val centroids = e.filter($"vec_id" < 10)
+      val queries = e.filter($"vec_id".between(100, 109))
+      val res8 = VectorOps.ivfResiduals(
+        e.filter($"vec_id".between(20, 27)), "vec_id", "embedding", centroids)
+      val cbs = res8.select(explode(array(
+          struct(lit(0).as("sub"), $"id".as("cid"), slice($"rvec", 1, 32).as("cvec")),
+          struct(lit(1).as("sub"), $"id".as("cid"), slice($"rvec", 33, 32).as("cvec")))).as("cb"))
+        .select($"cb.sub".as("sub"), $"cb.cid".as("cid"), $"cb.cvec".as("cvec"))
+      def probe(name: String) =
+        VectorOps.ivfPqSearchLoaded(VectorOps.loadIvfPqIndex(spark, name),
+          queries, "vec_id", "embedding", m = 2, dim = 64, k = 5, nProbe = 3)
+          .select($"query_id", $"rank".cast("long"), $"neighbor_id")
+          .as[(Long, Long, Long)].collect().toSet
+      VectorOps.saveIvfPqIndex(e, centroids, "vec_id", "embedding", cbs,
+        m = 2, dim = 64, "gov_spec_ivfpq", buckets = 4)
+      // Tombstone vectors that ARE current probe results, so the purge
+      // provably removes answers, not inert rows.
+      val tombIds = probe("gov_spec_ivfpq").map(_._3).take(3)
+      assert(tombIds.nonEmpty)
+      val tomb = tombIds.toSeq.toDF("vec_id")
+      GovernanceOps.forgetFromIvfPqIndex(spark, "gov_spec_ivfpq", tomb, "vec_id")
+      val purged = probe("gov_spec_ivfpq")
+      assert(purged.forall(r => !tombIds(r._3)))
+      VectorOps.saveIvfPqIndex(
+        GovernanceOps.forgetDocs(e, "vec_id", tomb, "vec_id"), centroids,
+        "vec_id", "embedding", cbs, m = 2, dim = 64,
+        "gov_spec_ivfpq_scratch", buckets = 4)
+      assert(purged === probe("gov_spec_ivfpq_scratch"))
+      assert(purged.nonEmpty)
+    } finally dropTables(Seq("gov_spec_ivfpq", "gov_spec_ivfpq_scratch")
+      .flatMap(n => Seq(s"${n}_centroids", s"${n}_codebooks", s"${n}_codes")): _*)
   }
 
   test("expirePartitions: metadata-only — survivors' files untouched byte-for-byte") {

@@ -57,4 +57,25 @@ class GraftExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT graft_poly_hash(42)").head())
     assert(e.getMessage.contains("STRING"))
   }
+
+  test("one STRING-or-NULL check: each string kernel names itself; NULL passes") {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.types.NullType
+    import graft.functions._
+    val kernels: Seq[(String, Expression => Expression)] = Seq(
+      "graft_poly_hash" -> (PolyHash(_, 31L)),
+      "graft_char_shingles" -> (CharShingles(_, 3)),
+      "graft_word_shingles" -> (WordShingles(_, 2)),
+      "graft_packed_shingles" -> (PackedShingles(_, 3)),
+      "graft_token_hashes" -> (TokenHashes(_, wide = false)),
+      "graft_window_hashes" -> (WindowHashes(_, 8)),
+      "graft_token_class_counts" -> (TokenClassCounts(_)))
+    kernels.foreach { case (name, mk) =>
+      assert(mk(Literal(42)).checkInputDataTypes() ===
+        TypeCheckFailure(s"$name expects a STRING argument, got int"))
+      assert(mk(Literal(null, NullType)).checkInputDataTypes() === TypeCheckSuccess)
+      assert(mk(Literal("a")).checkInputDataTypes() === TypeCheckSuccess)
+    }
+  }
 }

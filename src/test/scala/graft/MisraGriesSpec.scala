@@ -12,7 +12,8 @@ class MisraGriesSpec extends AnyFunSuite with SparkSpec {
 
   /** Drive an MgBuffer tree locally: split `stream` into random runs, build
     * a buffer per run (update path), then merge pairwise in random order
-    * (merge path) — the worst-case distributed execution shape.
+    * through [[MgBuffer.merge]], the aggregate's merge — the worst-case
+    * distributed execution shape.
     */
   private def mgOverRandomTree(stream: Seq[String], k: Int, rnd: Random): Set[String] = {
     val runs = {
@@ -27,17 +28,7 @@ class MisraGriesSpec extends AnyFunSuite with SparkSpec {
     }.toVector
     while (bufs.size > 1) {
       val i = rnd.nextInt(bufs.size - 1)
-      val (a, b) = (bufs(i), bufs(i + 1))
-      // merge b into a exactly as the aggregate does
-      b.counts.foreach { case (item, c) =>
-        a.counts.update(item, a.counts.getOrElse(item, 0L) + c)
-      }
-      if (a.counts.size > k) {
-        val sorted = a.counts.values.toArray
-        java.util.Arrays.sort(sorted)
-        a.shiftDown(sorted(sorted.length - (k + 1)))
-      }
-      bufs = bufs.patch(i, Seq(a), 2)
+      bufs = bufs.patch(i, Seq(bufs(i).merge(bufs(i + 1))), 2)
     }
     bufs.head.counts.keySet.toSet
   }
