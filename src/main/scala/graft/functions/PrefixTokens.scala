@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -191,8 +191,8 @@ object PrefixTokensImpl {
   * (`partition by doc order by df, tok` moves EVERY (doc, token) row — the
   * set-similarity join's single largest exchange, and a self-join runs it on
   * both sides) with a per-row sort over one doc's tokens. The df table is
-  * broadcast-small by the same contract that lets
-  * `DfStrategy.Aggregate(broadcast = true)` broadcast it.
+  * driver-small by contract: [[graft.operators.SetSimJoin.jaccardJoin]]
+  * packs it only under its df-entry cap.
   *
   * A generator rather than an array-returning expression + `explode`
   * deliberately: `InferFiltersFromGenerate` rewrites `explode(e)` into
@@ -271,7 +271,7 @@ if (!${ev.isNull}) {
   ${g.code}
   if (${g.isNull}) { ${ev.isNull} = true; } else { $blkName.add(${g.value}.toString()); }
 }"""
-    }.reduce(_ + _)
+    }.foldLeft[Block](EmptyBlock)(_ + _) // no blocking columns: one empty block key
     ev.copy(code =
       code"""
 ${toksGen.code}

@@ -1118,7 +1118,7 @@ object CorpusOps {
     * Contract: queries and candidates share one id space (the in-batch
     * setting — anchors ARE corpus members), so a candidate equal to the
     * query id is excluded as "itself"; cross-space callers must remap ids
-    * first (same convention as [[VectorOps.pqSearch]]'s excludeSelf).
+    * first (the [[VectorOps.pqSearch]] contract).
     *
     * Scale shape: ONE equi-join of queries against bucket-keyed
     * candidates (per-query candidate fan-out = |candidates|/nBuckets —

@@ -39,18 +39,14 @@ object GovernanceOps {
     * plain (path-based) dataset. Left-anti with the tombstone set
     * broadcast: the corpus reads straight through, no shuffle, no sort;
     * rows whose key matches any tombstone vanish, everything else passes
-    * byte-identically. `broadcastTombstones = false` falls back to a
-    * shuffled anti-join for the rare retention sweep whose resolved
-    * key-set is itself huge (e.g. "forget every doc from a decommissioned
-    * source" materialized as keys — though THAT sweep is better written as
-    * a predicate filter in the first place).
+    * byte-identically. The tombstone set must be broadcast-small; a
+    * retention sweep whose resolved key set is itself huge (e.g. "forget
+    * every doc from a decommissioned source" materialized as keys) is a
+    * predicate filter, not a tombstone list.
     */
   def forgetDocs(corpus: DataFrame, keyCol: String, tombstones: DataFrame,
-      tombKeyCol: String, broadcastTombstones: Boolean = true): DataFrame = {
-    val t0 = keySet(tombstones, tombKeyCol, keyCol)
-    val t = if (broadcastTombstones) broadcast(t0) else t0
-    corpus.join(t, Seq(keyCol), "left_anti")
-  }
+      tombKeyCol: String): DataFrame =
+    corpus.join(broadcast(keySet(tombstones, tombKeyCol, keyCol)), Seq(keyCol), "left_anti")
 
   /** The deletion AUDIT TRAIL — what a compliance review actually asks
     * for: which keys disappeared between the pre-purge and post-purge

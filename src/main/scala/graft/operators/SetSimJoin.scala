@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import graft.meta.Ckpt.Syntax
 import scala.collection.immutable.ArraySeq
 
@@ -23,127 +24,89 @@ import scala.collection.immutable.ArraySeq
   * fan-out small (frequent stop-tokens never appear in prefixes), the dedup
   * and verify joins on doc id. Work is candidates·|set| rather than
   * Σ block² — no stage is quadratic in block size. With a bounded
-  * vocabulary, [[DfStrategy.Packed]] removes the largest exchange outright:
-  * prefixes are selected row-locally against a driver-packed df table, so
-  * the full inverted index is never shuffled at all — only df-aggregate
-  * partials, prefix tokens, and slim candidate pairs ever cross the wire.
+  * vocabulary, [[jaccardJoin]]'s packed path removes the largest exchange
+  * outright: prefixes are selected row-locally against a driver-packed df
+  * table, so the full inverted index is never shuffled at all — only
+  * df-aggregate partials, prefix tokens, and slim candidate pairs ever
+  * cross the wire.
+  *
+  * The per-(block, token) document frequency behind the rare-first order is
+  * computed in one of three ways, each chosen by the operator from what it
+  * can observe; all three give identical df values and therefore identical
+  * rows (property-tested against brute force in SetSimJoinSpec):
+  *
+  *  - PACKED ([[jaccardJoin]], ARRAY<BIGINT> tokens, STRING blocks, a df
+  *    table of at most [[MaxPackedDfEntries]] entries): the combiner-reduced
+  *    df table is collected and packed driver-side, and the codegen'd
+  *    [[graft.functions.PrefixTokens]] selects each prefix row-locally.
+  *  - JOIN-BACK ([[jaccardJoin]] otherwise): the same df table joined back
+  *    onto the index, hot keys split off through a broadcast branch (see
+  *    [[rankedIndex]]).
+  *  - WINDOW ([[containmentJoin]]): a `count` over a (block, token) window
+  *    of the index — one index shuffle, no second relation.
   */
 object SetSimJoin {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Default ceiling on driver-collected (block, token) df entries for
-    * [[DfStrategy.Packed]] — ~4 M entries is tens of MB packed, far under
-    * any sane driver heap, while any real bounded vocabulary (character
-    * n-grams over an alphabet, a language's word list) sits orders of
-    * magnitude below it.
+  /** Ceiling on driver-collected (block, token) df entries for the packed
+    * prefix path — ~4 M entries is tens of MB packed, far under any sane
+    * driver heap, while any real bounded vocabulary (character n-grams over
+    * an alphabet, a language's word list) sits orders of magnitude below it.
+    * A larger df table takes the join-back path with a warning.
     */
-  val DefaultMaxPackedDfEntries: Int = 4 << 20
+  private val MaxPackedDfEntries: Int = 4 << 20
+
+  /** Per-(block, token) df from which the join-back ranks a key's index
+    * rows through a broadcast branch instead of the shuffled join — see
+    * [[rankedIndex]].
+    */
+  private val HotDfThreshold: Long = 1L << 20
 
   /** Default ceiling on the unpruned same-token collision mass
     * Σ_{(block, token)} C(df, 2) a [[jaccardJoin]]/[[containmentJoin]] call
     * will accept before failing LOUDLY — the candidate-volume law the exact
     * prefix join is bound by (measured on the trigram fixture: 1.4e7 →
-    * 1.25e9 → 1.3e11 across 5k → 50k → 500k docs; the 1.3e11 run DNF'd
-    * filling >64 GB of shuffle spill — BASELINE.md round-15 adjudication).
+    * 1.25e9 → 1.3e11 across 5k → 50k → 500k docs; the 1.3e11 run did not
+    * finish, filling >64 GB of shuffle spill — BASELINE.md).
     * 1e10 sits an order of magnitude above the largest mass that COMPLETED
     * (sf1's 1.25e9, ~30 s) and an order below the one that did not, so the
     * default passes every bounded-block workload and rejects exactly the
-    * saturated corpus-wide shapes that were previously a silent spill wall
-    * (r18 VERDICT item 4). `Long.MaxValue` opts out.
+    * saturated corpus-wide shapes that would otherwise run silently into
+    * that spill wall. `Long.MaxValue` opts out.
     */
   val DefaultMaxCandidates: Long = 10000000000L
 
-  /** How per-(block, token) document frequency — the rare-first token
-    * order — is computed. All strategies produce IDENTICAL df values (and
-    * therefore identical join output — property-tested in SetSimJoinSpec);
-    * they differ only in shuffle shape and skew tolerance. Steer by
-    * vocabulary:
-    *
-    *  - BOUNDED vocabulary (character n-grams, a language's word list —
-    *    distinct (block, token) count is broadcast-small):
-    *    [[DfStrategy.Aggregate]]`(broadcast = true)`. The df table is a
-    *    map-side-combined aggregate (hot tokens collapse to one partial per
-    *    task) broadcast back onto the index — the index reaches the prefix
-    *    rank with ZERO (block, token) shuffles.
-    *  - UNBOUNDED vocabulary, tame token distribution: [[DfStrategy.Window]]
-    *    (the default). One shuffle of the inverted index, no second df
-    *    relation; but a stop-token-grade hot (block, token) key lands in a
-    *    single task with no map-side combine.
-    *  - UNBOUNDED vocabulary with hot keys:
-    *    [[DfStrategy.Aggregate]]`(broadcast = false)`. The join back
-    *    shuffles on (block, token) like the window does, but the df COUNT
-    *    itself is combiner-reduced, and the operator splits the hot keys
-    *    ITSELF — see [[DfStrategy.Aggregate]].
+  private def ceilDiv(n: Column, d: Int): Column = floor((n + (d - 1)) / d).cast("int")
+
+  /** The head both joins share: the threshold check, the optional
+    * [[capTokenDf]] pre-step, the `(sj_id, sj_set, blocks…)` projection
+    * `d`, and its inverted index `ex` — one `(sj_id, sj_sz, sj_tok,
+    * blocks…)` row per (doc, token), set size carried along.
     */
-  sealed trait DfStrategy
-  object DfStrategy {
-    case object Window extends DfStrategy
-
-    /** Df via a combiner-reduced `groupBy(block, token).count`, joined back
-      * onto the index: `broadcast = true` ships the whole df table to every
-      * task (bounded vocabularies — zero index shuffles), `broadcast =
-      * false` is the unbounded-vocabulary path.
-      *
-      * The non-broadcast join CANNOT be rescued by AQE's skew splitting:
-      * `OptimizeSkewedJoin` only matches a join whose BOTH children are a
-      * bare sort over an `ENSURE_REQUIREMENTS` shuffle stage, and here the
-      * df aggregate's final merge sits between its shuffle and the join —
-      * the rule never even pattern-matches this shape (verified
-      * empirically: it logs `skewed partitions: left 0, right 0` for the
-      * other joins and is silent on this one, with a 5× hot partition in
-      * the map stats). So the hot keys are split DETERMINISTICALLY by the
-      * operator instead, using the df table itself as the skew census it
-      * already is: keys with `sj_df >= hotDfThreshold` join via BROADCAST
-      * (their index rows never shuffle at all — the skew never forms),
-      * while the cold tail takes the ordinary shuffled join, its probe
-      * side pruned MAP-SIDE by a broadcast anti-join on the hot key set so
-      * the cold exchange's per-key row count is `< hotDfThreshold` by
-      * construction (filtering only the df side would still shuffle every
-      * hot index row into one partition before dropping it). Cost: the index is
-      * scanned twice (once per branch — a map-side re-read, no extra
-      * shuffle volume); the hot slice has at most `totalRows /
-      * hotDfThreshold` entries, so its broadcast is bounded by the same
-      * census that selected it. `hotDfThreshold = Long.MaxValue` disables
-      * the split (single shuffled join, single scan — for inputs known to
-      * be tame). SkewJoinSpec proves the shuffle stays balanced on a
-      * deliberately hot-token corpus, and that disabling the split
-      * reproduces the 5×+ hot partition.
-      */
-    final case class Aggregate(broadcast: Boolean,
-        hotDfThreshold: Long = 1L << 20) extends DfStrategy
-
-    /** The zero-index-shuffle endpoint of the bounded-vocabulary path: the
-      * df table (the same broadcast-small relation `Aggregate(broadcast =
-      * true)` ships to every task) is collected and packed driver-side, and
-      * the prefix is selected ROW-LOCALLY by the codegen'd
-      * [[graft.functions.PrefixTokens]] — a per-doc sort over its own
-      * tokens. This removes the full-inverted-index exchange the other
-      * strategies pay for the per-doc rank (`partition by doc order by df,
-      * tok` moves every (doc, token) row — the operator's single largest
-      * shuffle, run on BOTH sides of the self-join when exchange reuse
-      * fails), and only prefix tokens (≈ (1−t)·|set| per doc) are ever
-      * exploded. Requires LONG tokens and STRING blocking columns (the
-      * packed table is (block → sorted long array)); produces results
-      * identical to the other strategies (property-tested). The
-      * bounded-vocabulary contract is enforced at run time: a df table
-      * larger than `maxPackedDfEntries` falls back to
-      * `Aggregate(broadcast = false)` with a warning rather than OOM the
-      * driver.
-      */
-    case object Packed extends DfStrategy
+  private def indexOf(docs: DataFrame, idCol: String, setCol: String,
+      blockCols: Seq[String], threshNum: Int, threshDen: Int,
+      maxDf: Option[Long]): (DataFrame, DataFrame) = {
+    require(threshNum > 0 && threshNum <= threshDen, "threshold must be in (0, 1]")
+    val bc = blockCols.map(col)
+    val docsF = maxDf.map(m => capTokenDf(docs, setCol, blockCols, m, idCol))
+      .getOrElse(docs)
+    val d = docsF.select(col(idCol).as("sj_id") +: col(setCol).as("sj_set") +: bc: _*)
+    val ex = d.select(
+      col("sj_id") +: size(col("sj_set")).as("sj_sz") +:
+        explode(col("sj_set")).as("sj_tok") +: bc: _*)
+    (d, ex)
   }
-
-  private def ceilDivC(n: Column, d: Int): Column = floor((n + (d - 1)) / d).cast("int")
 
   /** The (block, token) document-frequency table — one combiner-reduced
     * aggregate over the exploded index (map-side combine → ≤ |vocab| rows).
     * `ckpt = true` LAZILY checkpoints it for callers with SEVERAL
-    * consumers (the Packed pack + its oversized-vocabulary fallback's
-    * census + join-back: the r19 census paid a full second corpus pass
-    * without it — q_ngram_jaccard 5.5 → 9.0 s driver minima, r19 VERDICT
-    * item 4). A checkpoint, not persist(): a persisted table would make a
-    * repeated identical call read round-1's counts (see [[graft.meta.Ckpt]]).
+    * consumers ([[jaccardJoin]]: the packed collect, plus the Spark census
+    * and join-back when the table is over the packed cap; without the
+    * checkpoint the census paid a full second corpus pass —
+    * q_ngram_jaccard 5.5 → 9.0 s driver minima). A checkpoint, not
+    * persist(): a persisted table would make a repeated identical call read
+    * the first call's counts (see [[graft.meta.Ckpt]]).
     * `ckpt = false` is for a SINGLE-consumer census (the containment
     * shape below) — materializing a table nothing re-reads is pure cost.
     */
@@ -155,17 +118,17 @@ object SetSimJoin {
   }
 
   /** The census-triggered loud failure behind [[DefaultMaxCandidates]]:
-    * one one-row aggregate over the shared [[tokenDfTable]] computes
+    * one one-row aggregate over a [[tokenDfTable]] computes
     * Σ C(df, 2) and throws with steering if the join ahead would be
     * candidate-mass-bound. Products accumulate as decimals: a 100 TB-scale
     * posting list's df² does not fit a long. A NULL sum over a NON-EMPTY
     * table is decimal(38,0) overflow — mass beyond ~1e38 is further past
-    * any ceiling than a representable number, so it FAILS the guard (r19
-    * ADVICE: the previous coalesce-to-0 silently passed it). `try_sum`,
-    * not `sum` (r20 ADVICE): under spark.sql.ansi.enabled=true a plain
-    * decimal sum THROWS on overflow inside the action and the run would
-    * die without this guard's steering message; try_sum returns NULL on
-    * overflow in both modes, so ANSI sessions reach the same loud path.
+    * any ceiling than a representable number, so it FAILS the guard (a
+    * coalesce to 0 would silently pass it). `try_sum`, not `sum`: under
+    * spark.sql.ansi.enabled=true a plain decimal sum THROWS on overflow
+    * inside the action and the run would die without this guard's steering
+    * message; try_sum returns NULL on overflow in both modes, so ANSI
+    * sessions reach the same loud path.
     * (The per-row product itself cannot overflow: df < 10²⁰ ⇒ df·(df−1)
     * < 10⁴⁰ truncated at cast only beyond 10³⁸, i.e. only when the sum
     * would overflow anyway.)
@@ -187,19 +150,18 @@ object SetSimJoin {
         maxCandidates, op)
   }
 
-  /** [[guardCandidateMass]]'s DRIVER-SIDE twin for [[DfStrategy.Packed]]
-    * (r22): the packed path already collects the full df table to the
-    * driver (bounded by `maxPackedDfEntries`), so the SAME ΣC(df,2) mass
-    * is an exact BigInteger fold over rows already in hand — the Spark
-    * census aggregate it replaces was a separate action whose
-    * materialize-then-aggregate cycle cost q_ngram_jaccard ~3 s of its
-    * 6 s at sf0.1 (plans/r22/setsim_variants.txt: asis 6.10 s min vs
-    * census-free 2.91 s, identical 10 778 output rows). Same threshold,
-    * same loud steering message, same exact integer mass — only the engine
-    * that computes it changes. Longs accumulate until near overflow and spill
+  /** [[guardCandidateMass]]'s DRIVER-SIDE twin for the packed path: the
+    * pack already collects the full df table to the driver (bounded by
+    * [[MaxPackedDfEntries]]), so the SAME ΣC(df,2) mass is an exact
+    * BigInteger fold over rows already in hand. The separate Spark census
+    * action it replaces cost q_ngram_jaccard ~3 s of its 6 s at sf0.1
+    * (plans/r22/setsim_variants.txt: 6.10 s min with the action vs 2.91 s
+    * without, identical 10 778 output rows). Same threshold, same loud
+    * steering message, same exact integer mass — only the engine that
+    * computes it changes. Longs accumulate until near overflow and spill
     * into BigInteger, so the guard stays exact at any df.
     */
-  private def guardCandidateMassDriver(dfRows: Array[org.apache.spark.sql.Row],
+  private def guardCandidateMassDriver(dfRows: Array[Row],
       dfOrdinal: Int, maxCandidates: Long, op: String): Unit = {
     if (maxCandidates == Long.MaxValue) return
     var big = java.math.BigInteger.ZERO
@@ -228,22 +190,22 @@ object SetSimJoin {
         s" exceeds maxCandidates = $maxCandidates — the exact prefix join " +
         "is candidate-volume-bound and this input is in its quadratic " +
         "regime (the measured wall: 1.3e11 mass filled >64 GB of shuffle " +
-        "spill and DNF'd, BASELINE.md r15). Remove ubiquitous tokens " +
+        "spill and did not finish). Remove ubiquitous tokens " +
         "first via maxDf = Some(k) (capTokenDf), block the corpus so " +
         "posting lists stay bounded, use the banded MinHashLsh/SimHash " +
         "families for corpus-wide near-dup, or raise maxCandidates " +
         "deliberately.")
 
   /** DF-CAP guard for the exact joins — the set-similarity analog of
-    * [[MultimodalOps.dHashNearDup]]'s `maxBucket` hub-bucket guard (r17
-    * VERDICT: the suite's one unguarded quadratic). Removes every token
+    * [[MultimodalOps.dHashNearDup]]'s `maxBucket` hub-bucket guard: without
+    * it the exact joins are quadratic in block size. Removes every token
     * whose per-`blockCols` document frequency exceeds `maxDf` from the
     * `setCol` arrays, so a downstream [[jaccardJoin]]/[[containmentJoin]]
     * runs on the FILTERED universe where no posting list exceeds `maxDf`
     * and the candidate mass is bounded by Σ C(df, 2) ≤ |vocab|·C(maxDf, 2)
     * — LINEAR in vocabulary instead of quadratic in block size once the
     * vocabulary saturates (the measured Σ C(df, 2) law: 1.4e7 → 1.25e9 →
-    * 1.3e11 across 5k → 50k → 500k docs, BASELINE.md round 15).
+    * 1.3e11 across 5k → 50k → 500k docs, BASELINE.md).
     *
     * SEMANTICS — stop-token removal, not an approximation knob: the
     * output is the EXACT similarity join over sets minus their
@@ -373,54 +335,51 @@ object SetSimJoin {
   }
 
   /** The FULL inverted index with the rare-first rank attached — the shared
-    * substrate of [[jaccardJoin]] (which then keeps only each doc's prefix)
-    * and [[containmentJoin]] (whose index side needs every token's rank for
-    * the positional filter). Window/Aggregate strategies only; Packed's
-    * row-local generator emits prefixes, not full ranked sets.
+    * substrate of [[jaccardJoin]]'s join-back path (which then keeps only
+    * each doc's prefix) and [[containmentJoin]] (whose index side needs
+    * every token's rank for the positional filter).
+    *
+    * `dfTab = None` counts df over a (block, token) window of the index:
+    * one shuffle of the index, no second relation (an aggregate joined back
+    * WITHOUT broadcast shuffles the index twice, since the aggregate's
+    * exchange carries different rows than the join side's and
+    * ReuseExchange cannot deduplicate them); but a stop-token-grade hot
+    * (block, token) key lands in a single task with no map-side combine.
+    *
+    * `dfTab = Some(t)` joins the in-hand [[tokenDfTable]] back onto the
+    * index. That join CANNOT be rescued by AQE's skew splitting:
+    * `OptimizeSkewedJoin` only matches a join whose BOTH children are a
+    * bare sort over an `ENSURE_REQUIREMENTS` shuffle stage, and here the df
+    * aggregate's final merge sits between its shuffle and the join — the
+    * rule never even pattern-matches this shape (it logs `skewed
+    * partitions: left 0, right 0` for the other joins and is silent on this
+    * one, with a 5× hot partition in the map stats). So the hot keys are
+    * split DETERMINISTICALLY here instead, using the df table itself as the
+    * skew census it already is: keys with `sj_df >= hotDf` join via
+    * BROADCAST (their index rows never shuffle at all — the skew never
+    * forms), while the cold tail takes the ordinary shuffled join, its
+    * probe side pruned MAP-SIDE by a broadcast anti-join on the hot key set
+    * so the cold exchange's per-key row count is `< hotDf` by construction
+    * (filtering only the df side would still shuffle every hot index row
+    * into one partition before dropping it — measured as the same 4.7×
+    * partition the split exists to remove). Cost: the index is scanned
+    * twice (once per branch — a map-side re-read, no extra shuffle volume);
+    * the hot slice has at most `totalRows / hotDf` entries, so its
+    * broadcast is bounded by the same census that selected it. SkewJoinSpec
+    * proves the shuffle stays balanced on a deliberately hot-token corpus,
+    * and that a threshold past every df reproduces the 5×+ hot partition.
     */
-  private def rankedIndex(
-      ex: DataFrame, blockCols: Seq[String],
-      strategy: DfStrategy, dfTabReuse: Option[DataFrame]): DataFrame = {
-    val bc = blockCols.map(col)
-    val withFreq = strategy match {
-      case DfStrategy.Window =>
-        val wDf = Window.partitionBy(bc :+ col("sj_tok"): _*)
-        ex.withColumn("sj_df", count(lit(1)).over(wDf))
-      case DfStrategy.Aggregate(bcast, hotDf) =>
-        // The census / Packed-fallback paths hand over the already-
-        // checkpointed tokenDfTable; the direct Aggregate path builds it
-        // here.
-        val dfTab = dfTabReuse.getOrElse(
-          ex.groupBy(bc :+ col("sj_tok"): _*).agg(count(lit(1)).as("sj_df")))
-        // SHUFFLE_HASH on the df side fires only when the caller disabled
-        // the hot-key split (`hotDfThreshold = Long.MaxValue`, for inputs
-        // known to be tame): the df table is then a fresh vocabulary-sized
-        // aggregate, and hashing it per partition skips sort-merge's two
-        // sorts of the full inverted index at the same exchange count. The
-        // hash build has no spill path, so an unbounded vocabulary belongs
-        // on the default split path.
-        if (bcast) ex.join(broadcast(dfTab), blockCols :+ "sj_tok")
-        else if (hotDf == Long.MaxValue)
-          ex.join(dfTab.hint("SHUFFLE_HASH"), blockCols :+ "sj_tok")
-        else {
-          // Deterministic hot-key split (see DfStrategy.Aggregate): the
-          // df table is its own skew census. Hot keys (≥ hotDf index
-          // rows each, so ≤ total/hotDf of them) ride a broadcast join
-          // — their index rows never shuffle. Crucially the cold
-          // branch's PROBE side is pruned MAP-SIDE by a broadcast
-          // anti-join on the hot key set: filtering only dfTab would
-          // still shuffle every hot index row into its one partition
-          // and drop it after the exchange — measured as the same 4.7×
-          // partition the split exists to remove. Post-prune, the cold
-          // exchange's per-key cardinality is < hotDf by construction.
-          val hot = dfTab.filter(col("sj_df") >= hotDf)
-          ex.join(broadcast(hot.select((blockCols :+ "sj_tok").map(col): _*)),
-              blockCols :+ "sj_tok", "left_anti")
-            .join(dfTab.filter(col("sj_df") < hotDf), blockCols :+ "sj_tok")
-            .unionByName(ex.join(broadcast(hot), blockCols :+ "sj_tok"))
-        }
-      case DfStrategy.Packed =>
-        throw new IllegalArgumentException("rankedIndex: Packed emits prefixes only")
+  private def rankedIndex(ex: DataFrame, blockCols: Seq[String],
+      dfTab: Option[DataFrame], hotDf: Long = HotDfThreshold): DataFrame = {
+    val keys = blockCols :+ "sj_tok"
+    val withFreq = dfTab match {
+      case None =>
+        ex.withColumn("sj_df", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      case Some(t) =>
+        val hot = t.filter(col("sj_df") >= hotDf)
+        ex.join(broadcast(hot.select(keys.map(col): _*)), keys, "left_anti")
+          .join(t.filter(col("sj_df") < hotDf), keys)
+          .unionByName(ex.join(broadcast(hot), keys))
     }
     val w = Window.partitionBy(col("sj_id")).orderBy(col("sj_df"), col("sj_tok"))
     withFreq.withColumn("sj_rk", row_number().over(w))
@@ -434,9 +393,9 @@ object SetSimJoin {
     * candidate-volume-bound: once the vocabulary saturates, every token's
     * df grows linearly with block size and the candidate mass
     * Σ C(df, 2) grows QUADRATICALLY (measured on the trigram fixture:
-    * 1.4e7 → 1.25e9 → 1.3e11 across 5k → 50k → 500k docs — BASELINE.md
-    * round-15 adjudication; prefix filtering removes a constant factor,
-    * not the quadratic). Keep blocks bounded; corpus-wide near-dup at
+    * 1.4e7 → 1.25e9 → 1.3e11 across 5k → 50k → 500k docs — BASELINE.md;
+    * prefix filtering removes a constant factor, not the quadratic). Keep
+    * blocks bounded; corpus-wide near-dup at
     * 100 TB belongs to the banded [[MinHashLsh]] family, which emits only
     * probable pairs and measured ~9× cost at 100× data. When the exact
     * join must run on a saturated input anyway, pre-filter through
@@ -444,10 +403,14 @@ object SetSimJoin {
     * list and with it the candidate mass (to |vocab|·C(maxDf, 2)),
     * trading away only similarity carried by ubiquitous tokens.
     *
+    * Prefix path, chosen per call: ARRAY<BIGINT> tokens, STRING (or no)
+    * blocking columns and a df table of at most [[MaxPackedDfEntries]]
+    * entries take the PACKED path (row-local prefixes, no index shuffle);
+    * any other input takes the hot-split JOIN-BACK (see [[rankedIndex]]).
+    * Both return identical rows.
+    *
     * @param docs    one row per document; `setCol` is an ARRAY column of
     *                DISTINCT tokens (dedup upstream — counts are set-based)
-    * @param dfStrategy document-frequency computation — see [[DfStrategy]]
-    *                for the vocabulary-size steering rule
     * @param maxDf   Some(k) routes the input through [[capTokenDf]] first
     *                (stop-token removal at per-block df > k — the
     *                candidate-mass cap as a single knob); None leaves the
@@ -466,143 +429,91 @@ object SetSimJoin {
       blockCols: Seq[String],
       threshNum: Int,
       threshDen: Int,
-      dfStrategy: DfStrategy = DfStrategy.Window,
-      maxPackedDfEntries: Int = DefaultMaxPackedDfEntries,
       maxDf: Option[Long] = None,
-      maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
-    require(threshNum > 0 && threshNum <= threshDen, "threshold must be in (0, 1]")
+      maxCandidates: Long = DefaultMaxCandidates): DataFrame =
+    jaccardJoinWith(docs, idCol, setCol, blockCols, threshNum, threshDen,
+      maxDf, maxCandidates, MaxPackedDfEntries, HotDfThreshold)
+
+  /** [[jaccardJoin]] with the packed cap and the hot-key threshold as
+    * arguments, so a spec can force the join-back and the hot-key split on
+    * a small corpus.
+    */
+  private[graft] def jaccardJoinWith(
+      docs: DataFrame,
+      idCol: String,
+      setCol: String,
+      blockCols: Seq[String],
+      threshNum: Int,
+      threshDen: Int,
+      maxDf: Option[Long],
+      maxCandidates: Long,
+      maxPackedDfEntries: Int,
+      hotDfThreshold: Long): DataFrame = {
     require(maxPackedDfEntries > 0 && maxPackedDfEntries < Int.MaxValue,
       "maxPackedDfEntries must be a positive Int with headroom for the overflow probe")
-    def ceilDiv(n: Column, d: Int): Column = floor((n + (d - 1)) / d).cast("int")
     val bc = blockCols.map(col)
-    val docsF = maxDf.map(m => capTokenDf(docs, setCol, blockCols, m, idCol))
-      .getOrElse(docs)
-    val d = docsF.select(col(idCol).as("sj_id") +: col(setCol).as("sj_set") +: bc: _*)
+    val (d, ex) = indexOf(docs, idCol, setCol, blockCols, threshNum, threshDen, maxDf)
 
-    // Inverted index: one row per (doc, token), with set size carried along.
-    val ex = d.select(
-      col("sj_id") +: size(col("sj_set")).as("sj_sz") +:
-        explode(col("sj_set")).as("sj_tok") +: bc: _*)
-    // The default-loud candidate-mass census (r18 VERDICT item 4): a
-    // corpus-wide call on a saturated vocabulary previously ran straight
-    // into the >64 GB spill wall with no warning — now it fails eagerly,
-    // BEFORE the prefix join, with the measured law and the escape hatches
-    // in the message. NOTE this makes the call EAGER (one action at
-    // DataFrame-construction time — the documented cost of the
-    // loud-by-default guard, r19 ADVICE): Packed pays NO separate Spark
-    // action at all (the mass folds driver-side over the rows the pack
-    // collects anyway — r22, see guardCandidateMassDriver); Aggregate
-    // keeps the one-row Spark aggregate over the checkpointed table its
-    // rank reuses (r19 VERDICT item 4: without the reuse the double-pass
-    // was 5.5 → 9.0 s on q_ngram_jaccard); Window censuses a RAW
-    // single-consumer aggregate (see the containmentJoin comment on why
-    // table reuse is NOT extended to the window rank). Skipped when maxDf
-    // capped the input: post-cap every posting list is ≤ maxDf, so
-    // ΣC(df,2) ≤ |vocab|·C(maxDf,2) — LINEAR in vocabulary by
-    // construction; the census would only re-prove it (measured ~2 s of
-    // redundant aggregate on the sf0.1 capped gates).
+    // The default-loud candidate-mass census: a corpus-wide call on a
+    // saturated vocabulary would otherwise run straight into the >64 GB
+    // spill wall with no warning — it fails eagerly instead, BEFORE the
+    // prefix join, with the measured law and the escape hatches in the
+    // message. This makes the call EAGER (one action at DataFrame-
+    // construction time — the documented cost of the loud-by-default
+    // guard). Skipped when maxDf capped the input: post-cap every posting
+    // list is ≤ maxDf, so ΣC(df,2) ≤ |vocab|·C(maxDf,2) — LINEAR in
+    // vocabulary by construction; the census would only re-prove it
+    // (measured ~2 s of redundant aggregate on the sf0.1 capped gates).
     val censusNeeded = maxDf.isEmpty && maxCandidates != Long.MaxValue
-    val dfTabShared: Option[DataFrame] =
-      if (dfStrategy == DfStrategy.Packed) Some(tokenDfTable(ex, blockCols))
-      else if (censusNeeded && dfStrategy.isInstanceOf[DfStrategy.Aggregate])
-        Some(tokenDfTable(ex, blockCols))
-      else None
-    // Packed runs its census DRIVER-SIDE off the rows the pack collects
-    // anyway (see guardCandidateMassDriver — the Spark census action here
-    // was ~half of q_ngram_jaccard's wall time). Aggregate keeps the
-    // one-row Spark aggregate over the checkpointed table its rank
-    // join-back reuses. Window runs it over a RAW single-consumer
-    // aggregate — see the containmentJoin census comment: the r19/r20
-    // reuse-the-census-table substitution measured SLOWER than the window
-    // recount it saved and is reverted this round.
-    if (censusNeeded && dfStrategy != DfStrategy.Packed)
-      guardCandidateMass(
-        dfTabShared.getOrElse(tokenDfTable(ex, blockCols, ckpt = false)),
-        maxCandidates, "jaccardJoin")
-
-    // Packed's bounded-vocabulary contract is ENFORCED, not assumed: the df
-    // table is collected through a hard cap (one row past `maxPackedDfEntries`
-    // proves the overflow without materializing an unbounded result on the
-    // driver), and an oversized vocabulary degrades to
-    // Aggregate(broadcast = false) — the unbounded-vocabulary strategy built
-    // on the same combiner-reduced count, identical output by the strategy
-    // property tests — with a warning naming the contract, instead of OOMing
-    // the driver with no diagnostic. All Packed reads go through the shared
-    // checkpointed [[tokenDfTable]]: the capped collect materializes it,
-    // the census folds over the collected rows driver-side, and the
-    // degraded path's Spark census + join-back (which fire exactly when
-    // that aggregate is at its largest) read the computed blocks instead
-    // of aggregating the index again; checkpoint blocks are released by
-    // the ContextCleaner once the plans they feed are unreferenced.
-    val (strategy, packedDfRows, dfTabReuse): (DfStrategy,
-        Option[Array[org.apache.spark.sql.Row]], Option[DataFrame]) =
-      dfStrategy match {
-        case DfStrategy.Packed =>
-          import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
-          require(d.schema("sj_set").dataType.isInstanceOf[ArrayType] &&
-            d.schema("sj_set").dataType.asInstanceOf[ArrayType].elementType == LongType,
-            s"DfStrategy.Packed needs ARRAY<BIGINT> tokens, got " +
-              d.schema("sj_set").dataType.catalogString)
-          require(blockCols.forall(c => d.schema(c).dataType == StringType),
-            "DfStrategy.Packed needs STRING blocking columns")
-          // The same combiner-reduced count Aggregate uses; collected instead
-          // of broadcast — identical volume when the contract holds.
-          val dfTab = dfTabShared.get
-          val capped = dfTab.limit(maxPackedDfEntries + 1).collect()
-          if (capped.length <= maxPackedDfEntries) {
-            // The census over rows already in hand — zero extra actions
-            // (same mass, same threshold, same failure as the Spark form).
-            if (censusNeeded)
-              guardCandidateMassDriver(capped, blockCols.size + 1,
-                maxCandidates, "jaccardJoin")
-            (DfStrategy.Packed, Some(capped), None)
-          } else {
-            log.warn(s"DfStrategy.Packed df table exceeds maxPackedDfEntries=" +
-              s"$maxPackedDfEntries distinct (block, token) entries; the " +
-              "bounded-vocabulary contract does not hold for this input — " +
-              "falling back to DfStrategy.Aggregate(broadcast = false)")
-            // Oversized vocabulary: the rows are NOT all in hand — the
-            // census falls back to the Spark aggregate with the fallback
-            // strategy's own (reused) table.
-            if (censusNeeded)
-              guardCandidateMass(dfTab, maxCandidates, "jaccardJoin")
-            (DfStrategy.Aggregate(broadcast = false), None, Some(dfTab))
-          }
-        // (r22) Window stays Window even when the census ran: the r19/r20
-        // substitution of the checkpointed census table for the window's
-        // recount measured SLOWER than the recount it saved — see the
-        // containmentJoin census comment for the isolated A/B numbers.
-        case a: DfStrategy.Aggregate => (a, None, dfTabShared)
-        case s => (s, None, None)
+    // Every path reads the one checkpointed df table: the capped collect
+    // materializes it, the packed census folds over the collected rows
+    // driver-side, and the join-back's Spark census + join (for unpackable
+    // input, or when the aggregate is over the cap — at its largest) read
+    // the computed blocks instead of aggregating the index again; checkpoint
+    // blocks are released by the ContextCleaner once the plans they feed
+    // are unreferenced.
+    val dfTab = tokenDfTable(ex, blockCols)
+    val packable = (d.schema("sj_set").dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }) && blockCols.forall(c => d.schema(c).dataType == StringType)
+    // The packed table is (block → sorted long array), so only long tokens
+    // under string blocks pack. Its bounded-vocabulary contract is ENFORCED,
+    // not assumed: the df table is collected through a hard cap (one row
+    // past `maxPackedDfEntries` proves the overflow without materializing an
+    // unbounded result on the driver), and an oversized vocabulary takes
+    // the join-back with a warning instead of OOMing the driver.
+    val packedDfRows: Option[Array[Row]] =
+      if (!packable) None
+      else {
+        val capped = dfTab.limit(maxPackedDfEntries + 1).collect()
+        if (capped.length <= maxPackedDfEntries) Some(capped)
+        else {
+          log.warn(s"jaccardJoin: df table exceeds $maxPackedDfEntries " +
+            "distinct (block, token) entries, too many to pack on the " +
+            "driver — ranking prefixes by the hot-split df join-back instead")
+          None
+        }
       }
+    if (censusNeeded) packedDfRows match {
+      case Some(rows) =>
+        guardCandidateMassDriver(rows, blockCols.size + 1, maxCandidates, "jaccardJoin")
+      case None => guardCandidateMass(dfTab, maxCandidates, "jaccardJoin")
+    }
 
-    // Rare-first global order: per-block document frequency of each token.
-    // Window: one shuffle of the index, df attached in place (no second
-    // relation — an aggregate joined back WITHOUT broadcast shuffles the
-    // index twice, since the aggregate's exchange carries different rows
-    // than the join side's and ReuseExchange can't deduplicate them).
-    // Aggregate: combiner-reduced groupBy count joined back — broadcast for
-    // bounded vocabularies (zero index shuffles); for unbounded-but-skewed
-    // ones the operator splits hot keys through a broadcast branch itself
-    // (AQE's OptimizeSkewedJoin cannot match this join shape — see
-    // DfStrategy.Aggregate).
-    // Packed: df collected driver-side, prefix selected row-locally — no
-    // per-doc rank shuffle at all. See DfStrategy.
-    //
-    // Prefix of length |A| − ⌈t·|A|⌉ + 1 under the (df, token) order.
-    val prefix = strategy match {
-      case DfStrategy.Window | DfStrategy.Aggregate(_, _) =>
-        val ceilTA = floor((col("sj_sz") * threshNum + (threshDen - 1)) / threshDen)
-        rankedIndex(ex, blockCols, strategy, dfTabReuse)
-          .filter(col("sj_rk") <= col("sj_sz") - ceilTA + 1)
+    // Prefix of length |A| − ⌈t·|A|⌉ + 1 under the (df, token) order, as
+    // (sj_id, sj_tok, sj_sz, sj_rk, blocks…) rows.
+    val prefix = packedDfRows match {
+      case None =>
+        rankedIndex(ex, blockCols, Some(dfTab), hotDfThreshold)
+          .filter(col("sj_rk") <= col("sj_sz") - ceilDiv(col("sj_sz") * threshNum, threshDen) + 1)
           .select(col("sj_id") +: col("sj_tok") +: col("sj_sz") +: col("sj_rk") +: bc: _*)
-      case DfStrategy.Packed =>
+      case Some(dfRows) =>
         import org.apache.spark.sql.graft.bridge
         import graft.functions.{DfPack, PrefixTokens}
         val nb = blockCols.size
-        val dfRows = packedDfRows.get // guarded + collected above, under cap
-        // A null block value or token can never survive the equi-join in any
-        // strategy (null keys drop); excluded from the pack, and the
+        // A null block value or token can never survive the equi-join on
+        // either path (null keys drop); excluded from the pack, and the
         // expression nulls out rows with null block values to match.
         val pack = DfPack.pack(dfRows.iterator
           .filter(r => (0 to nb).forall(i => !r.isNullAt(i)))
@@ -643,22 +554,20 @@ object SetSimJoin {
     // joiner (at sf0.1 that's 2.4 M → ~0.3 M rows into the hash aggregate)
     // instead of materializing every collision into groupBy state first.
     // The aggregate that remains is pure pair-dedup for the verify join.
-    // Packed has NO exchange anywhere in its map pipeline — which exposes a
-    // planner trap: a broadcast join BUILD side strips any user repartition
-    // beneath it (collecting makes redistribution "redundant"), so the
-    // build's whole scan→shingle→prefix pipeline re-runs at the SOURCE
-    // file's split parallelism — measured as the entire corpus re-shingled
-    // on one task over a single-split parquet fixture. SHUFFLE_HASH on the
-    // build sides keeps every heavy-compute side behind a real exchange
-    // (full map parallelism, AQE-splittable keys); at scale these sides are
-    // far beyond broadcast thresholds anyway, so the hint only pins what a
-    // 1000-executor plan would do regardless, without the sort a merge join
-    // would add. Window/Aggregate paths keep planner freedom: their window
-    // exchange already feeds every consumer.
-    val hinted: DataFrame => DataFrame = strategy match {
-      case DfStrategy.Packed => _.hint("SHUFFLE_HASH")
-      case _                 => identity
-    }
+    // The packed path has NO exchange anywhere in its map pipeline — which
+    // exposes a planner trap: a broadcast join BUILD side strips any user
+    // repartition beneath it (collecting makes redistribution "redundant"),
+    // so the build's whole scan→shingle→prefix pipeline re-runs at the
+    // SOURCE file's split parallelism — measured as the entire corpus
+    // re-shingled on one task over a single-split parquet fixture.
+    // SHUFFLE_HASH on the build sides keeps every heavy-compute side behind
+    // a real exchange (full map parallelism, AQE-splittable keys); at scale
+    // these sides are far beyond broadcast thresholds anyway, so the hint
+    // only pins what a 1000-executor plan would do regardless, without the
+    // sort a merge join would add. The join-back path keeps planner
+    // freedom: its rank window's exchange already feeds every consumer.
+    val hinted: DataFrame => DataFrame =
+      if (packedDfRows.isDefined) _.hint("SHUFFLE_HASH") else identity
     val alpha = ceilDiv((col("sz_i") + col("sz_j")) * threshNum, threshNum + threshDen)
     // The i side's index prefix: rank ≤ |A| − ⌈2t/(1+t)·|A|⌉ + 1. Filtered
     // from the probe-length prefix stream row-locally (rank is the true rank
@@ -692,6 +601,7 @@ object SetSimJoin {
         col("n_common"), col("n_union")): _*)
   }
 
+
   /** Asymmetric SET-CONTAINMENT self-join: ordered pairs (small, big),
     * `doc_small ≠ doc_big`, same `blockCols` values, with
     * `|small ∩ big| / |small| ≥ threshNum/threshDen` — the sub-document
@@ -713,14 +623,16 @@ object SetSimJoin {
     * candidates only.
     *
     * Scale posture: the index side is the full inverted index — LINEAR in
-    * corpus token volume, shuffled once on (block, token) (or df-joined
-    * under [[DfStrategy.Aggregate]], hot-split included via
-    * [[rankedIndex]]); the probe side explodes only ≈ (1−t)·|A|+1 of each
+    * corpus token volume, shuffled once on (block, token) by the df window
+    * of [[rankedIndex]]; the probe side explodes only ≈ (1−t)·|A|+1 of each
     * doc's RAREST tokens, so posting-list fan-out stays small by
     * construction (a stop-word reaches a prefix only if the doc is almost
-    * all stop-words). No stage is quadratic in block size.
-    * [[DfStrategy.Packed]] is rejected: its row-local generator emits
-    * prefixes, not the full ranked sets the index side needs.
+    * all stop-words). No stage is quadratic in block size. The df is
+    * always the window count: the packed path emits prefixes, not the full
+    * ranked sets the index side needs, and joining the census's df table
+    * back instead measured 5.33 s against the window's 2.03 s on
+    * q_containment at sf0.1 (plans/r22/setsim_variants.txt, per-variant
+    * JVMs, identical 505 output rows).
     *
     * Both directions of a pair are evaluated independently (containment is
     * asymmetric — two equal-sized near-identical docs qualify both ways).
@@ -741,48 +653,28 @@ object SetSimJoin {
       blockCols: Seq[String],
       threshNum: Int,
       threshDen: Int,
-      dfStrategy: DfStrategy = DfStrategy.Window,
       maxDf: Option[Long] = None,
       maxCandidates: Long = DefaultMaxCandidates): DataFrame = {
-    require(threshNum > 0 && threshNum <= threshDen, "threshold must be in (0, 1]")
-    require(dfStrategy != DfStrategy.Packed,
-      "containmentJoin needs full-index ranks; use DfStrategy.Window or Aggregate")
     val bc = blockCols.map(col)
-    val docsF = maxDf.map(m => capTokenDf(docs, setCol, blockCols, m, idCol))
-      .getOrElse(docs)
-    val d = docsF.select(col(idCol).as("sj_id") +: col(setCol).as("sj_set") +: bc: _*)
-    val ex = d.select(
-      col("sj_id") +: size(col("sj_set")).as("sj_sz") +:
-        explode(col("sj_set")).as("sj_tok") +: bc: _*)
+    val (d, ex) = indexOf(docs, idCol, setCol, blockCols, threshNum, threshDen, maxDf)
     // Same default-loud mass census as jaccardJoin: Σ C(df, 2) is the
     // probe×index collision law's proxy here (a saturated posting list
     // collides its prefix probes with its full index side). EAGER when it
-    // runs (one aggregate action at construction time — r19 ADVICE), over
-    // a RAW single-consumer aggregate. Skipped when maxDf capped the input
-    // (post-cap mass is linear in vocabulary by construction — see
-    // jaccardJoin).
-    //
-    // r22: the r19/r20 Window-with-census substitution (checkpoint the
-    // census table and join it back as the rank's df source, saving the
-    // window recount's second corpus scan) is REVERTED here on a fresh
-    // isolated A/B: the substituted join-back ranked index cost 5.33 s
-    // min vs 2.03 s for the plain window form on q_containment at sf0.1
-    // (plans/r22/setsim_variants.txt, per-variant JVMs, identical 505
-    // output rows), even with a SHUFFLE_HASH hint on the df side — the
-    // checkpointed LogicalRDD's stats-free join plus the extra scan of the
-    // materialized table cost more than the one corpus re-scan they
-    // avoid. The census keeps its own combiner-reduced aggregate (~0.5 s
-    // incl. the corpus pass); net ~2.3 s off the gate.
-    val censusNeeded = maxDf.isEmpty && maxCandidates != Long.MaxValue
-    if (censusNeeded)
+    // runs (one aggregate action at construction time), over a RAW
+    // single-consumer aggregate: checkpointing it to serve as the rank's df
+    // source is the 5.33 s join-back form above, so the census keeps its
+    // own combiner-reduced aggregate (~0.5 s incl. the corpus pass).
+    // Skipped when maxDf capped the input (post-cap mass is linear in
+    // vocabulary by construction — see jaccardJoin).
+    if (maxDf.isEmpty && maxCandidates != Long.MaxValue)
       guardCandidateMass(tokenDfTable(ex, blockCols, ckpt = false),
         maxCandidates, "containmentJoin")
-    val ranked = rankedIndex(ex, blockCols, dfStrategy, None)
+    val ranked = rankedIndex(ex, blockCols, None)
       .select(col("sj_id") +: col("sj_tok") +: col("sj_sz") +: col("sj_rk") +: bc: _*)
     // Probe prefix: |A| − ⌈t·|A|⌉ + 1 rare-first tokens of the contained side.
     val probe = ranked.filter(
-      col("sj_rk") <= col("sj_sz") - ceilDivC(col("sj_sz") * threshNum, threshDen) + 1)
-    val alpha = ceilDivC(col("sz_i") * threshNum, threshDen)
+      col("sj_rk") <= col("sj_sz") - ceilDiv(col("sj_sz") * threshNum, threshDen) + 1)
+    val alpha = ceilDiv(col("sz_i") * threshNum, threshDen)
     val cand = probe.toDF("doc_i" +: "sj_tok" +: "sz_i" +: "rk_i" +: blockCols: _*)
       .join(ranked.toDF("doc_j" +: "sj_tok" +: "sz_j" +: "rk_j" +: blockCols: _*),
         blockCols :+ "sj_tok")

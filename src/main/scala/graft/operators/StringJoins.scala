@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * only. Work is Σ_g df(g)² over gram frequencies — ultra-frequent grams are
   * the known hot spot of the count-filter family; AQE splits those join
   * keys, and the documented escalation path at corpus scale is an Ed-Join
-  * style rare-first PREFIX filter (the [[SetSimJoin.DfStrategy]] machinery,
+  * style rare-first PREFIX filter (the [[SetSimJoin]] df ranking,
   * with prefix length `q*d + 1`), which trades this operator's single-pass
   * simplicity for df bookkeeping. The short-string path is quadratic ONLY
   * within length buckets of width `d+1` over strings shorter than

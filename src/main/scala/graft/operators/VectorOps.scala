@@ -922,11 +922,15 @@ object VectorOps {
     * (round-trip-proven in VectorOpsSpec).
     */
   def ivfPqSearchLoaded(index: LoadedIvfPqIndex, queries: DataFrame,
-      idCol: String, vecCol: String, m: Int, dim: Int, k: Int, nProbe: Int,
-      excludeSelf: Boolean = true): DataFrame =
+      idCol: String, vecCol: String, m: Int, dim: Int, k: Int, nProbe: Int): DataFrame =
     ivfPqSearch(index.codes,
       index.centroids.select(col("cluster_id").as(idCol), col("cvec").as(vecCol)),
-      queries, idCol, vecCol, index.codebooks, m, dim, k, nProbe, excludeSelf)
+      queries, idCol, vecCol, index.codebooks, m, dim, k, nProbe)
+
+  /** Most coarse centroids [[ivfPqProbeEmissions]] inlines into its
+    * row-local probe rank — plan size and per-row cost grow with it.
+    */
+  private val MaxInlinedCentroids: Int = 4096
 
   /** STATELESS stream-static probe of a persisted IVF-PQ codes index — the
     * online half of the ANN deployment: each arriving micro-batch of query
@@ -947,12 +951,12 @@ object VectorOps {
     * Emits RAW (query_id, neighbor_id, qc, part) rows — one per matched
     * subspace; [[ivfPqCloseFromParts]] closes them into the ranked top-k
     * batch-side, bit-identical to [[ivfPqSearchLoaded]] over the same
-    * queries (one oracle gates both — the FromCounts convention).
+    * queries (one oracle gates both — the FromCounts convention). Queries
+    * and corpus share one id space (the [[pqSearch]] contract).
     */
   def ivfPqProbeEmissions(spark: org.apache.spark.sql.SparkSession,
       queries: DataFrame, idCol: String, vecCol: String, name: String,
-      m: Int, dim: Int, nProbe: Int, excludeSelf: Boolean = true,
-      maxInlinedCentroids: Int = 4096): DataFrame = {
+      m: Int, dim: Int, nProbe: Int): DataFrame = {
     require(m >= 1 && dim % m == 0 && nProbe >= 1)
     val sd = dim / m
     // Centroid tables are tiny by contract (the coarse quantizer is
@@ -970,15 +974,15 @@ object VectorOps {
     val cen = ArraySeq.unsafeWrapArray(spark.table(s"${name}_centroids")
       .select(col("cluster_id").cast("long"),
         transform(col("cvec"), _.cast("double")))
-      .limit(maxInlinedCentroids + 1)
+      .limit(MaxInlinedCentroids + 1)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1))
-    require(cen.length <= maxInlinedCentroids,
+    require(cen.length <= MaxInlinedCentroids,
       s"ivfPqProbeEmissions inlines every coarse centroid of " +
-        s"'$name' into the row-local probe rank, past maxInlinedCentroids=" +
-        s"$maxInlinedCentroids — plan size and per-row cost are linear in " +
+        s"'$name' into the row-local probe rank, and it has more than " +
+        s"$MaxInlinedCentroids — plan size and per-row cost are linear in " +
         "the quantizer. Use the batch ivfPqSearchLoaded path (broadcast " +
-        "centroid join) for large quantizers, or raise the cap deliberately")
+        "centroid join) for large quantizers")
     val qvecD = transform(col(vecCol), _.cast("double"))
     val probeStructs = array(cen.map { case (cid, cv) =>
       struct((lit(-1.0) * dot(qvecD, typedLit(cv))).as("nqc"),
@@ -989,8 +993,8 @@ object VectorOps {
         explode(slice(sort_array(probeStructs), 1, nProbe)).as("pb"))
       .select(col("query_id"), col("graft_qv"),
         (lit(-1.0) * col("pb.nqc")).as("qc"), col("pb.cluster_id").as("cluster_id"))
-    val cand = probed.join(spark.table(s"${name}_codes"), Seq("cluster_id"))
-    val filt = if (excludeSelf) cand.filter(col("id") =!= col("query_id")) else cand
+    val filt = probed.join(spark.table(s"${name}_codes"), Seq("cluster_id"))
+      .filter(col("id") =!= col("query_id"))
     val cbs = spark.table(s"${name}_codebooks")
       .select(col("sub").as("graft_cb_sub"), col("cid").as("graft_cb_cid"),
         transform(col("cvec"), _.cast("double")).as("graft_cb_vec"))
@@ -1196,19 +1200,20 @@ object VectorOps {
     * SUM over doubles is order-dependent for m > 2); ranking ties break on
     * neighbor id.
     *
+    * Contract: queries and corpus share ONE id space (the self-query
+    * case — queries are corpus members), so a candidate whose id equals
+    * the query id is the query itself and is dropped. A caller with an
+    * independent query id space must remap its ids first: an accidental
+    * collision would drop a legitimate neighbor. The IVF-PQ searches
+    * ([[ivfPqSearch]], [[ivfPqSearchLoaded]], [[ivfPqProbeEmissions]])
+    * share this contract.
+    *
     * @param codes [[pqEncode]] output for the corpus
-    * @param excludeSelf drop candidates whose id equals the query id —
-    *        correct ONLY when queries and corpus share one id space (the
-    *        self-query case); pass false when the two relations have
-    *        independent id spaces, where an accidental id collision is a
-    *        legitimate neighbor (the [[crossNearDupPairs]] convention:
-    *        ids are not compared across relations).
     * @return (query_id, rank INT, neighbor_id, adc DOUBLE)
     */
   def pqSearch(codes: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,
-      codebooks: DataFrame, m: Int, dim: Int, k: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+      codebooks: DataFrame, m: Int, dim: Int, k: Int): DataFrame = {
     require(m >= 1 && dim % m == 0 && k >= 1)
     val qsubs = (0 until m).map(s =>
       struct(lit(s).as("sub"), subvec(col(vecCol), s, m, dim).as("qsub")))
@@ -1220,9 +1225,8 @@ object VectorOps {
         dot(col("qsub"), col("cvec")).as("part"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").desc, col("neighbor_id").asc)
-    val cand = codes.join(broadcast(lut), Seq("sub", "code"))
-    val filtered = if (excludeSelf) cand.filter(col("id") =!= col("query_id")) else cand
-    filtered
+    codes.join(broadcast(lut), Seq("sub", "code"))
+      .filter(col("id") =!= col("query_id"))
       .groupBy(col("query_id"), col("id").as("neighbor_id"))
       .agg(aggregate(sort_array(collect_list(col("part"))), lit(0.0), (a, x) => a + x)
         .as("adc"), count(lit(1)).as("graft_nsub"))
@@ -1303,13 +1307,15 @@ object VectorOps {
     * neighbor id. Recall is measured by gate, not assumed (the
     * [[EvalOps.pairSetPrf]] judge composes, as with q_ann_recall).
     *
+    * Queries and corpus share one id space: a candidate equal to its
+    * query id is dropped (the [[pqSearch]] contract).
+    *
     * @param encoded [[ivfPqEncode]] output for the corpus
     * @return (query_id, rank INT, neighbor_id, adc DOUBLE)
     */
   def ivfPqSearch(encoded: DataFrame, centroids: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, codebooks: DataFrame,
-      m: Int, dim: Int, k: Int, nProbe: Int,
-      excludeSelf: Boolean = true): DataFrame = {
+      m: Int, dim: Int, k: Int, nProbe: Int): DataFrame = {
     require(m >= 1 && dim % m == 0 && k >= 1 && nProbe >= 1)
     val cen = centroids.select(col(idCol).cast("long").as("cluster_id"),
       asDouble(col(vecCol)).as("graft_cvec"))
@@ -1330,9 +1336,8 @@ object VectorOps {
       .select(col("query_id"), col("sub"), col("cid").as("code"),
         dot(col("qsub"), col("cvec")).as("part"))
     val cand = encoded.join(broadcast(probes), Seq("cluster_id"))
-    val withLut = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
-    val filtered =
-      if (excludeSelf) withLut.filter(col("id") =!= col("query_id")) else withLut
+    val filtered = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
+      .filter(col("id") =!= col("query_id"))
     ivfPqCloseFromParts(filtered.select(col("query_id"),
       col("id").as("neighbor_id"), col("qc"), col("part")), m, k)
   }

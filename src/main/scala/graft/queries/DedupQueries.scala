@@ -1078,13 +1078,13 @@ object DedupQueries extends QueryDomain {
       // via [[SetSimJoin]]'s inverted index + prefix filtering: candidate
       // pairs come from rare-token prefix collisions, never an all-pairs
       // block scan, so work stays near-linear as blocks grow. Character
-      // trigrams are a BOUNDED vocabulary, so document frequency uses the
-      // PACKED strategy: the combiner-reduced df table is packed driver-side
-      // and the prefix is selected row-locally by the codegen'd
-      // [[graft.functions.PrefixTokens]] — no (block, token) index shuffle
-      // AND no per-doc rank window shuffle (the full-inverted-index exchange
-      // the window form pays on both self-join sides) — see
-      // [[SetSimJoin.DfStrategy]].
+      // trigrams are a BOUNDED vocabulary of long tokens under string
+      // blocks, so jaccardJoin takes its PACKED path: the combiner-reduced
+      // df table is packed driver-side and the prefix is selected
+      // row-locally by the codegen'd [[graft.functions.PrefixTokens]] — no
+      // (block, token) index shuffle AND no per-doc rank window shuffle
+      // (the full-inverted-index exchange a ranked index pays on both
+      // self-join sides) — see [[SetSimJoin]].
       // Shingling is the codegen'd [[graft.functions.PackedShingles]] — one
       // compiled O(len) pass per row, each trigram packed LOSSLESSLY into a
       // long (21 bits per code point), so every downstream stage — explode,
@@ -1098,8 +1098,7 @@ object DedupQueries extends QueryDomain {
         .filter(length($"text") >= 3)
       orderedSmall(
         SetSimJoin.jaccardJoin(g, "doc_id", "gr", Seq("lang", "source"),
-            threshNum = 3, threshDen = 5,
-            dfStrategy = SetSimJoin.DfStrategy.Packed)
+            threshNum = 3, threshDen = 5)
           .select($"doc_i", $"doc_j", $"n_common", $"n_union"),
         $"doc_i", $"doc_j")
     },
@@ -1125,8 +1124,7 @@ object DedupQueries extends QueryDomain {
       // gates the knob itself, not just a hand-rolled pre-step.
       orderedSmall(
         SetSimJoin.jaccardJoin(g, "doc_id", "gr", Seq("lang", "source"),
-            threshNum = 3, threshDen = 5,
-            dfStrategy = SetSimJoin.DfStrategy.Packed, maxDf = Some(4L))
+            threshNum = 3, threshDen = 5, maxDf = Some(4L))
           .select($"doc_i", $"doc_j", $"n_common", $"n_union"),
         $"doc_i", $"doc_j")
     },
@@ -1191,8 +1189,8 @@ object DedupQueries extends QueryDomain {
       // containment ~1 but Jaccard ~|small|/|big|). Candidates come from
       // the contained side's rare-first prefix probing the FULL inverted
       // index ([[SetSimJoin.containmentJoin]], one-sided prefix filtering
-      // — never an all-pairs scan); word shingles are an unbounded
-      // vocabulary, so df uses the Window strategy (one index exchange).
+      // — never an all-pairs scan); its df is the window count (one
+      // index exchange).
       // Shingling is the compiled [[TextOps.wordShingles]] — the same
       // split-on-space 3-gram contract as the q_dedup_minhash oracle twin.
       val g = docs(s, dir)

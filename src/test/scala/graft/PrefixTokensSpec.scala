@@ -9,8 +9,8 @@ import graft.functions.{DfPack, PrefixTokens}
 
 /** Unit coverage for the row-local PPJoin prefix selection: rank order,
   * prefix length, per-block df isolation, degenerate inputs, invariant
-  * violations. End-to-end equality with the window formulation is the
-  * four-strategy property in SetSimJoinSpec.
+  * violations. End-to-end equality of the packed path with brute force and
+  * with the join-back is the long-token property in SetSimJoinSpec.
   */
 class PrefixTokensSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._

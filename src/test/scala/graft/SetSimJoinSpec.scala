@@ -21,6 +21,27 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     df.select("doc_i", "doc_j", "n_common", "n_union")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
 
+  /** Blocked all-pairs Jaccard over (doc_id, blk, gr) — the reference every
+    * prefix path is compared with.
+    */
+  private def brute(df: org.apache.spark.sql.DataFrame, tn: Int, td: Int) =
+    pairsOf(
+      df.as("a").join(df.as("b"),
+          col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
+          size(array_intersect(col("a.gr"), col("b.gr"))).cast("long").as("n_common"),
+          size(array_union(col("a.gr"), col("b.gr"))).cast("long").as("n_union"))
+        .filter(col("n_union") > 0 && col("n_common") * td >= col("n_union") * tn))
+
+  /** The join-back path on a packable input: a cap of 1 df entry is below
+    * every fixture's df table; `hotDf` sets the hot-key split.
+    */
+  private def joinBack(df: org.apache.spark.sql.DataFrame, tn: Int, td: Int,
+      hotDf: Long = 1L << 20) =
+    SetSimJoin.jaccardJoinWith(df, "doc_id", "gr", Seq("blk"), tn, td,
+      maxDf = None, maxCandidates = SetSimJoin.DefaultMaxCandidates,
+      maxPackedDfEntries = 1, hotDfThreshold = hotDf)
+
   test("jaccardJoin ≡ blocked all-pairs join at t = 3/5") {
     val g = grams
     val viaIndex = pairsOf(
@@ -56,48 +77,43 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     val df = (rows ++ planted).toDF("doc_id", "blk", "gr")
     for ((tn, td) <- Seq((1, 2), (3, 5), (4, 5))) {
       val viaIndex = pairsOf(SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), tn, td))
-      val brute = pairsOf(
-        df.as("a").join(df.as("b"),
-            col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
-            size(array_intersect(col("a.gr"), col("b.gr"))).cast("long").as("n_common"),
-            size(array_union(col("a.gr"), col("b.gr"))).cast("long").as("n_union"))
-          .filter(col("n_union") > 0 && col("n_common") * td >= col("n_union") * tn))
-      assert(viaIndex == brute, s"divergence at threshold $tn/$td")
-      assert(brute.nonEmpty, s"degenerate fixture at threshold $tn/$td")
+      val want = brute(df, tn, td)
+      assert(viaIndex == want, s"divergence at threshold $tn/$td")
+      assert(want.nonEmpty, s"degenerate fixture at threshold $tn/$td")
     }
   }
 
-  test("property: every DfStrategy yields identical output, hot keys included") {
+  test("property: string tokens take the join-back ≡ brute force, hot keys included") {
     val rng = new scala.util.Random(13) // deterministic
     // A deliberately skewed vocabulary: token t0 appears in EVERY set (the
-    // stop-token hot key the aggregate strategies exist for), the rest drawn
+    // stop-token hot key the join-back's split exists for), the rest drawn
     // from a small vocab so prefixes collide and ties on (df, token) occur.
+    // String tokens never pack, so both calls run the join-back: once with
+    // the default split (no key is hot) and once with a split at df 8, which
+    // routes t0 and the common tail through the broadcast branch.
     val rows = (0 until 150).map { id =>
       val toks = ("t0" +: Seq.fill(2 + rng.nextInt(10))("t" + rng.nextInt(20))).distinct
       (id.toLong, if (id % 3 == 0) "a" else "b", toks)
     }
     val df = rows.toDF("doc_id", "blk", "gr")
-    val strategies = Seq(
-      SetSimJoin.DfStrategy.Window,
-      SetSimJoin.DfStrategy.Aggregate(broadcast = true),
-      SetSimJoin.DfStrategy.Aggregate(broadcast = false))
     for ((tn, td) <- Seq((1, 2), (3, 5))) {
-      val results = strategies.map(st => pairsOf(
-        SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), tn, td, st)))
-      assert(results(0).nonEmpty, s"degenerate fixture at threshold $tn/$td")
-      assert(results(0) == results(1) && results(1) == results(2),
-        s"DfStrategy divergence at threshold $tn/$td")
+      val want = brute(df, tn, td)
+      val results = Seq(
+        pairsOf(SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), tn, td)),
+        pairsOf(joinBack(df, tn, td, hotDf = 8L)))
+      assert(want.nonEmpty, s"degenerate fixture at threshold $tn/$td")
+      results.foreach(r => assert(r == want, s"df path divergence at threshold $tn/$td"))
     }
   }
 
-  test("property: all four DfStrategies identical on long tokens, hot keys included") {
+  test("property: packed and join-back paths ≡ brute force on long tokens, hot keys") {
     val rng = new scala.util.Random(29) // deterministic
-    // Long-token twin of the skewed fixture (Packed requires long tokens):
+    // Long-token twin of the skewed fixture (only long tokens pack):
     // token 0 is the everywhere-hot stop token; small vocab forces prefix
     // collisions and (df, token) ties. The rare-first ORDER differs between
     // long and string token types (2 < 10 but "t10" < "t2") — the result
-    // set must not, and must also match across all four strategies.
+    // set must not, and must match on the packed path and on the join-back
+    // with and without hot keys.
     val rows = (0 until 150).map { id =>
       val toks = (0L +: Seq.fill(2 + rng.nextInt(10))(1L + rng.nextInt(20).toLong)).distinct
       (id.toLong, if (id % 3 == 0) "a" else "b", toks)
@@ -105,53 +121,81 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     // planted exact twins so even the t=1 pass has answers to lose
     val planted = rows.take(4).map { case (id, blk, toks) => (id + 1000L, blk, toks) }
     val df = (rows ++ planted).toDF("doc_id", "blk", "gr")
-    val strategies = Seq(
-      SetSimJoin.DfStrategy.Window,
-      SetSimJoin.DfStrategy.Aggregate(broadcast = true),
-      SetSimJoin.DfStrategy.Aggregate(broadcast = false),
-      SetSimJoin.DfStrategy.Packed)
     for ((tn, td) <- Seq((1, 2), (3, 5), (1, 1))) {
-      val results = strategies.map(st => pairsOf(
-        SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), tn, td, st)))
-      assert(results(0).nonEmpty, s"degenerate fixture at threshold $tn/$td")
-      assert(results.distinct.size == 1, s"DfStrategy divergence at threshold $tn/$td")
+      val want = brute(df, tn, td)
+      val results = Seq(
+        pairsOf(SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), tn, td)),
+        pairsOf(joinBack(df, tn, td)),
+        pairsOf(joinBack(df, tn, td, hotDf = 8L)))
+      assert(want.nonEmpty, s"degenerate fixture at threshold $tn/$td")
+      results.foreach(r => assert(r == want, s"df path divergence at threshold $tn/$td"))
     }
   }
 
   test("Packed over the df-entry cap falls back to Aggregate, identical output") {
     // Vocabulary of ~21 tokens × 2 blocks ⇒ well over a cap of 5 distinct
     // (block, token) entries: the guard must refuse to pack and degrade to
-    // Aggregate(broadcast = false) — same rows out, and the packed-prefix
-    // generator must NOT appear in the executed plan.
+    // the hot-split aggregate join-back — same rows out, and the
+    // packed-prefix generator must NOT appear in the executed plan.
     val rng = new scala.util.Random(31)
     val rows = (0 until 60).map { id =>
       val toks = (0L +: Seq.fill(2 + rng.nextInt(8))(1L + rng.nextInt(20).toLong)).distinct
       (id.toLong, if (id % 2 == 0) "a" else "b", toks)
     }
     val df = rows.toDF("doc_id", "blk", "gr")
-    val packed = SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), 1, 2,
-      SetSimJoin.DfStrategy.Packed, maxPackedDfEntries = 5)
-    assert(!packed.queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens"),
-      "over-cap Packed must not run the driver-packed prefix generator")
-    val viaWindow = pairsOf(
-      SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), 1, 2))
-    assert(pairsOf(packed) == viaWindow)
-    assert(viaWindow.nonEmpty, "degenerate fixture")
+    def withCap(cap: Int) = SetSimJoin.jaccardJoinWith(df, "doc_id", "gr", Seq("blk"),
+      1, 2, None, SetSimJoin.DefaultMaxCandidates, cap, hotDfThreshold = 1L << 20)
+    val overCap = withCap(5)
+    assert(!overCap.queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens"),
+      "over-cap input must not run the driver-packed prefix generator")
+    val want = brute(df, 1, 2)
+    assert(pairsOf(overCap) == want)
+    assert(want.nonEmpty, "degenerate fixture")
     // Under a generous cap the same input packs fine and still agrees.
-    val underCap = SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), 1, 2,
-      SetSimJoin.DfStrategy.Packed, maxPackedDfEntries = 10000)
+    val underCap = withCap(10000)
     assert(underCap.queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens"),
-      "under-cap Packed must keep the packed-prefix path")
-    assert(pairsOf(underCap) == viaWindow)
+      "under-cap input must keep the packed-prefix path")
+    assert(pairsOf(underCap) == want)
   }
 
-  test("Packed rejects string tokens and non-string blocking columns") {
-    val stringToks = Seq((1L, "a", Seq("x", "y", "z"))).toDF("doc_id", "blk", "gr")
-    assertThrows[IllegalArgumentException](SetSimJoin.jaccardJoin(
-      stringToks, "doc_id", "gr", Seq("blk"), 1, 2, SetSimJoin.DfStrategy.Packed))
-    val intBlock = Seq((1L, 7, Seq(1L, 2L, 3L))).toDF("doc_id", "blk", "gr")
-    assertThrows[IllegalArgumentException](SetSimJoin.jaccardJoin(
-      intBlock, "doc_id", "gr", Seq("blk"), 1, 2, SetSimJoin.DfStrategy.Packed))
+  test("the packed path runs only for long tokens under string blocks") {
+    // The selection rule, read off the optimized plan: the packed-prefix
+    // generator appears for ARRAY<BIGINT> tokens under STRING (or no)
+    // blocking columns, and never for string tokens or non-string blocks —
+    // those take the join-back, and still answer (they used to be rejected).
+    def packs(df: org.apache.spark.sql.DataFrame, blocks: Seq[String]) =
+      SetSimJoin.jaccardJoin(df, "doc_id", "gr", blocks, 1, 2)
+        .queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens")
+    val longToks = Seq((1L, "a", Seq(1L, 2L, 3L)), (2L, "a", Seq(1L, 2L, 3L)))
+      .toDF("doc_id", "blk", "gr")
+    assert(packs(longToks, Seq("blk")) && packs(longToks, Nil))
+    val stringToks = Seq((1L, "a", Seq("x", "y", "z")), (2L, "a", Seq("x", "y", "z")))
+      .toDF("doc_id", "blk", "gr")
+    assert(!packs(stringToks, Seq("blk")))
+    val intBlock = Seq((1L, 7, Seq(1L, 2L, 3L)), (2L, 7, Seq(1L, 2L, 3L)))
+      .toDF("doc_id", "blk", "gr")
+    assert(!packs(intBlock, Seq("blk")))
+    for (df <- Seq(stringToks, intBlock))
+      assert(pairsOf(SetSimJoin.jaccardJoin(df, "doc_id", "gr", Seq("blk"), 1, 2)) ==
+        Set((1L, 2L, 3L, 3L)))
+  }
+
+  test("packed path without blocking columns ≡ brute force across thresholds") {
+    // Blockless jaccard calls on long tokens now pack (one df block, the
+    // empty key); brute force over one constant block is the reference.
+    val rng = new scala.util.Random(41) // deterministic
+    val rows = (0 until 120).map { id =>
+      (id.toLong, "x", Seq.fill(3 + rng.nextInt(10))(rng.nextInt(20).toLong).distinct)
+    }
+    val planted = rows.take(4).map { case (id, blk, toks) => (id + 1000L, blk, toks) }
+    val df = (rows ++ planted).toDF("doc_id", "blk", "gr")
+    for ((tn, td) <- Seq((1, 2), (3, 5), (1, 1))) {
+      val out = SetSimJoin.jaccardJoin(df.drop("blk"), "doc_id", "gr", Nil, tn, td)
+      assert(out.queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens"))
+      val want = brute(df, tn, td)
+      assert(want.nonEmpty, s"degenerate fixture at threshold $tn/$td")
+      assert(pairsOf(out) == want, s"divergence at threshold $tn/$td")
+    }
   }
 
   test("degenerate threshold is rejected") {
@@ -159,6 +203,9 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
       SetSimJoin.jaccardJoin(grams, "doc_id", "gr", Seq("lang"), 0, 5))
     assertThrows[IllegalArgumentException](
       SetSimJoin.jaccardJoin(grams, "doc_id", "gr", Seq("lang"), 6, 5))
+    val df = Seq((1L, "a", Seq(1L, 2L))).toDF("doc_id", "blk", "gr")
+    assertThrows[IllegalArgumentException](
+      SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 0, 5))
   }
 
   // ------------------------------------------------------- containmentJoin
@@ -303,33 +350,19 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("property: containment DfStrategies identical, hot keys included") {
+  test("property: containment window rank ≡ brute force, hot keys included") {
     val rng = new scala.util.Random(23) // deterministic
     val rows = (0 until 150).map { id =>
       val toks = ("t0" +: Seq.fill(2 + rng.nextInt(10))("t" + rng.nextInt(20))).distinct
       (id.toLong, if (id % 3 == 0) "a" else "b", toks)
     }
     val df = rows.toDF("doc_id", "blk", "gr")
-    val strategies = Seq(
-      SetSimJoin.DfStrategy.Window,
-      SetSimJoin.DfStrategy.Aggregate(broadcast = true),
-      SetSimJoin.DfStrategy.Aggregate(broadcast = false),
-      SetSimJoin.DfStrategy.Aggregate(broadcast = false, hotDfThreshold = 8))
     for ((tn, td) <- Seq((1, 2), (4, 5))) {
-      val results = strategies.map(st => cPairsOf(
-        SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), tn, td, st)))
-      assert(results(0).nonEmpty, s"degenerate fixture at threshold $tn/$td")
-      assert(results.distinct.size == 1, s"DfStrategy divergence at threshold $tn/$td")
-      assert(results(0) == cBrute(df, tn, td), s"wrong answer at threshold $tn/$td")
+      val got = cPairsOf(
+        SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), tn, td))
+      assert(got.nonEmpty, s"degenerate fixture at threshold $tn/$td")
+      assert(got == cBrute(df, tn, td), s"wrong answer at threshold $tn/$td")
     }
-  }
-
-  test("containmentJoin rejects Packed and degenerate thresholds") {
-    val df = Seq((1L, "a", Seq(1L, 2L))).toDF("doc_id", "blk", "gr")
-    assertThrows[IllegalArgumentException](SetSimJoin.containmentJoin(
-      df, "doc_id", "gr", Seq("blk"), 1, 2, SetSimJoin.DfStrategy.Packed))
-    assertThrows[IllegalArgumentException](
-      SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 0, 5))
   }
 
   // --------------------------------- default-loud candidate-mass guard (r18)
@@ -344,6 +377,11 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     assert(ej.getMessage.contains("maxCandidates") &&
       ej.getMessage.contains("capTokenDf") &&
       ej.getMessage.contains("MinHashLsh"), ej.getMessage)
+    // String tokens take the join-back, whose census is the Spark aggregate.
+    val hotStr = hot.select($"doc_id", $"blk", transform($"gr", _.cast("string")).as("gr"))
+    val es = intercept[IllegalArgumentException](SetSimJoin.jaccardJoin(
+      hotStr, "doc_id", "gr", Seq("blk"), 1, 2, maxCandidates = 100L))
+    assert(es.getMessage.contains("ΣC(df,2) = 780"), es.getMessage)
     val ec = intercept[IllegalArgumentException](SetSimJoin.containmentJoin(
       hot, "doc_id", "gr", Seq("blk"), 9, 10, maxCandidates = 100L))
     assert(ec.getMessage.contains("maxCandidates"), ec.getMessage)
@@ -362,19 +400,17 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
   test("maxCandidates under Packed: the DRIVER-SIDE census (r22 — the mass " +
     "folds over the rows the pack collects) fires the same loud failure at " +
     "the same threshold, and a blocked input passes the same ceiling") {
-    // Same fixtures as the Spark-census test above: C(40,2) = 780 > 100.
+    // Same fixtures as the test above: C(40,2) = 780 > 100.
     val hot = (0 until 40).map(id => (id.toLong, "a",
       Seq(0L, 100L + id))).toDF("doc_id", "blk", "gr")
     val ej = intercept[IllegalArgumentException](SetSimJoin.jaccardJoin(
-      hot, "doc_id", "gr", Seq("blk"), 1, 2,
-      dfStrategy = SetSimJoin.DfStrategy.Packed, maxCandidates = 100L))
+      hot, "doc_id", "gr", Seq("blk"), 1, 2, maxCandidates = 100L))
     assert(ej.getMessage.contains("maxCandidates") &&
       ej.getMessage.contains("ΣC(df,2) = 780") &&
       ej.getMessage.contains("capTokenDf"), ej.getMessage)
     val blocked = (0 until 40).map(id => (id.toLong, s"b$id",
       Seq(0L, 100L + id))).toDF("doc_id", "blk", "gr")
     assert(SetSimJoin.jaccardJoin(blocked, "doc_id", "gr", Seq("blk"), 1, 2,
-      dfStrategy = SetSimJoin.DfStrategy.Packed,
       maxCandidates = 100L).count() == 0L)
   }
 

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SetSimJoin
-import graft.operators.SetSimJoin.DfStrategy
 
-/** Proves the [[DfStrategy.Aggregate]]`(broadcast = false)` skew posture on
+/** Proves the skew posture of [[SetSimJoin.jaccardJoin]]'s df join-back on
   * a deliberately hot-token corpus — with MAP STATISTICS, not plan strings.
+  * The corpus packs, so each run forces the join-back through
+  * `jaccardJoinWith` with a packed cap of one entry.
   *
   * Background (measured while building this spec): AQE's
   * `OptimizeSkewedJoin` can NOT rescue this operator's df join. The rule
@@ -19,11 +20,11 @@ import graft.operators.SetSimJoin.DfStrategy
   * between its shuffle and the join, so the rule never pattern-matches —
   * it logged `skewed partitions: left 0, right 0` while the index-side map
   * stats showed a 4.7× hot partition. Hence the operator splits hot keys
-  * itself (broadcast branch for keys with df ≥ hotDfThreshold); this spec
-  * pins both halves of that claim:
-  *   - split ON  → every shuffle stage balanced, hot branch is a broadcast
-  *     join, output identical to the Window strategy;
-  *   - split OFF (`hotDfThreshold = Long.MaxValue`) → the hot token's
+  * itself (broadcast branch for keys with df ≥ hotDf); this spec pins both
+  * halves of that claim:
+  *   - split at 1000 → every shuffle stage balanced, hot branch is a
+  *     broadcast join, output identical to the packed path;
+  *   - threshold past every df (`hotDf = Long.MaxValue`) → the hot token's
   *     partition measurably dominates its shuffle stage again.
   */
 class SkewJoinSpec extends AnyFunSuite with SparkSpec {
@@ -42,9 +43,7 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
       array(lit(0L), base + 10, base + 11).as("toks"))
   }
 
-  private def run(strategy: DfStrategy): (Array[(Long, Long, Long, Long)], SparkPlan) = {
-    val out = SetSimJoin.jaccardJoin(skewedDocs, "doc_id", "toks",
-      blockCols = Nil, threshNum = 1, threshDen = 2, dfStrategy = strategy)
+  private def run(out: DataFrame): (Array[(Long, Long, Long, Long)], SparkPlan) = {
     // The ds we collect is the ds whose plan we inspect: a derived Dataset
     // has its OWN QueryExecution, and the parent's would stay un-executed
     // (isFinalPlan=false, no query stages, no map stats).
@@ -53,6 +52,11 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
     val rows = ds.collect().sortBy(r => (r._1, r._2))
     (rows, ds.queryExecution.executedPlan)
   }
+
+  private def joinBack(hotDf: Long) =
+    run(SetSimJoin.jaccardJoinWith(skewedDocs, "doc_id", "toks", Nil, 1, 2,
+      maxDf = None, maxCandidates = SetSimJoin.DefaultMaxCandidates,
+      maxPackedDfEntries = 1, hotDfThreshold = hotDf))
 
   /** Per-stage reduce-partition byte sizes from the executed adaptive plan
     * (query stages are leaves — a plain collect() stops at them).
@@ -85,12 +89,13 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
     finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
-  test("hot-key split on: balanced shuffles, broadcast hot branch, Window-identical output") {
+  test("hot-key split on: balanced shuffles, broadcast hot branch, packed-identical output") {
     withSkewConfs {
-      val (expected, _) = run(DfStrategy.Window)
+      val (expected, _) = run(SetSimJoin.jaccardJoin(skewedDocs, "doc_id", "toks",
+        blockCols = Nil, threshNum = 1, threshDen = 2))
       assert(expected.length === nDocs / 2, "one pair per even/odd twin")
 
-      val (rows, plan) = run(DfStrategy.Aggregate(broadcast = false, hotDfThreshold = 1000L))
+      val (rows, plan) = joinBack(hotDf = 1000L)
       assert(rows.toSeq === expected.toSeq, "split path must not change results")
       // The hot slice rides an explicit broadcast() — present even with the
       // auto threshold disabled.
@@ -105,8 +110,7 @@ class SkewJoinSpec extends AnyFunSuite with SparkSpec {
 
   test("hot-key split off (hotDfThreshold = MaxValue): the hot partition dominates again") {
     withSkewConfs {
-      val (rows, plan) =
-        run(DfStrategy.Aggregate(broadcast = false, hotDfThreshold = Long.MaxValue))
+      val (rows, plan) = joinBack(hotDf = Long.MaxValue)
       assert(rows.length === nDocs / 2)
       val ratios = stageSizes(plan).filter(_.nonEmpty).map(maxOverMedian)
       // The index-side exchange of the df join carries every hot row in one
