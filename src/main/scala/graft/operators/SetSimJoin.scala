@@ -449,8 +449,6 @@ object SetSimJoin {
       maxCandidates: Long,
       maxPackedDfEntries: Int,
       hotDfThreshold: Long): DataFrame = {
-    require(maxPackedDfEntries > 0 && maxPackedDfEntries < Int.MaxValue,
-      "maxPackedDfEntries must be a positive Int with headroom for the overflow probe")
     val bc = blockCols.map(col)
     val (d, ex) = indexOf(docs, idCol, setCol, blockCols, threshNum, threshDen, maxDf)
 

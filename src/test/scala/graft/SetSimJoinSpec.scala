@@ -162,7 +162,7 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
     // The selection rule, read off the optimized plan: the packed-prefix
     // generator appears for ARRAY<BIGINT> tokens under STRING (or no)
     // blocking columns, and never for string tokens or non-string blocks —
-    // those take the join-back, and still answer (they used to be rejected).
+    // those take the join-back, and still answer.
     def packs(df: org.apache.spark.sql.DataFrame, blocks: Seq[String]) =
       SetSimJoin.jaccardJoin(df, "doc_id", "gr", blocks, 1, 2)
         .queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens")
