@@ -203,9 +203,6 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
       SetSimJoin.jaccardJoin(grams, "doc_id", "gr", Seq("lang"), 0, 5))
     assertThrows[IllegalArgumentException](
       SetSimJoin.jaccardJoin(grams, "doc_id", "gr", Seq("lang"), 6, 5))
-    val df = Seq((1L, "a", Seq(1L, 2L))).toDF("doc_id", "blk", "gr")
-    assertThrows[IllegalArgumentException](
-      SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 0, 5))
   }
 
   // ------------------------------------------------------- containmentJoin
@@ -313,6 +310,23 @@ class SetSimJoinSpec extends AnyFunSuite with SparkSpec {
         .select($"doc_id", $"gr").as[(Long, Seq[String])].collect().toMap
       assert(got == Map(1L -> Seq(), 2L -> Seq(), 3L -> Seq()), s"got $got")
     }
+  }
+
+  test("containmentJoin rejects Packed and degenerate thresholds") {
+    // The index side needs the full ranked sets, which the packed path
+    // never emits: even on a packable input (long tokens, string block)
+    // containment must rank through the df window, not the packed-prefix
+    // generator — and still answer.
+    val df = Seq((1L, "a", Seq(1L, 2L)), (2L, "a", Seq(1L, 2L, 3L)))
+      .toDF("doc_id", "blk", "gr")
+    val out = SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 1, 2)
+    assert(!out.queryExecution.optimizedPlan.toString.contains("graft_prefix_tokens"),
+      "containmentJoin must not run the packed-prefix generator")
+    assert(cPairsOf(out) === Set((1L, 2L, 2L, 2L), (2L, 1L, 2L, 3L)))
+    assertThrows[IllegalArgumentException](
+      SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 0, 5))
+    assertThrows[IllegalArgumentException](
+      SetSimJoin.containmentJoin(df, "doc_id", "gr", Seq("blk"), 6, 5))
   }
 
   test("containment: a small doc inside a big one qualifies; the reverse does not") {
